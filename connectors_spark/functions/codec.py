@@ -259,6 +259,48 @@ def decode_shard(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return doc_idx, tf, dl
 
 
+def _binary_payload(col) -> np.ndarray:
+    """The value bytes of a pyarrow binary column, rows back to back —
+    a zero-copy view of the Arrow data buffer (respects slicing)."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    off_t = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    _validity, offs, data = col.buffers()
+    offs = np.frombuffer(offs, dtype=off_t)[col.offset:col.offset + len(col) + 1]
+    if data is None or not len(offs):
+        return np.zeros(0, dtype=np.uint8)
+    return np.frombuffer(data, dtype=np.uint8)[int(offs[0]):int(offs[-1])]
+
+
+def decode_shards_batch(n_docs, doc_gaps, tfs=None, dls=None):
+    """Batch twin of `decode_shard` over the Arrow columns of many encoded
+    rows: (row_starts, doc_idx, tf, dl), each value array row-major with
+    row i at [row_starts[i], row_starts[i] + n_docs[i]). Each stream is
+    ONE varint_decode of Σ n_docs values over the concatenated row bytes;
+    doc_idx comes from a segmented cumsum of the gaps (each row's first
+    gap is absolute). tf/dl are None when their column is not passed."""
+    n = np.asarray(n_docs, dtype=np.int64)
+    total = int(n.sum())
+    starts = np.zeros(len(n), dtype=np.int64)
+    np.cumsum(n[:-1], out=starts[1:])
+
+    def decode(col) -> np.ndarray:
+        if total == 0:
+            return np.zeros(0, dtype=np.int64)
+        return varint_decode(_binary_payload(col), 0, total).astype(np.int64)
+
+    # uint64 cumsum wraps modulo 2^64, so per-row differences stay exact
+    # however large the batch's running total grows
+    c = np.zeros(total + 1, dtype=np.uint64)
+    np.cumsum(decode(doc_gaps).astype(np.uint64), out=c[1:])
+    doc_idx = (c[1:] - np.repeat(c[starts], n)).view(np.int64)
+    tf = decode(tfs) if tfs is not None else None
+    dl = decode(dls) if dls is not None else None
+    return starts, doc_idx, tf, dl
+
+
 def decode_shard_positions(row, tf=None) -> list[np.ndarray] | None:
     """Per-posting position arrays for an encoded row, or None if the
     shard was built without positions.  Pass the already-decoded `tf`

@@ -9,7 +9,13 @@ become:
 1. diff the new snapshot against the index's docmap manifest (J1-J3);
 2. tombstone doc_idx of deleted + updated docs;
 3. encode postings for created + updated docs as a new generation with
-   fresh doc_idx (append-only — old generations are immutable);
+   fresh doc_idx (append-only — old generations are immutable). The
+   generation is written by the fused build's write core
+   (`index.posting_rows`: one tokenize pass, docmap stats via
+   Observation) and the Arrow encoder, with the encode shuffle keyed on
+   bucket so each bucket dir gets one file. Positional indexes are the
+   exception: they keep `build_index` + the pandas `encode_postings`
+   path, since the Arrow encoder has no positions;
 4. keep scoring EXACT:
    - per-term dead counts (scan + decode + count tombstone hits) correct
      df, so idf is the live value;
@@ -30,13 +36,12 @@ import os
 import uuid
 
 import numpy as np
-import pandas as pd
 
 from connectors_spark import commitfs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from connectors_spark.functions.codec import decode_shard
+from connectors_spark.functions.codec import decode_shards_batch
 from connectors_spark.operators.build import (
     assign_doc_indices,
     build_index,
@@ -45,9 +50,13 @@ from connectors_spark.operators.build import (
 from connectors_spark.operators.index import (
     IndexReader,
     encode_postings,
+    make_encode_arrow_partition,
+    posting_rows,
     read_meta,
+    read_postings,
 )
 from connectors_spark.operators.sync import classify_sync_ops
+from connectors_spark.schema import ENCODED_POSTINGS_SCHEMA
 
 
 def _write_meta(path: str, meta: dict, fs=None) -> None:
@@ -96,16 +105,15 @@ def incremental_update(spark: SparkSession, path: str,
     ops = classify_sync_ops(
         new_docs.select("doc_id", "ts"), live.select("doc_id", "ts")
     ).persist()
-    n_changed = ops.filter(F.col("op") != "skip").count()
-    if n_changed == 0:
-        ops.unpersist(); live.unpersist(); new_docs.unpersist()
-        return None
-
-    dead_ids = ops.filter(F.col("op").isin("delete", "update")).select("doc_id")
-    changed_ids = ops.filter(F.col("op").isin("create", "update")).select("doc_id")
-    changed = new_docs.join(changed_ids, "doc_id", "left_semi")
-    rec = _apply_delta(spark, path, meta, live, dead_ids, changed,
-                       n_changed=int(n_changed))
+    # one pass gives every job counter (created/updated/deleted/skipped)
+    counts = {r["op"]: int(r["count"])
+              for r in ops.groupBy("op").count().collect()}
+    rec = None
+    if any(counts.get(op) for op in ("create", "update", "delete")):
+        dead_ids = ops.filter(F.col("op").isin("delete", "update")).select("doc_id")
+        changed_ids = ops.filter(F.col("op").isin("create", "update")).select("doc_id")
+        changed = new_docs.join(changed_ids, "doc_id", "left_semi")
+        rec = _apply_delta(spark, path, meta, live, dead_ids, changed, counts)
     ops.unpersist(); live.unpersist(); new_docs.unpersist()
     return rec
 
@@ -129,8 +137,8 @@ def delete_by_query(spark: SparkSession, path: str,
     if n_dead == 0:
         live.unpersist()
         return None
-    rec = _apply_delta(spark, path, meta, live, dead_ids, changed=None,
-                       n_changed=int(n_dead))
+    rec = _apply_delta(spark, path, meta, live, dead_ids, None,
+                       {"delete": int(n_dead)})
     live.unpersist()
     return rec
 
@@ -155,40 +163,62 @@ def update_by_query(spark: SparkSession, path: str,
         return None
     dead_ids = changed.select("doc_id")
     rec = _apply_delta(spark, path, meta, live, dead_ids, changed,
-                       n_changed=int(n_changed))
+                       {"update": int(n_changed)})
     live.unpersist(); changed.unpersist()
     return rec
 
 
+def _dead_counts(batches, tombs: np.ndarray):
+    """(term, dead) for every encoded shard row holding at least one
+    tombstoned doc_idx. Per Arrow batch: one batch decode of doc_gaps,
+    one searchsorted against the sorted tombstone set, one reduceat over
+    the row starts (encoded rows are never empty). mapInArrow body."""
+    import pyarrow as pa
+
+    for rb in batches:
+        if not rb.num_rows or not len(tombs):
+            continue
+        starts, doc_idx, _, _ = decode_shards_batch(
+            rb.column("n_docs").to_numpy(), rb.column("doc_gaps"))
+        pos = np.minimum(np.searchsorted(tombs, doc_idx), len(tombs) - 1)
+        dead = np.add.reduceat((tombs[pos] == doc_idx).astype(np.int64),
+                               starts)
+        hit = np.flatnonzero(dead)
+        if len(hit):
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("term").take(pa.array(hit)), pa.array(dead[hit])],
+                names=["term", "dead"])
+
+
 def _apply_delta(spark: SparkSession, path: str, meta: dict,
                  live: DataFrame, dead_ids: DataFrame,
-                 changed: DataFrame | None, *, n_changed: int) -> dict:
+                 changed: DataFrame | None, counts: dict[str, int]) -> dict:
     """Write one delta generation: tombstones for `dead_ids`, encoded
-    postings + docmap for `changed` (None/empty => a delete-only
-    generation, flagged `delete_only` so readers skip its postings/docmap
-    reads entirely), cumulative per-term dead counts, and the meta commit.
-    Shared core of incremental_update / delete_by_query / update_by_query."""
+    postings + docmap for `changed` (a delete-only generation, flagged
+    `delete_only` so readers skip its postings/docmap reads entirely,
+    when it holds no create/update), cumulative per-term dead counts, and
+    the meta commit. Shared core of incremental_update / delete_by_query /
+    update_by_query / upsert_docs. `counts` maps op (create, update,
+    delete, skip) -> docs, as the caller already counted them: the
+    update and delete counts are the tombstone count, create + update
+    the new docs."""
     gen = (max((int(d["gen"]) for d in meta.get("deltas", [])), default=0) + 1)
     gdir = f"{path}/delta/{gen}"
+    n_created, n_updated, n_deleted, n_skipped = (
+        int(counts.get(op, 0)) for op in ("create", "update", "delete", "skip"))
 
     tomb = live.join(dead_ids, "doc_id", "left_semi").select("doc_idx")
     tomb.write.mode("overwrite").parquet(f"{gdir}/tombstones")
-    tomb = spark.read.parquet(f"{gdir}/tombstones")
-    n_tombstones = tomb.count()
 
     survivors = live.join(dead_ids, "doc_id", "left_anti")
-    delete_only = changed is None or not changed.take(1)
+    stats = survivors.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
+    ).first()
+    n_live, sum_dl = int(stats["n"]), int(stats["s"] or 0)
+    delete_only = changed is None or n_created + n_updated == 0
     if delete_only:
-        stats = survivors.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-        ).first()
-        n_live = int(stats["n"])
-        avgdl_live = (float(stats["s"]) / n_live) if n_live else 0.0
+        avgdl_live = (sum_dl / n_live) if n_live else 0.0
     else:
-        # delta generation must match the base index's positional setting,
-        # else phrase_topk breaks on any phrase term with delta postings
-        sub = build_index(changed,
-                          with_positions=bool(meta.get("positions", False)))
         # new doc_idx must start past EVERY idx ever assigned — including
         # tombstoned ones. max over the live docmap alone can recycle a
         # tombstoned idx (deletes shrink the live max), and the readers'
@@ -198,74 +228,46 @@ def _apply_delta(spark: SparkSession, path: str, meta: dict,
         max_idx = _all_assigned_docmap(spark, path, meta).agg(
             F.max("doc_idx")
         ).first()[0] or 0
-        sub_docmap = assign_doc_indices(sub.docs, start_idx=int(max_idx) + 1)
-        sub_docmap.write.mode("overwrite").parquet(f"{gdir}/docmap")
-        sub_docmap = spark.read.parquet(f"{gdir}/docmap")
-
-        # live corpus stats (exact): survivors + new generation
-        stats = survivors.select("dl").unionByName(
-            sub_docmap.select("dl")
-        ).agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")).first()
-        n_live = int(stats["n"])
-        avgdl_live = float(stats["s"]) / float(stats["n"])
-
-        encoded = encode_postings(
-            sub.postings, sub_docmap, sub.lexicon, avgdl_live,
-            n_buckets=meta["n_buckets"], shard_cap=meta["shard_cap"],
-            k1=meta["k1"], b=meta["b"],
-        ).repartition(int(meta["n_buckets"]), "bucket")
-        encoded.write.mode("overwrite").partitionBy("bucket").parquet(
-            f"{gdir}/postings"
-        )
+        if meta.get("positions", False):
+            # a delta generation must match the base index's positional
+            # setting, else phrase_topk breaks on any phrase term with
+            # delta postings — and only the pandas encoder has positions
+            write = _write_positional_delta
+        else:
+            write = _write_fused_delta
+        n_live, avgdl_live = write(spark, meta, changed, gdir,
+                                   int(max_idx) + 1, n_live, sum_dl)
 
     # exact per-term dead counts: decode every existing shard, count hits
     # against the cumulative tombstone set (compaction amortizes this).
     # Tombstones ship to executors ONCE as a Spark broadcast (torrent),
     # never closure-pickled per task; their size is bounded by the
     # compaction policy (should_compact/maybe_compact below).
-    all_tomb_ids = np.sort(np.array(
-        [r.doc_idx for d in [*meta.get("deltas", []), {"gen": gen}]
-         for r in spark.read.parquet(
-             f"{path}/delta/{int(d['gen'])}/tombstones").collect()],
-        dtype=np.int64,
-    ))
+    all_tomb_ids = np.sort(np.asarray(spark.read.parquet(*[
+        f"{path}/delta/{int(d['gen'])}/tombstones"
+        for d in [*meta.get("deltas", []), {"gen": gen}]
+    ]).toArrow().column("doc_idx").to_numpy(), dtype=np.int64))
     tomb_bc = spark.sparkContext.broadcast(all_tomb_ids)
-
-    from connectors_spark.functions.codec import varint_decode
-
-    def count_dead(batches):
-        tombs = tomb_bc.value
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                gaps = varint_decode(
-                    row["doc_gaps"], 0, int(row["n_docs"])
-                ).astype(np.int64)
-                d = np.cumsum(gaps)
-                pos = np.searchsorted(tombs, d)
-                pos = np.minimum(pos, max(0, len(tombs) - 1))
-                n_dead = int((tombs[pos] == d).sum()) if len(tombs) else 0
-                if n_dead:
-                    rows.append({"term": row["term"], "dead": n_dead})
-            yield pd.DataFrame(rows, columns=["term", "dead"])
-
-    from connectors_spark.operators.index import read_postings
-    base_postings = read_postings(spark, path)
-    prior = [spark.read.parquet(f"{path}/delta/{int(d['gen'])}/postings")
-             for d in meta.get("deltas", []) if not d.get("delete_only")]
-    allp = base_postings
-    for p in prior:
-        allp = allp.unionByName(p)
+    allp = read_postings(spark, path).select("term", "n_docs", "doc_gaps")
+    for d in meta.get("deltas", []):
+        if not d.get("delete_only"):
+            allp = allp.unionByName(
+                spark.read.parquet(f"{path}/delta/{int(d['gen'])}/postings")
+                .select("term", "n_docs", "doc_gaps"))
     dead_df = (
-        allp.select("term", "n_docs", "doc_gaps")
-        .mapInPandas(count_dead, schema="term string, dead long")
+        allp.mapInArrow(lambda it: _dead_counts(it, tomb_bc.value),
+                        schema="term string, dead long")
         .groupBy("term").agg(F.sum("dead").alias("dead"))
     )
     dead_df.write.mode("overwrite").parquet(f"{gdir}/dead_df")
 
+    # the reference's job counters ride along (svc/es/sink.py:338-361)
     rec = {"gen": gen, "avgdl_at_build": avgdl_live,
-           "n_changed": int(n_changed), "n_tombstones": int(n_tombstones),
-           "n_docs_live": n_live, "avgdl_live": avgdl_live}
+           "n_changed": n_created + n_updated + n_deleted,
+           "n_tombstones": n_updated + n_deleted,
+           "n_docs_live": n_live, "avgdl_live": avgdl_live,
+           "created": n_created, "updated": n_updated,
+           "deleted": n_deleted, "skipped": n_skipped}
     if delete_only:
         rec["delete_only"] = True
     # pin the pristine gen-0 stats once, before the first delta mutates
@@ -276,6 +278,73 @@ def _apply_delta(spark: SparkSession, path: str, meta: dict,
     meta["n_docs"], meta["avgdl"] = n_live, avgdl_live
     _write_meta(path, meta)
     return rec
+
+
+def _write_fused_delta(spark: SparkSession, meta: dict, changed: DataFrame,
+                       gdir: str, start_idx: int, n_surv: int,
+                       surv_dl: int) -> tuple[int, float]:
+    """Non-positional delta postings through the fused build's write core
+    (one tokenize pass, docmap stats via Observation) and Arrow encoder.
+    The encode shuffle is keyed on bucket, so each bucket lives in one
+    task and the partitionBy write leaves one file per bucket dir — no
+    second shuffle of encoded blobs. Returns (n_docs_live, avgdl_live)."""
+    id_cols = ["doc_id"] + (["ts"] if "ts" in changed.columns else [])
+    n_buckets = int(meta["n_buckets"])
+    with posting_rows(changed, id_cols, f"{gdir}/docmap",
+                      n_buckets=n_buckets, shard_cap=meta["shard_cap"],
+                      start_idx=start_idx) as (rows, n_new, new_dl):
+        n_live = n_surv + n_new
+        avgdl_live = (surv_dl + new_dl) / n_live
+        if not new_dl:
+            _write_no_postings(spark, gdir)
+            return n_live, avgdl_live
+        n_parts = min(spark.sparkContext.defaultParallelism, n_buckets)
+        (rows.repartition(n_parts, "bucket")
+         .sortWithinPartitions("term", "shard", "doc_idx")
+         .mapInArrow(make_encode_arrow_partition(avgdl_live, meta["k1"],
+                                                 meta["b"]),
+                     schema=ENCODED_POSTINGS_SCHEMA)
+         .write.mode("overwrite").partitionBy("bucket")
+         .parquet(f"{gdir}/postings"))
+    return n_live, avgdl_live
+
+
+def _write_no_postings(spark: SparkSession, gdir: str) -> None:
+    """A generation whose changed docs are all zero-token has docmap rows
+    but no postings: write a schema-only postings dir readers can open."""
+    spark.createDataFrame([], ENCODED_POSTINGS_SCHEMA).write.mode(
+        "overwrite").parquet(f"{gdir}/postings")
+
+
+def _write_positional_delta(spark: SparkSession, meta: dict,
+                            changed: DataFrame, gdir: str, start_idx: int,
+                            n_surv: int, surv_dl: int) -> tuple[int, float]:
+    """Positional delta postings: build_index + the pandas encoder (the
+    Arrow encoder has no positions yet). Returns (n_docs_live,
+    avgdl_live)."""
+    from pyspark.sql import Observation
+
+    sub = build_index(changed, with_positions=True)
+    obs = Observation("delta_docmap_stats")
+    assign_doc_indices(sub.docs, start_idx=start_idx).observe(
+        obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
+    ).write.mode("overwrite").parquet(f"{gdir}/docmap")
+    sub_docmap = spark.read.parquet(f"{gdir}/docmap")
+    new_dl = int(obs.get["s"] or 0)
+    n_live = n_surv + int(obs.get["n"])
+    avgdl_live = (surv_dl + new_dl) / n_live
+    if not new_dl:
+        _write_no_postings(spark, gdir)
+        return n_live, avgdl_live
+    encoded = encode_postings(
+        sub.postings, sub_docmap, sub.lexicon, avgdl_live,
+        n_buckets=meta["n_buckets"], shard_cap=meta["shard_cap"],
+        k1=meta["k1"], b=meta["b"],
+    ).repartition(int(meta["n_buckets"]), "bucket")
+    encoded.write.mode("overwrite").partitionBy("bucket").parquet(
+        f"{gdir}/postings"
+    )
+    return n_live, avgdl_live
 
 
 def total_tombstones(meta: dict) -> int:
@@ -472,29 +541,29 @@ def compact_index(spark: SparkSession, path: str, out_path: str) -> None:
     dead_bc = reader._dead_bc
 
     def decode_rows(batches):
+        """Live (term, doc_idx, tf) postings: one batch decode of the
+        gap and tf streams per Arrow batch, tombstoned docs masked."""
+        import pyarrow as pa
+
         dead = dead_bc.value
-        for pdf in batches:
-            terms, docs, tfs, dls = [], [], [], []
-            for _, row in pdf.iterrows():
-                d, tf, dl = decode_shard(row)
-                if len(dead):
-                    pos = np.minimum(np.searchsorted(dead, d), len(dead) - 1)
-                    live = dead[pos] != d
-                    d, tf, dl = d[live], tf[live], dl[live]
-                terms.extend([row["term"]] * len(d))
-                docs.append(d); tfs.append(tf); dls.append(dl)
-            if terms:
-                yield pd.DataFrame({
-                    "term": terms,
-                    "doc_idx": np.concatenate(docs),
-                    "tf": np.concatenate(tfs),
-                })
-            else:
-                yield pd.DataFrame({"term": [], "doc_idx": [], "tf": []})
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            n = rb.column("n_docs").to_numpy()
+            _, d, tf, _ = decode_shards_batch(n, rb.column("doc_gaps"),
+                                              rb.column("tfs"))
+            row = np.repeat(np.arange(len(n)), n)
+            if len(dead):
+                pos = np.minimum(np.searchsorted(dead, d), len(dead) - 1)
+                live = dead[pos] != d
+                d, tf, row = d[live], tf[live], row[live]
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("term").take(pa.array(row)), pa.array(d),
+                 pa.array(tf)], names=["term", "doc_idx", "tf"])
 
     flat = reader.postings.select(
-        "term", "n_docs", "doc_gaps", "tfs", "dls"
-    ).mapInPandas(decode_rows, schema="term string, doc_idx long, tf long")
+        "term", "n_docs", "doc_gaps", "tfs"
+    ).mapInArrow(decode_rows, schema="term string, doc_idx long, tf long")
     docmap = _live_docmap(spark, path, meta)
 
     postings = flat.join(
@@ -534,16 +603,15 @@ def upsert_docs(spark: SparkSession, path: str,
     ops = classify_sync_ops(
         new_docs.select("doc_id", "ts"), live_sub.select("doc_id", "ts")
     ).persist()
-    changed_ids = ops.filter(
-        F.col("op").isin("create", "update")).select("doc_id")
-    n_changed = changed_ids.count()
-    if n_changed == 0:
-        ops.unpersist(); live.unpersist(); new_docs.unpersist()
-        return None
-    dead_ids = ops.filter(F.col("op") == "update").select("doc_id")
-    changed = new_docs.join(changed_ids, "doc_id", "left_semi")
-    rec = _apply_delta(spark, path, meta, live, dead_ids, changed,
-                       n_changed=int(n_changed))
+    counts = {r["op"]: int(r["count"])
+              for r in ops.groupBy("op").count().collect()}
+    rec = None
+    if counts.get("create") or counts.get("update"):
+        changed_ids = ops.filter(
+            F.col("op").isin("create", "update")).select("doc_id")
+        dead_ids = ops.filter(F.col("op") == "update").select("doc_id")
+        changed = new_docs.join(changed_ids, "doc_id", "left_semi")
+        rec = _apply_delta(spark, path, meta, live, dead_ids, changed, counts)
     ops.unpersist(); live.unpersist(); new_docs.unpersist()
     return rec
 

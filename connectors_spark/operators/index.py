@@ -25,8 +25,8 @@ Physical layout (the part Elasticsearch/Lucene owns in the reference):
 from __future__ import annotations
 
 import json
-
 import os
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -409,12 +409,28 @@ def make_encode_arrow_partition(avgdl: float, k1: float, b: float):
 
 def make_encode_arrow_write_partition(avgdl: float, k1: float, b: float,
                                       out_dir: str):
-    """Arrow twin of make_encode_write_partition (same task-side
-    attempt-suffixed commit contract — see that docstring): buffers the
-    task's encoded batches and writes ONE parquet table per bucket, so
-    every file is a single row group (binary-column stats per row group
-    were measured at 45% size overhead with small groups). Task output
-    is bounded by the input partition size, so the buffer is too."""
+    """Task-side direct parquet writer (the table-format commit pattern):
+    each encode task writes its own `bucket=<i>/part-p<pid>-a<att>.parquet`
+    files with pyarrow and yields one tiny manifest row per file —
+    there is NO Spark file committer, so the driver never serially
+    renames O(files) outputs (that commit pass is a fixed driver cost
+    that eats N->4N scaling, measured in tools/scaling_probe.py).
+
+    File names are attempt-suffixed (Iceberg/table-format pattern), so
+    concurrent attempts of the same partition (speculative execution,
+    zombie tasks on a real cluster) never interleave writes into one
+    file. Spark surfaces only the WINNING attempt's manifest rows to the
+    driver, which persists them as `postings_manifest.json`; readers
+    resolve files through that manifest (read_postings), so a loser
+    attempt's orphan files are invisible even if they land after the
+    build commits. Requires a task-visible filesystem (local dir here;
+    an object store via pyarrow.fs in cluster deployments).
+
+    The task buffers its encoded batches and writes ONE parquet table
+    per bucket, so every file is a single row group (binary-column stats
+    per row group were measured at 45% size overhead with small groups).
+    Task output is bounded by the input partition size, so the buffer is
+    too."""
     import pyarrow as pa
 
     enc = make_encode_arrow_partition(avgdl, k1, b)
@@ -487,66 +503,6 @@ def _arrow_encoded_schema():
     ])
 
 
-def make_encode_write_partition(avgdl: float, k1: float, b: float,
-                                out_dir: str):
-    """Task-side direct parquet writer (the table-format commit pattern):
-    each encode task writes its own `bucket=<i>/part-p<pid>.parquet`
-    files with pyarrow and yields one tiny manifest row per file —
-    there is NO Spark file committer, so the driver never serially
-    renames O(files) outputs (that commit pass is a fixed driver cost
-    that eats N->4N scaling, measured in tools/scaling_probe.py).
-
-    File names are `part-p<pid>-a<attempt>.parquet` — attempt-suffixed
-    (Iceberg/table-format pattern), so concurrent attempts of the same
-    partition (speculative execution, zombie tasks on a real cluster)
-    never interleave writes into one file. Spark surfaces only the
-    WINNING attempt's manifest rows to the driver, which persists them as
-    `postings_manifest.json`; readers resolve files through that manifest
-    (read_postings), so a loser attempt's orphan files are invisible even
-    if they land after the build commits. Requires a task-visible
-    filesystem (local dir here; an object store via pyarrow.fs in cluster
-    deployments)."""
-    enc = make_encode_partition(avgdl, k1, b)
-
-    def run(batches):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        pid = tc.partitionId()
-        att = tc.attemptNumber()
-        schema = _arrow_encoded_schema()
-        writers: dict[int, tuple] = {}
-        rows: dict[int, int] = {}
-        for pdf in enc(batches):
-            for b_, g in pdf.groupby("bucket", sort=False):
-                b_ = int(b_)
-                g = g.drop(columns=["bucket"])
-                tbl = pa.Table.from_pandas(g, schema=schema,
-                                           preserve_index=False)
-                w = writers.get(b_)
-                if w is None:
-                    d = os.path.join(out_dir, f"bucket={b_}")
-                    os.makedirs(d, exist_ok=True)
-                    fp = os.path.join(d, f"part-p{pid:05d}-a{att}.parquet")
-                    w = (pq.ParquetWriter(fp, schema), fp)
-                    writers[b_] = w
-                    rows[b_] = 0
-                w[0].write_table(tbl)
-                rows[b_] += len(g)
-        for b_, (w, _) in writers.items():
-            w.close()
-        yield pd.DataFrame({
-            "bucket": pd.array(sorted(writers), dtype="int32"),
-            "file": [writers[b_][1] for b_ in sorted(writers)],
-            "rows": pd.array([rows[b_] for b_ in sorted(writers)],
-                             dtype="int64"),
-        })
-
-    return run
-
-
 def _token_entries(base: DataFrame, id_cols: list[str]) -> DataFrame:
     """(*id_cols, dl, _entries) — per-doc distinct (term, tf) entries and
     token count, computed ARRAY-SIDE in one tokenize pass.
@@ -571,16 +527,22 @@ def _token_entries(base: DataFrame, id_cols: list[str]) -> DataFrame:
     """
     from connectors_spark.functions.analysis import tokens_col
 
+    # NULL text tokenizes to NULL: coalesce to [] so it is a zero-token
+    # doc (dl = 0, no entries) like "" and punctuation-only text
     st0 = base.select(
-        *id_cols, F.array_sort(tokens_col(F.col("text"))).alias("_s")
+        *id_cols,
+        F.coalesce(F.array_sort(tokens_col(F.col("text"))),
+                   F.array().cast("array<string>")).alias("_s"),
     )
     s = F.col("_s")
     st1 = st0.select(*id_cols, "_s", F.size("_s").alias("_n"))
     n = F.col("_n")
-    starts = F.filter(
+    # n = 0 guard: sequence(0, -1) is the DESCENDING [0, -1], and
+    # element_at(s, 0) raises INVALID_INDEX_OF_ZERO
+    starts = F.when(n > 0, F.filter(
         F.sequence(F.lit(0), n - 1),
         lambda i: (i == 0) | (F.element_at(s, i + 1) != F.element_at(s, i)),
-    )
+    )).otherwise(F.array().cast("array<int>"))
     st2 = st1.select(*id_cols, "_s", "_n", starts.alias("_starts"))
     stc = F.col("_starts")
     ends = F.concat(
@@ -596,6 +558,90 @@ def _token_entries(base: DataFrame, id_cols: list[str]) -> DataFrame:
     return st2.select(
         *id_cols, n.cast("long").alias("dl"), entries.alias("_entries")
     )
+
+
+@contextmanager
+def posting_rows(base: DataFrame, id_cols: list[str], docmap_dir: str, *,
+                 n_buckets: int, shard_cap: int, start_idx: int = 0):
+    """Shared write core of the fused build and the non-positional delta
+    writer: (doc_id, text) rows -> docmap written to `docmap_dir` ->
+    exploded posting rows ready for the encode shuffle.
+
+    Yields (rows, n_docs, sum_dl): rows = (term, doc_idx, tf, dl, df,
+    n_shards, shard, bucket), where df counts the docs of `base` only;
+    n_docs and sum_dl come from an Observation on the docmap write, so
+    corpus stats cost no extra pass. doc_idx starts at `start_idx`.
+    `base` must carry doc_id; `id_cols` (doc_id [+ ts]) ride into the
+    docmap, the index manifest of the sync diff. The cached entries and
+    lexicon stay pinned until the caller's encode job inside the `with`
+    body has run.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import Observation
+
+    spark = base.sparkSession
+    # ONE tokenize pass (was two: dl on the base table + a re-tokenize
+    # for the token stream): per-doc (term, tf) entries are computed
+    # ARRAY-SIDE from the sorted token array — run boundaries of the
+    # sorted array give the distinct terms and their counts — so the
+    # groupBy(term, doc) aggregation (a full token-stream shuffle, ~1.7x
+    # the posting count in rows) disappears from the plan entirely.
+    # Staged .select()s are load-bearing (see _token_entries).
+    ent = _token_entries(base, id_cols).persist()
+    # corpus stats ride the docmap WRITE job via Observation — no
+    # separate count/sum pass over the written parquet
+    obs = Observation("docmap_stats")
+    docmap = assign_doc_indices(
+        ent.select(*id_cols, "dl"), start_idx=start_idx
+    ).observe(obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
+    # lexicon df needs no doc_idx (it counts (term, doc) pairs straight
+    # off the cached entries), so its aggregation job runs CONCURRENTLY
+    # with the docmap write — the scheduler back-fills the docmap job's
+    # tail with lexicon tasks (guide §2.6 overlap of independent jobs);
+    # both only read the ent cache (per-partition cache locks keep the
+    # first materialization single-computed)
+    lexicon = (
+        ent.select(F.explode("_entries").alias("_e"))
+        .select(F.col("_e.term").alias("term"))
+        .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        .persist()
+    )
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_map = pool.submit(
+                lambda: docmap.write.mode("overwrite").parquet(docmap_dir))
+            f_lex = pool.submit(lexicon.count)
+            f_map.result()
+            f_lex.result()
+        docmap = spark.read.parquet(docmap_dir)
+        n_docs = int(obs.get["n"])
+        sum_dl = int(obs.get["s"] or 0)
+
+        # attach doc_idx to the cached entries: explicit broadcast while
+        # the docmap is broadcastable (exact decision — n_docs is known);
+        # beyond that it degrades to a shuffle join of compact (doc_id,
+        # entries) rows — same volume the old token-stream join shuffled,
+        # minus the exploded duplication
+        dm = docmap.select("doc_id", "doc_idx")
+        if n_docs <= 2_000_000:
+            dm = F.broadcast(dm)
+        postings = (
+            ent.join(dm, "doc_id")
+            .select("doc_idx", "dl", F.explode("_entries").alias("_e"))
+            .select("doc_idx", "dl", F.col("_e.term").alias("term"),
+                    F.col("_e.tf").cast("long").alias("tf"))
+        )
+        rows = (
+            postings.join(F.broadcast(lexicon), "term")
+            .select("term", "doc_idx", "tf", "dl", "df",
+                    *shard_cols(shard_cap))
+            .withColumn("bucket", bucket_col("term", n_buckets))
+        )
+        yield rows, n_docs, sum_dl
+    finally:
+        ent.unpersist()
+        lexicon.unpersist()
 
 
 def build_and_write_index(
@@ -625,8 +671,7 @@ def build_and_write_index(
       the throughput builder used by bench/scaling.
     Returns meta.
     """
-    from connectors_spark.functions.analysis import tokens_col
-    from connectors_spark.operators.build import assign_doc_indices, with_doc_id
+    from connectors_spark.operators.build import with_doc_id
 
     spark = transcripts.sparkSession
     if num_partitions is None:
@@ -641,74 +686,11 @@ def build_and_write_index(
             and "://" not in path
         )
 
-    from pyspark.sql import Observation
-
     base = with_doc_id(transcripts)
     id_cols = ["doc_id"] + (["ts"] if "ts" in base.columns else [])
-    # ONE tokenize pass over the corpus (was two: dl on the base table +
-    # a re-tokenize for the token stream): per-doc (term, tf) entries are
-    # computed ARRAY-SIDE from the sorted token array — run boundaries of
-    # the sorted array give the distinct terms and their counts — so the
-    # groupBy(term, doc) aggregation (a full token-stream shuffle, ~1.7x
-    # the posting count in rows) disappears from the plan entirely.
-    # Staged .select()s are load-bearing: each intermediate (sorted array,
-    # run starts) must be a BOUND column before the next expression
-    # references it from a lambda, otherwise Catalyst inlines the whole
-    # subtree into the lambda and re-evaluates it per array element
-    # (measured: O(n^2) per doc — minutes instead of seconds at sf0.1).
-    ent = _token_entries(base, id_cols).persist()
-    # corpus stats ride the docmap WRITE job via Observation — no
-    # separate count/sum pass over the written parquet
-    obs = Observation("docmap_stats")
-    docs = ent.select(*id_cols, "dl")
-    docmap = assign_doc_indices(docs).observe(
-        obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    )
-    # lexicon df needs no doc_idx (it counts (term, doc) pairs straight
-    # off the cached entries), so its aggregation job runs CONCURRENTLY
-    # with the docmap write — the scheduler back-fills the docmap job's
-    # tail with lexicon tasks (guide §2.6 overlap of independent jobs);
-    # both only read the ent cache (per-partition cache locks keep the
-    # first materialization single-computed)
-    lexicon = (
-        ent.select(F.explode("_entries").alias("_e"))
-        .select(F.col("_e.term").alias("term"))
-        .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        .persist()
-    )
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_map = pool.submit(
-            lambda: docmap.write.mode("overwrite").parquet(f"{path}/docmap"))
-        f_lex = pool.submit(lexicon.count)
-        f_map.result()
-        f_lex.result()
-    docmap = spark.read.parquet(f"{path}/docmap")
-
-    n_docs = int(obs.get["n"])
-    avgdl = float(obs.get["s"]) / n_docs if n_docs else 0.0
-
-    # attach doc_idx to the cached entries: explicit broadcast while the
-    # docmap is broadcastable (exact decision — n_docs is known); beyond
-    # that it degrades to a shuffle join of compact (doc_id, entries)
-    # rows — same volume the old token-stream join shuffled, minus the
-    # exploded duplication
-    dm = docmap.select("doc_id", "doc_idx")
-    if n_docs <= 2_000_000:
-        dm = F.broadcast(dm)
-    postings = (
-        ent.join(dm, "doc_id")
-        .select("doc_idx", "dl", F.explode("_entries").alias("_e"))
-        .select("doc_idx", "dl", F.col("_e.term").alias("term"),
-                F.col("_e.tf").cast("long").alias("tf"))
-    )
-    p = (
-        postings.join(F.broadcast(lexicon), "term")
-        .select("term", "doc_idx", "tf", "dl", "df",
-                *shard_cols(shard_cap))
-        .withColumn("bucket", bucket_col("term", n_buckets))
-    )
-    try:
+    with posting_rows(base, id_cols, f"{path}/docmap", n_buckets=n_buckets,
+                      shard_cap=shard_cap) as (p, n_docs, sum_dl):
+        avgdl = float(sum_dl) / n_docs if n_docs else 0.0
         sorted_p = p.repartition(
             num_partitions, "term", "shard"
         ).sortWithinPartitions("term", "shard", "doc_idx")
@@ -716,7 +698,7 @@ def build_and_write_index(
         if direct_write:
             # task-side pyarrow writes, no Spark committer: the commit
             # pass (driver-side serial renames of O(files)) is gone —
-            # see make_encode_write_partition
+            # see make_encode_arrow_write_partition
             import shutil as _shutil
             _shutil.rmtree(post_dir, ignore_errors=True)
             os.makedirs(post_dir, exist_ok=True)
@@ -742,9 +724,6 @@ def build_and_write_index(
             encoded.write.mode("overwrite").partitionBy("bucket").parquet(
                 post_dir
             )
-    finally:
-        ent.unpersist()
-        lexicon.unpersist()
 
     meta = {
         "n_docs": n_docs, "avgdl": avgdl, "gen0_avgdl": avgdl, "k1": k1,
@@ -767,7 +746,7 @@ POSTINGS_MANIFEST = "postings_manifest.json"
 def write_postings_manifest(path: str, manifest_rows) -> list[str]:
     """Persist the winner-attempt file list (relative to postings/) —
     the Iceberg-style commit record. `manifest_rows` are the rows the
-    driver collected from make_encode_write_partition: Spark only
+    driver collected from make_encode_arrow_write_partition: Spark only
     surfaces output from the attempt that WON each partition, so files a
     loser/zombie attempt wrote are absent here and stay invisible to
     readers forever (read_postings resolves through this file)."""

@@ -107,3 +107,39 @@ def test_positions_absent_is_none():
     row = encode_shard(doc_idx, tf, dl, tfn)
     assert row["positions"] is None
     assert decode_shard_positions(row) is None
+
+
+def test_batch_decode_matches_per_row_decode():
+    """decode_shards_batch over an Arrow batch of encoded rows equals
+    per-row decode_shard — every batch split (sliced arrays carry a
+    non-zero offset), single-posting rows and doc_idx near 2^40."""
+    import pyarrow as pa
+
+    from connectors_spark.functions.codec import decode_shards_batch
+
+    rng = np.random.RandomState(7)
+    rows = []
+    for n in [1, 1, 3, BLOCK_SIZE, 1, BLOCK_SIZE + 5, 700, 1, 2, 40]:
+        doc_idx, tf, dl, tfn = _random_shard(rng, n)
+        if rng.rand() < 0.5:
+            doc_idx = doc_idx + (1 << 40)  # range-partition id jumps
+        rows.append(encode_shard(doc_idx, tf, dl, tfn))
+    cols = {c: pa.array([r[c] for r in rows], pa.binary())
+            for c in ("doc_gaps", "tfs", "dls")}
+    n_docs = np.array([r["n_docs"] for r in rows], dtype=np.int64)
+    m = len(rows)
+    for a in range(m):
+        for b in range(a + 1, m + 1):
+            starts, d, t, l = decode_shards_batch(
+                n_docs[a:b], *(cols[c].slice(a, b - a)
+                               for c in ("doc_gaps", "tfs", "dls")))
+            assert len(d) == len(t) == len(l) == int(n_docs[a:b].sum())
+            for i, row in enumerate(rows[a:b]):
+                exp_d, exp_t, exp_l = decode_shard(row)
+                sl = slice(starts[i], starts[i] + row["n_docs"])
+                assert np.array_equal(d[sl], exp_d)
+                assert np.array_equal(t[sl], exp_t)
+                assert np.array_equal(l[sl], exp_l)
+    # streams that are not asked for are not decoded
+    _, d, t, l = decode_shards_batch(n_docs, cols["doc_gaps"])
+    assert t is None and l is None and len(d) == int(n_docs.sum())

@@ -272,3 +272,143 @@ def test_streaming_index_maintenance_end_to_end(spark, tmp_path):
     hits = reader.topk([{"query_id": "q", "query_text": "streamterm",
                          "k": 10}], kernel="exact").collect()
     assert len(hits) > 0
+
+
+def _dead_counts_per_row(rows, tombs):
+    """Reference for the vectorized dead scan: the per-row decode loop
+    the delta writer used before it counted per Arrow batch."""
+    import numpy as np
+
+    from connectors_spark.functions.codec import varint_decode
+
+    out = {}
+    for row in rows:
+        d = np.cumsum(varint_decode(row["doc_gaps"], 0, int(row["n_docs"]))
+                      .astype(np.int64))
+        pos = np.minimum(np.searchsorted(tombs, d), max(0, len(tombs) - 1))
+        n_dead = int((tombs[pos] == d).sum()) if len(tombs) else 0
+        if n_dead:
+            out[row["term"]] = out.get(row["term"], 0) + n_dead
+    return out
+
+
+def _decoded(row):
+    from connectors_spark.functions.codec import decode_shard
+
+    return decode_shard(row)[0]
+
+
+def test_vectorized_dead_count_matches_per_row_loop():
+    import numpy as np
+    import pyarrow as pa
+
+    from connectors_spark.functions.codec import encode_shard
+    from connectors_spark.operators.delta import _dead_counts
+
+    rng = np.random.RandomState(3)
+    rows = []
+    for i, n in enumerate([1, 5, 1, 300, 129, 2, 1, 64]):
+        doc = np.sort(rng.choice(4000, size=n, replace=False)).astype(np.int64)
+        tf = rng.randint(1, 9, size=n)
+        enc = encode_shard(doc, tf, tf + 10, tf / (tf + 1.0))
+        # two shards per term: the scan sums them per term
+        rows.append({"term": f"t{i // 2}", **enc})
+    all_docs = np.unique(np.concatenate([_decoded(r) for r in rows]))
+    tomb_sets = {
+        "empty": np.zeros(0, dtype=np.int64),
+        "out_of_range": np.array([-5, 10_000, 10_001], dtype=np.int64),
+        "all_dead": all_docs,
+        "some": np.sort(rng.choice(all_docs, size=200, replace=False)),
+        "one": all_docs[:1],
+    }
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([r["term"] for r in rows]),
+         pa.array([r["n_docs"] for r in rows], pa.int64()),
+         pa.array([r["doc_gaps"] for r in rows], pa.binary())],
+        names=["term", "n_docs", "doc_gaps"])
+    for name, tombs in tomb_sets.items():
+        exp = _dead_counts_per_row(rows, tombs)
+        for split in (1, 3, len(rows)):
+            got = {}
+            parts = [batch.slice(a, split) for a in range(0, len(rows), split)]
+            for out in _dead_counts(iter(parts), tombs):
+                for t, d in zip(out.column("term").to_pylist(),
+                                out.column("dead").to_pylist()):
+                    got[t] = got.get(t, 0) + d
+            assert got == exp, (name, split)
+    assert _dead_counts_per_row(rows, tomb_sets["all_dead"]) == {
+        f"t{i}": sum(r["n_docs"] for r in rows[2 * i:2 * i + 2])
+        for i in range(4)}
+
+
+def test_fused_delta_generation_layout_and_content(spark, tmp_path):
+    """A generation written by incremental_update over a fused-built
+    (non-positional) base: one parquet file per bucket dir, decoded
+    (term, doc_id, tf, dl) equal to an independent recount of the changed
+    docs, block_max_w at avgdl_live, and exact/WAND rank identity."""
+    import os
+    from collections import Counter
+
+    import numpy as np
+
+    from connectors_spark.functions.analysis import tokenize_py
+    from connectors_spark.functions.codec import BLOCK_SIZE, decode_shard
+    from connectors_spark.operators.index import build_and_write_index
+    from connectors_spark.operators.score import tf_norm_np
+
+    path = str(tmp_path / "fused_delta")
+    s0, s1 = _snapshots(spark)
+    meta0 = build_and_write_index(s0, path, n_buckets=8, shard_cap=300)
+    assert meta0["positions"] is False
+    rec = incremental_update(spark, path, s1)
+    assert rec is not None and rec["gen"] == 1
+
+    before = {r.doc_id: r.ts for r in with_doc_id(s0).collect()}
+    after = {r.doc_id: (r.ts, r.text) for r in with_doc_id(s1).collect()}
+    created = [d for d in after if d not in before]
+    updated = [d for d in after if d in before and after[d][0] != before[d]]
+    deleted = [d for d in before if d not in after]
+    assert created and updated and deleted
+    assert (rec["created"], rec["updated"], rec["deleted"], rec["skipped"]) \
+        == (len(created), len(updated), len(deleted),
+            len(after) - len(created) - len(updated))
+    assert rec["n_changed"] == len(created) + len(updated) + len(deleted)
+    assert rec["n_tombstones"] == len(updated) + len(deleted)
+
+    gdir = os.path.join(path, "delta", "1")
+    bucket_dirs = [d for d in os.listdir(os.path.join(gdir, "postings"))
+                   if d.startswith("bucket=")]
+    assert bucket_dirs
+    for d in bucket_dirs:
+        files = [f for f in os.listdir(os.path.join(gdir, "postings", d))
+                 if f.endswith(".parquet") and not f.startswith(".")]
+        assert len(files) == 1, (d, files)
+
+    exp = {}
+    for doc_id in created + updated:
+        toks = tokenize_py(after[doc_id][1])
+        for term, tf in Counter(toks).items():
+            exp[(term, doc_id)] = (tf, len(toks))
+    dm = {r.doc_idx: r.doc_id
+          for r in spark.read.parquet(f"{gdir}/docmap").collect()}
+    assert sorted(dm.values()) == sorted(created + updated)
+    meta = read_meta(path)
+    avgdl_live = rec["avgdl_live"]
+    assert avgdl_live != meta0["avgdl"]
+    got = {}
+    for row in spark.read.parquet(f"{gdir}/postings").toPandas() \
+            .to_dict("records"):
+        d, tf, dl = decode_shard(row)
+        for i, t, n in zip(d.tolist(), tf.tolist(), dl.tolist()):
+            got[(row["term"], dm[i])] = (t, n)
+        w = tf_norm_np(tf, dl, avgdl_live, meta["k1"], meta["b"])
+        bmax = np.maximum.reduceat(w, np.arange(0, len(w), BLOCK_SIZE))
+        assert np.allclose(row["block_max_w"], bmax, rtol=1e-12, atol=0)
+        assert row["df"] == sum(1 for k in exp if k[0] == row["term"])
+    assert got == exp
+
+    oracle = OracleIndex([(d, t) for d, (_, t) in after.items()])
+    assert meta["n_docs"] == oracle.n_docs
+    assert meta["avgdl"] == pytest.approx(oracle.avgdl, rel=1e-12)
+    for kernel in ("exact", "wand"):
+        _check_rank_identity(spark, path, oracle, kernel)
