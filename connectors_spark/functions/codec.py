@@ -1,8 +1,10 @@
 """Posting-list block codec: delta-gap + LEB128 varint, block-max metadata.
 
-Pure NumPy, vectorized in both directions (no per-int Python loops) — this
-runs inside Arrow-batched applyInPandas workers, so it must be fast on
-million-entry shards. Nothing like this exists in the reference (Lucene
+Pure NumPy, vectorized in both directions (no per-int Python loops) — the
+batch encoder (`encode_streams`) runs inside the mapInArrow encode tasks
+over whole Arrow batches of (term, shard) groups, so it must be fast on
+million-entry shards. `encode_shard` is the per-group reference it is
+byte-identical to. Nothing like this exists in the reference (Lucene
 owns the index format there); the format follows the public
 block-max-index literature (VLDB'11 block-max WAND; FOR/varint postings).
 
@@ -12,10 +14,13 @@ Layout per (term, shard):
   dls      : varint(dl)   -- per-posting doc length; lets the scorer
                              recompute exact float64 BM25 (rank identity
                              with the DataFrame path by construction)
+  positions: optional varint(per-posting delta(positions)), tf values per
+             posting, first position of each posting absolute
   blocks of BLOCK_SIZE entries, each with:
     block_last_doc  : last absolute doc_idx (skip test without decode)
     block_offsets   : byte offset of block start in doc_gaps
     block_tf_offsets: byte offset in tfs (dls shares tf offsets? no — own)
+    block_pos_offsets: byte offset of the block's first position
     block_max_w     : max over block of tf_norm(tf, dl) — multiply by idf
                       at query time for the block-max WAND upper bound
 """
@@ -149,22 +154,31 @@ def encode_shard(doc_idx: np.ndarray, tf: np.ndarray, dl: np.ndarray,
 
 
 def encode_streams(doc_idx: np.ndarray, tf: np.ndarray, dl: np.ndarray,
-                   tf_norm: np.ndarray, gstarts: np.ndarray) -> dict:
-    """Core of the vectorized many-group encoder: one varint pass per
-    stream over a whole batch of (term, shard) groups.
+                   tf_norm: np.ndarray, gstarts: np.ndarray,
+                   positions: np.ndarray | None = None) -> dict:
+    """Vectorized many-group encoder: one varint pass per stream over a
+    whole batch of (term, shard) groups. The Zipf tail makes most groups
+    tiny, so per-group NumPy calls would make fixed cost dominate; this
+    is the same math as `encode_shard` at ~15 NumPy calls per BATCH.
 
     Inputs are the concatenated posting columns of a batch sorted by
     (group, doc_idx asc); `gstarts` are the group start offsets
-    (ascending, gstarts[0] == 0, every group non-empty). Byte-identical
-    to `encode_shard` per group. Returns the RAW buffers plus per-value
-    and per-block offset arrays so callers can materialize per-group
-    values zero-copy (Arrow) or by slicing (pandas):
+    (ascending, gstarts[0] == 0, every group non-empty). `positions` is
+    the optional flat positions array, posting by posting, tf values per
+    posting (each posting's positions ascending). Byte-identical to
+    `encode_shard` per group. Returns the RAW buffers plus per-posting
+    and per-block offset arrays so the caller can slice per-group values
+    zero-copy (Arrow):
 
       glens, nblocks            — per group
       gap_buf/tf_buf/dl_buf     — whole-batch byte streams
-      gap_off/tf_off/dl_off     — per-VALUE byte offsets into the streams
+      gap_off/tf_off/dl_off     — per-posting byte offsets into the streams
+      pos_buf, pos_off          — positions stream and the byte offset of
+                                  each posting's first position (None
+                                  without positions)
       block_last_doc, block_offsets, block_tf_offsets, block_dl_offsets,
-      block_max_w               — per BLOCK, offsets group-relative
+      block_pos_offsets, block_max_w
+                                — per BLOCK, offsets group-relative
     """
     n = len(doc_idx)
     doc_idx = np.asarray(doc_idx, dtype=np.int64)
@@ -199,53 +213,33 @@ def encode_streams(doc_idx: np.ndarray, tf: np.ndarray, dl: np.ndarray,
     block_max_w = (np.maximum.reduceat(w, bstart) if tot_blocks
                    else np.zeros(0, dtype=np.float64))
     base = gstarts[block_group]
+    pos_buf = pos_off = block_pos_offsets = None
+    if positions is not None:
+        # per-posting delta: first position absolute, then gaps
+        p = np.asarray(positions, dtype=np.int64)
+        first = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(tf, out=first[1:])
+        d = np.diff(p, prepend=0)
+        heads = first[:-1][tf > 0]
+        d[heads] = p[heads]
+        pos_buf, val_off = varint_encode(d.astype(np.uint64))
+        # a posting's byte offset is its first value's; one past the end
+        # of the stream for postings past the last value (as encode_shard)
+        pos_off = np.append(val_off, len(pos_buf))[first[:-1]]
+        block_pos_offsets = pos_off[bstart] - pos_off[base]
     return {
         "glens": glens,
         "nblocks": nblocks,
         "gap_buf": gap_buf, "gap_off": gap_off,
         "tf_buf": tf_buf, "tf_off": tf_off,
         "dl_buf": dl_buf, "dl_off": dl_off,
+        "pos_buf": pos_buf, "pos_off": pos_off,
         "block_last_doc": block_last_doc,
         "block_offsets": gap_off[bstart] - gap_off[base],
         "block_tf_offsets": tf_off[bstart] - tf_off[base],
         "block_dl_offsets": dl_off[bstart] - dl_off[base],
+        "block_pos_offsets": block_pos_offsets,
         "block_max_w": block_max_w,
-    }
-
-
-def encode_shards_batch(doc_idx: np.ndarray, tf: np.ndarray, dl: np.ndarray,
-                        tf_norm: np.ndarray, gstarts: np.ndarray) -> dict:
-    """Vectorized encoder for MANY (term, shard) groups in one pass —
-    per-group materialization of `encode_streams` (pandas path).
-    Rationale: the Zipf tail means most groups are tiny, so ~20 NumPy
-    calls per group made per-group fixed cost dominate the encode stage
-    (measured ~5.5s of the sf0.1 bench build); this is the same math at
-    ~15 NumPy calls per BATCH. Positions are not supported here — the
-    positional build path keeps the per-group `encode_shard`.
-
-    Returns a dict of per-group columns (n_docs, doc_gaps, tfs, dls,
-    block_last_doc, block_offsets, block_tf_offsets, block_dl_offsets,
-    block_max_w) — lists/arrays indexed by group.
-    """
-    st = encode_streams(doc_idx, tf, dl, tf_norm, gstarts)
-    gstarts = np.asarray(gstarts, dtype=np.int64)
-
-    def _slices(buf: bytes, off: np.ndarray) -> list[bytes]:
-        starts = off[gstarts]
-        ends = np.append(starts[1:], len(buf))
-        return [buf[a:b] for a, b in zip(starts.tolist(), ends.tolist())]
-
-    bsplit = np.cumsum(st["nblocks"])[:-1]
-    return {
-        "n_docs": st["glens"],
-        "doc_gaps": _slices(st["gap_buf"], st["gap_off"]),
-        "tfs": _slices(st["tf_buf"], st["tf_off"]),
-        "dls": _slices(st["dl_buf"], st["dl_off"]),
-        "block_last_doc": np.split(st["block_last_doc"], bsplit),
-        "block_offsets": np.split(st["block_offsets"], bsplit),
-        "block_tf_offsets": np.split(st["block_tf_offsets"], bsplit),
-        "block_dl_offsets": np.split(st["block_dl_offsets"], bsplit),
-        "block_max_w": np.split(st["block_max_w"], bsplit),
     }
 
 
@@ -274,31 +268,43 @@ def _binary_payload(col) -> np.ndarray:
     return np.frombuffer(data, dtype=np.uint8)[int(offs[0]):int(offs[-1])]
 
 
-def decode_shards_batch(n_docs, doc_gaps, tfs=None, dls=None):
+def decode_shards_batch(n_docs, doc_gaps, tfs=None, dls=None, positions=None):
     """Batch twin of `decode_shard` over the Arrow columns of many encoded
-    rows: (row_starts, doc_idx, tf, dl), each value array row-major with
-    row i at [row_starts[i], row_starts[i] + n_docs[i]). Each stream is
-    ONE varint_decode of Σ n_docs values over the concatenated row bytes;
+    rows: (row_starts, doc_idx, tf, dl, pos), each posting array
+    row-major with row i at [row_starts[i], row_starts[i] + n_docs[i]).
+    Each stream is ONE varint_decode over the concatenated row bytes;
     doc_idx comes from a segmented cumsum of the gaps (each row's first
-    gap is absolute). tf/dl are None when their column is not passed."""
+    gap is absolute). tf/dl are None when their column is not passed.
+    `pos` (needs `tfs`) is the flat positions array, tf values per
+    posting in posting order, from a per-posting segmented cumsum of the
+    position gaps; None when `positions` is not passed."""
     n = np.asarray(n_docs, dtype=np.int64)
     total = int(n.sum())
     starts = np.zeros(len(n), dtype=np.int64)
     np.cumsum(n[:-1], out=starts[1:])
 
-    def decode(col) -> np.ndarray:
-        if total == 0:
+    def decode(col, count: int) -> np.ndarray:
+        if count == 0:
             return np.zeros(0, dtype=np.int64)
-        return varint_decode(_binary_payload(col), 0, total).astype(np.int64)
+        return varint_decode(_binary_payload(col), 0, count).astype(np.int64)
 
-    # uint64 cumsum wraps modulo 2^64, so per-row differences stay exact
-    # however large the batch's running total grows
-    c = np.zeros(total + 1, dtype=np.uint64)
-    np.cumsum(decode(doc_gaps).astype(np.uint64), out=c[1:])
-    doc_idx = (c[1:] - np.repeat(c[starts], n)).view(np.int64)
-    tf = decode(tfs) if tfs is not None else None
-    dl = decode(dls) if dls is not None else None
-    return starts, doc_idx, tf, dl
+    def seg_cumsum(vals: np.ndarray, heads: np.ndarray,
+                   lens: np.ndarray) -> np.ndarray:
+        # uint64 cumsum wraps modulo 2^64, so per-segment differences
+        # stay exact however large the batch's running total grows
+        c = np.zeros(len(vals) + 1, dtype=np.uint64)
+        np.cumsum(vals.astype(np.uint64), out=c[1:])
+        return (c[1:] - np.repeat(c[heads], lens)).view(np.int64)
+
+    doc_idx = seg_cumsum(decode(doc_gaps, total), starts, n)
+    tf = decode(tfs, total) if tfs is not None else None
+    dl = decode(dls, total) if dls is not None else None
+    pos = None
+    if positions is not None:
+        heads = np.zeros(total, dtype=np.int64)
+        np.cumsum(tf[:-1], out=heads[1:])
+        pos = seg_cumsum(decode(positions, int(tf.sum())), heads, tf)
+    return starts, doc_idx, tf, dl, pos
 
 
 def decode_shard_positions(row, tf=None) -> list[np.ndarray] | None:

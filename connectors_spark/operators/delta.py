@@ -10,12 +10,11 @@ become:
 2. tombstone doc_idx of deleted + updated docs;
 3. encode postings for created + updated docs as a new generation with
    fresh doc_idx (append-only — old generations are immutable). The
-   generation is written by the fused build's write core
+   generation's rows come from the fused build's write core
    (`index.posting_rows`: one tokenize pass, docmap stats via
-   Observation) and the Arrow encoder, with the encode shuffle keyed on
-   bucket so each bucket dir gets one file. Positional indexes are the
-   exception: they keep `build_index` + the pandas `encode_postings`
-   path, since the Arrow encoder has no positions;
+   Observation), or from `build_index` when the index has positions, and
+   go through the one encode step (`index.encode_rows`) keyed on bucket,
+   so each bucket dir gets one file;
 4. keep scoring EXACT:
    - per-term dead counts (scan + decode + count tombstone hits) correct
      df, so idf is the live value;
@@ -49,8 +48,8 @@ from connectors_spark.operators.build import (
 )
 from connectors_spark.operators.index import (
     IndexReader,
-    encode_postings,
-    make_encode_arrow_partition,
+    encode_input,
+    encode_rows,
     posting_rows,
     read_meta,
     read_postings,
@@ -178,7 +177,7 @@ def _dead_counts(batches, tombs: np.ndarray):
     for rb in batches:
         if not rb.num_rows or not len(tombs):
             continue
-        starts, doc_idx, _, _ = decode_shards_batch(
+        starts, doc_idx, *_ = decode_shards_batch(
             rb.column("n_docs").to_numpy(), rb.column("doc_gaps"))
         pos = np.minimum(np.searchsorted(tombs, doc_idx), len(tombs) - 1)
         dead = np.add.reduceat((tombs[pos] == doc_idx).astype(np.int64),
@@ -231,7 +230,7 @@ def _apply_delta(spark: SparkSession, path: str, meta: dict,
         if meta.get("positions", False):
             # a delta generation must match the base index's positional
             # setting, else phrase_topk breaks on any phrase term with
-            # delta postings — and only the pandas encoder has positions
+            # delta postings
             write = _write_positional_delta
         else:
             write = _write_fused_delta
@@ -284,29 +283,33 @@ def _write_fused_delta(spark: SparkSession, meta: dict, changed: DataFrame,
                        gdir: str, start_idx: int, n_surv: int,
                        surv_dl: int) -> tuple[int, float]:
     """Non-positional delta postings through the fused build's write core
-    (one tokenize pass, docmap stats via Observation) and Arrow encoder.
-    The encode shuffle is keyed on bucket, so each bucket lives in one
-    task and the partitionBy write leaves one file per bucket dir — no
-    second shuffle of encoded blobs. Returns (n_docs_live, avgdl_live)."""
+    (one tokenize pass, docmap stats via Observation). Returns
+    (n_docs_live, avgdl_live)."""
     id_cols = ["doc_id"] + (["ts"] if "ts" in changed.columns else [])
-    n_buckets = int(meta["n_buckets"])
     with posting_rows(changed, id_cols, f"{gdir}/docmap",
-                      n_buckets=n_buckets, shard_cap=meta["shard_cap"],
+                      n_buckets=int(meta["n_buckets"]),
+                      shard_cap=meta["shard_cap"],
                       start_idx=start_idx) as (rows, n_new, new_dl):
         n_live = n_surv + n_new
         avgdl_live = (surv_dl + new_dl) / n_live
         if not new_dl:
             _write_no_postings(spark, gdir)
             return n_live, avgdl_live
-        n_parts = min(spark.sparkContext.defaultParallelism, n_buckets)
-        (rows.repartition(n_parts, "bucket")
-         .sortWithinPartitions("term", "shard", "doc_idx")
-         .mapInArrow(make_encode_arrow_partition(avgdl_live, meta["k1"],
-                                                 meta["b"]),
-                     schema=ENCODED_POSTINGS_SCHEMA)
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(f"{gdir}/postings"))
+        _write_delta_postings(spark, meta, rows, gdir, avgdl_live)
     return n_live, avgdl_live
+
+
+def _write_delta_postings(spark: SparkSession, meta: dict, rows: DataFrame,
+                          gdir: str, avgdl_live: float) -> None:
+    """Encode a generation's posting rows keyed on bucket: each bucket
+    lives in one task, so the partitionBy write leaves one file per
+    bucket dir — no second shuffle of encoded blobs."""
+    n_buckets = int(meta["n_buckets"])
+    n_parts = min(spark.sparkContext.defaultParallelism, n_buckets)
+    (encode_rows(rows, n_parts, ["bucket"], avgdl_live, meta["k1"],
+                 meta["b"])
+     .write.mode("overwrite").partitionBy("bucket")
+     .parquet(f"{gdir}/postings"))
 
 
 def _write_no_postings(spark: SparkSession, gdir: str) -> None:
@@ -319,9 +322,9 @@ def _write_no_postings(spark: SparkSession, gdir: str) -> None:
 def _write_positional_delta(spark: SparkSession, meta: dict,
                             changed: DataFrame, gdir: str, start_idx: int,
                             n_surv: int, surv_dl: int) -> tuple[int, float]:
-    """Positional delta postings: build_index + the pandas encoder (the
-    Arrow encoder has no positions yet). Returns (n_docs_live,
-    avgdl_live)."""
+    """Positional delta postings: build_index (positions come from its
+    token stream) with stats via Observation on the docmap write.
+    Returns (n_docs_live, avgdl_live)."""
     from pyspark.sql import Observation
 
     sub = build_index(changed, with_positions=True)
@@ -336,14 +339,9 @@ def _write_positional_delta(spark: SparkSession, meta: dict,
     if not new_dl:
         _write_no_postings(spark, gdir)
         return n_live, avgdl_live
-    encoded = encode_postings(
-        sub.postings, sub_docmap, sub.lexicon, avgdl_live,
-        n_buckets=meta["n_buckets"], shard_cap=meta["shard_cap"],
-        k1=meta["k1"], b=meta["b"],
-    ).repartition(int(meta["n_buckets"]), "bucket")
-    encoded.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{gdir}/postings"
-    )
+    rows = encode_input(sub.postings, sub_docmap, sub.lexicon,
+                        int(meta["n_buckets"]), meta["shard_cap"])
+    _write_delta_postings(spark, meta, rows, gdir, avgdl_live)
     return n_live, avgdl_live
 
 
@@ -539,10 +537,11 @@ def compact_index(spark: SparkSession, path: str, out_path: str) -> None:
     meta = read_meta(path)
     reader = IndexReader(spark, path, cache=False)
     dead_bc = reader._dead_bc
+    pos_cols = ["positions"] if meta.get("positions") else []
 
     def decode_rows(batches):
-        """Live (term, doc_idx, tf) postings: one batch decode of the
-        gap and tf streams per Arrow batch, tombstoned docs masked."""
+        """Live (term, doc_idx, tf[, positions]) postings: one batch
+        decode per stream per Arrow batch, tombstoned docs masked."""
         import pyarrow as pa
 
         dead = dead_bc.value
@@ -550,25 +549,35 @@ def compact_index(spark: SparkSession, path: str, out_path: str) -> None:
             if not rb.num_rows:
                 continue
             n = rb.column("n_docs").to_numpy()
-            _, d, tf, _ = decode_shards_batch(n, rb.column("doc_gaps"),
-                                              rb.column("tfs"))
+            _, d, tf, _, p = decode_shards_batch(
+                n, rb.column("doc_gaps"), rb.column("tfs"),
+                positions=rb.column("positions") if pos_cols else None)
             row = np.repeat(np.arange(len(n)), n)
+            lists = []
+            if pos_cols:
+                offs = np.zeros(len(tf) + 1, dtype=np.int32)
+                np.cumsum(tf, out=offs[1:])
+                lists = [pa.ListArray.from_arrays(
+                    pa.array(offs), pa.array(p.astype(np.int32)))]
             if len(dead):
-                pos = np.minimum(np.searchsorted(dead, d), len(dead) - 1)
-                live = dead[pos] != d
+                at = np.minimum(np.searchsorted(dead, d), len(dead) - 1)
+                live = dead[at] != d
                 d, tf, row = d[live], tf[live], row[live]
+                lists = [a.filter(pa.array(live)) for a in lists]
             yield pa.RecordBatch.from_arrays(
                 [rb.column("term").take(pa.array(row)), pa.array(d),
-                 pa.array(tf)], names=["term", "doc_idx", "tf"])
+                 pa.array(tf), *lists],
+                names=["term", "doc_idx", "tf", *pos_cols])
 
     flat = reader.postings.select(
-        "term", "n_docs", "doc_gaps", "tfs"
-    ).mapInArrow(decode_rows, schema="term string, doc_idx long, tf long")
+        "term", "n_docs", "doc_gaps", "tfs", *pos_cols
+    ).mapInArrow(decode_rows, schema="term string, doc_idx long, tf long"
+                 + (", positions array<int>" if pos_cols else ""))
     docmap = _live_docmap(spark, path, meta)
 
     postings = flat.join(
         docmap.select("doc_idx", "doc_id"), "doc_idx"
-    ).select("term", "doc_id", "tf")
+    ).select("term", "doc_id", "tf", *pos_cols)
     docs = docmap.drop("doc_idx")
     from connectors_spark.operators.build import IndexFrames
     stats = docs.agg(F.count(F.lit(1)), F.sum("dl")).first()

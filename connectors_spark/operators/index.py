@@ -11,15 +11,17 @@ Physical layout (the part Elasticsearch/Lucene owns in the reference):
   a query touches only its terms' buckets (SURVEY §3.4).
 - hot-term sharding: a term with df > shard_cap splits into n_shards =
   next-power-of-two(ceil(df/shard_cap)) shards by doc_idx % n_shards; caps
-  the Arrow group size per applyInPandas task (Zipf head safety, SURVEY
-  §7.3#2) while keeping every shard sorted by doc_idx (WAND treats shards
-  of one term as disjoint sorted lists). Power-of-two residue sharding
+  the group size per encode task (Zipf head safety, SURVEY §7.3#2)
+  while keeping every shard sorted by doc_idx (WAND treats shards of one
+  term as disjoint sorted lists). Power-of-two residue sharding
   NESTS (doc % 2^j == (doc % 2^m) % 2^j for j <= m), which is what lets
   the query side split one query across G disjoint doc-space groups with
   every doc's postings for EVERY query term landing in the same group —
   the hot-term-safe distributed top-k (IndexReader.topk).
-- encoding itself is groupBy(term, shard).applyInPandas over Arrow batches
-  — the only Python in the build, vectorized NumPy inside.
+- encoding is one step (`encode_rows`) for every index write:
+  repartition -> sort by (term, shard, doc_idx) -> mapInArrow over the
+  Arrow encoder — the only Python in the build, vectorized NumPy inside
+  (functions/codec.py encode_streams), positions included.
 """
 
 from __future__ import annotations
@@ -34,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from connectors_spark import BM25_B, BM25_K1
-from connectors_spark.functions.codec import encode_shard
 from connectors_spark.operators.build import IndexFrames, assign_doc_indices
 from connectors_spark.operators.score import idf_np, tf_norm_np
 from connectors_spark.operators.wand import topk_auto, topk_exact, topk_wand
@@ -86,147 +87,6 @@ def shard_cols(shard_cap: int) -> list:
     ]
 
 
-def make_encode_partition(avgdl: float, k1: float, b: float):
-    """Streaming per-partition encoder for mapInPandas.
-
-    Input partitions are hash-distributed by (term, shard) and sorted by
-    (term, shard, doc_idx); Arrow may split one run across batches, so the
-    tail run of every batch is carried into the next. Non-positional
-    batches encode through `encode_shards_batch` — ONE vectorized NumPy
-    pass over the whole Arrow batch instead of ~20 NumPy calls per
-    (term, shard) group (the Zipf tail made per-group fixed cost the
-    encode wall: measured ~5.5s -> ~1s on the sf0.1 bench build).
-    Positional batches keep the per-group `encode_shard` path.
-    """
-    from connectors_spark.functions.codec import encode_shards_batch
-
-    out_cols = [f.name for f in ENCODED_POSTINGS_SCHEMA.fields]
-
-    def has_positions(pdf: pd.DataFrame) -> bool:
-        if "positions" not in pdf.columns or not len(pdf):
-            return False
-        v = pdf["positions"].iloc[0]
-        return not (v is None or isinstance(v, float))
-
-    def encode_body(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Vectorized whole-batch encode (no positions)."""
-        term = pdf["term"].to_numpy(object)
-        shard = pdf["shard"].to_numpy()
-        m = len(term)
-        newg = np.empty(m, dtype=bool)
-        newg[0] = True
-        newg[1:] = (term[1:] != term[:-1]) | (shard[1:] != shard[:-1])
-        gstarts = np.flatnonzero(newg)
-        tf = pdf["tf"].to_numpy(dtype=np.int64)
-        dl = pdf["dl"].to_numpy(dtype=np.int64)
-        enc = encode_shards_batch(
-            pdf["doc_idx"].to_numpy(dtype=np.int64), tf, dl,
-            tf_norm_np(tf, dl, avgdl, k1, b), gstarts,
-        )
-        ng = len(gstarts)
-        cols = {
-            "term": pd.Series(term[gstarts]),
-            "bucket": pd.Series(pdf["bucket"].to_numpy()[gstarts]),
-            "shard": pd.Series(shard[gstarts]),
-            "n_shards": pd.Series(pdf["n_shards"].to_numpy()[gstarts]),
-            "n_docs": pd.Series(enc["n_docs"]),
-            "df": pd.Series(pdf["df"].to_numpy(dtype=np.int64)[gstarts]),
-            "doc_gaps": pd.Series(enc["doc_gaps"], dtype=object),
-            "tfs": pd.Series(enc["tfs"], dtype=object),
-            "dls": pd.Series(enc["dls"], dtype=object),
-            "positions": pd.Series([None] * ng, dtype=object),
-            "block_last_doc": pd.Series(enc["block_last_doc"], dtype=object),
-            "block_offsets": pd.Series(enc["block_offsets"], dtype=object),
-            "block_tf_offsets": pd.Series(enc["block_tf_offsets"],
-                                          dtype=object),
-            "block_dl_offsets": pd.Series(enc["block_dl_offsets"],
-                                          dtype=object),
-            "block_pos_offsets": pd.Series([None] * ng, dtype=object),
-            "block_max_w": pd.Series(enc["block_max_w"], dtype=object),
-        }
-        return pd.DataFrame(cols, columns=out_cols)
-
-    def flush_group(g: pd.DataFrame, out: list[dict]):
-        tf = g["tf"].to_numpy(dtype=np.int64)
-        dl = g["dl"].to_numpy(dtype=np.int64)
-        pos = list(g["positions"]) if "positions" in g.columns else None
-        if pos is not None and (not len(pos) or pos[0] is None
-                                or (isinstance(pos[0], float))):
-            pos = None  # positions column present but null (disabled)
-        enc = encode_shard(
-            g["doc_idx"].to_numpy(dtype=np.int64), tf, dl,
-            tf_norm_np(tf, dl, avgdl, k1, b), positions=pos,
-        )
-        out.append({
-            "term": g["term"].iloc[0],
-            "bucket": int(g["bucket"].iloc[0]),
-            "shard": int(g["shard"].iloc[0]),
-            "n_shards": int(g["n_shards"].iloc[0]),
-            "df": int(g["df"].iloc[0]),
-            **enc,
-        })
-
-    def encode_partition(batches):
-        carry: pd.DataFrame | None = None
-        out: list[dict] = []
-        # accumulate encoded frames before yielding: each downstream
-        # write_table/Arrow conversion per yield costs a parquet ROW
-        # GROUP's worth of per-column metadata, and binary-column stats
-        # made many tiny row groups 45% index-size overhead (measured)
-        pend: list[pd.DataFrame] = []
-        pend_rows = 0
-
-        def drain():
-            nonlocal pend, pend_rows
-            if not pend:
-                return None
-            got = (pd.concat(pend, ignore_index=True) if len(pend) > 1
-                   else pend[0])
-            pend, pend_rows = [], 0
-            return got
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            # last (term, shard) run is carried into the next batch —
-            # find its start by position (input sorted by term, shard)
-            term = pdf["term"].to_numpy(object)
-            shard = pdf["shard"].to_numpy()
-            m = len(term)
-            same = (term == term[m - 1]) & (shard == shard[m - 1])
-            # run is contiguous at the end: first index of the tail run
-            tail_start = m - int(same[::-1].argmin()) if not same.all() else 0
-            carry = pdf.iloc[tail_start:]
-            body = pdf.iloc[:tail_start]
-            if len(body):
-                if has_positions(body):
-                    for _, g in body.groupby(["term", "shard"], sort=False):
-                        flush_group(g, out)
-                    if len(out) >= 2048:
-                        yield pd.DataFrame(out, columns=out_cols)
-                        out = []
-                else:
-                    pend.append(encode_body(body))
-                    pend_rows += len(pend[-1])
-                    if pend_rows >= 32768:
-                        yield drain()
-        if carry is not None and len(carry):
-            if has_positions(carry):
-                flush_group(carry, out)
-            else:
-                pend.append(encode_body(carry))
-        tail = drain()
-        if tail is not None:
-            yield tail
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return encode_partition
-
-
 def write_encoded_index(
     index: IndexFrames,
     path: str,
@@ -235,6 +95,8 @@ def write_encoded_index(
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> None:
+    from pyspark.sql import Observation
+
     spark = index.postings.sparkSession
     docmap = assign_doc_indices(index.docs)
     docmap.write.mode("overwrite").parquet(f"{path}/docmap")
@@ -245,11 +107,14 @@ def write_encoded_index(
     # for the duration of the build (the resumable path materializes to
     # parquet instead, plans/checkpoint.py)
     postings = index.postings.persist()
+    # whether the encoded rows carry positions rides the write job: a
+    # with_positions=False build has a NULL positions column
+    obs = Observation("encode_positions")
     try:
         encoded = encode_postings(
             postings, docmap, index.lexicon, avgdl,
             n_buckets=n_buckets, shard_cap=shard_cap, k1=k1, b=b,
-        )
+        ).observe(obs, F.count("positions").alias("p"))
         # partitionBy(bucket) straight from the encode tasks: bucket
         # pruning is directory-level, so multiple files per bucket dir
         # cost nothing at read time and the blob shuffle stage disappears
@@ -262,10 +127,27 @@ def write_encoded_index(
     meta = {
         "n_docs": n_docs, "avgdl": avgdl, "gen0_avgdl": avgdl, "k1": k1,
         "b": b, "n_buckets": n_buckets, "shard_cap": shard_cap, "deltas": [],
-        "positions": "positions" in index.postings.columns,
+        "positions": int(obs.get["p"]) > 0,
     }
     with open(os.path.join(path, "meta.json"), "w") as f:
         json.dump(meta, f)
+
+
+def encode_input(postings: DataFrame, docmap: DataFrame, lexicon: DataFrame,
+                 n_buckets: int, shard_cap: int) -> DataFrame:
+    """(term, doc_id, tf[, positions]) postings + docmap + lexicon ->
+    the encoder's input rows (term, doc_idx, tf, dl, df[, positions],
+    n_shards, shard, bucket). The lexicon join feeds df (shard fan-out
+    for the Zipf head); AQE skew-join handles the join-side skew."""
+    pos_cols = ["positions"] if "positions" in postings.columns else []
+    return (
+        postings.select("term", "doc_id", "tf", *pos_cols)
+        .join(docmap.select("doc_id", "doc_idx", "dl"), "doc_id")
+        .join(lexicon, "term")
+        .select("term", "doc_idx", "tf", "dl", "df", *pos_cols,
+                *shard_cols(shard_cap))
+        .withColumn("bucket", bucket_col("term", n_buckets))
+    )
 
 
 def encode_postings(
@@ -277,43 +159,54 @@ def encode_postings(
     shard_cap: int = DEFAULT_SHARD_CAP,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    """(uncompressed postings, docmap, lexicon) -> encoded shard rows.
-
-    Shuffle plan: one repartition on (term, shard) + in-partition sort,
-    then a single streaming mapInPandas pass. The lexicon join feeds df
-    (shard fan-out for the Zipf head); AQE skew-join handles the join-side
-    skew, sharding bounds the group size."""
-    spark = postings.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    pos_cols = ["positions"] if "positions" in postings.columns else []
-    p = (
-        postings.select("term", "doc_id", "tf", *pos_cols)
-        .join(docmap.select("doc_id", "doc_idx", "dl"), "doc_id")
-        .join(lexicon, "term")
-        .select("term", "doc_idx", "tf", "dl", "df", *pos_cols,
-                *shard_cols(shard_cap))
-        .withColumn("bucket", bucket_col("term", n_buckets))
+    """(uncompressed postings, docmap, lexicon) -> encoded shard rows:
+    `encode_input` then `encode_rows` keyed on (term, shard); sharding
+    bounds the group size."""
+    return encode_rows(
+        encode_input(postings, docmap, lexicon, n_buckets, shard_cap),
+        postings.sparkSession.sparkContext.defaultParallelism,
+        ["term", "shard"], avgdl, k1, b,
     )
-    sorted_p = p.repartition(num_partitions, "term", "shard").sortWithinPartitions(
+
+
+def encode_rows(rows: DataFrame, n_parts: int, key: list[str],
+                avgdl: float, k1: float, b: float,
+                out_dir: str | None = None) -> DataFrame:
+    """The one encode step of every index write: hash-distribute the
+    encoder's input rows (see `encode_input`) on `key`, sort each
+    partition by (term, shard, doc_idx) and stream it through the Arrow
+    encoder. Full builds key on (term, shard); delta generations key on
+    bucket, so each bucket is encoded by one task and its dir gets one
+    file. Returns the encoded rows (ENCODED_POSTINGS_SCHEMA) — or, with
+    `out_dir`, the manifest rows of the parquet files the tasks wrote
+    under it themselves (make_encode_arrow_write_partition)."""
+    sorted_rows = rows.repartition(n_parts, *key).sortWithinPartitions(
         "term", "shard", "doc_idx"
     )
-    return sorted_p.mapInPandas(
-        make_encode_partition(avgdl, k1, b), schema=ENCODED_POSTINGS_SCHEMA
+    if out_dir is None:
+        return sorted_rows.mapInArrow(
+            make_encode_arrow_partition(avgdl, k1, b),
+            schema=ENCODED_POSTINGS_SCHEMA,
+        )
+    return sorted_rows.mapInArrow(
+        make_encode_arrow_write_partition(avgdl, k1, b, out_dir),
+        schema="bucket int, file string, rows long",
     )
 
 
 def make_encode_arrow_partition(avgdl: float, k1: float, b: float):
-    """Arrow-native streaming encoder for mapInArrow (the fused,
-    non-positional build path): group detection, varint encoding and
-    output construction all operate on Arrow/NumPy buffers — no pandas
-    round-trip, no per-group Python work. The binary output columns are
-    built as ONE data buffer plus a fresh offsets array
-    (pa.Array.from_buffers), and the block-metadata lists as one values
-    array plus list offsets — the guide §4.2 re-slicing pattern, zero
-    bytes copied per group. Yields RecordBatches matching
+    """Arrow-native streaming encoder for mapInArrow: group detection,
+    varint encoding and output construction all operate on Arrow/NumPy
+    buffers — no pandas round-trip, no per-group Python work. The binary
+    output columns are built as ONE data buffer plus a fresh offsets
+    array (pa.Array.from_buffers), and the block-metadata lists as one
+    values array plus list offsets — the guide §4.2 re-slicing pattern,
+    zero bytes copied per group. Input partitions are sorted by (term,
+    shard, doc_idx); Arrow may split one run across batches, so the tail
+    run of every batch is carried into the next. A non-null `positions`
+    list column is encoded into `positions` / `block_pos_offsets`; without
+    one both are null. Yields RecordBatches matching
     ENCODED_POSTINGS_SCHEMA."""
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -335,9 +228,14 @@ def make_encode_arrow_partition(avgdl: float, k1: float, b: float):
             gstarts = np.flatnonzero(np.concatenate(([True], neq)))
         tf = tbl.column("tf").to_numpy()
         dl = tbl.column("dl").to_numpy()
+        pos = (tbl.column("positions").chunk(0)
+               if "positions" in tbl.column_names else None)
+        if pos is not None and pos.null_count:
+            pos = None  # with_positions=False builds carry NULL lists
         st = encode_streams(
             tbl.column("doc_idx").to_numpy(), tf, dl,
             tf_norm_np(tf, dl, avgdl, k1, b), gstarts,
+            positions=None if pos is None else pos.flatten().to_numpy(),
         )
         ng = len(gstarts)
         take_idx = pa.array(gstarts)
@@ -369,12 +267,14 @@ def make_encode_arrow_partition(avgdl: float, k1: float, b: float):
             bin_col(st["gap_buf"], st["gap_off"]),
             bin_col(st["tf_buf"], st["tf_off"]),
             bin_col(st["dl_buf"], st["dl_off"]),
-            pa.nulls(ng, pa.binary()),
+            (pa.nulls(ng, pa.binary()) if pos is None
+             else bin_col(st["pos_buf"], st["pos_off"])),
             list_col(st["block_last_doc"]),
             list_col(st["block_offsets"]),
             list_col(st["block_tf_offsets"]),
             list_col(st["block_dl_offsets"]),
-            pa.nulls(ng, pa.list_(pa.int64())),
+            (pa.nulls(ng, pa.list_(pa.int64())) if pos is None
+             else list_col(st["block_pos_offsets"])),
             list_col(st["block_max_w"]),
         ]
         names = [f.name for f in ENCODED_POSTINGS_SCHEMA.fields]
@@ -657,18 +557,20 @@ def build_and_write_index(
     """Fused fast path: transcripts -> encoded index in minimal shuffles.
 
     Shuffle-volume design (the thing that matters at 10^12 turns):
-    - dl is computed as size(tokens) on the BASE table (no explode, no
-      per-token shuffle, no join-back);
-    - doc_idx assignment is ONE range shuffle + monotonic ids (no count
-      collect, no window pass — see assign_doc_indices);
-    - doc_idx is assigned BEFORE tokenization, so every downstream
-      shuffle keys on int64 doc_idx instead of the 'conv-…:…' string id;
+    - ONE tokenize pass: per-doc (term, tf) entries and dl come from the
+      sorted token array (`posting_rows` / `_token_entries`), so there is
+      no groupBy(term, doc) over the token stream;
+    - doc_idx assignment is ONE range shuffle + monotonic ids over the
+      per-doc rows (no count collect, no window pass — see
+      assign_doc_indices), attached to the cached entries by a broadcast
+      join, so the encode shuffle keys on int64 doc_idx, not the
+      'conv-…:…' string id;
     - lexicon df comes back via an explicit broadcast join;
-    - total wide ops: docmap range-assign (docs only), groupBy(term,
-      doc_idx) on the token stream, df partial-agg, repartition(term,
-      shard) of compact long-keyed postings. The generic
-      write_encoded_index path keeps the (doc_id, text) API; this one is
-      the throughput builder used by bench/scaling.
+    - total wide ops: docmap range-assign (docs only), df partial-agg,
+      repartition(term, shard) of compact long-keyed postings
+      (`encode_rows`). The generic write_encoded_index path keeps the
+      (doc_id, text) API; this one is the throughput builder used by
+      bench/scaling.
     Returns meta.
     """
     from connectors_spark.operators.build import with_doc_id
@@ -691,10 +593,8 @@ def build_and_write_index(
     with posting_rows(base, id_cols, f"{path}/docmap", n_buckets=n_buckets,
                       shard_cap=shard_cap) as (p, n_docs, sum_dl):
         avgdl = float(sum_dl) / n_docs if n_docs else 0.0
-        sorted_p = p.repartition(
-            num_partitions, "term", "shard"
-        ).sortWithinPartitions("term", "shard", "doc_idx")
         post_dir = f"{path}/postings"
+        key = ["term", "shard"]
         if direct_write:
             # task-side pyarrow writes, no Spark committer: the commit
             # pass (driver-side serial renames of O(files)) is gone —
@@ -702,10 +602,8 @@ def build_and_write_index(
             import shutil as _shutil
             _shutil.rmtree(post_dir, ignore_errors=True)
             os.makedirs(post_dir, exist_ok=True)
-            manifest = sorted_p.mapInArrow(
-                make_encode_arrow_write_partition(avgdl, k1, b, post_dir),
-                schema="bucket int, file string, rows long",
-            ).collect()
+            manifest = encode_rows(p, num_partitions, key, avgdl, k1, b,
+                                   out_dir=post_dir).collect()
             if not manifest:  # empty corpus: still need a readable dir
                 direct_write = False
             else:
@@ -714,16 +612,11 @@ def build_and_write_index(
                 write_postings_manifest(path, manifest)
                 gc_unmanifested(path)
         if not direct_write:
-            encoded = sorted_p.mapInArrow(
-                make_encode_arrow_partition(avgdl, k1, b),
-                schema=ENCODED_POSTINGS_SCHEMA,
-            )
             # classic committer path: bucket pruning is directory-level,
             # multiple files per bucket dir (<= encode tasks) cost
             # nothing at read time
-            encoded.write.mode("overwrite").partitionBy("bucket").parquet(
-                post_dir
-            )
+            encode_rows(p, num_partitions, key, avgdl, k1, b).write.mode(
+                "overwrite").partitionBy("bucket").parquet(post_dir)
 
     meta = {
         "n_docs": n_docs, "avgdl": avgdl, "gen0_avgdl": avgdl, "k1": k1,

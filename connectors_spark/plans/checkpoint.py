@@ -35,10 +35,9 @@ from connectors_spark import BM25_B, BM25_K1
 from connectors_spark.operators.build import IndexFrames, assign_doc_indices
 from connectors_spark.operators.index import (
     bucket_col,
-    make_encode_partition,
+    encode_rows,
     shard_cols,
 )
-from connectors_spark.schema import ENCODED_POSTINGS_SCHEMA
 
 DONE = "completed"
 
@@ -134,14 +133,7 @@ def resumable_write_encoded_index(
         grp = raw.filter(F.col("grp") == g).select(
             "term", "doc_idx", "tf", "dl", "df", "bucket", *shard_cols(shard_cap)
         )
-        encoded = (
-            grp.repartition(n_parts, "term", "shard")
-            .sortWithinPartitions("term", "shard", "doc_idx")
-            .mapInPandas(
-                make_encode_partition(avgdl, k1, b),
-                schema=ENCODED_POSTINGS_SCHEMA,
-            )
-        )
+        encoded = encode_rows(grp, n_parts, ["term", "shard"], avgdl, k1, b)
         out_dir = f"{path}/postings/grp={g}"
         encoded.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
         n_rows = spark.read.parquet(out_dir).count()

@@ -78,6 +78,29 @@ def test_live_stats_match_oracle(spark, updated):
     assert meta["avgdl"] == pytest.approx(oracle.avgdl, rel=1e-12)
 
 
+def _assert_one_file_per_bucket(post_dir: str) -> None:
+    import os
+
+    bucket_dirs = [d for d in os.listdir(post_dir) if d.startswith("bucket=")]
+    assert bucket_dirs
+    for d in bucket_dirs:
+        files = [f for f in os.listdir(os.path.join(post_dir, d))
+                 if f.endswith(".parquet") and not f.startswith(".")]
+        assert len(files) == 1, (d, files)
+
+
+def test_nonpositional_base_writes_nonpositional_deltas(spark, updated):
+    """A with_positions=False build records positions: False, so its
+    delta generation takes the non-positional writer: one file per
+    bucket dir and no positions in the encoded rows."""
+    path, _, _ = updated
+    assert read_meta(path)["positions"] is False
+    post = f"{path}/delta/1/postings"
+    _assert_one_file_per_bucket(post)
+    assert spark.read.parquet(post).filter(
+        F.col("positions").isNotNull()).count() == 0
+
+
 def test_noop_update_returns_none(spark, updated):
     path, s1, _ = updated
     assert incremental_update(spark, path, s1) is None
@@ -98,7 +121,8 @@ def test_incremental_positional_phrase(spark, tmp_path):
     """Delta generations inherit with_positions (meta.json), so phrase
     retrieval keeps working — and stays oracle-identical — after an
     incremental update (round-1 ADVICE: hardcoded with_positions=False
-    broke phrases whose terms had delta postings)."""
+    broke phrases whose terms had delta postings) and after compacting
+    the generations back into one (compaction carries positions)."""
     path = str(tmp_path / "pidx_delta")
     s0, s1 = _snapshots(spark)
     write_encoded_index(
@@ -114,17 +138,26 @@ def test_incremental_positional_phrase(spark, tmp_path):
     # 'freshterm' only exists in delta postings: the round-1 bug raised here
     sample = next(r.text for r in rows if r.text.endswith("freshterm"))
     phrase = " ".join(sample.split()[-2:])
-    reader = IndexReader(spark, path, cache=False)
-    got = sorted(
-        reader.phrase_topk(
-            [{"query_id": "p", "query_text": phrase, "k": 10}]
-        ).collect(),
-        key=lambda r: r.rank,
-    )
     exp = oracle.phrase_query(phrase, 10)
-    assert [g.doc_id for g in got] == [d for d, _ in exp]
-    for g, (_, s) in zip(got, exp):
-        assert g.score == pytest.approx(s, rel=1e-9)
+    assert exp
+
+    def check(index_path):
+        reader = IndexReader(spark, index_path, cache=False)
+        got = sorted(
+            reader.phrase_topk(
+                [{"query_id": "p", "query_text": phrase, "k": 10}]
+            ).collect(),
+            key=lambda r: r.rank,
+        )
+        assert [g.doc_id for g in got] == [d for d, _ in exp]
+        for g, (_, s) in zip(got, exp):
+            assert g.score == pytest.approx(s, rel=1e-9)
+
+    check(path)
+    out = str(tmp_path / "pidx_compacted")
+    compact_index(spark, path, out)
+    assert read_meta(out)["positions"] is True
+    check(out)
 
 
 def test_auto_compaction_policy_roundtrip(spark, tmp_path):
@@ -376,13 +409,7 @@ def test_fused_delta_generation_layout_and_content(spark, tmp_path):
     assert rec["n_tombstones"] == len(updated) + len(deleted)
 
     gdir = os.path.join(path, "delta", "1")
-    bucket_dirs = [d for d in os.listdir(os.path.join(gdir, "postings"))
-                   if d.startswith("bucket=")]
-    assert bucket_dirs
-    for d in bucket_dirs:
-        files = [f for f in os.listdir(os.path.join(gdir, "postings", d))
-                 if f.endswith(".parquet") and not f.startswith(".")]
-        assert len(files) == 1, (d, files)
+    _assert_one_file_per_bucket(os.path.join(gdir, "postings"))
 
     exp = {}
     for doc_id in created + updated:

@@ -22,9 +22,9 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def python_roundtrip(spark, par: int, rows_per_task: int = 2000) -> float:
-    """Python-worker startup/roundtrip micro-probe: a mapInPandas job
-    whose compute is ~zero, so wall time is task scheduling + Arrow
-    channel + Python worker spin-up. If THIS fails to scale N->4N, the
+    """Python-worker startup/roundtrip micro-probe: a mapInArrow job (the
+    encoder's channel) whose compute is ~zero, so wall time is task
+    scheduling + Arrow channel + Python worker spin-up. If THIS fails to scale N->4N, the
     residual efficiency gap lives in worker startup, not shuffle."""
     import time as _t
 
@@ -32,11 +32,10 @@ def python_roundtrip(spark, par: int, rows_per_task: int = 2000) -> float:
     df = spark.range(par * rows_per_task).repartition(par)
 
     def ident(it):
-        for pdf in it:
-            yield pdf
+        yield from it
 
     t0 = _t.time()
-    df.mapInPandas(ident, schema="id long").write.format("noop") \
+    df.mapInArrow(ident, schema="id long").write.format("noop") \
         .mode("overwrite").save()
     return round(_t.time() - t0, 3)
 
@@ -46,7 +45,8 @@ def run_level(spark, par: int, n_convs: int, write: bool,
     from connectors_spark.functions.analysis import tokens_col
     from connectors_spark.operators.build import assign_doc_indices, with_doc_id
     from connectors_spark.operators.index import (
-        ENCODED_POSTINGS_SCHEMA, bucket_col, make_encode_partition, shard_cols,
+        ENCODED_POSTINGS_SCHEMA, bucket_col, encode_rows,
+        make_encode_arrow_partition, shard_cols,
     )
     from connectors_spark.synth import synth_transcripts
     from pyspark.sql import Observation
@@ -85,19 +85,20 @@ def run_level(spark, par: int, n_convs: int, write: bool,
         p = (postings.join(F.broadcast(lexicon), "term")
              .select("term", "doc_idx", "tf", "dl", "df", *shard_cols(1 << 18))
              .withColumn("bucket", bucket_col("term", 64)))
-        if shuffle:
+        if shuffle and python_encode:
+            enc = encode_rows(p, par, ["term", "shard"], avgdl, 1.2, 0.75)
+        elif shuffle:
             enc = p.repartition(par, "term", "shard").sortWithinPartitions(
                 "term", "shard", "doc_idx")
-        else:
+        elif python_encode:
             # no-shuffle variant: encode straight off the agg output
             # (emitted index is NOT valid — term runs span partitions —
             # but the compute volume matches; isolates the shuffle
             # write+read from the rest of the pipeline)
+            enc = p.mapInArrow(make_encode_arrow_partition(avgdl, 1.2, 0.75),
+                               schema=ENCODED_POSTINGS_SCHEMA)
+        else:
             enc = p
-        if python_encode:
-            enc = enc.mapInPandas(
-                make_encode_partition(avgdl, 1.2, 0.75),
-                schema=ENCODED_POSTINGS_SCHEMA)
         t0 = time.time()
         if write:
             enc.write.mode("overwrite").partitionBy("bucket").parquet(
