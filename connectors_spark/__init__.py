@@ -18,6 +18,11 @@ __version__ = "0.1.0"
 BM25_K1 = 1.2
 BM25_B = 0.75
 
+# Row-count cutoff for broadcasting the (doc_id, dl) / (doc_id, doc_idx)
+# doc map into a join: at or below it the map broadcasts, above it the
+# join shuffles. Exact, because every index knows n_docs.
+BROADCAST_DOCS_MAX = 2_000_000
+
 # Canonical analyzer: lowercase + split on any non-alphanumeric run.
 # Shared verbatim between the build side, the query side, the NumPy
 # oracle and the DuckDB oracle SQL (same regex dialect subset works in

@@ -7262,8 +7262,7 @@ def q_terms_set_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from connectors_spark.operators.query import _distinct_term_weights
 
     terms = spark.createDataFrame([(t,) for t in _TERMS_SET], "term string")
-    tw = _distinct_term_weights(idx, terms, BM25_K1, BM25_B,
-                                2_000_000)
+    tw = _distinct_term_weights(idx, terms, BM25_K1, BM25_B)
     agg = tw.groupBy("doc_id").agg(
         F.round(F.sum("w"), ROUND_SCORE).alias("score"),
         F.count_distinct("term").alias("n_matched"),
@@ -7352,7 +7351,7 @@ def q_match_bool_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tw = _distinct_term_weights(
         idx, expanded.select("term").distinct(),
-        BM25_K1, BM25_B, 2_000_000,
+        BM25_K1, BM25_B,
     )
     scored = (
         tw.join(F.broadcast(expanded), "term")
@@ -10446,7 +10445,7 @@ def q_min_score_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
     qterms = query_terms(qdf)
     tw = _distinct_term_weights(idx, qterms.select("term").distinct(),
-                                BM25_K1, BM25_B, 2_000_000)
+                                BM25_K1, BM25_B)
     scored = (
         tw.join(F.broadcast(qterms), "term")
         .groupBy("query_id", "doc_id")
@@ -14880,7 +14879,7 @@ def q_search_as_you_type(spark: SparkSession, sf_dir: str) -> DataFrame:
                   | (~F.col("is_prefix") & (F.col("term") == F.col("part"))))
             .select("query_id", "term").distinct())
     tw = _distinct_term_weights(idx, rexp.select("term").distinct(),
-                                BM25_K1, BM25_B, 2_000_000)
+                                BM25_K1, BM25_B)
     rcontrib = (tw.join(F.broadcast(rexp), "term")
                 .select("query_id", "doc_id", "w"))
     scontrib = subfield_weights(shingle_rows(docs),

@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from connectors_spark import BM25_B, BM25_K1
+from connectors_spark import BM25_B, BM25_K1, BROADCAST_DOCS_MAX
 from connectors_spark.operators.build import IndexFrames, assign_doc_indices
 from connectors_spark.operators.score import idf_np, tf_norm_np
 from connectors_spark.operators.wand import topk_auto, topk_exact, topk_wand
@@ -524,7 +524,7 @@ def posting_rows(base: DataFrame, id_cols: list[str], docmap_dir: str, *,
         # entries) rows — same volume the old token-stream join shuffled,
         # minus the exploded duplication
         dm = docmap.select("doc_id", "doc_idx")
-        if n_docs <= 2_000_000:
+        if n_docs <= BROADCAST_DOCS_MAX:
             dm = F.broadcast(dm)
         postings = (
             ent.join(dm, "doc_id")

@@ -11,6 +11,20 @@ Two paths, rank-identical by construction (shared score.py formulas):
 2. block-max WAND over the compressed index (operators/wand.py) — the
    low-latency path that skips blocks via block-max upper bounds.
 
+Every DataFrame scorer here and in query_string.py is built from three
+shared parts; only the per-posting weight differs per similarity:
+
+- the matched slice: postings joined to the broadcast distinct query
+  terms, with per-doc dl attached by `_with_dl` (the one dl broadcast
+  gate, decided by BROADCAST_DOCS_MAX); `_distinct_term_weights` adds
+  the BM25 weight from lexicon df, `_matched_term_stats` adds the per-term
+  (df, ttf) the other similarities read;
+- the per-posting weight expression, expanded to (query, doc) rows by a
+  broadcast join against the query-term table;
+- `_topk_tail`: ONE `query_id`-keyed exchange shared by the (query, doc)
+  aggregation and the (score DESC, doc_id ASC) rank window, then
+  `rank <= k`.
+
 The reference never implements scoring (Elasticsearch does, after the bulk
 call — reference: app/connectors_service/connectors/es/sink.py:212-248);
 this module is the from-scratch replacement.
@@ -21,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from connectors_spark import BM25_B, BM25_K1
+from connectors_spark import BM25_B, BM25_K1, BROADCAST_DOCS_MAX
 from connectors_spark.functions.analysis import tokens_col
 from connectors_spark.operators.build import IndexFrames
 from connectors_spark.operators.score import idf_col, tf_norm_col
@@ -72,35 +86,86 @@ def boosted_query_terms(qdf: DataFrame) -> DataFrame:
     )
 
 
+def _with_dl(index: IndexFrames, frame: DataFrame) -> DataFrame:
+    """`frame` (keyed by doc_id) with the per-doc `dl` column attached:
+    as is when it already carries dl (build_index denormalize_dl=True),
+    else joined to the doc map — broadcast when n_docs <=
+    BROADCAST_DOCS_MAX (exact decision — the index knows n_docs), a
+    shuffle join beyond it."""
+    if "dl" in frame.columns:
+        return frame
+    docs_dl = index.docs.select("doc_id", "dl")
+    if index.n_docs <= BROADCAST_DOCS_MAX:
+        docs_dl = F.broadcast(docs_dl)
+    return frame.join(docs_dl, "doc_id")
+
+
 def _distinct_term_weights(index: IndexFrames, dterms: DataFrame,
-                           k1: float, b: float,
-                           broadcast_docs_max: int) -> DataFrame:
+                           k1: float, b: float) -> DataFrame:
     """(term, doc_id, w): the shared distinct-term BM25 weight pipeline —
-    w = idf * tf_norm computed ONCE per matched (term, doc) pair.
-    Broadcasts: dterms, the matched lexicon slice, and the dl map when
-    n_docs <= broadcast_docs_max (exact decision — the operator knows
-    n_docs); beyond that the dl join shuffles (or denormalize dl into
-    postings at build time). Used by score_topk_dataframe,
-    score_bool_topk and score_multi_match so the weight formula and the
-    broadcast gate cannot drift between scorers."""
+    w = idf * tf_norm computed ONCE per matched (term, doc) pair, idf
+    from the lexicon df. Broadcasts dterms and the matched lexicon slice;
+    dl comes through the `_with_dl` gate. Used by every BM25 scorer so
+    the weight formula and the broadcast gate cannot drift between
+    them."""
     lex = index.lexicon.join(F.broadcast(dterms), "term")
-    matched = index.postings.join(F.broadcast(dterms), "term").join(
-        F.broadcast(lex), "term"
-    )
-    if "dl" not in index.postings.columns:
-        # dl not denormalized onto the postings (build_index
-        # denormalize_dl=False): join the doc map — broadcast below the
-        # threshold, shuffle join beyond it
-        docs_dl = index.docs.select("doc_id", "dl")
-        if index.n_docs <= broadcast_docs_max:
-            docs_dl = F.broadcast(docs_dl)
-        matched = matched.join(docs_dl, "doc_id")
+    matched = _with_dl(index, index.postings.join(F.broadcast(dterms), "term")
+                       .join(F.broadcast(lex), "term"))
     return matched.select(
         "term", "doc_id",
         (
             idf_col(index.n_docs, F.col("df"))
             * tf_norm_col(F.col("tf"), F.col("dl"), index.avgdl, k1, b)
         ).alias("w"),
+    )
+
+
+def _by_query(rows: DataFrame) -> DataFrame:
+    """`rows` hash-partitioned on query_id alone, oversplit to 4x the
+    default parallelism. query_id is a FEW-distinct-values key (hot
+    queries can carry ~n_docs candidate rows each), so 4x spreads two
+    hot queries onto different partitions most of the time while staying
+    O(cores) tasks; scale-adaptive, not a local constant. Measured at
+    sf0.1/200 queries: 8.3s -> 5.0s best-of-3 vs the two-exchange form;
+    16 partitions (= default) loses the win to hot-query collisions."""
+    n_part = 4 * rows.sparkSession.sparkContext.defaultParallelism
+    return rows.repartition(n_part, F.col("query_id"))
+
+
+def _topk_tail(rows: DataFrame, score=None, aggs: tuple = (), having=None,
+               round_scores: int | None = None) -> DataFrame:
+    """(query_id, rank, doc_id, score): the one scoring tail every
+    DataFrame scorer ends in.
+
+    `rows` carry (query_id, k, doc_id) plus whatever `score` (an
+    aggregate Column, default sum(w)) and the extra `aggs` read; both
+    aggregate per (query, doc). `having(scored)` filters or extends the
+    aggregated rows before ranking (AND mode, bool clause counts, phrase
+    gates). With `round_scores=n`, ranking and output use round(score,
+    n) — makes ranks engine-independent (the DuckDB-gated queries, where
+    float sum order differs). Ties break (score DESC, doc_id ASC); rows
+    with rank <= k survive.
+
+    ONE exchange for the whole tail: partitioning by query_id alone
+    (`_by_query`) satisfies both the (query, doc) aggregation's
+    clustering (subset partitioning colocates every (query, doc) pair)
+    AND the rank window's — the window's own full-size Exchange of the
+    scored rows disappears. Rows already partitioned by `_by_query`
+    (a caller's pre-aggregation, a nested scorer's output) keep that
+    partitioning: Spark drops the second, identical repartition."""
+    scored = _by_query(rows).groupBy("query_id", "k", "doc_id").agg(
+        (F.sum("w") if score is None else score).alias("score"), *aggs)
+    if having is not None:
+        scored = having(scored)
+    if round_scores is not None:
+        scored = scored.withColumn("score", F.round(F.col("score"), round_scores))
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("doc_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= F.col("k"))
+        .select("query_id", "rank", "doc_id", "score")
     )
 
 
@@ -112,7 +177,6 @@ def score_topk_dataframe(
     round_scores: int | None = None,
     mode: str = "or",
     qterms_override: DataFrame | None = None,
-    broadcast_docs_max: int = 2_000_000,
 ) -> DataFrame:
     """(query_id, rank, doc_id, score) for the whole query set in one plan.
 
@@ -135,55 +199,34 @@ def score_topk_dataframe(
       happens immediately before the aggregation.
     - broadcast dterms (distinct query terms), broadcast lexicon-of-
       matched-terms, broadcast qterms at expansion.
-    - dl join: broadcast when n_docs <= broadcast_docs_max (exact — the
+    - dl join: broadcast when n_docs <= BROADCAST_DOCS_MAX (exact — the
       operator knows n_docs); beyond that it is a shuffle join, or
       denormalize dl into the postings at build time to avoid it.
-    - the only shuffle is the (query_id, doc_id) partial+final agg.
+    - the only shuffle is `_topk_tail`'s query_id exchange, shared by the
+      (query, doc) partial+final agg and the rank window.
     """
     qterms = qterms_override if qterms_override is not None else query_terms(qdf)
     dterms = qterms.select("term").distinct()
-    tw = _distinct_term_weights(index, dterms, k1, b, broadcast_docs_max)
+    tw = _distinct_term_weights(index, dterms, k1, b)
     contrib = tw.join(F.broadcast(qterms), "term")
     w_expr = (
         F.col("w") * F.col("boost") if "boost" in qterms.columns else F.col("w")
     )
     contrib = contrib.select("query_id", "k", "doc_id", w_expr.alias("w"))
-    # ONE exchange for the whole tail: partitioning by query_id alone
-    # satisfies both the (query, doc) aggregation's clustering (subset
-    # partitioning colocates every (query, doc) pair) AND the rank
-    # window's — the window's own full-size Exchange of the scored rows
-    # disappears. query_id is a FEW-distinct-values key (hot queries can
-    # carry ~n_docs candidate rows each), so the exchange is oversplit to
-    # 4x the default parallelism — enough spread that two hot queries
-    # rarely share a partition, still O(cores) tasks; scale-adaptive, not
-    # a local constant. Measured at sf0.1/200 queries: 8.3s -> 5.0s
-    # best-of-3 vs the two-exchange form; 16 partitions (= default) loses
-    # the win to hot-query collisions.
-    n_part = 4 * contrib.sparkSession.sparkContext.defaultParallelism
-    contrib = contrib.repartition(n_part, F.col("query_id"))
-    aggs = [F.sum("w").alias("score")]
-    if mode == "and":
-        # matched-term count only needed for the conjunction filter
-        aggs.append(F.count(F.lit(1)).alias("_n_matched"))
-    scored = contrib.groupBy("query_id", "k", "doc_id").agg(*aggs)
-    if mode == "and":
-        # terms absent from the corpus can never be matched => queries
-        # containing one return empty under AND (Lucene conjunction)
-        n_terms = qterms.groupBy("query_id").agg(
-            F.count(F.lit(1)).alias("_n_terms")
-        )
-        scored = scored.join(F.broadcast(n_terms), "query_id").filter(
-            F.col("_n_matched") == F.col("_n_terms")
-        )
-    if round_scores is not None:
-        scored = scored.withColumn("score", F.round(F.col("score"), round_scores))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
+    if mode != "and":
+        return _topk_tail(contrib, round_scores=round_scores)
+    # terms absent from the corpus can never be matched => queries
+    # containing one return empty under AND (Lucene conjunction)
+    n_terms = qterms.groupBy("query_id").agg(
+        F.count(F.lit(1)).alias("_n_terms")
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
+    return _topk_tail(
+        contrib,
+        # matched-term count only needed for the conjunction filter
+        aggs=(F.count(F.lit(1)).alias("_n_matched"),),
+        having=lambda scored: scored.join(F.broadcast(n_terms), "query_id")
+        .filter(F.col("_n_matched") == F.col("_n_terms")),
+        round_scores=round_scores,
     )
 
 
@@ -272,8 +315,7 @@ def bool_clauses_df(spark: SparkSession, queries: list[dict]) -> DataFrame:
 
 def score_bool_topk(index: IndexFrames, clauses: DataFrame,
                     k1: float = BM25_K1, b: float = BM25_B,
-                    round_scores: int | None = None,
-                    broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                    round_scores: int | None = None) -> DataFrame:
     """(query_id, rank, doc_id, score): the Elasticsearch `bool` query —
     the reference's content indices answer exactly this compound shape
     after sync (scoring delegated to ES, reference: app/
@@ -289,43 +331,38 @@ def score_bool_topk(index: IndexFrames, clauses: DataFrame,
     (Lucene sums clause scores independently).
 
     Same scale shape as score_topk_dataframe: distinct-term BM25 weights
-    computed once, broadcast clause expansion, ONE (query, doc) agg
-    shuffle; requirements (n distinct must/filter terms) ride a broadcast.
+    computed once, broadcast clause expansion, the shared one-exchange
+    tail; requirements (n distinct must/filter terms, msm) ride a
+    broadcast.
     """
     dterms = clauses.select("term").distinct()
-    tw = _distinct_term_weights(index, dterms, k1, b, broadcast_docs_max)
+    tw = _distinct_term_weights(index, dterms, k1, b)
     contrib = tw.join(F.broadcast(clauses), "term")
     scoring = F.col("role").isin("must", "should")
-    scored = contrib.groupBy("query_id", "k", "msm", "doc_id").agg(
-        F.sum(F.when(scoring, F.col("w")).otherwise(F.lit(0.0))).alias("score"),
-        F.count_distinct(
-            F.when(F.col("role") == "must", F.col("term"))).alias("_n_must"),
-        F.count_distinct(
-            F.when(F.col("role") == "should", F.col("term"))).alias("_n_should"),
-        F.count_distinct(
-            F.when(F.col("role") == "must_not", F.col("term"))).alias("_n_not"),
-        F.count_distinct(
-            F.when(F.col("role") == "filter", F.col("term"))).alias("_n_filter"),
-    )
+
+    # clause rows are unique per (query, role, term) (bool_clause_rows
+    # dedups), so a plain count is the distinct-term count — and keeps the
+    # agg on the tail's exchange (several count_distincts plan an Expand
+    # that shuffles again)
+    def n_role(role):
+        return F.count(F.when(F.col("role") == role, F.col("term")))
+
     req = clauses.groupBy("query_id").agg(
-        F.count_distinct(
-            F.when(F.col("role") == "must", F.col("term"))).alias("_req_must"),
-        F.count_distinct(
-            F.when(F.col("role") == "filter", F.col("term"))).alias("_req_filter"),
-    )
-    out = scored.join(F.broadcast(req), "query_id").filter(
-        (F.col("_n_must") == F.col("_req_must"))
-        & (F.col("_n_filter") == F.col("_req_filter"))
-        & (F.col("_n_not") == 0)
-        & (F.col("_n_should") >= F.col("msm"))
-    )
-    if round_scores is not None:
-        out = out.withColumn("score", F.round(F.col("score"), round_scores))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        out.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
+        n_role("must").alias("_req_must"), n_role("filter").alias("_req_filter"),
+        F.max("msm").alias("msm"))
+    return _topk_tail(
+        contrib,
+        F.sum(F.when(scoring, F.col("w")).otherwise(F.lit(0.0))),
+        aggs=(n_role("must").alias("_n_must"),
+              n_role("should").alias("_n_should"),
+              n_role("must_not").alias("_n_not"),
+              n_role("filter").alias("_n_filter")),
+        having=lambda scored: scored.join(F.broadcast(req), "query_id").filter(
+            (F.col("_n_must") == F.col("_req_must"))
+            & (F.col("_n_filter") == F.col("_req_filter"))
+            & (F.col("_n_not") == 0)
+            & (F.col("_n_should") >= F.col("msm"))),
+        round_scores=round_scores,
     )
 
 
@@ -409,8 +446,7 @@ def score_multi_match(indexes: list[tuple[IndexFrames, float]],
                       k1: float = BM25_K1, b: float = BM25_B,
                       round_scores: int | None = None,
                       match_type: str = "most_fields",
-                      tie_breaker: float = 0.0,
-                      broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                      tie_breaker: float = 0.0) -> DataFrame:
     """(query_id, rank, doc_id, score): ES `multi_match` — the SAME
     analyzed query runs against every field's index; each field keeps
     its own statistics (df, dl, avgdl, N), exactly Lucene's per-field
@@ -422,40 +458,31 @@ def score_multi_match(indexes: list[tuple[IndexFrames, float]],
     field's score wins, plus tie_breaker * (sum of the other fields'
     scores); tie_breaker=0 is pure dis_max, 1.0 degenerates to
     most_fields. Plan: the distinct-term weight pipeline per field,
-    contributions unioned with a field tag, ONE (query, doc[, field])
-    agg shuffle, top-k window."""
+    contributions unioned with a field tag, the shared one-exchange tail
+    (best_fields aggregates one per-field sum per field in the same
+    (query, doc) aggregation; fields with no match stay NULL and drop
+    out of the max and the sum)."""
     if match_type not in ("most_fields", "best_fields"):
         raise ValueError(f"unknown multi_match type {match_type!r}")
     qterms = query_terms(qdf)
     dterms = qterms.select("term").distinct()
     contribs = None
     for fi, (index, boost) in enumerate(indexes):
-        tw = _distinct_term_weights(index, dterms, k1, b, broadcast_docs_max)
+        tw = _distinct_term_weights(index, dterms, k1, b)
         tw = tw.withColumn("w", F.col("w") * F.lit(float(boost)))
         c = tw.join(F.broadcast(qterms), "term").select(
             "query_id", "k", "doc_id", "w", F.lit(fi).alias("_field"))
         contribs = c if contribs is None else contribs.unionByName(c)
-    if match_type == "most_fields":
-        scored = contribs.groupBy("query_id", "k", "doc_id").agg(
-            F.sum("w").alias("score")
-        )
-    else:
-        per_field = contribs.groupBy("query_id", "k", "doc_id", "_field").agg(
-            F.sum("w").alias("_fs")
-        )
-        scored = per_field.groupBy("query_id", "k", "doc_id").agg(
-            (F.max("_fs")
-             + F.lit(float(tie_breaker)) * (F.sum("_fs") - F.max("_fs"))
-             ).alias("score")
-        )
-    if round_scores is not None:
-        scored = scored.withColumn("score", F.round(F.col("score"), round_scores))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    score = None
+    if match_type == "best_fields":
+        fs = [F.sum(F.when(F.col("_field") == fi, F.col("w")))
+              for fi in range(len(indexes))]
+        best = F.array_max(F.array(*fs))
+        total = fs[0]
+        for f in fs[1:]:
+            total = F.coalesce(total, F.lit(0.0)) + F.coalesce(f, F.lit(0.0))
+        score = best + F.lit(float(tie_breaker)) * (total - best)
+    return _topk_tail(contribs, score, round_scores=round_scores)
 
 
 def search_indexes(named_indexes: list[tuple[str, IndexFrames]],
@@ -474,16 +501,14 @@ def search_indexes(named_indexes: list[tuple[str, IndexFrames]],
                                  round_scores=round_scores)
         s = s.drop("rank").withColumn("_index", F.lit(name))
         per = s if per is None else per.unionByName(s)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("_index"), F.asc("doc_id")
-    )
     kmap = qdf.select("query_id", "k").distinct()
-    return (
-        per.join(F.broadcast(kmap), "query_id")
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "_index", "doc_id", "score")
-    )
+    # struct order is field order: ranking the (_index, doc_id) struct
+    # ASC is the (index ASC, doc ASC) tie-break of the merge
+    rows = per.join(F.broadcast(kmap), "query_id").select(
+        "query_id", "k", F.struct("_index", "doc_id").alias("doc_id"),
+        F.col("score").alias("w"))
+    return _topk_tail(rows).select(
+        "query_id", "rank", "doc_id._index", "doc_id.doc_id", "score")
 
 
 def percolate(docs: DataFrame, stored: DataFrame, mode: str = "and",
@@ -534,12 +559,9 @@ def explain_score(index: IndexFrames, qdf: DataFrame,
     qterms = query_terms(qdf)
     dterms = qterms.select("term").distinct()
     lex = index.lexicon.join(F.broadcast(dterms), "term")
-    matched = (
-        index.postings.join(F.broadcast(dterms), "term")
-        .join(F.broadcast(lex), "term")
-        .join(index.docs.select("doc_id", "dl"), "doc_id")
-        .join(F.broadcast(qterms.select("query_id", "term")), "term")
-    )
+    matched = _with_dl(index, index.postings.join(F.broadcast(dterms), "term")
+                       .join(F.broadcast(lex), "term")).join(
+        F.broadcast(qterms.select("query_id", "term")), "term")
     w = (
         idf_col(index.n_docs, F.col("df"))
         * tf_norm_col(F.col("tf"), F.col("dl"), index.avgdl, k1, b)
@@ -714,17 +736,15 @@ def with_recency_decay(scored: DataFrame, ts_df: DataFrame, origin: str,
     )
     mult = F.pow(F.lit(0.5), age / F.lit(float(half_life_days)))
 
+    # int max as the cut when k is None: decay_rerank keeps every row
+    cut = F.lit(k if k is not None else 2**31 - 1)
+
     def decay_rerank(df: DataFrame) -> DataFrame:
-        out = (
-            df.join(ts_df.select("doc_id", ts_col), "doc_id")
-            .withColumn("score", F.round(F.col("score") * mult, 6))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        return out.withColumn(
-            "rank", F.row_number().over(w).cast("int")
-        ).select("query_id", "rank", "doc_id", "score")
+        return _topk_tail(
+            df.join(ts_df.select("doc_id", ts_col), "doc_id").select(
+                "query_id", cut.alias("k"), "doc_id",
+                (F.col("score") * mult).alias("w")),
+            round_scores=6)
 
     if rescore_window is None:
         out = decay_rerank(scored)
@@ -789,12 +809,8 @@ def paginate_after(scored: DataFrame, after: DataFrame,
         | ((F.col("score") == F.col("after_score"))
            & (F.col("doc_id") > F.col("after_doc")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        out.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= page_size)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return _topk_tail(out.select("query_id", F.lit(page_size).alias("k"),
+                                 "doc_id", F.col("score").alias("w")))
 
 
 def facet_counts(df: DataFrame, fields: list[str], top_n: int = 10) -> DataFrame:
@@ -1199,8 +1215,8 @@ def score_combined_fields(
     Plan: fields union BEFORE any shuffle (one exploded frame), ONE
     (doc, term) agg with map-side combine builds the combined postings,
     corpus stats ride a 1-row broadcast crossJoin, query terms
-    broadcast, ONE (query, doc) agg — same two-shuffle shape as the
-    single-field scorer at any corpus size."""
+    broadcast, then the shared one-exchange (query, doc) tail — the
+    combined-postings agg plus the tail at any corpus size."""
     ft = None
     for col, wgt in fields:
         part = docs.select(
@@ -1240,17 +1256,7 @@ def score_combined_fields(
              ).alias("w"),
         )
     )
-    out = contrib.groupBy("query_id", "k", "doc_id").agg(
-        F.sum("w").alias("score"))
-    if round_scores is not None:
-        out = out.withColumn("score", F.round(F.col("score"), round_scores))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("doc_id"))
-    return (
-        out.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return _topk_tail(contrib, round_scores=round_scores)
 
 
 def rank_eval(ranked: DataFrame, judgments: DataFrame, k: int,
@@ -1345,8 +1351,7 @@ def rescore_window(index: IndexFrames, qdf: DataFrame,
                    query_weight: float = 1.0,
                    rescore_query_weight: float = 1.0,
                    k1: float = BM25_K1, b: float = BM25_B,
-                   round_scores: int | None = None,
-                   broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                   round_scores: int | None = None) -> DataFrame:
     """(query_id, rank, doc_id, score): ES `rescore` (score_mode=total).
 
     Two-pass ranking, the classic cheap-retrieval / expensive-rerank
@@ -1361,19 +1366,19 @@ def rescore_window(index: IndexFrames, qdf: DataFrame,
     and join it into the second-pass contribution stream BEFORE the
     (query, doc) aggregation, so pass 2's shuffle carries only
     candidate rows no matter the corpus size. Pass 1 is the standard
-    distinct-term-weight pipeline (one agg shuffle + TakeOrdered).
+    distinct-term-weight pipeline; the combined ranking reuses its
+    query_id partitioning in the shared tail.
     Reference analog: ES search `rescore` block
     (svc searches delegate the DSL unchanged, svc/es/sink.py).
     """
     first = score_topk_dataframe(
         index, qdf.withColumn("k", F.lit(int(window_size))),
         k1=k1, b=b, round_scores=round_scores,
-        broadcast_docs_max=broadcast_docs_max,
     ).select("query_id", "doc_id", F.col("score").alias("_s1"))
 
     qterms2 = query_terms(rescore_qdf)
     dterms2 = qterms2.select("term").distinct()
-    tw2 = _distinct_term_weights(index, dterms2, k1, b, broadcast_docs_max)
+    tw2 = _distinct_term_weights(index, dterms2, k1, b)
     contrib2 = (
         tw2.join(F.broadcast(qterms2), "term")
         .select("query_id", "doc_id", "w")
@@ -1386,36 +1391,27 @@ def rescore_window(index: IndexFrames, qdf: DataFrame,
         F.sum("w").alias("_s2"))
     if round_scores is not None:
         second = second.withColumn("_s2", F.round("_s2", round_scores))
+    kmap = qdf.select("query_id", "k").distinct()
     combined = (
         # second is candidate-restricted => <= |Q| * window rows; the
         # combine join broadcasts it regardless of corpus size
         first.join(F.broadcast(second), ["query_id", "doc_id"], "left")
-        .withColumn(
-            "score",
-            F.lit(float(query_weight)) * F.col("_s1")
-            + F.lit(float(rescore_query_weight))
-            * F.coalesce(F.col("_s2"), F.lit(0.0)))
+        .join(F.broadcast(kmap), "query_id")
+        .select(
+            "query_id", "k", "doc_id",
+            (F.lit(float(query_weight)) * F.col("_s1")
+             + F.lit(float(rescore_query_weight))
+             * F.coalesce(F.col("_s2"), F.lit(0.0))).alias("w"))
     )
-    if round_scores is not None:
-        combined = combined.withColumn(
-            "score", F.round("score", round_scores))
-    kmap = qdf.select("query_id", "k").distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (
-        combined.join(F.broadcast(kmap), "query_id")
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    # first is already partitioned by query_id: the tail adds no exchange
+    return _topk_tail(combined, round_scores=round_scores)
 
 
 def score_cross_fields(indexes: list[tuple[IndexFrames, float]],
                        qdf: DataFrame,
                        k1: float = BM25_K1, b: float = BM25_B,
                        tie_breaker: float = 0.0,
-                       round_scores: int | None = None,
-                       broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                       round_scores: int | None = None) -> DataFrame:
     """(query_id, rank, doc_id, score): ES multi_match
     type=cross_fields — TERM-centric blending, the mode for entities
     split across fields (first/last name, title/body): every query term
@@ -1431,9 +1427,10 @@ def score_cross_fields(indexes: list[tuple[IndexFrames, float]],
     - per (query, doc): blended-idf-weighted term scores SUM.
 
     Plan: per-field postings joined to the broadcast distinct-term set,
-    unioned with a field tag, ONE (term, doc) dis_max agg, broadcast
-    blended-df join, broadcast query-term expansion, ONE final
-    (query, doc) agg — two shuffles total, both on pruned rows."""
+    dl through the shared `_with_dl` gate, unioned with a field tag, ONE
+    (term, doc) dis_max agg, broadcast blended-df join, broadcast
+    query-term expansion, then the shared one-exchange (query, doc)
+    tail — both shuffles on pruned rows."""
     qterms = query_terms(qdf)
     dterms = qterms.select("term").distinct()
     n_docs = indexes[0][0].n_docs
@@ -1444,12 +1441,7 @@ def score_cross_fields(indexes: list[tuple[IndexFrames, float]],
     df_blend = dfs.groupBy("term").agg(F.max("df").alias("df_blend"))
     per_field = None
     for idx, boost in indexes:
-        matched = idx.postings.join(F.broadcast(dterms), "term")
-        if "dl" not in idx.postings.columns:
-            docs_dl = idx.docs.select("doc_id", "dl")
-            if idx.n_docs <= broadcast_docs_max:
-                docs_dl = F.broadcast(docs_dl)
-            matched = matched.join(docs_dl, "doc_id")
+        matched = _with_dl(idx, idx.postings.join(F.broadcast(dterms), "term"))
         c = matched.select(
             "term", "doc_id",
             (tf_norm_col(F.col("tf"), F.col("dl"), idx.avgdl, k1, b)
@@ -1467,17 +1459,7 @@ def score_cross_fields(indexes: list[tuple[IndexFrames, float]],
     )
     contrib = td.join(F.broadcast(qterms), "term").select(
         "query_id", "k", "doc_id", "w")
-    scored = contrib.groupBy("query_id", "k", "doc_id").agg(
-        F.sum("w").alias("score"))
-    if round_scores is not None:
-        scored = scored.withColumn("score", F.round("score", round_scores))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return _topk_tail(contrib, round_scores=round_scores)
 
 
 def collapse_inner_hits(scored: DataFrame, field: str,
@@ -1563,7 +1545,7 @@ def score_topk_graph(
     SUM over matching paths, final top-k ranks the combined score.
     Per-path scoring reuses the distinct-term pipeline; the path
     count is bounded by the rule set, so the extra cost is one more
-    (query, doc) aggregation over path-tagged rows — no new scan."""
+    shared (query, doc) tail over the path rows — no new scan."""
     paths = expand_query_graph(queries, rules)
     pqdf = queries_df(spark, [
         {"query_id": f"{qid}\x1f{p}", "query_text": text,
@@ -1572,21 +1554,10 @@ def score_topk_graph(
     ])
     per_path = score_topk_dataframe(
         index, pqdf, round_scores=round_scores)
-    combined = (
-        per_path
-        .withColumn(
-            "query_id",
-            F.split(F.col("query_id"), "\x1f").getItem(0))
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("score"), round_scores).alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (
-        combined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.lit(k))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    rows = per_path.select(
+        F.split(F.col("query_id"), "\x1f").getItem(0).alias("query_id"),
+        F.lit(k).alias("k"), "doc_id", F.col("score").alias("w"))
+    return _topk_tail(rows, round_scores=round_scores)
 
 
 def ipv4_to_long_col(col: Column) -> Column:
@@ -1706,8 +1677,7 @@ def rbo_suffix_weights(k: int, p: float) -> tuple[list[int], float]:
 
 def ltr_feature_log(index: IndexFrames, qdf: DataFrame,
                     k1: float = None, b: float = None,
-                    round_to: int = 6,
-                    broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                    round_to: int = 6) -> DataFrame:
     """Learning-to-rank feature logging — ES's LTR integration logs a
     feature vector for every (query, candidate-doc) pair of a judgment
     list so an external ranker can be trained (Elasticsearch "Learning
@@ -1724,14 +1694,13 @@ def ltr_feature_log(index: IndexFrames, qdf: DataFrame,
 
     Scale shape: rides the scorer's plan (one postings scan, query
     terms broadcast), one extra map-side-combinable (query, doc) agg,
-    and the same dl broadcast gate as _distinct_term_weights. The
-    feature frame is |queries| * k rows.
+    and dl through the shared `_with_dl` gate. The feature frame is
+    |queries| * k rows.
     """
     k1 = BM25_K1 if k1 is None else k1
     b = BM25_B if b is None else b
     topk = score_topk_dataframe(index, qdf, k1=k1, b=b,
-                                round_scores=round_to,
-                                broadcast_docs_max=broadcast_docs_max)
+                                round_scores=round_to)
     qt = query_terms(qdf).select("query_id", "term")
     idf_u = F.round(
         F.round(idf_col(index.n_docs, F.col("df")), round_to) * 1e6
@@ -1744,11 +1713,7 @@ def ltr_feature_log(index: IndexFrames, qdf: DataFrame,
         F.count(F.lit(1)).alias("n_matched"),
         F.sum("tf").alias("tf_sum"),
         F.sum("idf_u").alias("idf_u_sum"))
-    docs_dl = index.docs.select("doc_id", "dl")
-    if index.n_docs <= broadcast_docs_max:
-        docs_dl = F.broadcast(docs_dl)
-    return (topk.join(feats, ["query_id", "doc_id"])
-            .join(docs_dl, "doc_id")
+    return (_with_dl(index, topk.join(feats, ["query_id", "doc_id"]))
             .select("query_id", "rank", "doc_id", "score",
                     F.col("n_matched").cast("int").alias("n_matched"),
                     F.col("tf_sum").cast("long").alias("tf_sum"),
@@ -1814,8 +1779,7 @@ def query_performance_predict(index: IndexFrames, qdf: DataFrame,
 
 def prf_expansion_terms(index: IndexFrames, qdf: DataFrame,
                         fb_docs: int = 10, fb_terms: int = 10,
-                        round_to: int = 6,
-                        broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                        round_to: int = 6) -> DataFrame:
     """RM3-style pseudo-relevance-feedback expansion terms (Lavrenko &
     Croft, SIGIR 2001 relevance models; Abdul-Jaleel et al., TREC 2004
     "UMass at TREC 2004" RM3 — public IR literature). The expansion
@@ -1839,8 +1803,8 @@ def prf_expansion_terms(index: IndexFrames, qdf: DataFrame,
     contribution) and cannot drift with aggregation order; ranking ties
     break (weight DESC, term ASC). Reported weight = w_u / 1e12.
 
-    Scale shape: rides the bulk scorer's plan (one postings scan, query
-    terms broadcast) for the feedback stage; the feedback set
+    Scale shape: rides the bulk scorer's one-exchange plan (one postings
+    scan, query terms broadcast) for the feedback stage; the feedback set
     (|queries|·fb_docs rows, with dl attached by broadcasting it into a
     column-pruned docs scan) is BROADCAST into a second postings join,
     so candidate generation touches only the feedback docs' posting
@@ -1850,8 +1814,7 @@ def prf_expansion_terms(index: IndexFrames, qdf: DataFrame,
     """
     fbq = qdf.select("query_id", "query_text").withColumn(
         "k", F.lit(int(fb_docs)))
-    top = score_topk_dataframe(index, fbq, round_scores=round_to,
-                               broadcast_docs_max=broadcast_docs_max)
+    top = score_topk_dataframe(index, fbq, round_scores=round_to)
     s_u = F.round(F.col("score") * 1e6).cast("long")
     top_u = top.select("query_id", "doc_id", s_u.alias("s_u"))
     fb = (index.docs.select("doc_id", "dl")
@@ -1879,8 +1842,7 @@ def prf_expansion_terms(index: IndexFrames, qdf: DataFrame,
 
 def prf_requery_topk(index: IndexFrames, qdf: DataFrame,
                      fb_docs: int = 10, fb_terms: int = 10,
-                     orig_weight: float = 0.5, round_to: int = 6,
-                     broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                     orig_weight: float = 0.5, round_to: int = 6) -> DataFrame:
     """(query_id, rank, doc_id, score): the RM3 second pass — rerun
     retrieval with the relevance-model expansion terms interpolated
     into the query (Abdul-Jaleel et al. 2004; the requery Anserini's
@@ -1905,12 +1867,12 @@ def prf_requery_topk(index: IndexFrames, qdf: DataFrame,
     doc_id ASC), the house convention every BM25 gate relies on.
 
     Scale shape: the estimation stage rides prf_expansion_terms' plan;
-    the requery is the bulk scorer's plan with a ≤ |q|·(n_q+fb_terms)-row
-    broadcast qterms table — nothing new shuffles.
+    the requery is the bulk scorer's one-exchange plan with a
+    ≤ |q|·(n_q+fb_terms)-row broadcast qterms table — nothing new
+    shuffles.
     """
     exp = prf_expansion_terms(index, qdf, fb_docs=fb_docs,
-                              fb_terms=fb_terms, round_to=round_to,
-                              broadcast_docs_max=broadcast_docs_max)
+                              fb_terms=fb_terms, round_to=round_to)
     w_u = F.round(F.col("weight") * 1e6).cast("long")
     exp_u = exp.select("query_id", "term", w_u.alias("w_u"))
     tot = exp_u.groupBy("query_id").agg(F.sum("w_u").alias("tot_u"))
@@ -1931,14 +1893,12 @@ def prf_requery_topk(index: IndexFrames, qdf: DataFrame,
                 .join(F.broadcast(ks), "query_id")
                 .select("query_id", "k", "term", "boost"))
     return score_topk_dataframe(index, qdf, round_scores=round_to,
-                                qterms_override=override,
-                                broadcast_docs_max=broadcast_docs_max)
+                                qterms_override=override)
 
 
 def score_topk_lm(index: IndexFrames, qdf: DataFrame,
                   similarity: str = "dirichlet", mu: float = 2000.0,
-                  lam: float = 0.1, round_to: int = 6,
-                  broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                  lam: float = 0.1, round_to: int = 6) -> DataFrame:
     """(query_id, rank, doc_id, score): top-k under ES's pluggable
     language-model similarities (the `"similarity": {"type":
     "LMDirichlet"|"LMJelinekMercer"}` index setting; Lucene
@@ -1958,53 +1918,31 @@ def score_topk_lm(index: IndexFrames, qdf: DataFrame,
     micro-unit int64 before the (query, doc) sum — aggregation-order
     proof; ties (score DESC, doc_id ASC).
 
-    Scale shape: the bulk scorer's plan — query terms broadcast, ctf
-    from one map-side-combinable agg over the MATCHED postings slice
-    (global per term: postings hold every doc), dl broadcast under
-    `broadcast_docs_max`, one (query, doc) agg shuffle. |C| is one
-    scalar action over the doc map.
+    Scale shape: the shared similarity plan — `_matched_term_stats`
+    (query terms broadcast, ctf = its per-term ttf from one
+    map-side-combinable agg over the MATCHED postings slice, dl through
+    the `_with_dl` gate), then `_micro_topk`'s one-exchange tail. |C| is
+    one scalar action over the doc map (`_total_tokens`).
     """
     if similarity not in ("dirichlet", "jm"):
         raise ValueError(f"unknown LM similarity: {similarity!r}")
-    total = index.docs.agg(F.sum("dl")).collect()[0][0]
-    qterms = query_terms(qdf)
-    dterms = qterms.select("term").distinct()
-    matched = index.postings.join(F.broadcast(dterms), "term")
-    ctf = matched.groupBy("term").agg(F.sum("tf").alias("ctf"))
-    matched = matched.join(F.broadcast(ctf), "term")
-    if "dl" not in index.postings.columns:
-        docs_dl = index.docs.select("doc_id", "dl")
-        if index.n_docs <= broadcast_docs_max:
-            docs_dl = F.broadcast(docs_dl)
-        matched = matched.join(docs_dl, "doc_id")
-    tf, dl, c = F.col("tf"), F.col("dl"), F.col("ctf")
+    total = _total_tokens(index)
+    matched, qterms = _matched_term_stats(index, qdf)
+    tf, dl, c = F.col("tf"), F.col("dl"), F.col("ttf")
     if similarity == "dirichlet":
-        s = (F.log(F.lit(1.0) + tf * F.lit(float(total))
+        s = (F.log(F.lit(1.0) + tf * F.lit(total)
                    / (F.lit(float(mu)) * c))
              + F.log(F.lit(float(mu)) / (dl + F.lit(float(mu)))))
         s = F.greatest(s, F.lit(0.0))
     else:
-        s = F.log(F.lit(1.0) + (F.lit(1.0 - lam) * tf * F.lit(float(total)))
+        s = F.log(F.lit(1.0) + (F.lit(1.0 - lam) * tf * F.lit(total))
                   / (F.lit(float(lam)) * dl * c))
-    s_u = F.round(F.round(s, round_to) * 1e6).cast("long")
-    tw = matched.select("term", "doc_id", s_u.alias("s_u"))
-    contrib = tw.join(F.broadcast(qterms), "term").select(
-        "query_id", "k", "doc_id", "s_u")
-    scored = contrib.groupBy("query_id", "k", "doc_id").agg(
-        F.sum("s_u").alias("sum_u"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sum_u"), F.asc("doc_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", F.col("rank").cast("int").alias("rank"),
-                    "doc_id",
-                    F.round(F.col("sum_u").cast("double") / 1e6,
-                            round_to).alias("score")))
+    return _micro_topk(matched, s, qterms, round_to)
 
 
 def score_topk_dfi(index: IndexFrames, qdf: DataFrame,
-                   measure: str = "standardized", round_to: int = 6,
-                   broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                   measure: str = "standardized",
+                   round_to: int = 6) -> DataFrame:
     """(query_id, rank, doc_id, score): ES `"similarity": {"type":
     "DFI"}` top-k (Lucene DFISimilarity; Kocabas, Dincer & Karaoglan
     2014 divergence-from-independence). Per matched posting, with
@@ -2020,27 +1958,17 @@ def score_topk_dfi(index: IndexFrames, qdf: DataFrame,
     before the (query, doc) sum — aggregation-order-proof; ties
     (score DESC, doc_id ASC).
 
-    Scale shape: identical to score_topk_lm — scorer broadcast plan,
-    one map-side ctf agg over the matched postings slice, one
-    (query, doc) agg shuffle.
+    Scale shape: identical to score_topk_lm — `_matched_term_stats`
+    (ctf is its ttf), then `_micro_topk`'s one-exchange tail.
     """
     if measure not in ("standardized", "saturated", "chisquared"):
         raise ValueError(f"unknown DFI independence measure: {measure!r}")
-    total = index.docs.agg(F.sum("dl")).collect()[0][0]
-    qterms = query_terms(qdf)
-    dterms = qterms.select("term").distinct()
-    matched = index.postings.join(F.broadcast(dterms), "term")
-    ctf = matched.groupBy("term").agg(F.sum("tf").alias("ctf"))
-    matched = matched.join(F.broadcast(ctf), "term")
-    if "dl" not in index.postings.columns:
-        docs_dl = index.docs.select("doc_id", "dl")
-        if index.n_docs <= broadcast_docs_max:
-            docs_dl = F.broadcast(docs_dl)
-        matched = matched.join(docs_dl, "doc_id")
+    total = _total_tokens(index)
+    matched, qterms = _matched_term_stats(index, qdf)
     tf = F.col("tf").cast("double")
     # ctf lifts to double BEFORE the dl product: long*long would
     # overflow for a stop-word-class term at 10^9+ docs
-    e = F.col("ctf").cast("double") * F.col("dl") / F.lit(float(total))
+    e = F.col("ttf").cast("double") * F.col("dl") / F.lit(total)
     if measure == "standardized":
         ind = (tf - e) / F.sqrt(e)
     elif measure == "saturated":
@@ -2055,43 +1983,37 @@ def _micro_topk(matched: DataFrame, s, qterms: DataFrame,
                 round_to: int) -> DataFrame:
     """Shared tail of every pluggable-similarity scorer: round the
     per-posting contribution `s` to `round_to`, lift to micro-unit
-    int64 (aggregation-order-proof sums), one (query, doc) agg
-    shuffle, rank window with (score DESC, doc_id ASC) ties."""
+    int64 (aggregation-order-proof sums), then `_topk_tail` over the
+    integer sums. The score round(sum_u / 1e6, round_to) is strictly
+    increasing in sum_u, so ranking by it is ranking by the exact
+    integer sum, ties (score DESC, doc_id ASC)."""
     s_u = F.round(F.round(s, round_to) * 1e6).cast("long")
     tw = matched.select("term", "doc_id", s_u.alias("s_u"))
     contrib = tw.join(F.broadcast(qterms), "term").select(
         "query_id", "k", "doc_id", "s_u")
-    scored = contrib.groupBy("query_id", "k", "doc_id").agg(
-        F.sum("s_u").alias("sum_u"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sum_u"), F.asc("doc_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", F.col("rank").cast("int").alias("rank"),
-                    "doc_id",
-                    F.round(F.col("sum_u").cast("double") / 1e6,
-                            round_to).alias("score")))
+    return _topk_tail(
+        contrib, F.round(F.sum("s_u").cast("double") / 1e6, round_to))
 
 
-def _matched_term_stats(index: IndexFrames, qdf: DataFrame,
-                        broadcast_docs_max: int):
+def _total_tokens(index: IndexFrames) -> float:
+    """|C|, the collection's total token count: Σ dl over the doc map,
+    0 on an empty index. Taken from `docs`, not n_docs * avgdl:
+    with_lossy_norms quantizes dl but keeps the exact avgdl."""
+    return float(index.docs.agg(F.sum("dl")).collect()[0][0] or 0)
+
+
+def _matched_term_stats(index: IndexFrames, qdf: DataFrame):
     """(matched, qterms): postings sliced to the distinct query terms,
-    annotated with per-term df + ttf (one map-side-combinable agg over
+    annotated with per-term df_t + ttf (one map-side-combinable agg over
     the matched slice — global per term since postings hold every doc
-    of a term) and per-doc dl. The scorer broadcast plan shared by the
-    DFR / IB / boolean / scripted similarity family."""
+    of a term) and per-doc dl (`_with_dl`). The scorer broadcast plan
+    shared by the LM / DFI / DFR / IB / scripted similarity family."""
     qterms = query_terms(qdf)
     dterms = qterms.select("term").distinct()
     matched = index.postings.join(F.broadcast(dterms), "term")
     stats = matched.groupBy("term").agg(
         F.count(F.lit(1)).alias("df_t"), F.sum("tf").alias("ttf"))
-    matched = matched.join(F.broadcast(stats), "term")
-    if "dl" not in index.postings.columns:
-        docs_dl = index.docs.select("doc_id", "dl")
-        if index.n_docs <= broadcast_docs_max:
-            docs_dl = F.broadcast(docs_dl)
-        matched = matched.join(docs_dl, "doc_id")
-    return matched, qterms
+    return _with_dl(index, matched.join(F.broadcast(stats), "term")), qterms
 
 
 def _tfn_normalize(normalization: str, avgdl: float, c: float):
@@ -2111,8 +2033,7 @@ def _tfn_normalize(normalization: str, avgdl: float, c: float):
 def score_topk_dfr(index: IndexFrames, qdf: DataFrame,
                    basic_model: str = "g", after_effect: str = "l",
                    normalization: str = "h2", c: float = 1.0,
-                   round_to: int = 6,
-                   broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                   round_to: int = 6) -> DataFrame:
     """(query_id, rank, doc_id, score): ES `"similarity": {"type":
     "DFR"}` top-k (Lucene DFRSimilarity; Amati & van Rijsbergen 2002
     divergence-from-randomness framework, TOIS 20(4)). Composition is
@@ -2138,8 +2059,8 @@ def score_topk_dfr(index: IndexFrames, qdf: DataFrame,
     ties (score DESC, doc_id ASC).
 
     Scale shape: scorer broadcast plan — one map-side (df, ttf) agg
-    over the matched postings slice, dl broadcast under
-    `broadcast_docs_max`, ONE (query, doc) agg shuffle. Reference
+    over the matched postings slice, dl through the `_with_dl` gate,
+    the shared one-exchange (query, doc) tail. Reference
     context: the ES index `similarity` setting the connectors sink
     defers to server-side (svc/es/sink.py bulk path scores nothing) —
     re-expressed here as an in-engine scorer.
@@ -2148,7 +2069,7 @@ def score_topk_dfr(index: IndexFrames, qdf: DataFrame,
         raise ValueError(f"unknown DFR basic_model: {basic_model!r}")
     if after_effect not in ("l", "b"):
         raise ValueError(f"unknown DFR after_effect: {after_effect!r}")
-    matched, qterms = _matched_term_stats(index, qdf, broadcast_docs_max)
+    matched, qterms = _matched_term_stats(index, qdf)
     tfn = _tfn_normalize(normalization, index.avgdl, c)
     n = float(index.n_docs)
     df_t, ttf = F.col("df_t").cast("double"), F.col("ttf").cast("double")
@@ -2176,8 +2097,7 @@ def score_topk_dfr(index: IndexFrames, qdf: DataFrame,
 def score_topk_ib(index: IndexFrames, qdf: DataFrame,
                   distribution: str = "ll", lam: str = "df",
                   normalization: str = "h2", c: float = 1.0,
-                  round_to: int = 6,
-                  broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                  round_to: int = 6) -> DataFrame:
     """(query_id, rank, doc_id, score): ES `"similarity": {"type":
     "IB"}` top-k (Lucene IBSimilarity; Clinchant & Gaussier 2010
     information-based IR models, SIGIR). Over the same normalized tfn
@@ -2195,7 +2115,7 @@ def score_topk_ib(index: IndexFrames, qdf: DataFrame,
         raise ValueError(f"unknown IB distribution: {distribution!r}")
     if lam not in ("df", "ttf"):
         raise ValueError(f"unknown IB lambda: {lam!r}")
-    matched, qterms = _matched_term_stats(index, qdf, broadcast_docs_max)
+    matched, qterms = _matched_term_stats(index, qdf)
     tfn = _tfn_normalize(normalization, index.avgdl, c)
     n = float(index.n_docs)
     rate_num = (F.col("df_t") if lam == "df" else F.col("ttf"))
@@ -2216,8 +2136,7 @@ def score_topk_ib(index: IndexFrames, qdf: DataFrame,
 
 
 def score_topk_boolean(index: IndexFrames, qdf: DataFrame,
-                       boost: float = 1.0, round_to: int = 6,
-                       broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                       boost: float = 1.0, round_to: int = 6) -> DataFrame:
     """(query_id, rank, doc_id, score): ES `"similarity": {"type":
     "boolean"}` top-k (Lucene BooleanSimilarity): every matched query
     term contributes exactly the query boost — no tf, no idf, no
@@ -2239,8 +2158,7 @@ SCRIPT_SIM_COLS = ("tf", "dl", "df_t", "ttf")
 
 
 def score_topk_scripted(index: IndexFrames, qdf: DataFrame,
-                        script, round_to: int = 6,
-                        broadcast_docs_max: int = 2_000_000) -> DataFrame:
+                        script, round_to: int = 6) -> DataFrame:
     """(query_id, rank, doc_id, score): ES `"similarity": {"type":
     "scripted"}` top-k. The Spark-native analog of ES's Painless
     `scripted_similarity`: `script` is a Python callable
@@ -2252,7 +2170,7 @@ def score_topk_scripted(index: IndexFrames, qdf: DataFrame,
     "script" stays JVM-side whole-stage-codegen — no Python UDF in the
     hot path. Clamped at 0 (Lucene's non-negative score contract).
     """
-    matched, qterms = _matched_term_stats(index, qdf, broadcast_docs_max)
+    matched, qterms = _matched_term_stats(index, qdf)
     ctx = {k: F.col(k).cast("double") for k in SCRIPT_SIM_COLS}
     ctx.update(n_docs=float(index.n_docs), avgdl=float(index.avgdl),
                total=float(index.n_docs) * float(index.avgdl))

@@ -31,20 +31,26 @@ the same analyzer convention as the index (lowercase alnum runs).
 
 Scale shape: parsing is driver-side over the tiny query set; scoring
 reuses the distinct-term-weight pipeline (weights computed once per
-(term, doc), broadcast clause expansion, ONE (query, doc) agg shuffle);
-phrase gating joins ONLY the phrase terms' postings positions.
+(term, doc), broadcast clause expansion) and ends in the shared
+one-exchange (query, doc) tail of operators/query.py; phrase gating
+joins ONLY the phrase terms' postings positions.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from connectors_spark import BM25_B, BM25_K1
 from connectors_spark.operators.build import IndexFrames
-from connectors_spark.operators.query import _distinct_term_weights
+from connectors_spark.operators.query import (
+    _by_query,
+    _distinct_term_weights,
+    _topk_tail,
+    _with_dl,
+)
 
 _TOKEN_RE = re.compile(
     r'(?P<prefix>[+-])?'
@@ -126,8 +132,7 @@ def _phrase_doc_ids(index: IndexFrames, terms: list[str]) -> DataFrame:
 
 
 def _phrase_weights(index: IndexFrames, terms: list[str],
-                    k1: float, b: float,
-                    broadcast_docs_max: int) -> DataFrame:
+                    k1: float, b: float) -> DataFrame:
     """(doc_id, _pw): Lucene PhraseQuery BM25 contribution — tf is the
     PHRASE frequency (occurrences of the exact consecutive sequence),
     idf is the SUM of the constituent terms' idfs (public Lucene
@@ -140,11 +145,8 @@ def _phrase_weights(index: IndexFrames, terms: list[str],
         F.sum(idf_col(index.n_docs, F.col("df"))).alias("_sidf"))
     pf = _phrase_matches(index, terms).groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("pf"))
-    docs_dl = index.docs.select("doc_id", "dl")
-    if index.n_docs <= broadcast_docs_max:
-        docs_dl = F.broadcast(docs_dl)
     return (
-        pf.join(docs_dl, "doc_id").crossJoin(F.broadcast(sidf))
+        _with_dl(index, pf).crossJoin(F.broadcast(sidf))
         .select(
             "doc_id",
             (F.col("_sidf")
@@ -160,7 +162,6 @@ def score_query_string(
     k1: float = BM25_K1,
     b: float = BM25_B,
     round_scores: int | None = None,
-    broadcast_docs_max: int = 2_000_000,
     field_indexes: dict[str, IndexFrames] | None = None,
     phrase_scoring: bool = False,
 ) -> DataFrame:
@@ -177,8 +178,9 @@ def score_query_string(
     scores with its OWN BM25 statistics, like multi_match. A scoped
     clause whose field has no index matches no documents (ES unmapped-
     field semantics): its must is unsatisfiable, its should/must_not
-    are inert. The plan stays ONE (query, doc) agg shuffle — per-field
-    distinct-term weights are unioned with a field tag before the agg.
+    are inert. The plan stays the shared one-exchange (query, doc) tail —
+    per-field distinct-term weights are unioned with a field tag before
+    the agg; clause counts, phrase gates and phrase scores ride it.
 
     `phrase_scoring=True` upgrades quoted must-phrases from pure filter
     context to Lucene PhraseQuery scoring: the phrase adds
@@ -212,8 +214,7 @@ def score_query_string(
             continue  # unmapped field: contributes nothing
         dterms_f = clauses.filter(F.col("field") == fname) \
             .select("term").distinct()
-        tw_f = _distinct_term_weights(idx_f, dterms_f, k1, b,
-                                      broadcast_docs_max) \
+        tw_f = _distinct_term_weights(idx_f, dterms_f, k1, b) \
             .withColumn("field", F.lit(fname))
         tw_all = tw_f if tw_all is None else tw_all.unionByName(tw_f)
     if tw_all is None:
@@ -228,22 +229,60 @@ def score_query_string(
     contrib = tw_all.join(F.broadcast(clauses), ["field", "term"])
     scoring = F.col("role").isin("must", "should")
     fterm = F.concat_ws("\x01", F.col("field"), F.col("term"))
-    scored = contrib.groupBy("query_id", "k", "doc_id").agg(
+
+    # per doc, n_must == _req_must iff every must clause matched, counted
+    # with or without repeats; plain counts keep the agg on the tail's
+    # exchange (several count_distincts plan an Expand that shuffles again)
+    def n_role(role):
+        return F.count(F.when(F.col("role") == role, fterm))
+
+    req = clauses.groupBy("query_id").agg(n_role("must").alias("_req_must"))
+
+    def having(out: DataFrame) -> DataFrame:
+        out = out.join(F.broadcast(req), "query_id").filter(
+            (F.col("_n_must") == F.col("_req_must")) & (F.col("_n_not") == 0)
+        )
+        out = _phrase_gates(index, out, phrase_jobs)
+        if not phrase_scoring:
+            return out
+        pw_all = None
+        for qid, role, terms in phrase_jobs:
+            if role != "must":
+                continue
+            pw = _phrase_weights(index, terms, k1, b) \
+                .withColumn("query_id", F.lit(qid))
+            pw_all = pw if pw_all is None else pw_all.unionByName(pw)
+        if pw_all is None:
+            return out
+        # phrase-gated docs all have pf >= 1; the broadcast left join
+        # adds the phrase contribution without a second agg shuffle
+        pw_all = pw_all.groupBy("query_id", "doc_id").agg(
+            F.sum("_pw").alias("_pw"))
+        return (
+            out.join(F.broadcast(pw_all), ["query_id", "doc_id"], "left")
+            .withColumn(
+                "score",
+                F.col("score") + F.coalesce(F.col("_pw"), F.lit(0.0)))
+            .drop("_pw")
+        )
+
+    return _topk_tail(
+        contrib,
         F.sum(F.when(scoring, F.col("w") * F.col("boost"))
-              .otherwise(F.lit(0.0))).alias("score"),
-        F.count_distinct(
-            F.when(F.col("role") == "must", fterm)).alias("_n_must"),
-        F.count_distinct(
-            F.when(F.col("role") == "must_not", fterm)).alias("_n_not"),
+              .otherwise(F.lit(0.0))),
+        aggs=(n_role("must").alias("_n_must"),
+              n_role("must_not").alias("_n_not")),
+        having=having,
+        round_scores=round_scores,
     )
-    req = clauses.groupBy("query_id").agg(
-        F.count_distinct(
-            F.when(F.col("role") == "must", fterm)).alias("_req_must"),
-    )
-    out = scored.join(F.broadcast(req), "query_id").filter(
-        (F.col("_n_must") == F.col("_req_must")) & (F.col("_n_not") == 0)
-    )
-    # phrase gates: tiny distinct-doc_id frames, broadcast semi/anti join
+
+
+def _phrase_gates(index: IndexFrames, out: DataFrame,
+                  phrase_jobs: list[tuple[str, str, list[str]]]) -> DataFrame:
+    """`out` (query_id, doc_id, ...) restricted by each (query_id, role,
+    terms) phrase job: a `must` phrase keeps only that query's docs
+    containing it, a `must_not` phrase drops them. The phrase doc sets
+    are tiny distinct-doc_id frames, joined broadcast semi/anti."""
     for qid, role, terms in phrase_jobs:
         ph = F.broadcast(_phrase_doc_ids(index, terms))
         in_q = F.col("query_id") == qid
@@ -251,34 +290,7 @@ def score_query_string(
         matched = (matched.join(ph, "doc_id", "left_semi") if role == "must"
                    else matched.join(ph, "doc_id", "left_anti"))
         out = out.filter(~in_q).unionByName(matched)
-    if phrase_scoring:
-        pw_all = None
-        for qid, role, terms in phrase_jobs:
-            if role != "must":
-                continue
-            pw = _phrase_weights(index, terms, k1, b, broadcast_docs_max) \
-                .withColumn("query_id", F.lit(qid))
-            pw_all = pw if pw_all is None else pw_all.unionByName(pw)
-        if pw_all is not None:
-            # phrase-gated docs all have pf >= 1; the broadcast left join
-            # adds the phrase contribution without a second agg shuffle
-            pw_all = pw_all.groupBy("query_id", "doc_id").agg(
-                F.sum("_pw").alias("_pw"))
-            out = (
-                out.join(F.broadcast(pw_all), ["query_id", "doc_id"], "left")
-                .withColumn(
-                    "score",
-                    F.col("score") + F.coalesce(F.col("_pw"), F.lit(0.0)))
-                .drop("_pw")
-            )
-    if round_scores is not None:
-        out = out.withColumn("score", F.round(F.col("score"), round_scores))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        out.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return out
 
 
 _SQS_TOKEN_RE = re.compile(r'(?P<neg>-)?(?:"(?P<phrase>[^"]*)"|(?P<body>\S+))')
@@ -363,7 +375,6 @@ def score_simple_query_string(
     k1: float = BM25_K1,
     b: float = BM25_B,
     round_scores: int | None = None,
-    broadcast_docs_max: int = 2_000_000,
 ) -> DataFrame:
     """(query_id, rank, doc_id, score) for simple_query_string queries
     (`queries`: [{"query_id", "query_string", "k"}]).
@@ -379,8 +390,10 @@ def score_simple_query_string(
     Plan: prefix clauses expand against the broadcast-joined lexicon
     (startswith on the matched slice); all referenced terms run through
     the shared distinct-term weight pipeline once; then three map-side-
-    combinable aggs keyed on (query, doc[, alt, clause]) — no per-query
-    work on the driver beyond parsing."""
+    combinable aggs keyed on (query, doc[, alt, clause]), all over ONE
+    query_id exchange (the clause and alternative aggs run on the
+    `_by_query` partitioning the shared tail reuses) — no per-query work
+    on the driver beyond parsing."""
     spark: SparkSession = index.postings.sparkSession
     crows, mnrows, phrase_jobs = [], [], []
     for q in queries:
@@ -421,8 +434,8 @@ def score_simple_query_string(
     if mnrows:
         mn = spark.createDataFrame(mnrows, "query_id string, term string")
         dterms = dterms.unionByName(mn.select("term")).distinct()
-    tw = _distinct_term_weights(index, dterms, k1, b, broadcast_docs_max)
-    contrib = tw.join(F.broadcast(clx), "term")
+    tw = _distinct_term_weights(index, dterms, k1, b)
+    contrib = _by_query(tw.join(F.broadcast(clx), "term"))
     cagg = (
         contrib.groupBy("query_id", "k", "alt_id", "clause_id", "kind",
                         "doc_id")
@@ -439,33 +452,21 @@ def score_simple_query_string(
     )
     areq = cl.groupBy("query_id", "alt_id").agg(
         F.count_distinct(F.col("clause_id")).alias("_req"))
-    out = (
+    full = (
         aagg.join(F.broadcast(areq), ["query_id", "alt_id"])
         .filter(F.col("_nm") == F.col("_req"))
-        .groupBy("query_id", "k", "doc_id")
-        .agg(F.sum("_ascore").alias("score"))
+        .select("query_id", "k", "doc_id", F.col("_ascore").alias("w"))
     )
-    if mnrows:
-        mndocs = tw.join(F.broadcast(mn), "term") \
-            .select("query_id", "doc_id").distinct()
-        out = out.join(F.broadcast(mndocs), ["query_id", "doc_id"],
-                       "left_anti")
-    for qid, role, terms in phrase_jobs:
-        ph = F.broadcast(_phrase_doc_ids(index, terms))
-        in_q = F.col("query_id") == qid
-        matched = out.filter(in_q)
-        matched = (matched.join(ph, "doc_id", "left_semi") if role == "must"
-                   else matched.join(ph, "doc_id", "left_anti"))
-        out = out.filter(~in_q).unionByName(matched)
-    if round_scores is not None:
-        out = out.withColumn("score", F.round(F.col("score"), round_scores))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("doc_id"))
-    return (
-        out.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+
+    def having(out: DataFrame) -> DataFrame:
+        if mnrows:
+            mndocs = tw.join(F.broadcast(mn), "term") \
+                .select("query_id", "doc_id").distinct()
+            out = out.join(F.broadcast(mndocs), ["query_id", "doc_id"],
+                           "left_anti")
+        return _phrase_gates(index, out, phrase_jobs)
+
+    return _topk_tail(full, having=having, round_scores=round_scores)
 
 
 _TPL_VAR_RE = re.compile(r"\{\{\s*(\w+)\s*\}\}")

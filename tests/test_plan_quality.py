@@ -46,16 +46,92 @@ def test_scorer_broadcasts_query_terms(spark, sf_dir):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_scorer_all_joins_broadcast_below_threshold(spark, sf_dir):
-    """Below broadcast_docs_max every scorer join (dterms, lexicon, dl,
+def _outside_broadcasts(plan: str) -> list[str]:
+    """Plan-tree lines that are not inside a BroadcastExchange subtree."""
+    out, cut = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "BroadcastExchange" in line else None
+        out.append(line)
+    return out
+
+
+def _plan_scorers():
+    from connectors_spark.operators import query as Q
+    from connectors_spark.operators import query_string as QS
+
+    def qs(q):
+        return [{"query_id": "q", "query_string": q, "k": 5}]
+
+    return {
+        "topk_dataframe": lambda idx, qdf, q: Q.score_topk_dataframe(idx, qdf),
+        "topk_dataframe_and": lambda idx, qdf, q: Q.score_topk_dataframe(
+            idx, qdf, mode="and"),
+        "bool_topk": lambda idx, qdf, q: Q.score_bool_topk(
+            idx, Q.bool_clauses_df(qdf.sparkSession, [
+                {"query_id": "q", "k": 5, "must": "spark", "should": q}])),
+        "multi_match": lambda idx, qdf, q: Q.score_multi_match(
+            [(idx, 1.0), (idx, 2.0)], qdf, match_type="best_fields"),
+        "cross_fields": lambda idx, qdf, q: Q.score_cross_fields(
+            [(idx, 1.0), (idx, 2.0)], qdf),
+        "lm": lambda idx, qdf, q: Q.score_topk_lm(idx, qdf),
+        "dfi": lambda idx, qdf, q: Q.score_topk_dfi(idx, qdf),
+        "dfr": lambda idx, qdf, q: Q.score_topk_dfr(idx, qdf),
+        "ib": lambda idx, qdf, q: Q.score_topk_ib(idx, qdf),
+        "boolean": lambda idx, qdf, q: Q.score_topk_boolean(idx, qdf),
+        "query_string": lambda idx, qdf, q: QS.score_query_string(
+            idx, qs("+" + q)),
+        "simple_query_string": lambda idx, qdf, q: QS.score_simple_query_string(
+            idx, qs(q.replace(" ", " | ") + "*")),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_plan_scorers()))
+def test_scorer_all_joins_broadcast_below_threshold(spark, sf_dir, name):
+    """Below BROADCAST_DOCS_MAX every scorer join (dterms, lexicon, dl,
     qterms expansion) must broadcast — the dl join silently flipping to a
-    sort-merge join was the r2 bench-regression suspect. The only shuffle
-    allowed is the (query_id, doc_id) aggregation + the top-k window."""
+    sort-merge join was the r2 bench-regression suspect. Every scorer
+    runs the shared scoring tail, so its plan has exactly one shuffle keyed
+    on query_id outside broadcast subtrees: the (query, doc) aggregation
+    and the top-k window share it."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     idx = build_index(docs, with_positions=False)
     qdf = queries_df(spark, [{"query_id": "q", "query_text": "spark data", "k": 5}])
-    plan = _plan(score_topk_dataframe(idx, qdf))
+    plan = _plan(_plan_scorers()[name](idx, qdf, "spark data"))
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
+    exchanges = [line for line in _outside_broadcasts(plan)
+                 if "Exchange hashpartitioning(query_id" in line]
+    assert len(exchanges) == 1, plan
+
+
+@pytest.mark.parametrize("name", ["topk_dataframe", "dfr", "cross_fields"])
+def test_scorer_dl_join_shuffles_above_cutoff(spark, sf_dir, monkeypatch, name):
+    """Above BROADCAST_DOCS_MAX the dl join falls back to a shuffle join
+    and scores the same rows as the broadcast plan. Spark's own size-based
+    broadcast is off here so the cutoff alone decides."""
+    from connectors_spark.operators import query as Q
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    idx = build_index(docs, with_positions=False)
+    qdf = queries_df(spark, [{"query_id": "q", "query_text": "spark data", "k": 5},
+                             {"query_id": "r", "query_text": "cluster", "k": 3}])
+    fn = _plan_scorers()[name]
+    want = sorted(fn(idx, qdf, "").collect())
+    monkeypatch.setattr(Q, "BROADCAST_DOCS_MAX", 0)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        got_df = fn(idx, qdf, "")
+        plan = _plan(got_df)
+        got = sorted(got_df.collect())
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
+    assert [r[:3] for r in got] == [r[:3] for r in want]
+    assert [r.score for r in got] == pytest.approx([r.score for r in want],
+                                                   rel=1e-9)
 
 
 def test_whole_stage_codegen_covers_tokenize(spark, sf_dir):
