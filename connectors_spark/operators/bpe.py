@@ -81,7 +81,10 @@ def _merge_udf(a: str, b: str):
 def learn_bpe(vocab: DataFrame, n_merges: int) -> list[tuple[str, str, int]]:
     """Run `n_merges` BPE rounds over a (word, freq, syms) frame.
     Returns the ordered merge list [(left, right, pair_freq), ...].
-    Stops early when no adjacent pair remains."""
+    Stops early when no adjacent pair remains.
+
+    Executor loss needs a job-level retry: the vocab frame is
+    `localCheckpoint`ed, kept only in executor storage with no lineage."""
     merges: list[tuple[str, str, int]] = []
     cur = vocab.localCheckpoint(eager=True)
     for _ in range(n_merges):

@@ -23,10 +23,20 @@ become:
      (a true upper bound — see ShardCursor docstring), so WAND stays
      rank-identical to a from-scratch rebuild.
 
+Every internal read of the generation set — base and delta postings,
+docmaps, all tombstones in one read, the latest dead counts — goes
+through `index.Generations` with pinned schemas (the source-dependent
+docmap schema comes from the base docmap's parquet footer), so no read
+runs a schema-inference job.
+
 The dead-count scan touches the whole index: at 10^12 scale you amortize
-it with `compact_index` (fold generations + drop tombstones), exactly the
-merge policy of every LSM-ish index. Both paths are tested rank-identical
-against an oracle built directly on the new snapshot.
+it with `compact_index`, exactly the merge policy of every LSM-ish
+index. Compaction is a remap, not a rebuild: live docs get new doc_idx
+(ordered by doc_id, as in a fresh build) through one docs-sized join,
+the batch-decoded postings pick them up in one long-keyed join, live df
+is Σ_gen df − dead from the encoded rows, and the result goes through
+the fused build's direct-write commit. Both paths are tested
+rank-identical against an oracle built directly on the new snapshot.
 """
 
 from __future__ import annotations
@@ -36,7 +46,7 @@ import uuid
 
 import numpy as np
 
-from connectors_spark import commitfs
+from connectors_spark import BROADCAST_DOCS_MAX, commitfs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,47 +57,25 @@ from connectors_spark.operators.build import (
     with_doc_id,
 )
 from connectors_spark.operators.index import (
-    IndexReader,
+    DEAD_DF_SCHEMA,
+    Generations,
+    bucket_col,
     encode_input,
     encode_rows,
+    index_meta,
     posting_rows,
     read_meta,
-    read_postings,
+    shard_cols,
+    write_empty_postings,
+    write_index_postings,
 )
 from connectors_spark.operators.sync import classify_sync_ops
-from connectors_spark.schema import ENCODED_POSTINGS_SCHEMA
 
 
 def _write_meta(path: str, meta: dict, fs=None) -> None:
     # object-store-safe: single atomic PUT (local FS: tmp + rename) —
     # readers see the old meta or the new meta, never a torn one
     commitfs.put_json_atomic(os.path.join(path, "meta.json"), meta, fs=fs)
-
-
-def _all_assigned_docmap(spark: SparkSession, path: str,
-                         meta: dict) -> DataFrame:
-    """Every docmap row ever written — tombstoned docs INCLUDED. This is
-    the frame to take max(doc_idx) over when assigning fresh indices;
-    the live view below must never be used for that (recycled-idx bug)."""
-    dm = spark.read.parquet(f"{path}/docmap")
-    for d in meta.get("deltas", []):
-        if d.get("delete_only"):
-            continue  # tombstones only — no docmap dir was written
-        dm = dm.unionByName(
-            spark.read.parquet(f"{path}/delta/{int(d['gen'])}/docmap")
-        )
-    return dm
-
-
-def _live_docmap(spark: SparkSession, path: str, meta: dict) -> DataFrame:
-    dm = _all_assigned_docmap(spark, path, meta)
-    tombs = None
-    for d in meta.get("deltas", []):
-        t = spark.read.parquet(f"{path}/delta/{int(d['gen'])}/tombstones")
-        tombs = t if tombs is None else tombs.unionByName(t)
-    if tombs is not None:
-        dm = dm.join(tombs, "doc_idx", "left_anti")
-    return dm
 
 
 def incremental_update(spark: SparkSession, path: str,
@@ -98,7 +86,8 @@ def incremental_update(spark: SparkSession, path: str,
     the live generation."""
     path = resolve_current(path)
     meta = read_meta(path)
-    live = _live_docmap(spark, path, meta).persist()
+    gens = Generations(spark, path, meta.get("deltas", []))
+    live = gens.live_docmap().persist()
     new_docs = with_doc_id(new_snapshot).persist()
 
     ops = classify_sync_ops(
@@ -112,7 +101,8 @@ def incremental_update(spark: SparkSession, path: str,
         dead_ids = ops.filter(F.col("op").isin("delete", "update")).select("doc_id")
         changed_ids = ops.filter(F.col("op").isin("create", "update")).select("doc_id")
         changed = new_docs.join(changed_ids, "doc_id", "left_semi")
-        rec = _apply_delta(spark, path, meta, live, dead_ids, changed, counts)
+        rec = _apply_delta(spark, path, meta, gens, live, dead_ids, changed,
+                           counts)
     ops.unpersist(); live.unpersist(); new_docs.unpersist()
     return rec
 
@@ -129,14 +119,15 @@ def delete_by_query(spark: SparkSession, path: str,
     nothing matched. `path` may be a store root (CURRENT pointer)."""
     path = resolve_current(path)
     meta = read_meta(path)
-    live = _live_docmap(spark, path, meta).persist()
+    gens = Generations(spark, path, meta.get("deltas", []))
+    live = gens.live_docmap().persist()
     dead_ids = (live.join(match_ids.select("doc_id").distinct(),
                           "doc_id", "left_semi").select("doc_id"))
     n_dead = dead_ids.count()
     if n_dead == 0:
         live.unpersist()
         return None
-    rec = _apply_delta(spark, path, meta, live, dead_ids, None,
+    rec = _apply_delta(spark, path, meta, gens, live, dead_ids, None,
                        {"delete": int(n_dead)})
     live.unpersist()
     return rec
@@ -152,7 +143,8 @@ def update_by_query(spark: SparkSession, path: str,
     is encoded as a fresh delta generation with exact live stats."""
     path = resolve_current(path)
     meta = read_meta(path)
-    live = _live_docmap(spark, path, meta).persist()
+    gens = Generations(spark, path, meta.get("deltas", []))
+    live = gens.live_docmap().persist()
     changed = updated_docs.join(
         live.select("doc_id"), "doc_id", "left_semi"
     ).persist()
@@ -161,7 +153,7 @@ def update_by_query(spark: SparkSession, path: str,
         live.unpersist(); changed.unpersist()
         return None
     dead_ids = changed.select("doc_id")
-    rec = _apply_delta(spark, path, meta, live, dead_ids, changed,
+    rec = _apply_delta(spark, path, meta, gens, live, dead_ids, changed,
                        {"update": int(n_changed)})
     live.unpersist(); changed.unpersist()
     return rec
@@ -190,9 +182,10 @@ def _dead_counts(batches, tombs: np.ndarray):
 
 
 def _apply_delta(spark: SparkSession, path: str, meta: dict,
-                 live: DataFrame, dead_ids: DataFrame,
+                 gens: Generations, live: DataFrame, dead_ids: DataFrame,
                  changed: DataFrame | None, counts: dict[str, int]) -> dict:
-    """Write one delta generation: tombstones for `dead_ids`, encoded
+    """Write one delta generation over the open generation set `gens`
+    (`live` = its live docmap): tombstones for `dead_ids`, encoded
     postings + docmap for `changed` (a delete-only generation, flagged
     `delete_only` so readers skip its postings/docmap reads entirely,
     when it holds no create/update), cumulative per-term dead counts, and
@@ -209,24 +202,29 @@ def _apply_delta(spark: SparkSession, path: str, meta: dict,
     tomb = live.join(dead_ids, "doc_id", "left_semi").select("doc_idx")
     tomb.write.mode("overwrite").parquet(f"{gdir}/tombstones")
 
-    survivors = live.join(dead_ids, "doc_id", "left_anti")
-    stats = survivors.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
+    # one pass over the live docmap: survivor count and Σdl, and the max
+    # doc_idx. New doc_idx must start past EVERY idx ever assigned —
+    # tombstoned ones included — so the max also covers earlier
+    # generations' tombstones. Max over the live docmap alone can recycle
+    # a tombstoned idx (deletes shrink the live max), and the readers'
+    # cumulative dead mask would then silently hide the new doc: a
+    # delete-heavy generation followed by any create/update made the
+    # recycled docs unsearchable (caught by the round-4 verify drive).
+    surv = F.col("_dead").isNull()
+    stats = live.join(dead_ids.select("doc_id", F.lit(1).alias("_dead")),
+                      "doc_id", "left").agg(
+        F.count(F.when(surv, 1)).alias("n"),
+        F.sum(F.when(surv, F.col("dl"))).alias("s"),
+        F.max("doc_idx").alias("m"),
     ).first()
     n_live, sum_dl = int(stats["n"]), int(stats["s"] or 0)
+    prev_dead = gens.dead_ids()
     delete_only = changed is None or n_created + n_updated == 0
     if delete_only:
         avgdl_live = (sum_dl / n_live) if n_live else 0.0
     else:
-        # new doc_idx must start past EVERY idx ever assigned — including
-        # tombstoned ones. max over the live docmap alone can recycle a
-        # tombstoned idx (deletes shrink the live max), and the readers'
-        # cumulative dead mask would then silently hide the new doc: a
-        # delete-heavy generation followed by any create/update made the
-        # recycled docs unsearchable (caught by the round-4 verify drive).
-        max_idx = _all_assigned_docmap(spark, path, meta).agg(
-            F.max("doc_idx")
-        ).first()[0] or 0
+        max_idx = max(int(stats["m"] or 0),
+                      int(prev_dead[-1]) if len(prev_dead) else 0)
         if meta.get("positions", False):
             # a delta generation must match the base index's positional
             # setting, else phrase_topk breaks on any phrase term with
@@ -242,20 +240,12 @@ def _apply_delta(spark: SparkSession, path: str, meta: dict,
     # Tombstones ship to executors ONCE as a Spark broadcast (torrent),
     # never closure-pickled per task; their size is bounded by the
     # compaction policy (should_compact/maybe_compact below).
-    all_tomb_ids = np.sort(np.asarray(spark.read.parquet(*[
-        f"{path}/delta/{int(d['gen'])}/tombstones"
-        for d in [*meta.get("deltas", []), {"gen": gen}]
-    ]).toArrow().column("doc_idx").to_numpy(), dtype=np.int64))
-    tomb_bc = spark.sparkContext.broadcast(all_tomb_ids)
-    allp = read_postings(spark, path).select("term", "n_docs", "doc_gaps")
-    for d in meta.get("deltas", []):
-        if not d.get("delete_only"):
-            allp = allp.unionByName(
-                spark.read.parquet(f"{path}/delta/{int(d['gen'])}/postings")
-                .select("term", "n_docs", "doc_gaps"))
+    tomb_bc = spark.sparkContext.broadcast(
+        np.union1d(prev_dead, gens.dead_ids([gen])))
     dead_df = (
-        allp.mapInArrow(lambda it: _dead_counts(it, tomb_bc.value),
-                        schema="term string, dead long")
+        gens.postings.select("term", "n_docs", "doc_gaps")
+        .mapInArrow(lambda it: _dead_counts(it, tomb_bc.value),
+                    schema=DEAD_DF_SCHEMA)
         .groupBy("term").agg(F.sum("dead").alias("dead"))
     )
     dead_df.write.mode("overwrite").parquet(f"{gdir}/dead_df")
@@ -293,7 +283,7 @@ def _write_fused_delta(spark: SparkSession, meta: dict, changed: DataFrame,
         n_live = n_surv + n_new
         avgdl_live = (surv_dl + new_dl) / n_live
         if not new_dl:
-            _write_no_postings(spark, gdir)
+            write_empty_postings(spark, f"{gdir}/postings")
             return n_live, avgdl_live
         _write_delta_postings(spark, meta, rows, gdir, avgdl_live)
     return n_live, avgdl_live
@@ -312,13 +302,6 @@ def _write_delta_postings(spark: SparkSession, meta: dict, rows: DataFrame,
      .parquet(f"{gdir}/postings"))
 
 
-def _write_no_postings(spark: SparkSession, gdir: str) -> None:
-    """A generation whose changed docs are all zero-token has docmap rows
-    but no postings: write a schema-only postings dir readers can open."""
-    spark.createDataFrame([], ENCODED_POSTINGS_SCHEMA).write.mode(
-        "overwrite").parquet(f"{gdir}/postings")
-
-
 def _write_positional_delta(spark: SparkSession, meta: dict,
                             changed: DataFrame, gdir: str, start_idx: int,
                             n_surv: int, surv_dl: int) -> tuple[int, float]:
@@ -329,15 +312,15 @@ def _write_positional_delta(spark: SparkSession, meta: dict,
 
     sub = build_index(changed, with_positions=True)
     obs = Observation("delta_docmap_stats")
-    assign_doc_indices(sub.docs, start_idx=start_idx).observe(
-        obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    ).write.mode("overwrite").parquet(f"{gdir}/docmap")
-    sub_docmap = spark.read.parquet(f"{gdir}/docmap")
+    sub_docmap = assign_doc_indices(sub.docs, start_idx=start_idx).observe(
+        obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
+    sub_docmap.write.mode("overwrite").parquet(f"{gdir}/docmap")
+    sub_docmap = spark.read.schema(sub_docmap.schema).parquet(f"{gdir}/docmap")
     new_dl = int(obs.get["s"] or 0)
     n_live = n_surv + int(obs.get["n"])
     avgdl_live = (surv_dl + new_dl) / n_live
     if not new_dl:
-        _write_no_postings(spark, gdir)
+        write_empty_postings(spark, f"{gdir}/postings")
         return n_live, avgdl_live
     rows = encode_input(sub.postings, sub_docmap, sub.lexicon,
                         int(meta["n_buckets"]), meta["shard_cap"])
@@ -533,15 +516,47 @@ def maybe_compact_store(spark: SparkSession, store: str,
 
 def compact_index(spark: SparkSession, path: str, out_path: str) -> None:
     """Fold all generations into a fresh single-generation index (drops
-    tombstones, restores dense stats) — the LSM merge step."""
+    tombstones, restores dense stats) — the LSM merge step.
+
+    A remap, not a rebuild: nothing is re-tokenized and no postings-sized
+    join is keyed on the doc_id string.
+    - The live docmap gets new doc_idx ordered by doc_id, as in a fresh
+      build (assign_doc_indices); n_docs and Σdl come from an Observation
+      on its write.
+    - One docs-sized join gives old doc_idx -> (new doc_idx, dl).
+    - Every generation's encoded rows are batch-decoded with tombstoned
+      docs masked, and the remap attaches in one long-keyed join
+      (broadcast up to BROADCAST_DOCS_MAX docs).
+    - Live df per term is Σ_gen df − dead, taken from the encoded rows'
+      n_docs and the cumulative dead counts — the df IndexReader scores
+      with — so the decoded postings are never grouped by term.
+    - The rows go through the one encode step and the fused build's
+      direct-write commit (`write_index_postings`).
+    The positions setting carries over from the source index."""
+    from pyspark.sql import Observation
+
     meta = read_meta(path)
-    reader = IndexReader(spark, path, cache=False)
-    dead_bc = reader._dead_bc
-    pos_cols = ["positions"] if meta.get("positions") else []
+    gens = Generations(spark, path, meta.get("deltas", []))
+    dead_bc = spark.sparkContext.broadcast(gens.dead_ids())
+    positional = bool(meta.get("positions"))
+    pos_cols = ["positions"] if positional else []
+
+    live = gens.live_docmap()
+    obs = Observation("compact_docmap_stats")
+    docmap = assign_doc_indices(live.drop("doc_idx")).observe(
+        obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
+    docmap.write.mode("overwrite").parquet(f"{out_path}/docmap")
+    n_docs = int(obs.get["n"])
+    avgdl = float(obs.get["s"] or 0) / n_docs if n_docs else 0.0
+    docmap = spark.read.schema(docmap.schema).parquet(f"{out_path}/docmap")
+    remap = live.select(F.col("doc_idx").alias("_old"), "doc_id").join(
+        docmap.select("doc_id", "doc_idx", "dl"), "doc_id").drop("doc_id")
+    if n_docs <= BROADCAST_DOCS_MAX:
+        remap = F.broadcast(remap)
 
     def decode_rows(batches):
-        """Live (term, doc_idx, tf[, positions]) postings: one batch
-        decode per stream per Arrow batch, tombstoned docs masked."""
+        """Live (term, _old, tf[, positions]) postings: one batch decode
+        per stream per Arrow batch, tombstoned docs masked."""
         import pyarrow as pa
 
         dead = dead_bc.value
@@ -561,35 +576,33 @@ def compact_index(spark: SparkSession, path: str, out_path: str) -> None:
                     pa.array(offs), pa.array(p.astype(np.int32)))]
             if len(dead):
                 at = np.minimum(np.searchsorted(dead, d), len(dead) - 1)
-                live = dead[at] != d
-                d, tf, row = d[live], tf[live], row[live]
-                lists = [a.filter(pa.array(live)) for a in lists]
+                keep = dead[at] != d
+                d, tf, row = d[keep], tf[keep], row[keep]
+                lists = [a.filter(pa.array(keep)) for a in lists]
             yield pa.RecordBatch.from_arrays(
                 [rb.column("term").take(pa.array(row)), pa.array(d),
                  pa.array(tf), *lists],
-                names=["term", "doc_idx", "tf", *pos_cols])
+                names=["term", "_old", "tf", *pos_cols])
 
-    flat = reader.postings.select(
+    flat = gens.postings.select(
         "term", "n_docs", "doc_gaps", "tfs", *pos_cols
-    ).mapInArrow(decode_rows, schema="term string, doc_idx long, tf long"
+    ).mapInArrow(decode_rows, schema="term string, _old long, tf long"
                  + (", positions array<int>" if pos_cols else ""))
-    docmap = _live_docmap(spark, path, meta)
-
-    postings = flat.join(
-        docmap.select("doc_idx", "doc_id"), "doc_idx"
-    ).select("term", "doc_id", "tf", *pos_cols)
-    docs = docmap.drop("doc_idx")
-    from connectors_spark.operators.build import IndexFrames
-    stats = docs.agg(F.count(F.lit(1)), F.sum("dl")).first()
-    n_docs = int(stats[0])
-    avgdl = float(stats[1]) / n_docs if n_docs else 0.0
-    lexicon = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idx = IndexFrames(postings=postings, docs=docs, lexicon=lexicon,
-                      n_docs=n_docs, avgdl=avgdl)
-    from connectors_spark.operators.index import write_encoded_index
-    write_encoded_index(idx, out_path, n_buckets=meta["n_buckets"],
-                        shard_cap=meta["shard_cap"], k1=meta["k1"],
-                        b=meta["b"])
+    lexicon = gens.postings.groupBy("term").agg(F.sum("n_docs").alias("df"))
+    if gens.dead_df is not None:
+        lexicon = lexicon.join(gens.dead_df, "term", "left").select(
+            "term", (F.col("df") - F.coalesce("dead", F.lit(0))).alias("df"))
+    rows = (
+        flat.join(remap, "_old")
+        .join(F.broadcast(lexicon), "term")
+        .select("term", "doc_idx", "tf", "dl", "df", *pos_cols,
+                *shard_cols(meta["shard_cap"]))
+        .withColumn("bucket", bucket_col("term", int(meta["n_buckets"])))
+    )
+    write_index_postings(rows, out_path, avgdl, meta["k1"], meta["b"])
+    _write_meta(out_path, index_meta(
+        n_docs, avgdl, meta["k1"], meta["b"], meta["n_buckets"],
+        meta["shard_cap"], positional))
 
 
 def upsert_docs(spark: SparkSession, path: str,
@@ -603,7 +616,8 @@ def upsert_docs(spark: SparkSession, path: str,
     Returns the delta record, or None if the batch changed nothing."""
     path = resolve_current(path)
     meta = read_meta(path)
-    live = _live_docmap(spark, path, meta).persist()
+    gens = Generations(spark, path, meta.get("deltas", []))
+    live = gens.live_docmap().persist()
     new_docs = with_doc_id(batch).persist()
     # restrict the live side to the batch's keys: docs outside the
     # batch must never classify as deletes
@@ -620,7 +634,8 @@ def upsert_docs(spark: SparkSession, path: str,
             F.col("op").isin("create", "update")).select("doc_id")
         dead_ids = ops.filter(F.col("op") == "update").select("doc_id")
         changed = new_docs.join(changed_ids, "doc_id", "left_semi")
-        rec = _apply_delta(spark, path, meta, live, dead_ids, changed, counts)
+        rec = _apply_delta(spark, path, meta, gens, live, dead_ids, changed,
+                           counts)
     ops.unpersist(); live.unpersist(); new_docs.unpersist()
     return rec
 

@@ -349,7 +349,10 @@ def tree_paths(nodes: DataFrame, max_depth: int = 4096,
     max_depth) shuffles total. With paths the final frame carries
     O(sum of depths) ids, the output's own size — nothing
     intermediate is bigger. DuckDB twin: WITH RECURSIVE parent walk
-    (per-row sequential, the single-node semantics oracle)."""
+    (per-row sequential, the single-node semantics oracle).
+
+    Executor loss needs a job-level retry: the state frame is
+    `localCheckpoint`ed, kept only in executor storage with no lineage."""
     import math
 
     # +1: the resolved flag is copied FROM the ancestor's state, so it

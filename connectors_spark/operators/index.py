@@ -100,37 +100,37 @@ def write_encoded_index(
     spark = index.postings.sparkSession
     docmap = assign_doc_indices(index.docs)
     docmap.write.mode("overwrite").parquet(f"{path}/docmap")
-    docmap = spark.read.parquet(f"{path}/docmap")
+    docmap = spark.read.schema(docmap.schema).parquet(f"{path}/docmap")
 
     avgdl, n_docs = index.avgdl, index.n_docs
     # postings feed both the lexicon agg and the encode shuffle — pin them
     # for the duration of the build (the resumable path materializes to
     # parquet instead, plans/checkpoint.py)
     postings = index.postings.persist()
-    # whether the encoded rows carry positions rides the write job: a
+    rows = encode_input(postings, docmap, index.lexicon, n_buckets, shard_cap)
+    # whether the rows carry positions rides the write job: a
     # with_positions=False build has a NULL positions column
     obs = Observation("encode_positions")
+    with_pos = "positions" in rows.columns
+    if with_pos:
+        rows = rows.observe(obs, F.count("positions").alias("p"))
     try:
-        encoded = encode_postings(
-            postings, docmap, index.lexicon, avgdl,
-            n_buckets=n_buckets, shard_cap=shard_cap, k1=k1, b=b,
-        ).observe(obs, F.count("positions").alias("p"))
-        # partitionBy(bucket) straight from the encode tasks: bucket
-        # pruning is directory-level, so multiple files per bucket dir
-        # cost nothing at read time and the blob shuffle stage disappears
-        encoded.write.mode("overwrite").partitionBy("bucket").parquet(
-            f"{path}/postings"
-        )
+        # the committer path: partitionBy(bucket) straight from the
+        # encode tasks
+        write_index_postings(rows, path, avgdl, k1, b, direct_write=False)
     finally:
         postings.unpersist()
-
-    meta = {
-        "n_docs": n_docs, "avgdl": avgdl, "gen0_avgdl": avgdl, "k1": k1,
-        "b": b, "n_buckets": n_buckets, "shard_cap": shard_cap, "deltas": [],
-        "positions": int(obs.get["p"]) > 0,
-    }
     with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(meta, f)
+        json.dump(index_meta(n_docs, avgdl, k1, b, n_buckets, shard_cap,
+                             with_pos and int(obs.get["p"]) > 0), f)
+
+
+def index_meta(n_docs: int, avgdl: float, k1: float, b: float,
+               n_buckets: int, shard_cap: int, positions: bool) -> dict:
+    """meta.json of a single-generation index."""
+    return {"n_docs": n_docs, "avgdl": avgdl, "gen0_avgdl": avgdl, "k1": k1,
+            "b": b, "n_buckets": n_buckets, "shard_cap": shard_cap,
+            "deltas": [], "positions": positions}
 
 
 def encode_input(postings: DataFrame, docmap: DataFrame, lexicon: DataFrame,
@@ -147,26 +147,6 @@ def encode_input(postings: DataFrame, docmap: DataFrame, lexicon: DataFrame,
         .select("term", "doc_idx", "tf", "dl", "df", *pos_cols,
                 *shard_cols(shard_cap))
         .withColumn("bucket", bucket_col("term", n_buckets))
-    )
-
-
-def encode_postings(
-    postings: DataFrame,
-    docmap: DataFrame,
-    lexicon: DataFrame,
-    avgdl: float,
-    n_buckets: int = DEFAULT_BUCKETS,
-    shard_cap: int = DEFAULT_SHARD_CAP,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
-    """(uncompressed postings, docmap, lexicon) -> encoded shard rows:
-    `encode_input` then `encode_rows` keyed on (term, shard); sharding
-    bounds the group size."""
-    return encode_rows(
-        encode_input(postings, docmap, lexicon, n_buckets, shard_cap),
-        postings.sparkSession.sparkContext.defaultParallelism,
-        ["term", "shard"], avgdl, k1, b,
     )
 
 
@@ -479,6 +459,7 @@ def posting_rows(base: DataFrame, id_cols: list[str], docmap_dir: str, *,
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import Observation
+    from pyspark.util import inheritable_thread_target
 
     spark = base.sparkSession
     # ONE tokenize pass (was two: dl on the base table + a re-tokenize
@@ -508,13 +489,16 @@ def posting_rows(base: DataFrame, id_cols: list[str], docmap_dir: str, *,
         .persist()
     )
     try:
+        # inheritable targets: the pool threads' jobs keep the caller's
+        # job group and description
+        inherit = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_map = pool.submit(
-                lambda: docmap.write.mode("overwrite").parquet(docmap_dir))
-            f_lex = pool.submit(lexicon.count)
+            f_map = pool.submit(inherit(
+                lambda: docmap.write.mode("overwrite").parquet(docmap_dir)))
+            f_lex = pool.submit(inherit(lexicon.count))
             f_map.result()
             f_lex.result()
-        docmap = spark.read.parquet(docmap_dir)
+        docmap = spark.read.schema(docmap.schema).parquet(docmap_dir)
         n_docs = int(obs.get["n"])
         sum_dl = int(obs.get["s"] or 0)
 
@@ -542,6 +526,63 @@ def posting_rows(base: DataFrame, id_cols: list[str], docmap_dir: str, *,
     finally:
         ent.unpersist()
         lexicon.unpersist()
+
+
+def write_empty_postings(spark: SparkSession, post_dir: str) -> None:
+    """A schema-only postings dir, for a write with no postings at all
+    (an empty or all-zero-token corpus or generation): any reader can
+    open it, even one that infers the schema."""
+    spark.createDataFrame([], ENCODED_POSTINGS_SCHEMA).write.mode(
+        "overwrite").parquet(post_dir)
+
+
+def write_index_postings(rows: DataFrame, path: str, avgdl: float,
+                         k1: float, b: float,
+                         num_partitions: int | None = None,
+                         direct_write: bool | None = None) -> None:
+    """Encode the encoder's input rows (see `encode_input`) keyed on
+    (term, shard) into `path/postings` — the commit step of every
+    single-generation write (the fused build and compaction).
+
+    With `direct_write` the encode tasks write their own parquet files
+    (make_encode_arrow_write_partition) and the driver commits the
+    winner manifest: no Spark committer, so no driver-side serial renames
+    of O(files). Task-side pyarrow writes need the output path visible to
+    every task as a plain local path, so None (auto) enables it only in
+    local mode on a scheme-less path; cluster/URI deployments keep the
+    committer (or opt in explicitly after wiring pyarrow.fs). An empty
+    manifest (no postings at all) leaves a schema-only dir and no
+    manifest."""
+    spark = rows.sparkSession
+    if num_partitions is None:
+        num_partitions = spark.sparkContext.defaultParallelism
+    if direct_write is None:
+        direct_write = (spark.sparkContext.master.startswith("local")
+                        and "://" not in path)
+    post_dir = f"{path}/postings"
+    key = ["term", "shard"]
+    if direct_write:
+        import shutil
+
+        shutil.rmtree(post_dir, ignore_errors=True)
+        os.makedirs(post_dir, exist_ok=True)
+        manifest = encode_rows(rows, num_partitions, key, avgdl, k1, b,
+                               out_dir=post_dir).collect()
+        if manifest:
+            # Iceberg-style commit: persist the winner file list, then
+            # best-effort-GC loser-attempt orphans
+            write_postings_manifest(path, manifest)
+            gc_unmanifested(path)
+        else:
+            # a manifest left by an earlier write names deleted files
+            if os.path.exists(os.path.join(path, POSTINGS_MANIFEST)):
+                os.remove(os.path.join(path, POSTINGS_MANIFEST))
+            write_empty_postings(spark, post_dir)
+        return
+    # classic committer path: bucket pruning is directory-level, multiple
+    # files per bucket dir (<= encode tasks) cost nothing at read time
+    encode_rows(rows, num_partitions, key, avgdl, k1, b).write.mode(
+        "overwrite").partitionBy("bucket").parquet(post_dir)
 
 
 def build_and_write_index(
@@ -575,54 +616,17 @@ def build_and_write_index(
     """
     from connectors_spark.operators.build import with_doc_id
 
-    spark = transcripts.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    if direct_write is None:
-        # task-side pyarrow writes need the output path visible to every
-        # task as a plain local path — auto-enable only in local mode on
-        # a scheme-less path; cluster/URI deployments keep the committer
-        # (or opt in explicitly after wiring pyarrow.fs)
-        direct_write = (
-            spark.sparkContext.master.startswith("local")
-            and "://" not in path
-        )
-
     base = with_doc_id(transcripts)
     id_cols = ["doc_id"] + (["ts"] if "ts" in base.columns else [])
     with posting_rows(base, id_cols, f"{path}/docmap", n_buckets=n_buckets,
                       shard_cap=shard_cap) as (p, n_docs, sum_dl):
         avgdl = float(sum_dl) / n_docs if n_docs else 0.0
-        post_dir = f"{path}/postings"
-        key = ["term", "shard"]
-        if direct_write:
-            # task-side pyarrow writes, no Spark committer: the commit
-            # pass (driver-side serial renames of O(files)) is gone —
-            # see make_encode_arrow_write_partition
-            import shutil as _shutil
-            _shutil.rmtree(post_dir, ignore_errors=True)
-            os.makedirs(post_dir, exist_ok=True)
-            manifest = encode_rows(p, num_partitions, key, avgdl, k1, b,
-                                   out_dir=post_dir).collect()
-            if not manifest:  # empty corpus: still need a readable dir
-                direct_write = False
-            else:
-                # Iceberg-style commit: persist the winner file list,
-                # then best-effort-GC loser-attempt orphans
-                write_postings_manifest(path, manifest)
-                gc_unmanifested(path)
-        if not direct_write:
-            # classic committer path: bucket pruning is directory-level,
-            # multiple files per bucket dir (<= encode tasks) cost
-            # nothing at read time
-            encode_rows(p, num_partitions, key, avgdl, k1, b).write.mode(
-                "overwrite").partitionBy("bucket").parquet(post_dir)
+        write_index_postings(p, path, avgdl, k1, b,
+                             num_partitions=num_partitions,
+                             direct_write=direct_write)
 
-    meta = {
-        "n_docs": n_docs, "avgdl": avgdl, "gen0_avgdl": avgdl, "k1": k1,
-        "b": b, "n_buckets": n_buckets, "shard_cap": shard_cap, "deltas": [],
-        "positions": False,  # fused builder tokenizes without positions
-    }
+    # the fused builder tokenizes without positions
+    meta = index_meta(n_docs, avgdl, k1, b, n_buckets, shard_cap, False)
     with open(os.path.join(path, "meta.json"), "w") as f:
         json.dump(meta, f)
     return meta
@@ -682,22 +686,110 @@ def read_postings(spark: SparkSession, path: str) -> DataFrame:
     manifest exists, read exactly the manifested files (basePath keeps
     the hive `bucket=` partition column) so loser-attempt orphans are
     invisible; committer-written indexes fall back to directory listing
-    (the committer already guarantees only winner output is visible)."""
+    (the committer already guarantees only winner output is visible).
+    The schema is pinned (ENCODED_POSTINGS_SCHEMA), so opening runs no
+    footer-inference job."""
     post_dir = f"{path}/postings"
     mf = os.path.join(path, POSTINGS_MANIFEST)
     if os.path.exists(mf):
         with open(mf) as f:
             files = json.load(f)["files"]
         if files:
-            return spark.read.option("basePath", post_dir).parquet(
-                *[os.path.join(post_dir, f) for f in files]
-            )
-    return spark.read.parquet(post_dir)
+            return spark.read.schema(ENCODED_POSTINGS_SCHEMA).option(
+                "basePath", post_dir).parquet(
+                *[os.path.join(post_dir, f) for f in files])
+    return spark.read.schema(ENCODED_POSTINGS_SCHEMA).parquet(post_dir)
 
 
 _SHARD_ROW_COLS = ("doc_gaps", "tfs", "dls", "block_last_doc",
                    "block_offsets", "block_tf_offsets", "block_dl_offsets",
                    "block_max_w")
+
+
+TOMBSTONES_SCHEMA = "doc_idx long"
+DEAD_DF_SCHEMA = "term string, dead long"
+
+
+def _written_schema(spark: SparkSession, d: str):
+    """The schema Spark wrote into a local parquet dir, read from one
+    file's footer on the driver — no Spark job. A URI path, or a dir
+    Spark did not write, falls back to Spark's inference job."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    files = ([] if "://" in d
+             else sorted(glob.glob(os.path.join(d, "*.parquet"))))
+    if files:
+        js = (pq.read_schema(files[0]).metadata or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata")
+        if js:
+            return StructType.fromJson(json.loads(js))
+    return spark.read.parquet(d).schema
+
+
+class Generations:
+    """One open of an index's generation set — the base build plus every
+    delta in `deltas` (operators/delta.py). Shared by IndexReader, the
+    delta writer and compaction, so the per-generation layout is read in
+    one place:
+
+    - postings: base + delta encoded rows (ENCODED_POSTINGS_SCHEMA) plus
+      `_gen`, the generation number;
+    - docmap: every docmap row ever assigned, tombstoned docs included;
+    - tombstones: the doc_idx of every delta's tombstones, in one read
+      (`dead_ids`, `live_docmap`);
+    - dead_df: the latest delta's cumulative per-term dead counts (None
+      without deltas).
+
+    Every read has a pinned schema. The docmap's columns and doc_id type
+    depend on the source (doc_id [+ ts] + dl), so its schema is taken
+    once from the base docmap's footer (`_written_schema`) and reused for
+    every delta's."""
+
+    def __init__(self, spark: SparkSession, path: str, deltas: list[dict]):
+        self.spark, self.path = spark, path
+        self.gens = [int(d["gen"]) for d in deltas]
+        dm_schema = _written_schema(spark, f"{path}/docmap")
+        self.postings = read_postings(spark, path).withColumn("_gen", F.lit(0))
+        self.docmap = spark.read.schema(dm_schema).parquet(f"{path}/docmap")
+        for d in deltas:
+            if d.get("delete_only"):
+                continue  # tombstones only — no postings/docmap dirs exist
+            gdir = f"{path}/delta/{int(d['gen'])}"
+            self.postings = self.postings.unionByName(
+                spark.read.schema(ENCODED_POSTINGS_SCHEMA)
+                .parquet(f"{gdir}/postings")
+                .withColumn("_gen", F.lit(int(d["gen"]))))
+            self.docmap = self.docmap.unionByName(
+                spark.read.schema(dm_schema).parquet(f"{gdir}/docmap"))
+        self.dead_df = (
+            spark.read.schema(DEAD_DF_SCHEMA)
+            .parquet(f"{path}/delta/{self.gens[-1]}/dead_df")
+            if self.gens else None)
+
+    def tombstones_of(self, gens: list[int]) -> DataFrame:
+        """(doc_idx) of the tombstones of generations `gens`, one read."""
+        return self.spark.read.schema(TOMBSTONES_SCHEMA).parquet(*[
+            f"{self.path}/delta/{g}/tombstones" for g in gens])
+
+    def dead_ids(self, gens: list[int] | None = None) -> np.ndarray:
+        """Sorted tombstoned doc_idx of generations `gens` (default: the
+        whole set) — one Spark job, none when there is nothing to read."""
+        gens = self.gens if gens is None else gens
+        if not gens:
+            return np.zeros(0, dtype=np.int64)
+        return np.sort(np.asarray(
+            self.tombstones_of(gens).toArrow().column("doc_idx").to_numpy(),
+            dtype=np.int64))
+
+    def live_docmap(self) -> DataFrame:
+        """The docmap minus every tombstoned doc."""
+        if not self.gens:
+            return self.docmap
+        return self.docmap.join(self.tombstones_of(self.gens), "doc_idx",
+                                "left_anti")
 
 
 def _shard_dicts(grp: pd.DataFrame, avgdl: float,
@@ -728,7 +820,14 @@ class IndexReader:
     Understands incremental generations (operators/delta.py): postings =
     base union deltas; tombstoned doc_idx are masked in the kernels; per-
     term dead counts correct df for exact idf; stored block-max bounds are
-    scaled by max(1, avgdl_live/avgdl_at_build)."""
+    scaled by max(1, avgdl_live/avgdl_at_build).
+
+    Opening goes through `Generations`: every frame is read with a pinned
+    schema, so no read runs a footer-inference job, and the tombstones of
+    every delta come back in ONE read — an open (cache=False) submits
+    one Spark job when the index has deltas and none when it has not
+    (plus Spark's own listing job for a read of more than
+    `spark.sql.sources.parallelPartitionDiscovery.threshold` paths)."""
 
     def __init__(self, spark: SparkSession, path: str, cache: bool = True,
                  pit_gen: int | None = None):
@@ -741,8 +840,6 @@ class IndexReader:
         (None) reads the full delta chain, and since meta is snapshotted
         here at open, an already-open reader keeps its own point in time
         while writers append deltas (ES PIT keep_alive semantics)."""
-        import numpy as _np
-
         self.spark = spark
         # a store root (CURRENT pointer file) resolves to its live
         # generation at open; the reader then pins that generation's
@@ -769,39 +866,17 @@ class IndexReader:
             self.meta["deltas"] = deltas
         self.pit_gen = pit_gen
         self.gen_avgdl = {0: self.meta.get("gen0_avgdl", self.meta["avgdl"])}
-        postings = read_postings(spark, path).withColumn("_gen", F.lit(0))
-        docmap = spark.read.parquet(f"{path}/docmap").select("doc_idx", "doc_id")
-        dead_df = None
-        tombs = []
         for d in deltas:
-            g = int(d["gen"])
-            self.gen_avgdl[g] = float(d["avgdl_at_build"])
-            gdir = f"{path}/delta/{g}"
-            t = spark.read.parquet(f"{gdir}/tombstones")
-            tombs.append(_np.array(
-                [r.doc_idx for r in t.collect()], dtype=_np.int64))
-            if d.get("delete_only"):
-                continue  # tombstones only — no postings/docmap dirs exist
-            postings = postings.unionByName(
-                spark.read.parquet(f"{gdir}/postings").withColumn("_gen", F.lit(g))
-            )
-            docmap = docmap.unionByName(
-                spark.read.parquet(f"{gdir}/docmap").select("doc_idx", "doc_id")
-            )
-        if deltas:
-            # latest generation carries the cumulative per-term dead counts
-            last = f"{path}/delta/{int(deltas[-1]['gen'])}"
-            dead_df = spark.read.parquet(f"{last}/dead_df")
-        self.dead = (
-            _np.sort(_np.concatenate(tombs)) if tombs
-            else _np.zeros(0, dtype=_np.int64)
-        )
+            self.gen_avgdl[int(d["gen"])] = float(d["avgdl_at_build"])
+        gens = Generations(spark, path, deltas)
+        self.dead = gens.dead_ids()
         # kernels read tombstones via a Spark broadcast (one torrent ship
         # per reader, not per-task closure pickling); size is bounded by
         # the compaction policy (operators/delta.py should_compact)
         self._dead_bc = spark.sparkContext.broadcast(self.dead)
-        self.dead_df = dead_df
-        self.postings, self.docmap = postings, docmap
+        self.dead_df = gens.dead_df
+        self.postings = gens.postings
+        self.docmap = gens.docmap.select("doc_idx", "doc_id")
         if cache:
             self.postings = self.postings.persist()
             self.docmap = self.docmap.persist()
@@ -832,11 +907,8 @@ class IndexReader:
         n_shards, df, _gen only — the posting blobs are never read)."""
         n_buckets = self.meta["n_buckets"]
         buckets = sorted({bucket_of(t, n_buckets) for t in terms})
-        src = self.postings
-        if "n_shards" not in src.columns:  # pre-n_shards index layout
-            src = src.withColumn("n_shards", F.lit(1))
         return (
-            src.filter(F.col("bucket").isin(buckets))
+            self.postings.filter(F.col("bucket").isin(buckets))
             .filter(F.col("term").isin(terms))
             .groupBy("term", "_gen")
             .agg(F.max("n_shards").alias("m"), F.first("df").alias("df"))
@@ -844,16 +916,31 @@ class IndexReader:
             .agg(F.max("m").alias("m"), F.sum("df").alias("df"))
         )
 
-    @staticmethod
-    def _group_cols(hits: DataFrame) -> DataFrame:
-        """Fan each encoded row out to the doc-space group(s) it covers.
+    def _scoring_rows(self, qterms: DataFrame,
+                      buckets: list[int]) -> DataFrame:
+        """The grouped kernels' input: the query terms' bucket-pruned
+        encoded rows with their cumulative dead count `_dead`, fanned out
+        to the doc-space group(s) each covers.
 
         Group of a doc = doc_idx % g_total; a term with n_shards = 2^j
         holds a doc in shard doc_idx % 2^j. Because power-of-two residues
         nest, shard s covers exactly the groups {g : g ≡ s (mod
         min(n, G))}: one group when n >= G, G/n replicated groups when
         n < G. Every doc's postings for EVERY query term land in its one
-        home group, so per-group scoring is exact."""
+        home group, so per-group scoring is exact.
+
+        The rows are then hash-partitioned on (query_id, grp) into
+        defaultParallelism partitions, the exchange the grouped scoring
+        stage reuses: AQE never coalesces a numbered repartition, so the
+        (query, group) kernels spread over every slot instead of landing
+        in one task when the shuffled rows are small."""
+        hits = self.postings.filter(F.col("bucket").isin(buckets)).join(
+            F.broadcast(qterms), "term")
+        if self.dead_df is not None:
+            hits = hits.join(F.broadcast(
+                self.dead_df.withColumnRenamed("dead", "_dead")), "term", "left")
+        else:
+            hits = hits.withColumn("_dead", F.lit(0))
         n, G = F.col("n_shards"), F.col("g_total")
         reps = F.greatest(F.lit(1), (G / n).cast("int"))
         return (
@@ -864,7 +951,24 @@ class IndexReader:
                 .otherwise(F.col("shard") + F.col("_t") * n)
                 .cast("int"),
             )
+            .repartition(self.spark.sparkContext.defaultParallelism,
+                         "query_id", "grp")
         )
+
+    def _merge_partials(self, partials: DataFrame) -> DataFrame:
+        """(query_id, rank, doc_id, score) from the per-(query, group)
+        partial top-k rows: a window merge over <= G*k rows per query
+        (ties score DESC, doc ASC, as in the kernels), then a broadcast
+        join back to the docmap."""
+        w = Window.partitionBy("query_id").orderBy(
+            F.desc("score"), F.asc("doc_idx"))
+        ranked = (
+            partials.withColumn("rank", F.row_number().over(w).cast("int"))
+            .filter(F.col("rank") <= F.col("k"))
+            .select("query_id", "rank", "doc_idx", "score")
+        )
+        return (self.docmap.join(F.broadcast(ranked), "doc_idx")
+                .select("query_id", "rank", "doc_id", "score"))
 
     def _topk_partials(self, qterms: DataFrame, buckets: list[int],
                        kernel: str, mode: str = "or",
@@ -876,18 +980,7 @@ class IndexReader:
         meta = self.meta
         n_docs, avgdl = meta["n_docs"], meta["avgdl"]
         k1, b = meta["k1"], meta["b"]
-        src = self.postings
-        if "n_shards" not in src.columns:
-            src = src.withColumn("n_shards", F.lit(1))
-        hits = src.filter(F.col("bucket").isin(buckets)).join(
-            F.broadcast(qterms), "term"
-        )
-        if self.dead_df is not None:
-            hits = hits.join(F.broadcast(
-                self.dead_df.withColumnRenamed("dead", "_dead")), "term", "left")
-        else:
-            hits = hits.withColumn("_dead", F.lit(0))
-        hits = self._group_cols(hits)
+        hits = self._scoring_rows(qterms, buckets)
 
         kern = {"auto": topk_auto, "exact": topk_exact, "wand": topk_wand}[kernel]
         dead_bc = self._dead_bc
@@ -1013,18 +1106,7 @@ class IndexReader:
         )
         partials = self._topk_partials(qterms, sorted(buckets), kernel,
                                        mode=mode, seed_theta=seed_theta)
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_idx")
-        )
-        ranked = (
-            partials.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "doc_idx", "score")
-        )
-        return (
-            self.docmap.join(F.broadcast(ranked), "doc_idx")
-            .select("query_id", "rank", "doc_id", "score")
-        )
+        return self._merge_partials(partials)
 
 
     def topk_local(self, queries: list[dict], kernel: str = "auto") -> list[tuple]:
@@ -1228,18 +1310,7 @@ class IndexReader:
             "query_id string, k int, term string, g_total int, "
             "df_total long, phrase string",
         )
-        src = self.postings
-        if "n_shards" not in src.columns:
-            src = src.withColumn("n_shards", F.lit(1))
-        hits = src.filter(F.col("bucket").isin(sorted(buckets))).join(
-            F.broadcast(qterms), "term"
-        )
-        if self.dead_df is not None:
-            hits = hits.join(F.broadcast(
-                self.dead_df.withColumnRenamed("dead", "_dead")), "term", "left")
-        else:
-            hits = hits.withColumn("_dead", F.lit(0))
-        hits = self._group_cols(hits)
+        hits = self._scoring_rows(qterms, sorted(buckets))
         dead_bc = self._dead_bc
 
         def phrase_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1335,18 +1406,7 @@ class IndexReader:
             phrase_group,
             schema="query_id string, k int, doc_idx long, score double",
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_idx")
-        )
-        ranked = (
-            partials.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "doc_idx", "score")
-        )
-        return (
-            self.docmap.join(F.broadcast(ranked), "doc_idx")
-            .select("query_id", "rank", "doc_id", "score")
-        )
+        return self._merge_partials(partials)
 
     def phrase_prefix_topk(self, phrases: list[dict],
                            max_expansions: int = 50,

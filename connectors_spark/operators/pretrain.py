@@ -368,7 +368,10 @@ def learn_bpe_merges(df: DataFrame, n_merges: int = 10,
     every round's shuffle from |lexicon| to n while `bpe_encode_udf`
     still encodes the untouched corpus with the learned merges.
     tests/test_pretrain.py pins head-learned merges == full-corpus
-    merges on the gate corpus at sufficient n."""
+    merges on the gate corpus at sufficient n.
+
+    Executor loss needs a job-level retry: the frequency-head word table is
+    `localCheckpoint`ed, kept only in executor storage with no lineage."""
     syms = _word_symbols(df, text_col)
     if sample_top_n_words is not None:
         # frequency head, deterministically ordered + localCheckpointed

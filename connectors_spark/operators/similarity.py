@@ -762,7 +762,10 @@ def nndescent_knn_graph(vectors: DataFrame, k: int = 10, iters: int = 2,
     consumer join); the caller owns its release via ``.unpersist()``.
     All intermediates (normed corpus, per-iteration graphs) are
     unpersisted before return — nothing else stays pinned in executor
-    storage across calls."""
+    storage across calls.
+
+    Executor loss needs a job-level retry: the per-iteration graphs are
+    `localCheckpoint`ed, kept only in executor storage with no lineage."""
     cents = None
     if centroid_mod is None:
         cents = init_centroids_fixed(
@@ -822,7 +825,10 @@ def graph_beam_topk(vectors: DataFrame, queries: DataFrame,
     set is scored exactly once against the query and top-k kept.
     Fixed-hop expansion keeps the whole search a static join DAG (no
     data-dependent iteration), so it is SQL-twinnable and its cost is
-    bounded by O(beam·(2k)^hops) candidates per query."""
+    bounded by O(beam·(2k)^hops) candidates per query.
+
+    Executor loss needs a job-level retry: the frontier and candidate sets are
+    `localCheckpoint`ed, kept only in executor storage with no lineage."""
     if centroid_mod is not None:
         cents = init_centroids(vectors, centroid_mod, vec_col, id_col)
     else:

@@ -26,7 +26,7 @@ import time
 
 
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from connectors_spark import commitfs
 from pyspark.sql import functions as F
@@ -108,13 +108,14 @@ def resumable_write_encoded_index(
                 cursor="docmap")
     docmap = spark.read.parquet(f"{path}/docmap")
 
+    pos_cols = ["positions"] if "positions" in index.postings.columns else []
     if "postings_raw" not in done:
         t0 = time.time()
         raw = (
-            index.postings.select("term", "doc_id", "tf")
+            index.postings.select("term", "doc_id", "tf", *pos_cols)
             .join(docmap.select("doc_id", "doc_idx", "dl"), "doc_id")
             .join(index.lexicon, "term")
-            .select("term", "doc_id", "doc_idx", "tf", "dl", "df")
+            .select("term", "doc_id", "doc_idx", "tf", "dl", "df", *pos_cols)
             .withColumn("bucket", bucket_col("term", n_buckets))
             .withColumn("grp", (F.col("bucket") % n_groups).cast("int"))
         )
@@ -131,20 +132,33 @@ def resumable_write_encoded_index(
             continue
         t0 = time.time()
         grp = raw.filter(F.col("grp") == g).select(
-            "term", "doc_idx", "tf", "dl", "df", "bucket", *shard_cols(shard_cap)
+            "term", "doc_idx", "tf", "dl", "df", *pos_cols, "bucket",
+            *shard_cols(shard_cap)
         )
+        # row count and whether the rows carry positions ride the write
+        # job (a with_positions=False build has NULL positions), as in
+        # write_encoded_index
+        obs = Observation(f"encode_{g}")
         encoded = encode_rows(grp, n_parts, ["term", "shard"], avgdl, k1, b)
         out_dir = f"{path}/postings/grp={g}"
-        encoded.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
-        n_rows = spark.read.parquet(out_dir).count()
+        encoded.observe(
+            obs, F.count(F.lit(1)).alias("n"),
+            F.count("positions").alias("p"),
+        ).write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
         n_bytes = sum(
             os.path.getsize(os.path.join(dp, f))
             for dp, _, fs in os.walk(out_dir) for f in fs
         )
-        _finish(unit, t0, rows=n_rows, bytes=n_bytes, cursor=str(g))
+        _finish(unit, t0, rows=int(obs.get["n"]), bytes=n_bytes,
+                positions=int(obs.get["p"]) > 0, cursor=str(g))
 
+    # every encode unit's record holds its positions flag, so a resumed
+    # build that skipped some groups still sees all of them
+    positions = any(r.get("positions", False) for r in manifest.records()
+                    if r["unit"].startswith("encode:"))
     meta = {"n_docs": n_docs, "avgdl": avgdl, "k1": k1, "b": b,
-            "n_buckets": n_buckets, "shard_cap": shard_cap, "n_groups": n_groups}
+            "n_buckets": n_buckets, "shard_cap": shard_cap, "n_groups": n_groups,
+            "positions": positions}
     commitfs.put_json_atomic(os.path.join(path, "meta.json"), meta)
     manifest.mark("meta", DONE, cursor="meta")
     return manifest

@@ -9,9 +9,12 @@ es/sink.py:678-679).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 def get_spark(
@@ -62,9 +65,15 @@ def _maybe_warmup(spark: SparkSession, master: str) -> None:
     every real query still computes from its own inputs.
 
     Gating: `SPARK_GRAFT_WARMUP=1` forces it, `=0` disables, default
-    `auto` warms only sessions with >= 16 local cores or a cluster
-    master — small local[N] sessions (unit tests, one-off drives) skip
-    it because the ~15s warmup would dominate their short lifetimes.
+    `auto` warms only `local[N]` sessions with N >= 16 (or `local[*]` on
+    >= 16 cores). Small local[N] sessions (unit tests, one-off drives)
+    skip it because the ~15s warmup would dominate their short lifetimes;
+    cluster masters skip it because the warmup writes into a driver-local
+    temp dir that executors on other hosts cannot see — set
+    `SPARK_GRAFT_WARMUP=1` there once that dir is shared.
+
+    Best-effort: a failed warmup never blocks the session; it is logged
+    as a warning naming the exception.
     """
     global _WARMED
     if _WARMED:
@@ -75,11 +84,10 @@ def _maybe_warmup(spark: SparkSession, master: str) -> None:
     if mode != "1":
         import re
         m = re.match(r"local\[(\d+|\*)\]", master or "")
-        if m:
-            n = os.cpu_count() if m.group(1) == "*" else int(m.group(1))
-            if n < 16:
-                return
-        elif (master or "").startswith("local"):
+        if not m:
+            return
+        n = os.cpu_count() if m.group(1) == "*" else int(m.group(1))
+        if n < 16:
             return
     _WARMED = True
     import shutil
@@ -94,8 +102,8 @@ def _maybe_warmup(spark: SparkSession, master: str) -> None:
         build_and_write_index(
             synth_transcripts(spark, 50, seed=7), d, n_buckets=8
         )
-    except Exception:
-        pass  # warmup is best-effort; never block a real session
+    except Exception as e:  # best-effort: never block a real session
+        _log.warning("engine warmup failed: %s: %s", type(e).__name__, e)
     finally:
         spark.sparkContext.setJobDescription(None)
         shutil.rmtree(d, ignore_errors=True)

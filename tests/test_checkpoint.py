@@ -68,3 +68,31 @@ def test_kill_and_resume_identical(spark, tmp_path):
     n_manifest = len(BuildManifest(path).records())
     resumable_write_encoded_index(idx, path, n_buckets=8, n_groups=4, shard_cap=500)
     assert len(BuildManifest(path).records()) == n_manifest
+
+
+def test_resumable_positional_build_phrase(spark, tmp_path):
+    """A positional resumable build records positions: true from its
+    encode writes and answers exact-phrase queries oracle-identically
+    (the phrase check of test_delta.py::test_incremental_positional_phrase).
+    Tier-1 cost: one 60-conversation build plus one phrase query, ~15 s."""
+    from connectors_spark.operators.index import IndexReader, read_meta
+
+    path = str(tmp_path / "pidx")
+    t = synth_transcripts(spark, 60, seed=42).cache()
+    resumable_write_encoded_index(
+        build_index_transcripts(t, with_positions=True), path,
+        n_buckets=8, n_groups=4, shard_cap=300)
+    assert read_meta(path)["positions"] is True
+    assert any(r.get("positions") for r in BuildManifest(path).records())
+
+    rows = with_doc_id(t).select("doc_id", "text").collect()
+    oracle = OracleIndex([(r.doc_id, r.text) for r in rows])
+    phrase = " ".join(rows[0].text.split()[-2:])
+    exp = oracle.phrase_query(phrase, 10)
+    assert exp
+    got = sorted(IndexReader(spark, path, cache=False).phrase_topk(
+        [{"query_id": "p", "query_text": phrase, "k": 10}]).collect(),
+        key=lambda r: r.rank)
+    assert [g.doc_id for g in got] == [d for d, _ in exp]
+    for g, (_, s) in zip(got, exp):
+        assert g.score == pytest.approx(s, rel=1e-9)

@@ -102,6 +102,42 @@ def test_zero_token_docs_build_and_delta(spark, tmp_path):
     _check(spark, path, _oracle(spark, ONLY_EMPTY))
 
 
+def test_compaction_of_degenerate_generations(spark, tmp_path):
+    """compact_index on (1) an index whose last generation changed only
+    zero-token docs and (2) an index whose every doc was deleted: both
+    give a readable single-generation index with the oracle's n_docs and
+    top-k — empty for (2), whose postings dir holds only a schema.
+    Tier-1 cost: one tiny build, two generations, two compactions, ~25 s."""
+    import os
+
+    from connectors_spark.operators.delta import compact_index
+
+    path = str(tmp_path / "idx")
+    build_and_write_index(spark.createDataFrame(BASE, SCHEMA), path,
+                          n_buckets=4)
+    zero_adds = BASE + [("c4", 0, T0, ""), ("c4", 1, T0, "!!")]
+    rec = incremental_update(spark, path,
+                             spark.createDataFrame(zero_adds, SCHEMA))
+    assert rec["created"] == 2 and rec["n_changed"] == 2
+    out = str(tmp_path / "compacted")
+    compact_index(spark, path, out)
+    assert read_meta(out)["deltas"] == []
+    _check(spark, out, _oracle(spark, zero_adds))
+
+    rec = incremental_update(spark, out, spark.createDataFrame([], SCHEMA))
+    assert rec["deleted"] == len(zero_adds) and rec["n_docs_live"] == 0
+    empty = str(tmp_path / "empty")
+    compact_index(spark, out, empty)
+    meta = read_meta(empty)
+    assert (meta["n_docs"], meta["avgdl"], meta["deltas"]) == (0, 0.0, [])
+    assert not os.path.exists(os.path.join(empty, "postings_manifest.json"))
+    post = spark.read.parquet(f"{empty}/postings")
+    assert post.count() == 0 and "doc_gaps" in post.columns
+    reader = IndexReader(spark, empty, cache=False)
+    for kernel in ("exact", "wand"):
+        assert reader.topk(QUERIES, kernel=kernel).collect() == []
+
+
 # ---------------------------------------------------------------------------
 # Every (query_id, rank, doc_id, score) DataFrame scorer on degenerate input
 

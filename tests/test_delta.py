@@ -274,8 +274,8 @@ def test_upsert_docs_never_deletes_absent_docs(spark, tmp_path):
                          "k": 5}], kernel="exact").collect()
     assert len(hits) > 0
     meta = read_meta(path)
-    from connectors_spark.operators.delta import _live_docmap
-    n_live = _live_docmap(spark, path, meta).count()
+    from connectors_spark.operators.index import Generations
+    n_live = Generations(spark, path, meta["deltas"]).live_docmap().count()
     assert n_live == s0.count()  # upsert replaced, never deleted
     # replaying the identical batch is a no-op (idempotent foreachBatch)
     assert upsert_docs(spark, path, batch) is None
@@ -439,3 +439,35 @@ def test_fused_delta_generation_layout_and_content(spark, tmp_path):
     assert meta["avgdl"] == pytest.approx(oracle.avgdl, rel=1e-12)
     for kernel in ("exact", "wand"):
         _check_rank_identity(spark, path, oracle, kernel)
+
+
+def _jobs_in(spark, fn) -> int:
+    """Spark jobs `fn` submits, counted by a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# compact_index on the `updated` fixture submitted 13 jobs when this pin
+# was set (tombstone read, docmap write, remap + encode stages of the
+# direct write); the rebuild it replaced submitted 27-28
+COMPACT_MAX_JOBS = 13
+
+
+def test_sync_job_counts(spark, updated, tmp_path):
+    """Opening a reader reads every generation with pinned schemas and
+    all tombstones in one read: base + 1 delta costs exactly one Spark
+    job. Compaction stays a remap. Tier-1 cost: one compaction, ~6 s."""
+    path = updated[0]
+    assert _jobs_in(spark, lambda: IndexReader(spark, path, cache=False)) == 1
+    out = str(tmp_path / "compacted")
+    assert _jobs_in(spark, lambda: compact_index(spark, path, out)) \
+        <= COMPACT_MAX_JOBS

@@ -713,3 +713,33 @@ def test_lsh_recall_curve_no_cartesian(spark):
         "doc_id long, text string")
     plan = _plan(lsh_recall_curve(docs))
     assert "CartesianProduct" not in plan, plan
+
+
+@pytest.mark.parametrize("method", ["topk", "phrase_topk"])
+def test_reader_scoring_stage_uses_every_slot(spark, tmp_path, method):
+    """The (query, group) kernels of IndexReader.topk / phrase_topk run
+    after ONE numbered hashpartitioning(query_id, grp, defaultParallelism)
+    exchange, which the grouped stage reuses: AQE never coalesces a
+    REPARTITION_BY_NUM shuffle, so a small scoring shuffle is not folded
+    into one task. Tier-1 cost: one 30-conversation build, ~5 s."""
+    import re
+
+    from connectors_spark.operators.build import build_index_transcripts
+    from connectors_spark.operators.index import IndexReader, write_encoded_index
+    from connectors_spark.synth import synth_transcripts
+
+    path = str(tmp_path / "idx")
+    write_encoded_index(
+        build_index_transcripts(synth_transcripts(spark, 30, seed=5),
+                                with_positions=True),
+        path, n_buckets=16, shard_cap=1000)
+    reader = IndexReader(spark, path, cache=False)
+    res = getattr(reader, method)(
+        [{"query_id": "q", "query_text": "t00001 t00002", "k": 5}])
+    n = spark.sparkContext.defaultParallelism
+    keyed = [ln for ln in _plan(res).splitlines()
+             if "Exchange hashpartitioning(" in ln
+             and re.search(r"\bquery_id#\d+", ln) and re.search(r"\bgrp#\d+", ln)]
+    assert len(keyed) == 1, keyed
+    assert re.search(rf"hashpartitioning\(query_id#\d+, grp#\d+, {n}\), "
+                     r"REPARTITION_BY_NUM", keyed[0]), keyed[0]
