@@ -6,8 +6,11 @@ get_docs_incrementally; skip/delete diff app/connectors_service/
 connectors/es/sink.py:623-719). For an inverted index the same semantics
 become:
 
-1. diff the new snapshot against the index's docmap manifest (J1-J3);
-2. tombstone doc_idx of deleted + updated docs;
+1. diff the new snapshot against the live docmap (J1-J3) into a sync
+   ledger that carries each live doc's doc_idx and dl. The ledger is
+   persisted once; one aggregation over it gives every job counter, the
+   survivor count and Σdl, and the max doc_idx;
+2. tombstone doc_idx of deleted + updated docs — a filter of the ledger;
 3. encode postings for created + updated docs as a new generation with
    fresh doc_idx (append-only — old generations are immutable). The
    generation's rows come from the fused build's write core
@@ -69,7 +72,19 @@ from connectors_spark.operators.index import (
     write_empty_postings,
     write_index_postings,
 )
-from connectors_spark.operators.sync import classify_sync_ops
+from connectors_spark.operators.sync import (
+    OP_CREATE,
+    OP_DELETE,
+    OP_SKIP,
+    OP_UPDATE,
+    classify_sync_ops,
+)
+
+
+# the live docmap columns a sync ledger carries for the generation's stats
+_LEDGER_CARRY = ("doc_idx", "dl")
+# ops whose live doc a generation tombstones
+_TOMBSTONED = (OP_DELETE, OP_UPDATE)
 
 
 def _write_meta(path: str, meta: dict, fs=None) -> None:
@@ -83,27 +98,19 @@ def incremental_update(spark: SparkSession, path: str,
     """Bring the index at `path` up to date with `new_snapshot`
     (transcripts shape). Returns the delta record, or None if unchanged.
     `path` may be a store root (CURRENT pointer) — deltas then land in
-    the live generation."""
+    the live generation.
+
+    The generation's sync ledger is the classify join of the snapshot
+    against the live docmap, carrying each live doc's doc_idx and dl
+    (`_classified_ledger`); `_apply_delta` persists it once and takes
+    every counter from one aggregation over it."""
     path = resolve_current(path)
     meta = read_meta(path)
     gens = Generations(spark, path, meta.get("deltas", []))
-    live = gens.live_docmap().persist()
     new_docs = with_doc_id(new_snapshot).persist()
-
-    ops = classify_sync_ops(
-        new_docs.select("doc_id", "ts"), live.select("doc_id", "ts")
-    ).persist()
-    # one pass gives every job counter (created/updated/deleted/skipped)
-    counts = {r["op"]: int(r["count"])
-              for r in ops.groupBy("op").count().collect()}
-    rec = None
-    if any(counts.get(op) for op in ("create", "update", "delete")):
-        dead_ids = ops.filter(F.col("op").isin("delete", "update")).select("doc_id")
-        changed_ids = ops.filter(F.col("op").isin("create", "update")).select("doc_id")
-        changed = new_docs.join(changed_ids, "doc_id", "left_semi")
-        rec = _apply_delta(spark, path, meta, gens, live, dead_ids, changed,
-                           counts)
-    ops.unpersist(); live.unpersist(); new_docs.unpersist()
+    rec = _apply_delta(spark, path, meta, gens,
+                       _classified_ledger(gens, new_docs), new_docs)
+    new_docs.unpersist()
     return rec
 
 
@@ -120,17 +127,8 @@ def delete_by_query(spark: SparkSession, path: str,
     path = resolve_current(path)
     meta = read_meta(path)
     gens = Generations(spark, path, meta.get("deltas", []))
-    live = gens.live_docmap().persist()
-    dead_ids = (live.join(match_ids.select("doc_id").distinct(),
-                          "doc_id", "left_semi").select("doc_id"))
-    n_dead = dead_ids.count()
-    if n_dead == 0:
-        live.unpersist()
-        return None
-    rec = _apply_delta(spark, path, meta, gens, live, dead_ids, None,
-                       {"delete": int(n_dead)})
-    live.unpersist()
-    return rec
+    return _apply_delta(spark, path, meta, gens,
+                        _tagged_ledger(gens, match_ids, OP_DELETE), None)
 
 
 def update_by_query(spark: SparkSession, path: str,
@@ -144,19 +142,48 @@ def update_by_query(spark: SparkSession, path: str,
     path = resolve_current(path)
     meta = read_meta(path)
     gens = Generations(spark, path, meta.get("deltas", []))
-    live = gens.live_docmap().persist()
-    changed = updated_docs.join(
-        live.select("doc_id"), "doc_id", "left_semi"
-    ).persist()
-    n_changed = changed.count()
-    if n_changed == 0:
-        live.unpersist(); changed.unpersist()
-        return None
-    dead_ids = changed.select("doc_id")
-    rec = _apply_delta(spark, path, meta, gens, live, dead_ids, changed,
-                       {"update": int(n_changed)})
-    live.unpersist(); changed.unpersist()
-    return rec
+    return _apply_delta(spark, path, meta, gens,
+                        _tagged_ledger(gens, updated_docs, OP_UPDATE),
+                        updated_docs)
+
+
+def _classified_ledger(gens: Generations, docs: DataFrame) -> DataFrame:
+    """The sync ledger (doc_id, op, ts, doc_idx, dl) of a snapshot or
+    batch `docs`: classify_sync_ops against the live docmap, carrying
+    each live doc's doc_idx and dl (null for creates)."""
+    return classify_sync_ops(
+        docs.select("doc_id", "ts"),
+        gens.live_docmap().select("doc_id", "ts", *_LEDGER_CARRY),
+        carry=_LEDGER_CARRY)
+
+
+def _tagged_ledger(gens: Generations, ids: DataFrame, op: str) -> DataFrame:
+    """The sync ledger of a generation that only touches live docs: the
+    live docmap left-joined with the distinct doc_id of `ids` tagged
+    `op`. Untouched live docs carry a null op — survivors, counted under
+    no op."""
+    tagged = ids.select("doc_id").distinct().withColumn("op", F.lit(op))
+    return gens.live_docmap().select("doc_id", *_LEDGER_CARRY).join(
+        tagged, "doc_id", "left")
+
+
+def _ledger_stats(ledger: DataFrame) -> dict[str, int]:
+    """Every counter of a generation from its sync ledger (doc_id, op,
+    doc_idx, dl) in one aggregation: docs per op, the survivor count and
+    Σdl (live docs that are not tombstoned), and the max doc_idx over
+    every live doc. Creates carry a null doc_idx, so they count under
+    their op only."""
+    op = F.col("op")
+    surv = F.col("doc_idx").isNotNull() & ~F.coalesce(
+        op.isin(*_TOMBSTONED), F.lit(False))
+    row = ledger.agg(
+        *[F.count(F.when(op == o, 1)).alias(o)
+          for o in (OP_CREATE, OP_UPDATE, OP_DELETE, OP_SKIP)],
+        F.count(F.when(surv, 1)).alias("n_live"),
+        F.sum(F.when(surv, F.col("dl"))).alias("sum_dl"),
+        F.max("doc_idx").alias("max_idx"),
+    ).first()
+    return {k: int(v or 0) for k, v in row.asDict().items()}
 
 
 def _dead_counts(batches, tombs: np.ndarray):
@@ -182,49 +209,62 @@ def _dead_counts(batches, tombs: np.ndarray):
 
 
 def _apply_delta(spark: SparkSession, path: str, meta: dict,
-                 gens: Generations, live: DataFrame, dead_ids: DataFrame,
-                 changed: DataFrame | None, counts: dict[str, int]) -> dict:
+                 gens: Generations, ledger: DataFrame,
+                 docs: DataFrame | None) -> dict | None:
     """Write one delta generation over the open generation set `gens`
-    (`live` = its live docmap): tombstones for `dead_ids`, encoded
-    postings + docmap for `changed` (a delete-only generation, flagged
+    from its sync ledger (doc_id, op, doc_idx, dl), or return None when
+    the ledger creates, updates and deletes nothing. Shared core of
+    incremental_update / delete_by_query / update_by_query / upsert_docs.
+
+    The ledger is persisted once. One aggregation over it
+    (`_ledger_stats`) gives every job counter and the survivor stats, and
+    the tombstones are its delete/update rows. The generation holds
+    those tombstones, encoded postings + docmap for the rows of `docs`
+    the ledger creates or updates (a delete-only generation, flagged
     `delete_only` so readers skip its postings/docmap reads entirely,
-    when it holds no create/update), cumulative per-term dead counts, and
-    the meta commit. Shared core of incremental_update / delete_by_query /
-    update_by_query / upsert_docs. `counts` maps op (create, update,
-    delete, skip) -> docs, as the caller already counted them: the
-    update and delete counts are the tombstone count, create + update
-    the new docs."""
+    when there are none), cumulative per-term dead counts, and the meta
+    commit."""
+    ledger = ledger.persist()
+    try:
+        stats = _ledger_stats(ledger)
+        if not stats[OP_CREATE] + stats[OP_UPDATE] + stats[OP_DELETE]:
+            return None
+        return _write_generation(spark, path, meta, gens, ledger, docs,
+                                 stats)
+    finally:
+        ledger.unpersist()
+
+
+def _write_generation(spark: SparkSession, path: str, meta: dict,
+                      gens: Generations, ledger: DataFrame,
+                      docs: DataFrame | None, stats: dict[str, int]) -> dict:
+    """The write half of `_apply_delta`, over the persisted ledger and
+    its `_ledger_stats`. Returns the delta record."""
+    n_created, n_updated, n_deleted, n_skipped = (
+        stats[op] for op in (OP_CREATE, OP_UPDATE, OP_DELETE, OP_SKIP))
     gen = (max((int(d["gen"]) for d in meta.get("deltas", [])), default=0) + 1)
     gdir = f"{path}/delta/{gen}"
-    n_created, n_updated, n_deleted, n_skipped = (
-        int(counts.get(op, 0)) for op in ("create", "update", "delete", "skip"))
 
-    tomb = live.join(dead_ids, "doc_id", "left_semi").select("doc_idx")
-    tomb.write.mode("overwrite").parquet(f"{gdir}/tombstones")
+    # the tombstones are a filter of the ledger
+    (ledger.filter(F.col("op").isin(*_TOMBSTONED)).select("doc_idx")
+     .write.mode("overwrite").parquet(f"{gdir}/tombstones"))
+    # every tombstone, this generation's included, in one read
+    all_dead = gens.dead_ids(gens.gens + [gen])
 
-    # one pass over the live docmap: survivor count and Σdl, and the max
-    # doc_idx. New doc_idx must start past EVERY idx ever assigned —
-    # tombstoned ones included — so the max also covers earlier
-    # generations' tombstones. Max over the live docmap alone can recycle
-    # a tombstoned idx (deletes shrink the live max), and the readers'
-    # cumulative dead mask would then silently hide the new doc: a
-    # delete-heavy generation followed by any create/update made the
-    # recycled docs unsearchable (caught by the round-4 verify drive).
-    surv = F.col("_dead").isNull()
-    stats = live.join(dead_ids.select("doc_id", F.lit(1).alias("_dead")),
-                      "doc_id", "left").agg(
-        F.count(F.when(surv, 1)).alias("n"),
-        F.sum(F.when(surv, F.col("dl"))).alias("s"),
-        F.max("doc_idx").alias("m"),
-    ).first()
-    n_live, sum_dl = int(stats["n"]), int(stats["s"] or 0)
-    prev_dead = gens.dead_ids()
-    delete_only = changed is None or n_created + n_updated == 0
+    # New doc_idx must start past EVERY idx ever assigned — tombstoned
+    # ones included — so the start also covers earlier generations'
+    # tombstones. Max over the live docmap alone can recycle a tombstoned
+    # idx (deletes shrink the live max), and the readers' cumulative dead
+    # mask would then silently hide the new doc: a delete-heavy
+    # generation followed by any create/update made the recycled docs
+    # unsearchable (caught by the round-4 verify drive).
+    n_live, sum_dl = stats["n_live"], stats["sum_dl"]
+    delete_only = docs is None or n_created + n_updated == 0
     if delete_only:
         avgdl_live = (sum_dl / n_live) if n_live else 0.0
     else:
-        max_idx = max(int(stats["m"] or 0),
-                      int(prev_dead[-1]) if len(prev_dead) else 0)
+        max_idx = max(stats["max_idx"],
+                      int(all_dead[-1]) if len(all_dead) else 0)
         if meta.get("positions", False):
             # a delta generation must match the base index's positional
             # setting, else phrase_topk breaks on any phrase term with
@@ -232,6 +272,9 @@ def _apply_delta(spark: SparkSession, path: str, meta: dict,
             write = _write_positional_delta
         else:
             write = _write_fused_delta
+        changed = docs.join(
+            ledger.filter(F.col("op").isin(OP_CREATE, OP_UPDATE))
+            .select("doc_id"), "doc_id", "left_semi")
         n_live, avgdl_live = write(spark, meta, changed, gdir,
                                    int(max_idx) + 1, n_live, sum_dl)
 
@@ -239,16 +282,20 @@ def _apply_delta(spark: SparkSession, path: str, meta: dict,
     # against the cumulative tombstone set (compaction amortizes this).
     # Tombstones ship to executors ONCE as a Spark broadcast (torrent),
     # never closure-pickled per task; their size is bounded by the
-    # compaction policy (should_compact/maybe_compact below).
-    tomb_bc = spark.sparkContext.broadcast(
-        np.union1d(prev_dead, gens.dead_ids([gen])))
+    # compaction policy (should_compact/maybe_compact below). The
+    # broadcast is destroyed after its one job: that also unlinks its
+    # pickled driver-side temp file.
+    tomb_bc = spark.sparkContext.broadcast(all_dead)
     dead_df = (
         gens.postings.select("term", "n_docs", "doc_gaps")
         .mapInArrow(lambda it: _dead_counts(it, tomb_bc.value),
                     schema=DEAD_DF_SCHEMA)
         .groupBy("term").agg(F.sum("dead").alias("dead"))
     )
-    dead_df.write.mode("overwrite").parquet(f"{gdir}/dead_df")
+    try:
+        dead_df.write.mode("overwrite").parquet(f"{gdir}/dead_df")
+    finally:
+        tomb_bc.destroy()
 
     # the reference's job counters ride along (svc/es/sink.py:338-361)
     rec = {"gen": gen, "avgdl_at_build": avgdl_live,
@@ -537,7 +584,6 @@ def compact_index(spark: SparkSession, path: str, out_path: str) -> None:
 
     meta = read_meta(path)
     gens = Generations(spark, path, meta.get("deltas", []))
-    dead_bc = spark.sparkContext.broadcast(gens.dead_ids())
     positional = bool(meta.get("positions"))
     pos_cols = ["positions"] if positional else []
 
@@ -553,6 +599,9 @@ def compact_index(spark: SparkSession, path: str, out_path: str) -> None:
         docmap.select("doc_id", "doc_idx", "dl"), "doc_id").drop("doc_id")
     if n_docs <= BROADCAST_DOCS_MAX:
         remap = F.broadcast(remap)
+    # destroyed after the write, its last job, which also unlinks its
+    # pickled driver-side temp file
+    dead_bc = spark.sparkContext.broadcast(gens.dead_ids())
 
     def decode_rows(batches):
         """Live (term, _old, tf[, positions]) postings: one batch decode
@@ -599,7 +648,10 @@ def compact_index(spark: SparkSession, path: str, out_path: str) -> None:
                 *shard_cols(meta["shard_cap"]))
         .withColumn("bucket", bucket_col("term", int(meta["n_buckets"])))
     )
-    write_index_postings(rows, out_path, avgdl, meta["k1"], meta["b"])
+    try:
+        write_index_postings(rows, out_path, avgdl, meta["k1"], meta["b"])
+    finally:
+        dead_bc.destroy()
     _write_meta(out_path, index_meta(
         n_docs, avgdl, meta["k1"], meta["b"], meta["n_buckets"],
         meta["shard_cap"], positional))
@@ -617,26 +669,13 @@ def upsert_docs(spark: SparkSession, path: str,
     path = resolve_current(path)
     meta = read_meta(path)
     gens = Generations(spark, path, meta.get("deltas", []))
-    live = gens.live_docmap().persist()
     new_docs = with_doc_id(batch).persist()
-    # restrict the live side to the batch's keys: docs outside the
-    # batch must never classify as deletes
-    live_sub = live.join(new_docs.select("doc_id"), "doc_id",
-                         "left_semi")
-    ops = classify_sync_ops(
-        new_docs.select("doc_id", "ts"), live_sub.select("doc_id", "ts")
-    ).persist()
-    counts = {r["op"]: int(r["count"])
-              for r in ops.groupBy("op").count().collect()}
-    rec = None
-    if counts.get("create") or counts.get("update"):
-        changed_ids = ops.filter(
-            F.col("op").isin("create", "update")).select("doc_id")
-        dead_ids = ops.filter(F.col("op") == "update").select("doc_id")
-        changed = new_docs.join(changed_ids, "doc_id", "left_semi")
-        rec = _apply_delta(spark, path, meta, gens, live, dead_ids, changed,
-                           counts)
-    ops.unpersist(); live.unpersist(); new_docs.unpersist()
+    # the incremental_update ledger with its deletes made untouched
+    # survivors: docs outside the batch are never deleted
+    ledger = _classified_ledger(gens, new_docs).withColumn(
+        "op", F.when(F.col("op") != OP_DELETE, F.col("op")))
+    rec = _apply_delta(spark, path, meta, gens, ledger, new_docs)
+    new_docs.unpersist()
     return rec
 
 

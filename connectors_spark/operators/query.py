@@ -39,11 +39,14 @@ from connectors_spark import BM25_B, BM25_K1, BROADCAST_DOCS_MAX
 from connectors_spark.functions.analysis import tokens_col
 from connectors_spark.operators.build import IndexFrames
 from connectors_spark.operators.score import idf_col, tf_norm_col
+from connectors_spark.schema import arrow_frame
 
 
 def queries_df(spark: SparkSession, queries: list[dict]) -> DataFrame:
-    """queries: [{query_id, query_text, k}] -> DataFrame."""
-    return spark.createDataFrame(
+    """queries: [{query_id, query_text, k}] -> DataFrame (an Arrow-built
+    local relation, `schema.arrow_frame`)."""
+    return arrow_frame(
+        spark,
         [(q["query_id"], q["query_text"], q.get("k", 10)) for q in queries],
         "query_id string, query_text string, k int",
     )
@@ -307,8 +310,8 @@ def bool_clauses_df(spark: SparkSession, queries: list[dict]) -> DataFrame:
     """(query_id, k, msm, term, role) from bool-query specs:
     [{query_id, k, must: "text", should: "...", must_not: "...",
       filter: "...", minimum_should_match: int}]."""
-    return spark.createDataFrame(
-        bool_clause_rows(queries),
+    return arrow_frame(
+        spark, bool_clause_rows(queries),
         "query_id string, k int, msm int, term string, role string",
     )
 

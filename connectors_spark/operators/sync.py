@@ -30,14 +30,18 @@ def classify_sync_ops(
     skip_unchanged: bool = True,
     id_col: str = "doc_id",
     ts_col: str = "ts",
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(doc_id, op, ts) — ts is the extracted ts (null for deletes)."""
+    """(doc_id, op, ts, *carry) — ts is the extracted ts (null for
+    deletes); `carry` names manifest columns passed through the join
+    (null for creates), so a caller can read the manifest side's
+    per-doc fields off the classified rows without a second join."""
     e = extracted.select(
         F.col(id_col).alias("doc_id"), F.col(ts_col).alias("_e_ts")
     )
     m = manifest.select(
         F.col(id_col).alias("doc_id"), F.col(ts_col).alias("_m_ts"),
-        F.lit(True).alias("_in_m"),
+        F.lit(True).alias("_in_m"), *carry,
     )
     j = e.withColumn("_in_e", F.lit(True)).join(m, "doc_id", "full_outer")
     unchanged = F.col("_e_ts").isNotNull() & (F.col("_e_ts") == F.col("_m_ts"))
@@ -47,7 +51,8 @@ def classify_sync_ops(
         .when(unchanged & F.lit(skip_unchanged), F.lit(OP_SKIP))
         .otherwise(F.lit(OP_UPDATE))
     )
-    return j.select("doc_id", op.alias("op"), F.col("_e_ts").alias("ts"))
+    return j.select("doc_id", op.alias("op"), F.col("_e_ts").alias("ts"),
+                    *carry)
 
 
 def ingestion_stats(ops: DataFrame, payload: DataFrame | None = None,

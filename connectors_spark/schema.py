@@ -13,6 +13,23 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
+
+def arrow_frame(spark, rows: list[tuple], ddl: str):
+    """A DataFrame of the driver-side `rows`, typed by the DDL schema
+    `ddl`, handed to the JVM as one Arrow table. A small table becomes a
+    local relation the JVM reads directly — no Python worker and no
+    pickled RDD, which `createDataFrame` of a list builds and every
+    broadcast or scan of the frame then runs."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T._parse_datatype_string(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema), schema)
+
 TRANSCRIPTS_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),

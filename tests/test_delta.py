@@ -37,25 +37,44 @@ def _snapshots(spark):
 
 
 @pytest.fixture(scope="module")
-def updated(spark, tmp_path_factory):
+def updated_run(spark, tmp_path_factory):
+    """(path, s1, oracle, jobs, temp_files): the module's updated index,
+    the Spark jobs its incremental_update submitted and how many files
+    that update left in the driver's temp dir."""
+    import os
+
     path = str(tmp_path_factory.mktemp("delta_idx"))
     s0, s1 = _snapshots(spark)
     write_encoded_index(
         build_index_transcripts(s0, with_positions=False), path,
         n_buckets=8, shard_cap=300,
     )
-    rec = incremental_update(spark, path, s1)
+    temp_dir = spark.sparkContext._temp_dir
+    before = len(os.listdir(temp_dir))
+    recs = []
+    jobs = _jobs_in(spark,
+                    lambda: recs.append(incremental_update(spark, path, s1)))
+    temp_files = len(os.listdir(temp_dir)) - before
+    rec = recs[0]
     assert rec is not None and rec["gen"] == 1 and rec["n_changed"] > 0
     rows = with_doc_id(s1).select("doc_id", "text").collect()
     oracle = OracleIndex([(r.doc_id, r.text) for r in rows])
-    return path, s1, oracle
+    return path, s1, oracle, jobs, temp_files
+
+
+@pytest.fixture(scope="module")
+def updated(updated_run):
+    return updated_run[:3]
+
+
+_RANK_QUERIES = synth_queries(30, seed=5) + [
+    {"query_id": "fresh", "query_text": "freshterm", "k": 10},
+    {"query_id": "hot", "query_text": "t00001 t00002", "k": 10},
+]
 
 
 def _check_rank_identity(spark, path, oracle, kernel):
-    queries = synth_queries(30, seed=5) + [
-        {"query_id": "fresh", "query_text": "freshterm", "k": 10},
-        {"query_id": "hot", "query_text": "t00001 t00002", "k": 10},
-    ]
+    queries = _RANK_QUERIES
     reader = IndexReader(spark, path, cache=False)
     got = sorted(reader.topk(queries, kernel=kernel).collect(),
                  key=lambda r: (r.query_id, r.rank))
@@ -158,6 +177,107 @@ def test_incremental_positional_phrase(spark, tmp_path):
     compact_index(spark, path, out)
     assert read_meta(out)["positions"] is True
     check(out)
+
+
+@pytest.fixture(scope="module")
+def live_df_index(spark, tmp_path_factory):
+    """A positional base + one delta where 'gonezz' loses every posting
+    (two of its docs deleted, the third rewritten without it), 'deltazz'
+    exists only in the delta, and 'nowherezz' is nowhere. Returns (path,
+    oracle on the new snapshot)."""
+    from datetime import datetime, timedelta
+
+    from connectors_spark.schema import TRANSCRIPTS_SCHEMA
+
+    t0 = datetime(2024, 1, 1)
+    base = synth_transcripts(spark, 20, seed=17)
+
+    def conv(conv_id, turns, ts):
+        return spark.createDataFrame(
+            [(conv_id, i, "user", text, None, ts) for i, text in turns],
+            TRANSCRIPTS_SCHEMA)
+
+    s0 = base.unionByName(conv("conv-gone", [
+        (0, "gonezz alphazz t00001"), (1, "gonezz alphazz"),
+        (2, "gonezz t00002")], t0))
+    s1 = (base.unionByName(conv("conv-gone", [(2, "rewritten t00002")],
+                                t0 + timedelta(hours=1)))
+          .unionByName(conv("conv-new", [(0, "deltazz betazz t00001"),
+                                         (1, "deltazz betazz")], t0)))
+    path = str(tmp_path_factory.mktemp("live_df_idx"))
+    write_encoded_index(build_index_transcripts(s0, with_positions=True),
+                        path, n_buckets=8, shard_cap=300)
+    rec = incremental_update(spark, path, s1)
+    assert (rec["created"], rec["updated"], rec["deleted"]) == (2, 1, 2)
+    rows = with_doc_id(s1).select("doc_id", "text").collect()
+    return path, OracleIndex([(r.doc_id, r.text) for r in rows])
+
+
+_LIVE_DF_QUERIES = [
+    {"query_id": "gone", "query_text": "gonezz", "k": 10},
+    {"query_id": "gone_or", "query_text": "gonezz t00001", "k": 10},
+    {"query_id": "delta", "query_text": "deltazz", "k": 10},
+    {"query_id": "delta_or", "query_text": "deltazz t00002", "k": 10},
+    {"query_id": "absent", "query_text": "nowherezz", "k": 10},
+    {"query_id": "absent_or", "query_text": "nowherezz t00001", "k": 10},
+]
+
+
+def _ranked(rows) -> list[tuple]:
+    return sorted((r[0], r[1], r[2], r[3]) for r in rows)
+
+
+def _assert_same_ranking(got: list[tuple], exp: list[tuple]) -> None:
+    assert [g[:3] for g in got] == [e[:3] for e in exp]
+    for g, e in zip(got, exp):
+        assert g[3] == pytest.approx(e[3], rel=1e-9)
+
+
+@pytest.mark.parametrize("kernel", ["exact", "wand"])
+def test_live_df_terms_match_oracle(spark, live_df_index, kernel):
+    """The reader scores with the live df of the one-job term pre-pass:
+    a fully tombstoned term drops out of OR queries and empties AND
+    queries, a delta-only term and an absent term score as in an oracle
+    built on the new snapshot, and topk_local equals topk."""
+    path, oracle = live_df_index
+    reader = IndexReader(spark, path, cache=False)
+    info = reader._term_info(["gonezz", "deltazz", "nowherezz"])
+    assert info["gonezz"][1] == 3 and info["gonezz"][2] == 0
+    assert info["deltazz"][1:] == (2, 2)
+    assert info["nowherezz"] == (0, 0, 0)
+
+    exp = _ranked(oracle.score_queryset(_LIVE_DF_QUERIES))
+    assert not [e for e in exp if e[0] in ("gone", "absent")]
+    got = _ranked(reader.topk(_LIVE_DF_QUERIES, kernel=kernel).collect())
+    _assert_same_ranking(got, exp)
+    _assert_same_ranking(
+        _ranked(reader.topk_local(_LIVE_DF_QUERIES, kernel=kernel)), got)
+
+    and_q = [{"query_id": "and", "query_text": "gonezz alphazz", "k": 10},
+             {"query_id": "and_delta", "query_text": "deltazz betazz",
+              "k": 10}]
+    got = _ranked(reader.topk(and_q, kernel=kernel, mode="and").collect())
+    exp = _ranked((q["query_id"], r, d, sc) for q in and_q for r, (d, sc)
+                  in enumerate(oracle.score_query(q["query_text"], 10,
+                                                  mode="and"), start=1))
+    assert exp and not [e for e in exp if e[0] == "and"]
+    _assert_same_ranking(got, exp)
+
+
+def test_live_df_phrases_match_oracle(spark, live_df_index):
+    """phrase_topk on the live df: a phrase over a fully tombstoned term
+    or an absent term returns nothing; a delta-only phrase scores as in
+    the oracle."""
+    path, oracle = live_df_index
+    reader = IndexReader(spark, path, cache=False)
+    phrases = {"gone": "gonezz alphazz", "delta": "deltazz betazz",
+               "absent": "nowherezz t00001"}
+    got = reader.phrase_topk([{"query_id": q, "query_text": t, "k": 10}
+                              for q, t in phrases.items()]).collect()
+    exp = [(q, r, d, sc) for q, t in phrases.items()
+           for r, (d, sc) in enumerate(oracle.phrase_query(t, 10), start=1)]
+    assert {e[0] for e in exp} == {"delta"}
+    _assert_same_ranking(_ranked(got), _ranked(exp))
 
 
 def test_auto_compaction_policy_roundtrip(spark, tmp_path):
@@ -460,14 +580,41 @@ def _jobs_in(spark, fn) -> int:
 # was set (tombstone read, docmap write, remap + encode stages of the
 # direct write); the rebuild it replaced submitted 27-28
 COMPACT_MAX_JOBS = 13
+# incremental_update on the `updated` fixture: 24 jobs with the sync
+# ledger (one persisted classify join; one aggregation for every counter;
+# tombstones a filter of it; one tombstone read); 29 with the separate
+# op-count collect, tombstone semi-join write, survivor-stats join and
+# two tombstone reads it replaced
+UPDATE_MAX_JOBS = 24
+# IndexReader.topk of the rank-identity batch on a fresh reader: 6 jobs
+# with the one-job term pre-pass and the Arrow-built qterms; 9 before
+TOPK_MAX_JOBS = 6
 
 
-def test_sync_job_counts(spark, updated, tmp_path):
+def test_sync_job_counts(spark, updated_run, tmp_path):
     """Opening a reader reads every generation with pinned schemas and
     all tombstones in one read: base + 1 delta costs exactly one Spark
-    job. Compaction stays a remap. Tier-1 cost: one compaction, ~6 s."""
-    path = updated[0]
+    job. The update's counters come from one ledger aggregation, the
+    term pre-pass is one exchange-free job, and compaction stays a remap.
+    The update and the compaction destroy their tombstone broadcasts,
+    so neither leaves a pickled tombstone set in the driver's temp dir.
+    Tier-1 cost: one compaction and one 32-query top-k, ~9 s; the
+    update's numbers are taken in the module fixture, at no extra cost."""
+    import os
+
+    path, _, _, update_jobs, update_temp_files = updated_run
+    assert update_jobs <= UPDATE_MAX_JOBS
+    assert update_temp_files <= 0
     assert _jobs_in(spark, lambda: IndexReader(spark, path, cache=False)) == 1
+    reader = IndexReader(spark, path, cache=False)
+    assert _jobs_in(spark, lambda: reader._term_info(
+        ["freshterm", "t00001", "t00002", "nowhere"])) == 1
+    reader = IndexReader(spark, path, cache=False)
+    assert _jobs_in(spark, lambda: reader.topk(_RANK_QUERIES).collect()) \
+        <= TOPK_MAX_JOBS
     out = str(tmp_path / "compacted")
+    temp_dir = spark.sparkContext._temp_dir
+    before = len(os.listdir(temp_dir))
     assert _jobs_in(spark, lambda: compact_index(spark, path, out)) \
         <= COMPACT_MAX_JOBS
+    assert len(os.listdir(temp_dir)) <= before

@@ -718,10 +718,14 @@ def test_lsh_recall_curve_no_cartesian(spark):
 @pytest.mark.parametrize("method", ["topk", "phrase_topk"])
 def test_reader_scoring_stage_uses_every_slot(spark, tmp_path, method):
     """The (query, group) kernels of IndexReader.topk / phrase_topk run
-    after ONE numbered hashpartitioning(query_id, grp, defaultParallelism)
-    exchange, which the grouped stage reuses: AQE never coalesces a
-    REPARTITION_BY_NUM shuffle, so a small scoring shuffle is not folded
-    into one task. Tier-1 cost: one 30-conversation build, ~5 s."""
+    after ONE numbered (query_id, grp) exchange into min(
+    defaultParallelism, Σ_q G_q) partitions, which the grouped stage
+    reuses: AQE never coalesces a REPARTITION_BY_NUM shuffle, so a small
+    scoring shuffle is not folded into one task, and a batch with fewer
+    (query, group) keys than slots runs no keyless tasks. A 1-query
+    batch gets its own group count G (one partition when G = 1); a batch
+    of defaultParallelism queries gets defaultParallelism. Tier-1 cost:
+    one 30-conversation build, ~5 s."""
     import re
 
     from connectors_spark.operators.build import build_index_transcripts
@@ -734,12 +738,24 @@ def test_reader_scoring_stage_uses_every_slot(spark, tmp_path, method):
                                 with_positions=True),
         path, n_buckets=16, shard_cap=1000)
     reader = IndexReader(spark, path, cache=False)
-    res = getattr(reader, method)(
-        [{"query_id": "q", "query_text": "t00001 t00002", "k": 5}])
-    n = spark.sparkContext.defaultParallelism
-    keyed = [ln for ln in _plan(res).splitlines()
-             if "Exchange hashpartitioning(" in ln
-             and re.search(r"\bquery_id#\d+", ln) and re.search(r"\bgrp#\d+", ln)]
-    assert len(keyed) == 1, keyed
-    assert re.search(rf"hashpartitioning\(query_id#\d+, grp#\d+, {n}\), "
-                     r"REPARTITION_BY_NUM", keyed[0]), keyed[0]
+    dp = spark.sparkContext.defaultParallelism
+    terms = ["t00001", "t00002"]
+    n_groups = max(1, max(v[0] for v in reader._term_info(terms).values()))
+    text = " ".join(terms)
+    for n, batch in ((min(dp, n_groups), 1), (dp, dp)):
+        res = getattr(reader, method)(
+            [{"query_id": f"q{i}", "query_text": text, "k": 5}
+             for i in range(batch)])
+        plan = _plan(res)
+        keyed = [ln for ln in plan.splitlines()
+                 if "Exchange hashpartitioning(" in ln
+                 and re.search(r"\bquery_id#\d+", ln)
+                 and re.search(r"\bgrp#\d+", ln)]
+        if n == 1:
+            assert not keyed, keyed
+            assert plan.count("Exchange SinglePartition, REPARTITION_BY_NUM") \
+                == 1, plan
+            continue
+        assert len(keyed) == 1, keyed
+        assert re.search(rf"hashpartitioning\(query_id#\d+, grp#\d+, {n}\), "
+                         r"REPARTITION_BY_NUM", keyed[0]), keyed[0]
