@@ -80,6 +80,8 @@ def stem_tokens_arr(stemmer: str = "english") -> "F.pandas_udf":
         memo: dict[str, str] = {}
 
         def one(ts):
+            if ts is None:  # NULL text: NULL tokens, like tokens_col
+                return None
             out = []
             for t in ts:
                 s = memo.get(t)
@@ -94,20 +96,26 @@ def stem_tokens_arr(stemmer: str = "english") -> "F.pandas_udf":
     return _stem
 
 
+def analyzed_tokens(text: Column, stop_words: list[str] | None = None,
+                    stemmer: str = "none") -> Column:
+    """array<string> of the full analyzer chain for a text column: the
+    JVM expression of `tokens_col`, or — for the `english`/`kstem`
+    stemmers — that array through the Arrow stemmer UDF."""
+    _check_stemmer(stemmer)
+    if stemmer in ("english", "kstem"):
+        return stem_tokens_arr(stemmer)(tokens_col(text, stop_words, "none"))
+    return tokens_col(text, stop_words, stemmer)
+
+
 def tokenize(df: DataFrame, text_col: str = "text", doc_id_col: str = "doc_id",
              stop_words: list[str] | None = None,
              stemmer: str = "none") -> DataFrame:
     """(doc_id, pos, term) — one row per token; pos indexes the token
     stream (post stop/stem, matching Lucene's filter-chain positions)."""
-    _check_stemmer(stemmer)
-    if stemmer in ("english", "kstem"):
-        toks = tokens_col(F.col(text_col), stop_words, "none")
-        arr = stem_tokens_arr(stemmer)(toks)
-    else:
-        arr = tokens_col(F.col(text_col), stop_words, stemmer)
     return df.select(
         F.col(doc_id_col).alias("doc_id"),
-        F.posexplode(arr).alias("pos", "term"),
+        F.posexplode(analyzed_tokens(F.col(text_col), stop_words, stemmer))
+        .alias("pos", "term"),
     )
 
 

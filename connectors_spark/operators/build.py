@@ -2,13 +2,17 @@
 
 Replaces the reference's per-record Extractor->MemQueue->Sink pipeline
 (reference: app/connectors_service/connectors/es/sink.py:6-19,577-719)
-with declarative Spark stages. Everything in this module is pure JVM
-expression code — tokenization via split/posexplode (no Python UDF),
-aggregation via Catalyst partial+final hash aggregates (map-side combine
-absorbs the Zipf hot-term skew for the counting aggregates).
+with declarative Spark stages. There is ONE tokenize -> postings step,
+`_token_entries`: each doc's sorted token array gives its distinct
+terms, their tf, dl and (optionally) positions array-side, so no stage
+shuffles the token stream. `build_index` explodes those entries;
+`index.posting_rows` (the fused build and every delta generation)
+attaches doc_idx to them. Everything is JVM expression code except the
+`english`/`kstem` stemmers (one Arrow UDF, functions/analysis.py).
 
 Scale notes (10^12-turn design):
-- groupBy(term, doc_id) keys are near-unique per token stream => skew-free.
+- per-doc entries are row-local: tf, dl and positions need no shuffle,
+  and a Zipf-hot term costs one array element per doc, not a hot key;
 - groupBy(term) for df uses partial aggregation; the Zipf head collapses
   map-side, so the shuffle carries ~P rows per hot term, not the postings.
 - doc-index assignment is ONE sample-balanced range shuffle (no global
@@ -19,10 +23,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from connectors_spark.functions.analysis import tokenize
+from connectors_spark.functions.analysis import analyzed_tokens
 
 
 def with_doc_id(transcripts: DataFrame) -> DataFrame:
@@ -41,13 +45,92 @@ def with_doc_id(transcripts: DataFrame) -> DataFrame:
 
 @dataclass
 class IndexFrames:
-    """Logical index: all DataFrames lazily defined, caller persists."""
+    """Logical index. docs and postings read one persisted entries frame
+    (`_token_entries`); lexicon is persisted."""
 
     postings: DataFrame   # (term, doc_id, tf, positions)
     docs: DataFrame       # (doc_id, dl)
     lexicon: DataFrame    # (term, df)
     n_docs: int
     avgdl: float
+
+
+def _token_entries(base: DataFrame, id_cols: list[str],
+                   stop_words: list[str] | None = None,
+                   stemmer: str = "none",
+                   with_positions: bool = False) -> DataFrame:
+    """(*id_cols, dl, _entries) — per-doc distinct (term, tf[, positions])
+    entries and token count of `base`'s `text`, computed ARRAY-SIDE in
+    one tokenize pass through the analyzer chain (`analyzed_tokens`).
+
+    The sorted token array's run boundaries give the distinct terms and
+    their counts: starts[i] marks where s[i] differs from s[i-1]; the
+    run length (= tf) is the distance to the next start. Replaces
+    explode + groupBy(term, doc) — i.e. removes a full token-stream
+    shuffle — with per-row array expressions. With positions the array
+    sorted is struct(term, pos), pos being the token's index in the
+    analyzed stream (as `tokenize`'s posexplode numbers it): runs are
+    still the terms, and each run's pos values come out ascending — the
+    entry's third field.
+
+    Every intermediate (sorted array `_s`, its size `_n`, run starts
+    `_starts`) is materialized as a BOUND column via a dedicated
+    .select() stage. That staging is load-bearing: if the array-sort
+    subtree were inlined into the filter/transform lambdas, Catalyst
+    would re-evaluate it per array element (measured O(n^2)-per-doc
+    blowup). CollapseProject keeps the stages because each intermediate
+    is referenced more than once by non-cheap expressions. Callers that
+    explode `_entries` must do so across a materialization barrier
+    (persist/exchange), otherwise the generator's implicit
+    size(..)>0 filter is pushed below the projections with the whole
+    subtree inlined (same blowup).
+    """
+    toks = analyzed_tokens(F.col("text"), stop_words, stemmer)
+    tok_type, entry_type = "array<string>", "term:string,tf:int"
+    if with_positions:
+        toks = F.transform(
+            toks, lambda t, i: F.struct(t.alias("term"), i.alias("pos")))
+        tok_type = "array<struct<term:string,pos:int>>"
+        entry_type += ",positions:array<int>"
+    # NULL text tokenizes to NULL: coalesce to [] so it is a zero-token
+    # doc (dl = 0, no entries) like "" and punctuation-only text
+    st0 = base.select(
+        *id_cols,
+        F.coalesce(F.array_sort(toks), F.array().cast(tok_type)).alias("_s"),
+    )
+    s = F.col("_s")
+
+    def term_at(i):
+        t = F.element_at(s, i)
+        return t["term"] if with_positions else t
+
+    st1 = st0.select(*id_cols, "_s", F.size("_s").alias("_n"))
+    n = F.col("_n")
+    # n = 0 guard: sequence(0, -1) is the DESCENDING [0, -1], and
+    # element_at(s, 0) raises INVALID_INDEX_OF_ZERO
+    starts = F.when(n > 0, F.filter(
+        F.sequence(F.lit(0), n - 1),
+        lambda i: (i == 0) | (term_at(i + 1) != term_at(i)),
+    )).otherwise(F.array().cast("array<int>"))
+    st2 = st1.select(*id_cols, "_s", "_n", starts.alias("_starts"))
+    stc = F.col("_starts")
+    ends = F.concat(
+        F.slice(stc, 2, F.greatest(F.size(stc) - 1, F.lit(0))), F.array(n)
+    )
+    fields = [
+        F.transform(stc, lambda i: term_at(i + 1)).alias("term"),
+        F.zip_with(stc, ends, lambda a, b: b - a).alias("tf"),
+    ]
+    if with_positions:
+        fields.append(F.zip_with(
+            stc, ends, lambda a, b: F.transform(
+                F.slice(s, a + 1, b - a), lambda e: e["pos"]),
+        ).alias("positions"))
+    entries = F.when(n > 0, F.arrays_zip(*fields)).otherwise(
+        F.array().cast(f"array<struct<{entry_type}>>"))
+    return st2.select(
+        *id_cols, n.cast("long").alias("dl"), entries.alias("_entries")
+    )
 
 
 def build_index(docs_base: DataFrame, stop_words: list[str] | None = None,
@@ -57,38 +140,42 @@ def build_index(docs_base: DataFrame, stop_words: list[str] | None = None,
     """Build over any table with (doc_id, text) — e.g. the documents
     testdata table or doc-id'd transcripts (see build_index_transcripts).
 
-    denormalize_dl=True stores dl ON the posting rows (one extra build-
-    time join, amortized over every query): the DataFrame scorers then
-    skip the per-query dl join entirely — the scale path once n_docs
-    exceeds the scorer's broadcast threshold (the impact-ordered-index
-    denormalization trick; encoded shards already store dls)."""
+    One tokenize pass (`_token_entries`), persisted: docs is its
+    (doc_id [, ts], dl) projection, postings its explode, the lexicon a
+    df count over the postings. Every doc counts toward N and avgdl,
+    zero-token docs included; `positions` is NULL when with_positions is
+    False.
+
+    denormalize_dl=True stores dl ON the posting rows (a projection of
+    the entries): the DataFrame scorers then skip the per-query dl join
+    entirely — the scale path once n_docs exceeds the scorer's broadcast
+    threshold (the impact-ordered-index denormalization trick; encoded
+    shards already store dls)."""
     if doc_id_col != "doc_id":
         docs_base = docs_base.withColumn("doc_id", F.col(doc_id_col))
-    toks = tokenize(docs_base, text_col, "doc_id", stop_words, stemmer)
-
-    aggs = [F.count(F.lit(1)).alias("tf")]
-    if with_positions:
-        aggs.append(F.sort_array(F.collect_list("pos")).alias("positions"))
-    postings = toks.groupBy("term", "doc_id").agg(*aggs)
-    if not with_positions:
-        postings = postings.withColumn(
-            "positions", F.lit(None).cast("array<int>")
-        )
-
-    # every doc counts toward N and avgdl, including zero-token docs;
     # ts (when present) rides along into the docmap -> it IS the index
     # manifest used for incremental diffing (J1-J3)
     id_cols = ["doc_id"] + (["ts"] if "ts" in docs_base.columns else [])
-    docs = (
-        docs_base.select(*id_cols)
-        .join(toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")),
-              "doc_id", "left")
-        .select(*id_cols, F.coalesce("dl", F.lit(0)).alias("dl"))
+    # the persist is the materialization barrier an explode of the
+    # entries needs (see _token_entries); docs, postings and lexicon all
+    # read it, so the tokenize pass runs once
+    ent = _token_entries(
+        docs_base.select(*id_cols, F.col(text_col).alias("text")), id_cols,
+        stop_words, stemmer, with_positions,
+    ).persist()
+    docs = ent.select(*id_cols, "dl")
+
+    e = F.col("_e")
+    positions = (e["positions"] if with_positions
+                 else F.lit(None).cast("array<int>"))
+    postings = (
+        ent.select("doc_id", "dl", F.explode("_entries").alias("_e"))
+        .select("doc_id", e["term"].alias("term"),
+                e["tf"].cast("long").alias("tf"),
+                positions.alias("positions"), "dl")
     )
-    # docs is tiny (one row per doc) and consumed by the stats agg below,
-    # doc-id assignment and the scorer join — pin it so the tokenize
-    # pipeline under it runs once
-    docs = docs.persist()
+    if not denormalize_dl:
+        postings = postings.select("term", "doc_id", "tf", "positions")
 
     # lexicon is PART of the logical index (one row per distinct term) —
     # mark it persisted so repeated scoring jobs don't re-aggregate df
@@ -100,55 +187,12 @@ def build_index(docs_base: DataFrame, stop_words: list[str] | None = None,
         F.count(F.lit(1)), F.sum("dl")
     ).first()
     avgdl = float(sum_dl) / float(n_docs) if n_docs else 0.0
-    if denormalize_dl:
-        postings = postings.join(docs.select("doc_id", "dl"), "doc_id")
     return IndexFrames(postings=postings, docs=docs, lexicon=lexicon,
                        n_docs=int(n_docs), avgdl=avgdl)
 
 
 def build_index_transcripts(transcripts: DataFrame, **kw) -> IndexFrames:
     return build_index(with_doc_id(transcripts), **kw)
-
-
-def salted_agg(df: DataFrame, keys: list[str], partial_aggs: list,
-               final_aggs: list, salt_from: str, n_salts: int = 16) -> DataFrame:
-    """Explicit two-stage salted aggregation for Zipf-head keys.
-
-    Catalyst's map-side combine already collapses *algebraic* aggregates
-    (count/sum/min/max) per task, so plain groupBy is skew-safe for those.
-    This helper is for aggregations whose per-key state is LARGE
-    (collect_list/collect_set-style), where a 10^11-row hot key would blow
-    a single reducer: stage 1 groups by (keys..., pmod(xxhash64(salt_from),
-    n_salts)) bounding any task's state to 1/n_salts of the key, stage 2
-    merges the n_salts partials. (North-star requirement: salted two-stage
-    aggregation for hot terms; see SURVEY §2.4.)
-
-    partial_aggs/final_aggs: lists of Column aggregates; each final agg
-    must consume the column its partial produced (same alias).
-    """
-    salt = F.pmod(F.xxhash64(F.col(salt_from)), F.lit(n_salts)).alias("_salt")
-    stage1 = df.groupBy(*keys, salt).agg(*partial_aggs)
-    return stage1.groupBy(*keys).agg(*final_aggs)
-
-
-def salted_collect_positions(toks: DataFrame, n_salts: int = 16) -> DataFrame:
-    """(term, doc_id, tf, positions) via salted two-stage collect — the
-    posting-row builder that stays safe when one (term, doc) pair is
-    pathologically large."""
-    return salted_agg(
-        toks,
-        keys=["term", "doc_id"],
-        partial_aggs=[
-            F.count(F.lit(1)).alias("_tf"),
-            F.collect_list("pos").alias("_pos"),
-        ],
-        final_aggs=[
-            F.sum("_tf").alias("tf"),
-            F.sort_array(F.flatten(F.collect_list("_pos"))).alias("positions"),
-        ],
-        salt_from="pos",
-        n_salts=n_salts,
-    )
 
 
 def assign_doc_indices(docs: DataFrame, num_ranges: int | None = None,

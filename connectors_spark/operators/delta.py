@@ -14,10 +14,10 @@ become:
 3. encode postings for created + updated docs as a new generation with
    fresh doc_idx (append-only — old generations are immutable). The
    generation's rows come from the fused build's write core
-   (`index.posting_rows`: one tokenize pass, docmap stats via
-   Observation), or from `build_index` when the index has positions, and
-   go through the one encode step (`index.encode_rows`) keyed on bucket,
-   so each bucket dir gets one file;
+   (`index.posting_rows`: one tokenize pass, positions included when the
+   index has them, docmap stats via Observation) and go through the one
+   encode step (`index.encode_rows`) keyed on bucket, so each bucket dir
+   gets one file;
 4. keep scoring EXACT:
    - per-term dead counts (scan + decode + count tombstone hits) correct
      df, so idf is the live value;
@@ -54,16 +54,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from connectors_spark.functions.codec import decode_shards_batch
-from connectors_spark.operators.build import (
-    assign_doc_indices,
-    build_index,
-    with_doc_id,
-)
+from connectors_spark.operators.build import assign_doc_indices, with_doc_id
 from connectors_spark.operators.index import (
     DEAD_DF_SCHEMA,
     Generations,
     bucket_col,
-    encode_input,
     encode_rows,
     index_meta,
     posting_rows,
@@ -265,18 +260,11 @@ def _write_generation(spark: SparkSession, path: str, meta: dict,
     else:
         max_idx = max(stats["max_idx"],
                       int(all_dead[-1]) if len(all_dead) else 0)
-        if meta.get("positions", False):
-            # a delta generation must match the base index's positional
-            # setting, else phrase_topk breaks on any phrase term with
-            # delta postings
-            write = _write_positional_delta
-        else:
-            write = _write_fused_delta
         changed = docs.join(
             ledger.filter(F.col("op").isin(OP_CREATE, OP_UPDATE))
             .select("doc_id"), "doc_id", "left_semi")
-        n_live, avgdl_live = write(spark, meta, changed, gdir,
-                                   int(max_idx) + 1, n_live, sum_dl)
+        n_live, avgdl_live = _write_delta_docs(
+            spark, meta, changed, gdir, int(max_idx) + 1, n_live, sum_dl)
 
     # exact per-term dead counts: decode every existing shard, count hits
     # against the cumulative tombstone set (compaction amortizes this).
@@ -316,17 +304,20 @@ def _write_generation(spark: SparkSession, path: str, meta: dict,
     return rec
 
 
-def _write_fused_delta(spark: SparkSession, meta: dict, changed: DataFrame,
-                       gdir: str, start_idx: int, n_surv: int,
-                       surv_dl: int) -> tuple[int, float]:
-    """Non-positional delta postings through the fused build's write core
-    (one tokenize pass, docmap stats via Observation). Returns
+def _write_delta_docs(spark: SparkSession, meta: dict, changed: DataFrame,
+                      gdir: str, start_idx: int, n_surv: int,
+                      surv_dl: int) -> tuple[int, float]:
+    """The changed docs' docmap and postings through the fused build's
+    write core (one tokenize pass, docmap stats via Observation). The
+    generation carries positions exactly when the base index does, else
+    phrase_topk breaks on any phrase term with delta postings. Returns
     (n_docs_live, avgdl_live)."""
     id_cols = ["doc_id"] + (["ts"] if "ts" in changed.columns else [])
+    positions = bool(meta.get("positions", False))
     with posting_rows(changed, id_cols, f"{gdir}/docmap",
                       n_buckets=int(meta["n_buckets"]),
-                      shard_cap=meta["shard_cap"],
-                      start_idx=start_idx) as (rows, n_new, new_dl):
+                      shard_cap=meta["shard_cap"], start_idx=start_idx,
+                      with_positions=positions) as (rows, n_new, new_dl):
         n_live = n_surv + n_new
         avgdl_live = (surv_dl + new_dl) / n_live
         if not new_dl:
@@ -347,32 +338,6 @@ def _write_delta_postings(spark: SparkSession, meta: dict, rows: DataFrame,
                  meta["b"])
      .write.mode("overwrite").partitionBy("bucket")
      .parquet(f"{gdir}/postings"))
-
-
-def _write_positional_delta(spark: SparkSession, meta: dict,
-                            changed: DataFrame, gdir: str, start_idx: int,
-                            n_surv: int, surv_dl: int) -> tuple[int, float]:
-    """Positional delta postings: build_index (positions come from its
-    token stream) with stats via Observation on the docmap write.
-    Returns (n_docs_live, avgdl_live)."""
-    from pyspark.sql import Observation
-
-    sub = build_index(changed, with_positions=True)
-    obs = Observation("delta_docmap_stats")
-    sub_docmap = assign_doc_indices(sub.docs, start_idx=start_idx).observe(
-        obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
-    sub_docmap.write.mode("overwrite").parquet(f"{gdir}/docmap")
-    sub_docmap = spark.read.schema(sub_docmap.schema).parquet(f"{gdir}/docmap")
-    new_dl = int(obs.get["s"] or 0)
-    n_live = n_surv + int(obs.get["n"])
-    avgdl_live = (surv_dl + new_dl) / n_live
-    if not new_dl:
-        write_empty_postings(spark, f"{gdir}/postings")
-        return n_live, avgdl_live
-    rows = encode_input(sub.postings, sub_docmap, sub.lexicon,
-                        int(meta["n_buckets"]), meta["shard_cap"])
-    _write_delta_postings(spark, meta, rows, gdir, avgdl_live)
-    return n_live, avgdl_live
 
 
 def total_tombstones(meta: dict) -> int:

@@ -36,10 +36,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from connectors_spark import BM25_B, BM25_K1, BROADCAST_DOCS_MAX
-from connectors_spark.operators.build import IndexFrames, assign_doc_indices
+from connectors_spark.operators.build import (
+    IndexFrames,
+    _token_entries,
+    assign_doc_indices,
+)
 from connectors_spark.operators.score import idf_np, tf_norm_np
 from connectors_spark.operators.wand import topk_auto, topk_exact, topk_wand
-from connectors_spark.schema import ENCODED_POSTINGS_SCHEMA, arrow_frame
+from connectors_spark.schema import (
+    ENCODED_POSTINGS_SCHEMA,
+    arrow_frame,
+    sql_in,
+)
 
 DEFAULT_SHARD_CAP = 1 << 20  # 1M postings per encoded shard
 DEFAULT_BUCKETS = 64
@@ -383,72 +391,18 @@ def _arrow_encoded_schema():
     ])
 
 
-def _token_entries(base: DataFrame, id_cols: list[str]) -> DataFrame:
-    """(*id_cols, dl, _entries) — per-doc distinct (term, tf) entries and
-    token count, computed ARRAY-SIDE in one tokenize pass.
-
-    The sorted token array's run boundaries give the distinct terms and
-    their counts: starts[i] marks where s[i] differs from s[i-1]; the
-    run length (= tf) is the distance to the next start. Replaces
-    explode + groupBy(term, doc) — i.e. removes a full token-stream
-    shuffle — with per-row array expressions.
-
-    Every intermediate (sorted array `_s`, its size `_n`, run starts
-    `_starts`) is materialized as a BOUND column via a dedicated
-    .select() stage. That staging is load-bearing: if the array-sort
-    subtree were inlined into the filter/transform lambdas, Catalyst
-    would re-evaluate it per array element (measured O(n^2)-per-doc
-    blowup). CollapseProject keeps the stages because each intermediate
-    is referenced more than once by non-cheap expressions. Callers that
-    explode `_entries` must do so across a materialization barrier
-    (persist/exchange), otherwise the generator's implicit
-    size(..)>0 filter is pushed below the projections with the whole
-    subtree inlined (same blowup).
-    """
-    from connectors_spark.functions.analysis import tokens_col
-
-    # NULL text tokenizes to NULL: coalesce to [] so it is a zero-token
-    # doc (dl = 0, no entries) like "" and punctuation-only text
-    st0 = base.select(
-        *id_cols,
-        F.coalesce(F.array_sort(tokens_col(F.col("text"))),
-                   F.array().cast("array<string>")).alias("_s"),
-    )
-    s = F.col("_s")
-    st1 = st0.select(*id_cols, "_s", F.size("_s").alias("_n"))
-    n = F.col("_n")
-    # n = 0 guard: sequence(0, -1) is the DESCENDING [0, -1], and
-    # element_at(s, 0) raises INVALID_INDEX_OF_ZERO
-    starts = F.when(n > 0, F.filter(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: (i == 0) | (F.element_at(s, i + 1) != F.element_at(s, i)),
-    )).otherwise(F.array().cast("array<int>"))
-    st2 = st1.select(*id_cols, "_s", "_n", starts.alias("_starts"))
-    stc = F.col("_starts")
-    ends = F.concat(
-        F.slice(stc, 2, F.greatest(F.size(stc) - 1, F.lit(0))), F.array(n)
-    )
-    entries = F.when(
-        n > 0,
-        F.arrays_zip(
-            F.transform(stc, lambda i: F.element_at(s, i + 1)).alias("term"),
-            F.zip_with(stc, ends, lambda a, b: b - a).alias("tf"),
-        ),
-    ).otherwise(F.array().cast("array<struct<term:string,tf:int>>"))
-    return st2.select(
-        *id_cols, n.cast("long").alias("dl"), entries.alias("_entries")
-    )
-
-
 @contextmanager
 def posting_rows(base: DataFrame, id_cols: list[str], docmap_dir: str, *,
-                 n_buckets: int, shard_cap: int, start_idx: int = 0):
-    """Shared write core of the fused build and the non-positional delta
-    writer: (doc_id, text) rows -> docmap written to `docmap_dir` ->
-    exploded posting rows ready for the encode shuffle.
+                 n_buckets: int, shard_cap: int, start_idx: int = 0,
+                 with_positions: bool = False):
+    """Shared write core of the fused build and the delta writer:
+    (doc_id, text) rows -> docmap written to `docmap_dir` -> exploded
+    posting rows ready for the encode shuffle.
 
-    Yields (rows, n_docs, sum_dl): rows = (term, doc_idx, tf, dl, df,
-    n_shards, shard, bucket), where df counts the docs of `base` only;
+    Yields (rows, n_docs, sum_dl): rows = (term, doc_idx, tf, dl, df
+    [, positions], n_shards, shard, bucket), where df counts the docs
+    of `base` only and positions (array<int>, from `_token_entries`)
+    ride along when `with_positions`;
     n_docs and sum_dl come from an Observation on the docmap write, so
     corpus stats cost no extra pass. doc_idx starts at `start_idx`.
     `base` must carry doc_id; `id_cols` (doc_id [+ ts]) ride into the
@@ -462,14 +416,10 @@ def posting_rows(base: DataFrame, id_cols: list[str], docmap_dir: str, *,
     from pyspark.util import inheritable_thread_target
 
     spark = base.sparkSession
-    # ONE tokenize pass (was two: dl on the base table + a re-tokenize
-    # for the token stream): per-doc (term, tf) entries are computed
-    # ARRAY-SIDE from the sorted token array — run boundaries of the
-    # sorted array give the distinct terms and their counts — so the
-    # groupBy(term, doc) aggregation (a full token-stream shuffle, ~1.7x
-    # the posting count in rows) disappears from the plan entirely.
-    # Staged .select()s are load-bearing (see _token_entries).
-    ent = _token_entries(base, id_cols).persist()
+    # ONE array-side tokenize pass, no token-stream shuffle; the persist
+    # is the barrier the explode below needs (see _token_entries)
+    ent = _token_entries(base, id_cols,
+                         with_positions=with_positions).persist()
     # corpus stats ride the docmap WRITE job via Observation — no
     # separate count/sum pass over the written parquet
     obs = Observation("docmap_stats")
@@ -510,15 +460,17 @@ def posting_rows(base: DataFrame, id_cols: list[str], docmap_dir: str, *,
         dm = docmap.select("doc_id", "doc_idx")
         if n_docs <= BROADCAST_DOCS_MAX:
             dm = F.broadcast(dm)
+        pos_cols = ["positions"] if with_positions else []
         postings = (
             ent.join(dm, "doc_id")
             .select("doc_idx", "dl", F.explode("_entries").alias("_e"))
             .select("doc_idx", "dl", F.col("_e.term").alias("term"),
-                    F.col("_e.tf").cast("long").alias("tf"))
+                    F.col("_e.tf").cast("long").alias("tf"),
+                    *[F.col(f"_e.{c}").alias(c) for c in pos_cols])
         )
         rows = (
             postings.join(F.broadcast(lexicon), "term")
-            .select("term", "doc_idx", "tf", "dl", "df",
+            .select("term", "doc_idx", "tf", "dl", "df", *pos_cols,
                     *shard_cols(shard_cap))
             .withColumn("bucket", bucket_col("term", n_buckets))
         )
@@ -792,18 +744,6 @@ class Generations:
                                 "left_anti")
 
 
-def _isin(col: str, values) -> F.Column:
-    """`col IN (values)` as one parsed SQL expression. `Column.isin`
-    makes a py4j call per literal (about 1 ms each), which turned a
-    200-query batch's ~500 distinct terms into 0.5-1.7 s of driver time
-    per filter."""
-    def lit(v):
-        if isinstance(v, str):
-            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-        return str(int(v))
-    return F.expr(f"`{col}` IN ({','.join(map(lit, values))})")
-
-
 def _shard_dicts(grp: pd.DataFrame, avgdl: float,
                  gen_avgdl: dict) -> list[dict]:
     """Encoded shard rows of one term as plain dicts, extracted
@@ -936,7 +876,7 @@ class IndexReader:
         (term, dead) rows of the cumulative dead counts."""
         n_buckets = self.meta["n_buckets"]
         buckets = sorted({bucket_of(t, n_buckets) for t in terms})
-        in_terms = _isin("term", terms)
+        in_terms = sql_in("term", terms)
         rows = (
             self.postings.filter(F.col("bucket").isin(buckets))
             .filter(in_terms)
@@ -1207,7 +1147,7 @@ class IndexReader:
             buckets = sorted({bucket_of(t, n_buckets) for t in missing})
             rows = (
                 self.postings.filter(F.col("bucket").isin(buckets))
-                .filter(_isin("term", missing))
+                .filter(sql_in("term", missing))
                 .toPandas()
             )
             for t in missing:
@@ -1259,7 +1199,7 @@ class IndexReader:
             need_idx.update(int(i) for i in doc_idx)
         if need_idx:
             id_rows = self.docmap.filter(
-                _isin("doc_idx", sorted(need_idx))
+                sql_in("doc_idx", sorted(need_idx))
             ).collect()
             idmap = {r.doc_idx: r.doc_id for r in id_rows}
         else:
@@ -1282,9 +1222,11 @@ class IndexReader:
         starting from the smallest-posting-set term, adjacency is
         verified from the delta-encoded position streams, and matches are
         ranked by the phrase terms' BM25 sum (ties score DESC, doc ASC).
-        Requires a positional index (build_index(with_positions=True));
-        delta generations inherit the positional setting
-        (operators/delta.py)."""
+        Requires a positional index: `write_encoded_index` of a
+        build_index(with_positions=True) (the fused
+        `build_and_write_index` writes none). Delta generations carry
+        positions whenever the base does: `posting_rows` takes them from
+        the same `_token_entries` pass (operators/delta.py)."""
         from connectors_spark.functions.analysis import tokenize_py
         from connectors_spark.functions.codec import (
             decode_shard, decode_shard_positions,

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from connectors_spark.schema import sql_in
+
 
 def block_stats(df: DataFrame, block_col: str, key_col: str) -> DataFrame:
     """Per-block (min, max, count) of the sort key — segment metadata."""
@@ -84,12 +86,12 @@ def sorted_topk(df: DataFrame, block_col: str, key_col: str, k: int,
                 {"blocks_total": len(stats), "blocks_read": len(stats)})
 
     # Pass A: learn T = k-th smallest key inside the prefix blocks.
-    kth = (df.where(F.col(block_col).isin(prefix))
+    kth = (df.where(sql_in(block_col, prefix))
              .select(key_col).orderBy(F.col(key_col).asc())
              .limit(k).agg(F.max(key_col).alias("t")).collect()[0]["t"])
 
     # Candidate closure: any block whose min ≤ T may still contribute.
     candidates = [r[0] for r in stats if r["key_min"] <= kth]
-    out = (df.where(F.col(block_col).isin(candidates))
+    out = (df.where(sql_in(block_col, candidates))
              .orderBy(*order).limit(k).drop(block_col))
     return out, {"blocks_total": len(stats), "blocks_read": len(candidates)}

@@ -40,6 +40,7 @@ from connectors_spark.operators.similarity import (
     init_centroids,
     with_norm,
 )
+from connectors_spark.schema import sql_in
 
 
 def _meta_path(path: str) -> str:
@@ -179,7 +180,7 @@ def read_live(spark: SparkSession, path: str) -> DataFrame:
     live = (df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn", "_gen"))
     if meta["tombstones"]:
-        live = live.filter(~F.col("vec_id").isin(meta["tombstones"]))
+        live = live.filter(~sql_in("vec_id", meta["tombstones"]))
     return live
 
 

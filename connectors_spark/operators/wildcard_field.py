@@ -40,6 +40,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from connectors_spark.schema import sql_in
+
 __all__ = [
     "required_grams",
     "glob_to_like",
@@ -115,7 +117,7 @@ def wildcard_field_match(df: DataFrame, field: str, id_col: str,
     if postings is None:
         postings = build_gram_postings(df, field, id_col, n)
     cands = (postings
-             .where(F.col("gram").isin(grams))
+             .where(sql_in("gram", grams))
              .groupBy("_wid")
              .agg(F.countDistinct("gram").alias("_ng"))
              .where(F.col("_ng") == len(grams))

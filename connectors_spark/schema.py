@@ -11,6 +11,10 @@ connectors/utils.py:794-800 sanitize()).
 
 from __future__ import annotations
 
+import numbers
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -29,6 +33,29 @@ def arrow_frame(spark, rows: list[tuple], ddl: str):
     return spark.createDataFrame(pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema), schema)
+
+
+def sql_in(col: str, values) -> Column:
+    """`col IN (values)` as one parsed SQL expression. `Column.isin`
+    makes a py4j call per literal (about 1 ms each), which turned a
+    200-query batch's ~500 distinct terms into 0.5-1.7 s of driver time
+    per filter. Values are str or int (numpy ints included); any other
+    type raises TypeError rather than being coerced (int() would
+    truncate a float). An empty list is a false predicate, as with
+    `Column.isin([])`."""
+    def lit(v) -> str:
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        if isinstance(v, numbers.Integral) and not isinstance(v, bool):
+            return str(int(v))
+        raise TypeError(
+            f"sql_in({col!r}): {type(v).__name__} value {v!r}; "
+            "expected str or int")
+    lits = [lit(v) for v in values]
+    if not lits:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({','.join(lits)})")
+
 
 TRANSCRIPTS_SCHEMA = T.StructType(
     [

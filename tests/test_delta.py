@@ -184,7 +184,7 @@ def live_df_index(spark, tmp_path_factory):
     """A positional base + one delta where 'gonezz' loses every posting
     (two of its docs deleted, the third rewritten without it), 'deltazz'
     exists only in the delta, and 'nowherezz' is nowhere. Returns (path,
-    oracle on the new snapshot)."""
+    oracle on the new snapshot, Spark jobs of the update)."""
     from datetime import datetime, timedelta
 
     from connectors_spark.schema import TRANSCRIPTS_SCHEMA
@@ -207,10 +207,13 @@ def live_df_index(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("live_df_idx"))
     write_encoded_index(build_index_transcripts(s0, with_positions=True),
                         path, n_buckets=8, shard_cap=300)
-    rec = incremental_update(spark, path, s1)
+    recs = []
+    jobs = _jobs_in(spark,
+                    lambda: recs.append(incremental_update(spark, path, s1)))
+    rec = recs[0]
     assert (rec["created"], rec["updated"], rec["deleted"]) == (2, 1, 2)
     rows = with_doc_id(s1).select("doc_id", "text").collect()
-    return path, OracleIndex([(r.doc_id, r.text) for r in rows])
+    return path, OracleIndex([(r.doc_id, r.text) for r in rows]), jobs
 
 
 _LIVE_DF_QUERIES = [
@@ -239,7 +242,7 @@ def test_live_df_terms_match_oracle(spark, live_df_index, kernel):
     a fully tombstoned term drops out of OR queries and empties AND
     queries, a delta-only term and an absent term score as in an oracle
     built on the new snapshot, and topk_local equals topk."""
-    path, oracle = live_df_index
+    path, oracle, _ = live_df_index
     reader = IndexReader(spark, path, cache=False)
     info = reader._term_info(["gonezz", "deltazz", "nowherezz"])
     assert info["gonezz"][1] == 3 and info["gonezz"][2] == 0
@@ -268,7 +271,7 @@ def test_live_df_phrases_match_oracle(spark, live_df_index):
     """phrase_topk on the live df: a phrase over a fully tombstoned term
     or an absent term returns nothing; a delta-only phrase scores as in
     the oracle."""
-    path, oracle = live_df_index
+    path, oracle, _ = live_df_index
     reader = IndexReader(spark, path, cache=False)
     phrases = {"gone": "gonezz alphazz", "delta": "deltazz betazz",
                "absent": "nowherezz t00001"}
@@ -278,6 +281,43 @@ def test_live_df_phrases_match_oracle(spark, live_df_index):
            for r, (d, sc) in enumerate(oracle.phrase_query(t, 10), start=1)]
     assert {e[0] for e in exp} == {"delta"}
     _assert_same_ranking(_ranked(got), _ranked(exp))
+
+
+# incremental_update on the positional `live_df_index` fixture: 24 jobs
+# with the one delta writer (positions from `_token_entries`), 30 with the
+# separate build_index-based positional writer it replaced
+POSITIONAL_UPDATE_MAX_JOBS = 24
+
+
+def test_positional_generation_content_and_jobs(spark, live_df_index):
+    """A positional generation goes through the one delta writer: its
+    decoded (term, doc_id, tf, positions) equal an oracle built on the
+    changed docs alone, and the update's Spark jobs stay pinned.
+    Tier-1 cost: ~2 s (reads the module fixture)."""
+    import os
+
+    from connectors_spark.functions.codec import (
+        decode_shard, decode_shard_positions)
+
+    path, _, jobs = live_df_index
+    assert jobs <= POSITIONAL_UPDATE_MAX_JOBS
+    changed = OracleIndex([("conv-gone:2", "rewritten t00002"),
+                           ("conv-new:0", "deltazz betazz t00001"),
+                           ("conv-new:1", "deltazz betazz")])
+    gdir = os.path.join(path, "delta", "1")
+    dm = {r.doc_idx: r.doc_id
+          for r in spark.read.parquet(f"{gdir}/docmap").collect()}
+    got = {}
+    for row in spark.read.parquet(f"{gdir}/postings").toPandas() \
+            .to_dict("records"):
+        d, tf, _ = decode_shard(row)
+        pos = decode_shard_positions(row, tf=tf)
+        for i, t, p in zip(d.tolist(), tf.tolist(), pos):
+            got[(row["term"], dm[i])] = (t, p.tolist())
+    exp = {(term, d): (tf, changed.positions[term][d])
+           for term, docs in changed.postings.items()
+           for d, tf in docs.items()}
+    assert got == exp
 
 
 def test_auto_compaction_policy_roundtrip(spark, tmp_path):

@@ -44,10 +44,12 @@ def main():
         fmt(apply_rules(events, rules).select("event_id")),
     ))
 
+    idx = build_index(docs)
     sections.append((
-        "Tokenize -> TF: JVM Generate + partial/final hash aggregate "
-        "(no Python eval nodes)",
-        fmt(tokenize(docs).groupBy("term", "doc_id").count()),
+        "build_index postings: one array-side tokenize pass "
+        "(_token_entries: tf, dl and positions per doc), persisted, then "
+        "a Generate — no Exchange, no Python eval nodes",
+        fmt(idx.postings),
     ))
 
     idx = build_index(docs, with_positions=False)
