@@ -46,13 +46,22 @@ def with_doc_id(transcripts: DataFrame) -> DataFrame:
 @dataclass
 class IndexFrames:
     """Logical index. docs and postings read one persisted entries frame
-    (`_token_entries`); lexicon is persisted."""
+    (`_token_entries`), carried as `entries` by `build_index`; lexicon is
+    persisted. Frames derived from another index leave `entries` None:
+    the cache belongs to the index that built it."""
 
     postings: DataFrame   # (term, doc_id, tf, positions)
     docs: DataFrame       # (doc_id, dl)
     lexicon: DataFrame    # (term, df)
     n_docs: int
     avgdl: float
+    entries: DataFrame | None = None  # (doc_id [, ts], dl, _entries)
+
+    def unpersist(self) -> None:
+        """Release every cached frame of the index, entries included."""
+        for f in (self.postings, self.docs, self.lexicon, self.entries):
+            if f is not None:
+                f.unpersist()
 
 
 def _token_entries(base: DataFrame, id_cols: list[str],
@@ -188,7 +197,7 @@ def build_index(docs_base: DataFrame, stop_words: list[str] | None = None,
     ).first()
     avgdl = float(sum_dl) / float(n_docs) if n_docs else 0.0
     return IndexFrames(postings=postings, docs=docs, lexicon=lexicon,
-                       n_docs=int(n_docs), avgdl=avgdl)
+                       n_docs=int(n_docs), avgdl=avgdl, entries=ent)
 
 
 def build_index_transcripts(transcripts: DataFrame, **kw) -> IndexFrames:

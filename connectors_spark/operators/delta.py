@@ -10,14 +10,18 @@ become:
    ledger that carries each live doc's doc_idx and dl. The ledger is
    persisted once; one aggregation over it gives every job counter, the
    survivor count and Σdl, and the max doc_idx;
-2. tombstone doc_idx of deleted + updated docs — a filter of the ledger;
+2. tombstone doc_idx of deleted + updated docs — a filter of the
+   ledger, collected once and merged on the driver with the earlier
+   generations' tombstones; the tombstone write and the dead count (4)
+   only need that set, so they run beside step 3;
 3. encode postings for created + updated docs as a new generation with
    fresh doc_idx (append-only — old generations are immutable). The
    generation's rows come from the fused build's write core
    (`index.posting_rows`: one tokenize pass, positions included when the
-   index has them, docmap stats via Observation) and go through the one
-   encode step (`index.encode_rows`) keyed on bucket, so each bucket dir
-   gets one file;
+   index has them, docmap stats via Observation) and its commit
+   (`index.write_index_postings`, the commit of every generation) keyed
+   on bucket, so each bucket dir gets one file; meta.json is committed
+   once 2-4 are written;
 4. keep scoring EXACT:
    - per-term dead counts (scan + decode + count tombstone hits) correct
      df, so idf is the live value;
@@ -46,12 +50,14 @@ from __future__ import annotations
 
 import os
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 
 from connectors_spark import BROADCAST_DOCS_MAX, commitfs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from connectors_spark.functions.codec import decode_shards_batch
 from connectors_spark.operators.build import assign_doc_indices, with_doc_id
@@ -59,7 +65,6 @@ from connectors_spark.operators.index import (
     DEAD_DF_SCHEMA,
     Generations,
     bucket_col,
-    encode_rows,
     index_meta,
     posting_rows,
     read_meta,
@@ -234,17 +239,19 @@ def _write_generation(spark: SparkSession, path: str, meta: dict,
                       gens: Generations, ledger: DataFrame,
                       docs: DataFrame | None, stats: dict[str, int]) -> dict:
     """The write half of `_apply_delta`, over the persisted ledger and
-    its `_ledger_stats`. Returns the delta record."""
+    its `_ledger_stats`. Returns the delta record. The tombstone and
+    dead-count writes run on a 2-thread pool beside `_write_delta_docs`;
+    meta.json is committed after all three."""
     n_created, n_updated, n_deleted, n_skipped = (
         stats[op] for op in (OP_CREATE, OP_UPDATE, OP_DELETE, OP_SKIP))
     gen = (max((int(d["gen"]) for d in meta.get("deltas", [])), default=0) + 1)
     gdir = f"{path}/delta/{gen}"
 
-    # the tombstones are a filter of the ledger
-    (ledger.filter(F.col("op").isin(*_TOMBSTONED)).select("doc_idx")
-     .write.mode("overwrite").parquet(f"{gdir}/tombstones"))
-    # every tombstone, this generation's included, in one read
-    all_dead = gens.dead_ids(gens.gens + [gen])
+    # the tombstones are a filter of the ledger; every tombstone, this
+    # generation's included, without reading the new ones back
+    tombs = ledger.filter(F.col("op").isin(*_TOMBSTONED)).select("doc_idx")
+    all_dead = np.union1d(
+        gens.dead_ids(), tombs.toArrow().column("doc_idx").to_numpy())
 
     # New doc_idx must start past EVERY idx ever assigned — tombstoned
     # ones included — so the start also covers earlier generations'
@@ -253,18 +260,11 @@ def _write_generation(spark: SparkSession, path: str, meta: dict,
     # mask would then silently hide the new doc: a delete-heavy
     # generation followed by any create/update made the recycled docs
     # unsearchable (caught by the round-4 verify drive).
+    start_idx = max(stats["max_idx"],
+                    int(all_dead[-1]) if len(all_dead) else 0) + 1
     n_live, sum_dl = stats["n_live"], stats["sum_dl"]
+    avgdl_live = (sum_dl / n_live) if n_live else 0.0
     delete_only = docs is None or n_created + n_updated == 0
-    if delete_only:
-        avgdl_live = (sum_dl / n_live) if n_live else 0.0
-    else:
-        max_idx = max(stats["max_idx"],
-                      int(all_dead[-1]) if len(all_dead) else 0)
-        changed = docs.join(
-            ledger.filter(F.col("op").isin(OP_CREATE, OP_UPDATE))
-            .select("doc_id"), "doc_id", "left_semi")
-        n_live, avgdl_live = _write_delta_docs(
-            spark, meta, changed, gdir, int(max_idx) + 1, n_live, sum_dl)
 
     # exact per-term dead counts: decode every existing shard, count hits
     # against the cumulative tombstone set (compaction amortizes this).
@@ -281,7 +281,22 @@ def _write_generation(spark: SparkSession, path: str, meta: dict,
         .groupBy("term").agg(F.sum("dead").alias("dead"))
     )
     try:
-        dead_df.write.mode("overwrite").parquet(f"{gdir}/dead_df")
+        # inheritable targets: the pool threads' jobs keep the caller's
+        # job group and description
+        inherit = inheritable_thread_target(spark)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            writes = [
+                pool.submit(inherit(df.write.mode("overwrite").parquet),
+                            f"{gdir}/{sub}")
+                for df, sub in ((tombs, "tombstones"), (dead_df, "dead_df"))]
+            if not delete_only:
+                changed = docs.join(
+                    ledger.filter(F.col("op").isin(OP_CREATE, OP_UPDATE))
+                    .select("doc_id"), "doc_id", "left_semi")
+                n_live, avgdl_live = _write_delta_docs(
+                    spark, meta, changed, gdir, start_idx, n_live, sum_dl)
+            for w in writes:
+                w.result()
     finally:
         tomb_bc.destroy()
 
@@ -308,14 +323,16 @@ def _write_delta_docs(spark: SparkSession, meta: dict, changed: DataFrame,
                       gdir: str, start_idx: int, n_surv: int,
                       surv_dl: int) -> tuple[int, float]:
     """The changed docs' docmap and postings through the fused build's
-    write core (one tokenize pass, docmap stats via Observation). The
-    generation carries positions exactly when the base index does, else
-    phrase_topk breaks on any phrase term with delta postings. Returns
-    (n_docs_live, avgdl_live)."""
+    write core (one tokenize pass, docmap stats via Observation) and its
+    commit (`write_index_postings`, keyed on bucket: one file per bucket
+    dir). The generation carries positions exactly when the base index
+    does, else phrase_topk breaks on any phrase term with delta postings.
+    Returns (n_docs_live, avgdl_live)."""
     id_cols = ["doc_id"] + (["ts"] if "ts" in changed.columns else [])
     positions = bool(meta.get("positions", False))
+    n_buckets = int(meta["n_buckets"])
     with posting_rows(changed, id_cols, f"{gdir}/docmap",
-                      n_buckets=int(meta["n_buckets"]),
+                      n_buckets=n_buckets,
                       shard_cap=meta["shard_cap"], start_idx=start_idx,
                       with_positions=positions) as (rows, n_new, new_dl):
         n_live = n_surv + n_new
@@ -323,21 +340,11 @@ def _write_delta_docs(spark: SparkSession, meta: dict, changed: DataFrame,
         if not new_dl:
             write_empty_postings(spark, f"{gdir}/postings")
             return n_live, avgdl_live
-        _write_delta_postings(spark, meta, rows, gdir, avgdl_live)
+        write_index_postings(
+            rows, gdir, avgdl_live, meta["k1"], meta["b"],
+            num_partitions=min(spark.sparkContext.defaultParallelism,
+                               n_buckets), key=["bucket"])
     return n_live, avgdl_live
-
-
-def _write_delta_postings(spark: SparkSession, meta: dict, rows: DataFrame,
-                          gdir: str, avgdl_live: float) -> None:
-    """Encode a generation's posting rows keyed on bucket: each bucket
-    lives in one task, so the partitionBy write leaves one file per
-    bucket dir — no second shuffle of encoded blobs."""
-    n_buckets = int(meta["n_buckets"])
-    n_parts = min(spark.sparkContext.defaultParallelism, n_buckets)
-    (encode_rows(rows, n_parts, ["bucket"], avgdl_live, meta["k1"],
-                 meta["b"])
-     .write.mode("overwrite").partitionBy("bucket")
-     .parquet(f"{gdir}/postings"))
 
 
 def total_tombstones(meta: dict) -> int:

@@ -315,10 +315,12 @@ def make_encode_arrow_write_partition(avgdl: float, k1: float, b: float,
     an object store via pyarrow.fs in cluster deployments).
 
     The task buffers its encoded batches and writes ONE parquet table
-    per bucket, so every file is a single row group (binary-column stats
-    per row group were measured at 45% size overhead with small groups).
-    Task output is bounded by the input partition size, so the buffer is
-    too."""
+    per bucket, so every file is a single row group. Min/max statistics
+    cover the scalar columns only: the binary streams and block lists
+    are always decoded whole and no read filters on them, so their
+    statistics only grew every footer and page header (7.5 % of the
+    postings bytes of a 3,200-doc index). Task output is bounded by the input partition
+    size, so the buffer is too."""
     import pyarrow as pa
 
     enc = make_encode_arrow_partition(avgdl, k1, b)
@@ -352,7 +354,8 @@ def make_encode_arrow_write_partition(avgdl: float, k1: float, b: float,
                 os.makedirs(d, exist_ok=True)
                 fp = os.path.join(d, f"part-p{pid:05d}-a{att}.parquet")
                 sub = body.slice(a, e - a).combine_chunks()
-                with pq.ParquetWriter(fp, schema) as w:
+                with pq.ParquetWriter(fp, schema, write_statistics=[
+                        "term", "shard", "n_shards", "n_docs", "df"]) as w:
                     w.write_table(sub.cast(schema))
                 out_b.append(b_)
                 out_f.append(fp)
@@ -491,10 +494,13 @@ def write_empty_postings(spark: SparkSession, post_dir: str) -> None:
 def write_index_postings(rows: DataFrame, path: str, avgdl: float,
                          k1: float, b: float,
                          num_partitions: int | None = None,
-                         direct_write: bool | None = None) -> None:
-    """Encode the encoder's input rows (see `encode_input`) keyed on
-    (term, shard) into `path/postings` — the commit step of every
-    single-generation write (the fused build and compaction).
+                         direct_write: bool | None = None,
+                         key: list[str] | None = None) -> None:
+    """Encode the encoder's input rows (see `encode_input`) into
+    `path/postings` — the commit step of every generation: the fused
+    build and compaction key the encode on (term, shard) (the default
+    `key`), a delta generation on bucket, so each bucket is encoded by
+    one task and its dir gets one file.
 
     With `direct_write` the encode tasks write their own parquet files
     (make_encode_arrow_write_partition) and the driver commits the
@@ -512,7 +518,7 @@ def write_index_postings(rows: DataFrame, path: str, avgdl: float,
         direct_write = (spark.sparkContext.master.startswith("local")
                         and "://" not in path)
     post_dir = f"{path}/postings"
-    key = ["term", "shard"]
+    key = key or ["term", "shard"]
     if direct_write:
         import shutil
 
@@ -634,10 +640,12 @@ def gc_unmanifested(path: str) -> list[str]:
 
 
 def read_postings(spark: SparkSession, path: str) -> DataFrame:
-    """Open the base postings of an index dir. When a direct-write
-    manifest exists, read exactly the manifested files (basePath keeps
-    the hive `bucket=` partition column) so loser-attempt orphans are
-    invisible; committer-written indexes fall back to directory listing
+    """Open the postings of one generation dir: an index's base, or a
+    delta generation's `delta/<gen>`. When a direct-write manifest
+    exists, read exactly the manifested files (basePath keeps the hive
+    `bucket=` partition column) so loser-attempt orphans are invisible;
+    committer-written generations (a cluster write, or a delta written
+    before deltas took the direct write) fall back to directory listing
     (the committer already guarantees only winner output is visible).
     The schema is pinned (ENCODED_POSTINGS_SCHEMA), so opening runs no
     footer-inference job."""
@@ -688,7 +696,9 @@ class Generations:
     one place:
 
     - postings: base + delta encoded rows (ENCODED_POSTINGS_SCHEMA) plus
-      `_gen`, the generation number;
+      `_gen`, the generation number. Every generation opens through
+      `read_postings`, so a direct-written one resolves its files from
+      its manifest;
     - docmap: every docmap row ever assigned, tombstoned docs included;
     - tombstones: the doc_idx of every delta's tombstones, in one read
       (`dead_ids`, `live_docmap`);
@@ -711,8 +721,7 @@ class Generations:
                 continue  # tombstones only — no postings/docmap dirs exist
             gdir = f"{path}/delta/{int(d['gen'])}"
             self.postings = self.postings.unionByName(
-                spark.read.schema(ENCODED_POSTINGS_SCHEMA)
-                .parquet(f"{gdir}/postings")
+                read_postings(spark, gdir)
                 .withColumn("_gen", F.lit(int(d["gen"]))))
             self.docmap = self.docmap.unionByName(
                 spark.read.schema(dm_schema).parquet(f"{gdir}/docmap"))

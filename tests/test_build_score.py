@@ -155,6 +155,24 @@ def test_build_index_equals_token_stream_form(spark, analyzer):
         assert "BatchEvalPython" not in plan
 
 
+def test_index_frames_unpersist_releases_entries(spark):
+    """IndexFrames carries build_index's persisted entries frame, so
+    `unpersist()` leaves no cached RDD of the index behind, even after a
+    caller persisted postings, docs and lexicon itself. The corpus is
+    built nowhere else: the cache manager shares one cached RDD between
+    equal plans, so another test's index of the same input would be
+    counted (and released) here."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    idx = build_index_transcripts(synth_transcripts(spark, 12, seed=4711),
+                                  with_positions=False)
+    for f in (idx.postings, idx.docs, idx.lexicon):
+        f.persist().count()
+    assert jsc.getPersistentRDDs().size() == before + 4
+    idx.unpersist()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_stopword_analyzer_rank_identity(spark, transcripts):
     from connectors_spark.functions.analysis import ENGLISH_STOP
     from connectors_spark.operators.build import build_index_transcripts as bit

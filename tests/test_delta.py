@@ -120,6 +120,66 @@ def test_nonpositional_base_writes_nonpositional_deltas(spark, updated):
         F.col("positions").isNotNull()).count() == 0
 
 
+def _index_copy(path: str, dst) -> str:
+    import shutil
+
+    out = str(dst / "copy")
+    shutil.copytree(path, out)
+    return out
+
+
+def test_delta_manifest_hides_zombie_attempt_files(spark, updated, tmp_path):
+    """A delta generation commits through the direct write: its files
+    are resolved from `delta/<gen>/postings_manifest.json`, so a file a
+    losing task attempt leaves in a delta bucket dir is invisible to the
+    reader and to compaction. Tier-1 cost: one top-k, one compaction,
+    ~8 s."""
+    import glob
+    import json
+    import os
+    import shutil
+
+    path, _, oracle = updated
+    path = _index_copy(path, tmp_path)
+    gdir = os.path.join(path, "delta", "1")
+    with open(os.path.join(gdir, "postings_manifest.json")) as f:
+        files = json.load(f)["files"]
+    assert sorted(files) == sorted(
+        os.path.relpath(p, os.path.join(gdir, "postings"))
+        for p in glob.glob(f"{gdir}/postings/bucket=*/*.parquet"))
+    victim = os.path.join(gdir, "postings", files[0])
+    zombie = victim.replace("-a0.parquet", "-a1.parquet")
+    assert zombie != victim
+    # a duplicate of the winner: read, it would double every posting
+    shutil.copyfile(victim, zombie)
+    _check_rank_identity(spark, path, oracle, "exact")
+    out = str(tmp_path / "compacted")
+    compact_index(spark, path, out)
+    _check_rank_identity(spark, out, oracle, "wand")
+
+
+def test_committer_written_delta_still_opens(spark, updated, tmp_path):
+    """A delta generation written by Spark's committer (partitionBy
+    bucket, no manifest — a cluster write, or a delta from before deltas
+    took the direct write) opens through the directory read in one
+    job and ranks as the direct-written one does. Tier-1 cost: ~5 s."""
+    import os
+    import shutil
+
+    from connectors_spark.operators.index import read_postings
+
+    path, _, oracle = updated
+    path = _index_copy(path, tmp_path)
+    gdir = os.path.join(path, "delta", "1")
+    legacy = str(tmp_path / "legacy_postings")
+    read_postings(spark, gdir).write.partitionBy("bucket").parquet(legacy)
+    shutil.rmtree(os.path.join(gdir, "postings"))
+    os.remove(os.path.join(gdir, "postings_manifest.json"))
+    shutil.move(legacy, os.path.join(gdir, "postings"))
+    assert _jobs_in(spark, lambda: IndexReader(spark, path, cache=False)) == 1
+    _check_rank_identity(spark, path, oracle, "wand")
+
+
 def test_noop_update_returns_none(spark, updated):
     path, s1, _ = updated
     assert incremental_update(spark, path, s1) is None

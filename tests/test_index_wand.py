@@ -405,6 +405,59 @@ def test_direct_write_equals_committer_path(spark, tmp_path):
     assert a == b and a
 
 
+def test_direct_write_statistics_only_on_scalar_columns(spark, tmp_path):
+    """Direct-written postings files carry min/max statistics on the
+    scalar columns only (no read filters on the encoded streams): `term`
+    has them, `doc_gaps` and the block lists do not. Decoded postings
+    and a `term IN (...)` read equal the committer path's, whose files
+    carry statistics on every column. Tier-1 cost: two 40-conv builds,
+    ~6 s."""
+    import glob as _glob
+
+    import pyarrow.parquet as pq
+
+    from connectors_spark.operators.index import (
+        build_and_write_index, read_postings,
+    )
+    from connectors_spark.schema import sql_in
+
+    t = synth_transcripts(spark, 40, seed=9)
+    d1, d2 = str(tmp_path / "direct"), str(tmp_path / "classic")
+    build_and_write_index(t, d1, n_buckets=8, shard_cap=100,
+                          direct_write=True)
+    build_and_write_index(t, d2, n_buckets=8, shard_cap=100,
+                          direct_write=False)
+    files = _glob.glob(f"{d1}/postings/bucket=*/part-*.parquet")
+    assert files
+    for fp in files:
+        rg = pq.ParquetFile(fp).metadata.row_group(0)
+        cols = {rg.column(i).path_in_schema: rg.column(i)
+                for i in range(rg.num_columns)}
+        assert cols["term"].is_stats_set and cols["term"].statistics.has_min_max
+        assert not cols["doc_gaps"].is_stats_set
+        assert not cols["block_last_doc.list.element"].is_stats_set
+
+    def decoded(path, terms=None):
+        dm = {r.doc_idx: r.doc_id
+              for r in spark.read.parquet(f"{path}/docmap").collect()}
+        post = read_postings(spark, path)
+        if terms is not None:
+            post = post.filter(sql_in("term", terms))
+        got = set()
+        for r in post.collect():
+            d, tf, dl = decode_shard(r.asDict())
+            got |= {(r.term, dm[int(i)], int(f), int(n))
+                    for i, f, n in zip(d, tf, dl)}
+        return got
+
+    full = decoded(d1)
+    assert full and full == decoded(d2)
+    terms = ["t00001", "t00007", "nowhere"]
+    some = decoded(d1, terms)
+    assert some and some == decoded(d2, terms)
+    assert some == {p for p in full if p[0] in terms}
+
+
 def test_manifest_reads_hide_zombie_attempt_files(spark, tmp_path):
     """Direct writes are attempt-suffixed and readers resolve files
     through postings_manifest.json, so an orphan file a zombie/loser

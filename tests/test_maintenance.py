@@ -159,6 +159,65 @@ def test_no_doc_idx_recycling_after_delete_heavy_gen(spark, tmp_path):
         assert sorted(r.doc_id for r in hits) == live_ids, kernel
 
 
+def test_tombstones_equal_ledger_rows_along_chain(spark, tmp_path):
+    """Each generation's `tombstones/` holds exactly the doc_idx its
+    ledger deletes or updates — the live docmap's idx of those docs just
+    before the generation — along an update -> delete_by_query -> update
+    chain; the generation set's dead ids are their union. Tier-1 cost:
+    one build and three generations, ~15 s."""
+    from connectors_spark.operators.delta import incremental_update
+    from connectors_spark.operators.index import Generations
+
+    t0 = synth_transcripts(spark, 20, seed=13).cache()
+    path = str(tmp_path / "tomb_idx")
+    write_encoded_index(build_index_transcripts(t0, with_positions=False),
+                        path, n_buckets=8, shard_cap=300)
+    h = F.pmod(F.xxhash64(F.concat_ws(":", "conv_id", "turn_idx")),
+               F.lit(7))
+
+    def bump(df, cond):
+        return (df.withColumn("text", F.when(
+                    cond, F.concat("text", F.lit(" tombprobe")))
+                    .otherwise(F.col("text")))
+                .withColumn("ts", F.when(
+                    cond, F.col("ts") + F.expr("INTERVAL 1 HOUR"))
+                    .otherwise(F.col("ts"))))
+
+    def ids(cond):
+        return {r.doc_id for r in
+                with_doc_id(t0.filter(cond)).select("doc_id").collect()}
+
+    def live_idx():
+        gens = Generations(spark, path, read_meta(path)["deltas"])
+        return {r.doc_id: r.doc_idx for r in
+                gens.live_docmap().select("doc_id", "doc_idx").collect()}
+
+    s1 = bump(t0.filter(h != 0), h == 1)
+    steps = [
+        # gen 1: drop h == 0, update h == 1
+        (lambda: incremental_update(spark, path, s1), ids(h.isin(0, 1))),
+        # gen 2: delete h == 2 plus already-deleted h == 0 (not live)
+        (lambda: delete_by_query(
+            spark, path, with_doc_id(t0.filter(h.isin(0, 2)))), ids(h == 2)),
+        # gen 3: drop the deleted h == 2 again, update h == 3
+        (lambda: incremental_update(
+            spark, path, bump(s1.filter(h != 2), h == 3)), ids(h == 3)),
+    ]
+    union = set()
+    for gen, (step, touched) in enumerate(steps, start=1):
+        assert touched
+        before = live_idx()
+        exp = sorted(before[d] for d in touched)
+        rec = step()
+        assert rec["gen"] == gen and rec["n_tombstones"] == len(exp)
+        got = sorted(r.doc_idx for r in spark.read.parquet(
+            f"{path}/delta/{gen}/tombstones").collect())
+        assert got == exp, gen
+        union |= set(exp)
+    gens = Generations(spark, path, read_meta(path)["deltas"])
+    assert gens.dead_ids().tolist() == sorted(union)
+
+
 def test_compaction_after_maintenance(spark, maint, tmp_path):
     """compact_index folds delete-only + update generations into a fresh
     single-gen index that still matches the head-snapshot oracle."""
