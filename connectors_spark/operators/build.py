@@ -5,10 +5,11 @@ Replaces the reference's per-record Extractor->MemQueue->Sink pipeline
 with declarative Spark stages. There is ONE tokenize -> postings step,
 `_token_entries`: each doc's sorted token array gives its distinct
 terms, their tf, dl and (optionally) positions array-side, so no stage
-shuffles the token stream. `build_index` explodes those entries;
-`index.posting_rows` (the fused build and every delta generation)
-attaches doc_idx to them. Everything is JVM expression code except the
-`english`/`kstem` stemmers (one Arrow UDF, functions/analysis.py).
+shuffles the token stream. `build_index` explodes those entries and
+keeps them (`IndexFrames.entries`); `index.posting_rows`, the write
+core of every index writer, attaches doc_idx to them. Everything is
+JVM expression code except the `english`/`kstem` stemmers (one Arrow
+UDF, functions/analysis.py).
 
 Scale notes (10^12-turn design):
 - per-doc entries are row-local: tf, dl and positions need no shuffle,
@@ -47,8 +48,9 @@ def with_doc_id(transcripts: DataFrame) -> DataFrame:
 class IndexFrames:
     """Logical index. docs and postings read one persisted entries frame
     (`_token_entries`), carried as `entries` by `build_index`; lexicon is
-    persisted. Frames derived from another index leave `entries` None:
-    the cache belongs to the index that built it."""
+    persisted. The entries are what the index writers encode. Frames
+    derived from another index leave `entries` None: the cache belongs
+    to the index that built it, and such a frame cannot be written."""
 
     postings: DataFrame   # (term, doc_id, tf, positions)
     docs: DataFrame       # (doc_id, dl)
@@ -62,6 +64,21 @@ class IndexFrames:
         for f in (self.postings, self.docs, self.lexicon, self.entries):
             if f is not None:
                 f.unpersist()
+
+    def require_entries(self) -> DataFrame:
+        """The entries the index writers encode. A derived frame has
+        none (its source's would undo the derivation), so it fails."""
+        if self.entries is None:
+            raise ValueError(
+                "IndexFrames has no token entries to write: frames derived "
+                "from another index (static_prune_postings, "
+                "with_lossy_norms) carry none; write a build_index result")
+        return self.entries
+
+
+def entries_have_positions(entries: DataFrame) -> bool:
+    """Whether `_token_entries` rows carry positions (type only, no job)."""
+    return "positions" in entries.schema["_entries"].dataType.elementType.names
 
 
 def _token_entries(base: DataFrame, id_cols: list[str],

@@ -16,9 +16,9 @@ become:
    only need that set, so they run beside step 3;
 3. encode postings for created + updated docs as a new generation with
    fresh doc_idx (append-only — old generations are immutable). The
-   generation's rows come from the fused build's write core
-   (`index.posting_rows`: one tokenize pass, positions included when the
-   index has them, docmap stats via Observation) and its commit
+   generation's rows come from the write core of every index writer
+   (`index.posting_rows` over one tokenize pass, positions included when
+   the index has them, docmap stats via Observation) and its commit
    (`index.write_index_postings`, the commit of every generation) keyed
    on bucket, so each bucket dir gets one file; meta.json is committed
    once 2-4 are written;
@@ -60,7 +60,8 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from connectors_spark.functions.codec import decode_shards_batch
-from connectors_spark.operators.build import assign_doc_indices, with_doc_id
+from connectors_spark.operators.build import (
+    _token_entries, assign_doc_indices, with_doc_id)
 from connectors_spark.operators.index import (
     DEAD_DF_SCHEMA,
     Generations,
@@ -322,28 +323,32 @@ def _write_generation(spark: SparkSession, path: str, meta: dict,
 def _write_delta_docs(spark: SparkSession, meta: dict, changed: DataFrame,
                       gdir: str, start_idx: int, n_surv: int,
                       surv_dl: int) -> tuple[int, float]:
-    """The changed docs' docmap and postings through the fused build's
-    write core (one tokenize pass, docmap stats via Observation) and its
-    commit (`write_index_postings`, keyed on bucket: one file per bucket
-    dir). The generation carries positions exactly when the base index
-    does, else phrase_topk breaks on any phrase term with delta postings.
+    """The changed docs' token entries (persisted here) through the
+    write core of every index writer (`posting_rows`) and its commit
+    (`write_index_postings`, keyed on bucket: one file per bucket dir).
+    The entries carry positions exactly when the base index does, else
+    phrase_topk breaks on any phrase term with delta postings.
     Returns (n_docs_live, avgdl_live)."""
     id_cols = ["doc_id"] + (["ts"] if "ts" in changed.columns else [])
-    positions = bool(meta.get("positions", False))
     n_buckets = int(meta["n_buckets"])
-    with posting_rows(changed, id_cols, f"{gdir}/docmap",
-                      n_buckets=n_buckets,
-                      shard_cap=meta["shard_cap"], start_idx=start_idx,
-                      with_positions=positions) as (rows, n_new, new_dl):
-        n_live = n_surv + n_new
-        avgdl_live = (surv_dl + new_dl) / n_live
-        if not new_dl:
-            write_empty_postings(spark, f"{gdir}/postings")
-            return n_live, avgdl_live
-        write_index_postings(
-            rows, gdir, avgdl_live, meta["k1"], meta["b"],
-            num_partitions=min(spark.sparkContext.defaultParallelism,
-                               n_buckets), key=["bucket"])
+    # the persist is the barrier posting_rows' explode needs
+    ent = _token_entries(changed, id_cols, with_positions=bool(
+        meta.get("positions", False))).persist()
+    try:
+        with posting_rows(ent, f"{gdir}/docmap", n_buckets=n_buckets,
+                          shard_cap=meta["shard_cap"],
+                          start_idx=start_idx) as (rows, n_new, new_dl):
+            n_live = n_surv + n_new
+            avgdl_live = (surv_dl + new_dl) / n_live
+            if not new_dl:
+                write_empty_postings(spark, f"{gdir}/postings")
+                return n_live, avgdl_live
+            write_index_postings(
+                rows, gdir, avgdl_live, meta["k1"], meta["b"],
+                num_partitions=min(spark.sparkContext.defaultParallelism,
+                                   n_buckets), key=["bucket"])
+    finally:
+        ent.unpersist()
     return n_live, avgdl_live
 
 

@@ -18,6 +18,9 @@ Physical layout (the part Elasticsearch/Lucene owns in the reference):
   the query side split one query across G disjoint doc-space groups with
   every doc's postings for EVERY query term landing in the same group —
   the hot-term-safe distributed top-k (IndexReader.topk).
+- every writer (fused build, `write_encoded_index`, the resumable
+  writer, delta generations) gets its encoder input from token entries
+  through one core, `posting_rows` / `attach_doc_idx`.
 - encoding is one step (`encode_rows`) for every index write:
   repartition -> sort by (term, shard, doc_idx) -> mapInArrow over the
   Arrow encoder — the only Python in the build, vectorized NumPy inside
@@ -40,6 +43,7 @@ from connectors_spark.operators.build import (
     IndexFrames,
     _token_entries,
     assign_doc_indices,
+    entries_have_positions,
 )
 from connectors_spark.operators.score import idf_np, tf_norm_np
 from connectors_spark.operators.wand import topk_auto, topk_exact, topk_wand
@@ -103,34 +107,11 @@ def write_encoded_index(
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> None:
-    from pyspark.sql import Observation
-
-    spark = index.postings.sparkSession
-    docmap = assign_doc_indices(index.docs)
-    docmap.write.mode("overwrite").parquet(f"{path}/docmap")
-    docmap = spark.read.schema(docmap.schema).parquet(f"{path}/docmap")
-
-    avgdl, n_docs = index.avgdl, index.n_docs
-    # postings feed both the lexicon agg and the encode shuffle — pin them
-    # for the duration of the build (the resumable path materializes to
-    # parquet instead, plans/checkpoint.py)
-    postings = index.postings.persist()
-    rows = encode_input(postings, docmap, index.lexicon, n_buckets, shard_cap)
-    # whether the rows carry positions rides the write job: a
-    # with_positions=False build has a NULL positions column
-    obs = Observation("encode_positions")
-    with_pos = "positions" in rows.columns
-    if with_pos:
-        rows = rows.observe(obs, F.count("positions").alias("p"))
-    try:
-        # the committer path: partitionBy(bucket) straight from the
-        # encode tasks
-        write_index_postings(rows, path, avgdl, k1, b, direct_write=False)
-    finally:
-        postings.unpersist()
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(index_meta(n_docs, avgdl, k1, b, n_buckets, shard_cap,
-                             with_pos and int(obs.get["p"]) > 0), f)
+    """Encode a `build_index` result's entries into `path` through the
+    fused build's core (`_write_entries`), leaving them cached: they
+    belong to `index`. A derived frame (no entries) raises ValueError."""
+    _write_entries(index.require_entries(), path, n_buckets=n_buckets,
+                   shard_cap=shard_cap, k1=k1, b=b)
 
 
 def index_meta(n_docs: int, avgdl: float, k1: float, b: float,
@@ -141,28 +122,11 @@ def index_meta(n_docs: int, avgdl: float, k1: float, b: float,
             "deltas": [], "positions": positions}
 
 
-def encode_input(postings: DataFrame, docmap: DataFrame, lexicon: DataFrame,
-                 n_buckets: int, shard_cap: int) -> DataFrame:
-    """(term, doc_id, tf[, positions]) postings + docmap + lexicon ->
-    the encoder's input rows (term, doc_idx, tf, dl, df[, positions],
-    n_shards, shard, bucket). The lexicon join feeds df (shard fan-out
-    for the Zipf head); AQE skew-join handles the join-side skew."""
-    pos_cols = ["positions"] if "positions" in postings.columns else []
-    return (
-        postings.select("term", "doc_id", "tf", *pos_cols)
-        .join(docmap.select("doc_id", "doc_idx", "dl"), "doc_id")
-        .join(lexicon, "term")
-        .select("term", "doc_idx", "tf", "dl", "df", *pos_cols,
-                *shard_cols(shard_cap))
-        .withColumn("bucket", bucket_col("term", n_buckets))
-    )
-
-
 def encode_rows(rows: DataFrame, n_parts: int, key: list[str],
                 avgdl: float, k1: float, b: float,
                 out_dir: str | None = None) -> DataFrame:
     """The one encode step of every index write: hash-distribute the
-    encoder's input rows (see `encode_input`) on `key`, sort each
+    encoder's input rows (see `attach_doc_idx`) on `key`, sort each
     partition by (term, shard, doc_idx) and stream it through the Arrow
     encoder. Full builds key on (term, shard); delta generations key on
     bucket, so each bucket is encoded by one task and its dir gets one
@@ -219,7 +183,7 @@ def make_encode_arrow_partition(avgdl: float, k1: float, b: float):
         pos = (tbl.column("positions").chunk(0)
                if "positions" in tbl.column_names else None)
         if pos is not None and pos.null_count:
-            pos = None  # with_positions=False builds carry NULL lists
+            pos = None  # NULL lists encode as no positions
         st = encode_streams(
             tbl.column("doc_idx").to_numpy(), tf, dl,
             tf_norm_np(tf, dl, avgdl, k1, b), gstarts,
@@ -395,39 +359,32 @@ def _arrow_encoded_schema():
 
 
 @contextmanager
-def posting_rows(base: DataFrame, id_cols: list[str], docmap_dir: str, *,
-                 n_buckets: int, shard_cap: int, start_idx: int = 0,
-                 with_positions: bool = False):
-    """Shared write core of the fused build and the delta writer:
-    (doc_id, text) rows -> docmap written to `docmap_dir` -> exploded
-    posting rows ready for the encode shuffle.
+def posting_rows(ent: DataFrame, docmap_dir: str, *, n_buckets: int,
+                 shard_cap: int, start_idx: int = 0):
+    """The write core of every index writer: token entries
+    (`_token_entries`: *id_cols, dl, _entries) -> docmap written to
+    `docmap_dir` ‖ lexicon -> encoder input rows (`attach_doc_idx`).
 
-    Yields (rows, n_docs, sum_dl): rows = (term, doc_idx, tf, dl, df
-    [, positions], n_shards, shard, bucket), where df counts the docs
-    of `base` only and positions (array<int>, from `_token_entries`)
-    ride along when `with_positions`;
+    Yields (rows, n_docs, sum_dl): df counts the docs of `ent` only;
     n_docs and sum_dl come from an Observation on the docmap write, so
-    corpus stats cost no extra pass. doc_idx starts at `start_idx`.
-    `base` must carry doc_id; `id_cols` (doc_id [+ ts]) ride into the
-    docmap, the index manifest of the sync diff. The cached entries and
-    lexicon stay pinned until the caller's encode job inside the `with`
-    body has run.
+    corpus stats cost no extra pass. doc_idx starts at `start_idx`. The
+    id columns (doc_id [+ ts]) ride into the docmap, the index manifest
+    of the sync diff. `ent` must be persisted — the barrier the explode
+    needs (see _token_entries) — and its cache belongs to the caller;
+    the lexicon stays pinned until the caller's encode job inside the
+    `with` body has run.
     """
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import Observation
     from pyspark.util import inheritable_thread_target
 
-    spark = base.sparkSession
-    # ONE array-side tokenize pass, no token-stream shuffle; the persist
-    # is the barrier the explode below needs (see _token_entries)
-    ent = _token_entries(base, id_cols,
-                         with_positions=with_positions).persist()
+    spark = ent.sparkSession
     # corpus stats ride the docmap WRITE job via Observation — no
     # separate count/sum pass over the written parquet
     obs = Observation("docmap_stats")
     docmap = assign_doc_indices(
-        ent.select(*id_cols, "dl"), start_idx=start_idx
+        ent.drop("_entries"), start_idx=start_idx
     ).observe(obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
     # lexicon df needs no doc_idx (it counts (term, doc) pairs straight
     # off the cached entries), so its aggregation job runs CONCURRENTLY
@@ -454,33 +411,41 @@ def posting_rows(base: DataFrame, id_cols: list[str], docmap_dir: str, *,
         docmap = spark.read.schema(docmap.schema).parquet(docmap_dir)
         n_docs = int(obs.get["n"])
         sum_dl = int(obs.get["s"] or 0)
-
-        # attach doc_idx to the cached entries: explicit broadcast while
-        # the docmap is broadcastable (exact decision — n_docs is known);
-        # beyond that it degrades to a shuffle join of compact (doc_id,
-        # entries) rows — same volume the old token-stream join shuffled,
-        # minus the exploded duplication
-        dm = docmap.select("doc_id", "doc_idx")
-        if n_docs <= BROADCAST_DOCS_MAX:
-            dm = F.broadcast(dm)
-        pos_cols = ["positions"] if with_positions else []
-        postings = (
-            ent.join(dm, "doc_id")
-            .select("doc_idx", "dl", F.explode("_entries").alias("_e"))
-            .select("doc_idx", "dl", F.col("_e.term").alias("term"),
-                    F.col("_e.tf").cast("long").alias("tf"),
-                    *[F.col(f"_e.{c}").alias(c) for c in pos_cols])
-        )
-        rows = (
-            postings.join(F.broadcast(lexicon), "term")
-            .select("term", "doc_idx", "tf", "dl", "df", *pos_cols,
-                    *shard_cols(shard_cap))
-            .withColumn("bucket", bucket_col("term", n_buckets))
-        )
-        yield rows, n_docs, sum_dl
+        yield (attach_doc_idx(ent, docmap, lexicon, n_docs,
+                              n_buckets=n_buckets, shard_cap=shard_cap),
+               n_docs, sum_dl)
     finally:
-        ent.unpersist()
         lexicon.unpersist()
+
+
+def attach_doc_idx(ent: DataFrame, docmap: DataFrame, lexicon: DataFrame,
+                   n_docs: int, *, n_buckets: int,
+                   shard_cap: int) -> DataFrame:
+    """Persisted token entries + their written docmap + lexicon -> the
+    encoder's input rows (term, doc_idx, tf, dl, df[, positions],
+    n_shards, shard, bucket), positions exactly when the entries have
+    them. doc_idx attaches to the per-doc entries before the explode,
+    so no postings-sized join is keyed on doc_id."""
+    # explicit broadcast while the docmap is broadcastable (exact
+    # decision — n_docs is known); beyond that a shuffle join of the
+    # compact (doc_id, entries) rows
+    dm = docmap.select("doc_id", "doc_idx")
+    if n_docs <= BROADCAST_DOCS_MAX:
+        dm = F.broadcast(dm)
+    pos_cols = ["positions"] if entries_have_positions(ent) else []
+    postings = (
+        ent.join(dm, "doc_id")
+        .select("doc_idx", "dl", F.explode("_entries").alias("_e"))
+        .select("doc_idx", "dl", F.col("_e.term").alias("term"),
+                F.col("_e.tf").cast("long").alias("tf"),
+                *[F.col(f"_e.{c}").alias(c) for c in pos_cols])
+    )
+    return (
+        postings.join(F.broadcast(lexicon), "term")
+        .select("term", "doc_idx", "tf", "dl", "df", *pos_cols,
+                *shard_cols(shard_cap))
+        .withColumn("bucket", bucket_col("term", n_buckets))
+    )
 
 
 def write_empty_postings(spark: SparkSession, post_dir: str) -> None:
@@ -496,7 +461,7 @@ def write_index_postings(rows: DataFrame, path: str, avgdl: float,
                          num_partitions: int | None = None,
                          direct_write: bool | None = None,
                          key: list[str] | None = None) -> None:
-    """Encode the encoder's input rows (see `encode_input`) into
+    """Encode the encoder's input rows (see `attach_doc_idx`) into
     `path/postings` — the commit step of every generation: the fused
     build and compaction key the encode on (term, shard) (the default
     `key`), a delta generation on bucket, so each bucket is encoded by
@@ -567,8 +532,9 @@ def build_and_write_index(
     - lexicon df comes back via an explicit broadcast join;
     - total wide ops: docmap range-assign (docs only), df partial-agg,
       repartition(term, shard) of compact long-keyed postings
-      (`encode_rows`). The generic write_encoded_index path keeps the
-      (doc_id, text) API; this one is the throughput builder used by
+      (`encode_rows`). `write_encoded_index` writes a `build_index`
+      result through the same core (`_write_entries`); this one skips
+      the logical frames and is the throughput builder used by
       bench/scaling.
     Returns meta.
     """
@@ -576,15 +542,33 @@ def build_and_write_index(
 
     base = with_doc_id(transcripts)
     id_cols = ["doc_id"] + (["ts"] if "ts" in base.columns else [])
-    with posting_rows(base, id_cols, f"{path}/docmap", n_buckets=n_buckets,
+    # ONE array-side tokenize pass, no token-stream shuffle; the persist
+    # is the barrier posting_rows' explode needs (see _token_entries)
+    ent = _token_entries(base, id_cols).persist()
+    try:
+        return _write_entries(ent, path, n_buckets=n_buckets,
+                              shard_cap=shard_cap, k1=k1, b=b,
+                              num_partitions=num_partitions,
+                              direct_write=direct_write)
+    finally:
+        ent.unpersist()
+
+
+def _write_entries(ent: DataFrame, path: str, *, n_buckets: int,
+                   shard_cap: int, k1: float, b: float,
+                   num_partitions: int | None = None,
+                   direct_write: bool | None = None) -> dict:
+    """Persisted token entries -> a single-generation index at `path`:
+    `posting_rows`, the commit (`write_index_postings`) and meta.json,
+    whose `positions` is whether the entries carry them. Returns meta."""
+    with posting_rows(ent, f"{path}/docmap", n_buckets=n_buckets,
                       shard_cap=shard_cap) as (p, n_docs, sum_dl):
         avgdl = float(sum_dl) / n_docs if n_docs else 0.0
         write_index_postings(p, path, avgdl, k1, b,
                              num_partitions=num_partitions,
                              direct_write=direct_write)
-
-    # the fused builder tokenizes without positions
-    meta = index_meta(n_docs, avgdl, k1, b, n_buckets, shard_cap, False)
+    meta = index_meta(n_docs, avgdl, k1, b, n_buckets, shard_cap,
+                      entries_have_positions(ent))
     with open(os.path.join(path, "meta.json"), "w") as f:
         json.dump(meta, f)
     return meta
@@ -1234,8 +1218,8 @@ class IndexReader:
         Requires a positional index: `write_encoded_index` of a
         build_index(with_positions=True) (the fused
         `build_and_write_index` writes none). Delta generations carry
-        positions whenever the base does: `posting_rows` takes them from
-        the same `_token_entries` pass (operators/delta.py)."""
+        positions whenever the base does: their `_token_entries` pass
+        keeps them (operators/delta.py)."""
         from connectors_spark.functions.analysis import tokenize_py
         from connectors_spark.functions.codec import (
             decode_shard, decode_shard_positions,

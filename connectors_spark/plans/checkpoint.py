@@ -5,8 +5,9 @@ stats, persist cursor on success (reference: app/connectors_service/
 connectors/sync_job_runner.py:134-140,340-353; protocol/connectors.py:
 775-777) — as idempotent Spark stages:
 
-  stage 1  docmap        dense doc_idx assignment + doc lengths
-  stage 2  postings_raw  uncompressed postings parquet (one shuffle)
+  stage 1  docmap        doc_idx assignment + doc lengths
+  stage 2  postings_raw  encoder input rows by bucket group, from the
+                         index's entries (`index.attach_doc_idx`)
   stage 3  encode:g      per bucket-group compressed shards, each group an
                          atomic directory overwrite (idempotent rerun)
 
@@ -20,24 +21,19 @@ directory, so resume can never double-count.
 from __future__ import annotations
 
 import json
-
 import os
 import time
 
-
-
-from pyspark.sql import DataFrame, Observation, SparkSession
-
-from connectors_spark import commitfs
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from connectors_spark import BM25_B, BM25_K1
-from connectors_spark.operators.build import IndexFrames, assign_doc_indices
-from connectors_spark.operators.index import (
-    bucket_col,
-    encode_rows,
-    shard_cols,
+from connectors_spark import BM25_B, BM25_K1, commitfs
+from connectors_spark.operators.build import (
+    IndexFrames,
+    assign_doc_indices,
+    entries_have_positions,
 )
+from connectors_spark.operators.index import attach_doc_idx, encode_rows
 
 DONE = "completed"
 
@@ -84,46 +80,50 @@ def resumable_write_encoded_index(
     b: float = BM25_B,
     on_unit_done=None,
 ) -> BuildManifest:
-    """Build the same layout as write_encoded_index, resumably.
+    """Build the same layout as write_encoded_index, resumably. A
+    derived frame (no entries) raises ValueError.
 
     `on_unit_done(unit)` is a test hook (fault injection). Groups are
     bucket % n_groups; each group's output dir is overwritten whole, so a
     rerun after a mid-group kill is idempotent.
     """
-    spark = index.postings.sparkSession
+    ent = index.require_entries()
+    spark = ent.sparkSession
     manifest = BuildManifest(path)
     done = manifest.done_units()
     avgdl, n_docs = index.avgdl, index.n_docs
+    positions = entries_have_positions(ent)
 
     def _finish(unit, t0, **m):
         manifest.mark(unit, DONE, wall_ms=int((time.time() - t0) * 1000), **m)
         if on_unit_done:
             on_unit_done(unit)
 
+    def _write(df, out_dir, *partition_by) -> int:
+        # the unit's row count rides its write job
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite").partitionBy(*partition_by).parquet(out_dir)
+        return int(obs.get["n"])
+
+    # every read-back pins the schema of the frame that was written, so
+    # it runs no inference job
+    docmap = assign_doc_indices(ent.drop("_entries"))
     if "docmap" not in done:
         t0 = time.time()
-        docmap = assign_doc_indices(index.docs)
-        docmap.write.mode("overwrite").parquet(f"{path}/docmap")
-        _finish("docmap", t0, rows=spark.read.parquet(f"{path}/docmap").count(),
-                cursor="docmap")
-    docmap = spark.read.parquet(f"{path}/docmap")
+        n = _write(docmap, f"{path}/docmap")
+        _finish("docmap", t0, rows=n, cursor="docmap")
+    docmap = spark.read.schema(docmap.schema).parquet(f"{path}/docmap")
 
-    pos_cols = ["positions"] if "positions" in index.postings.columns else []
+    raw = attach_doc_idx(
+        ent, docmap, index.lexicon, n_docs, n_buckets=n_buckets,
+        shard_cap=shard_cap,
+    ).withColumn("grp", (F.col("bucket") % n_groups).cast("int"))
     if "postings_raw" not in done:
         t0 = time.time()
-        raw = (
-            index.postings.select("term", "doc_id", "tf", *pos_cols)
-            .join(docmap.select("doc_id", "doc_idx", "dl"), "doc_id")
-            .join(index.lexicon, "term")
-            .select("term", "doc_id", "doc_idx", "tf", "dl", "df", *pos_cols)
-            .withColumn("bucket", bucket_col("term", n_buckets))
-            .withColumn("grp", (F.col("bucket") % n_groups).cast("int"))
-        )
-        raw.write.mode("overwrite").partitionBy("grp").parquet(f"{path}/postings_raw")
-        _finish("postings_raw", t0,
-                rows=spark.read.parquet(f"{path}/postings_raw").count(),
-                cursor="postings_raw")
-    raw = spark.read.parquet(f"{path}/postings_raw")
+        n = _write(raw, f"{path}/postings_raw", "grp")
+        _finish("postings_raw", t0, rows=n, cursor="postings_raw")
+    raw = spark.read.schema(raw.schema).parquet(f"{path}/postings_raw")
 
     n_parts = spark.sparkContext.defaultParallelism
     for g in range(n_groups):
@@ -131,31 +131,17 @@ def resumable_write_encoded_index(
         if unit in done:
             continue
         t0 = time.time()
-        grp = raw.filter(F.col("grp") == g).select(
-            "term", "doc_idx", "tf", "dl", "df", *pos_cols, "bucket",
-            *shard_cols(shard_cap)
-        )
-        # row count and whether the rows carry positions ride the write
-        # job (a with_positions=False build has NULL positions), as in
-        # write_encoded_index
-        obs = Observation(f"encode_{g}")
-        encoded = encode_rows(grp, n_parts, ["term", "shard"], avgdl, k1, b)
         out_dir = f"{path}/postings/grp={g}"
-        encoded.observe(
-            obs, F.count(F.lit(1)).alias("n"),
-            F.count("positions").alias("p"),
-        ).write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
+        n = _write(encode_rows(raw.filter(F.col("grp") == g).drop("grp"),
+                               n_parts, ["term", "shard"], avgdl, k1, b),
+                   out_dir, "bucket")
         n_bytes = sum(
             os.path.getsize(os.path.join(dp, f))
             for dp, _, fs in os.walk(out_dir) for f in fs
         )
-        _finish(unit, t0, rows=int(obs.get["n"]), bytes=n_bytes,
-                positions=int(obs.get["p"]) > 0, cursor=str(g))
+        _finish(unit, t0, rows=n, bytes=n_bytes, positions=positions,
+                cursor=str(g))
 
-    # every encode unit's record holds its positions flag, so a resumed
-    # build that skipped some groups still sees all of them
-    positions = any(r.get("positions", False) for r in manifest.records()
-                    if r["unit"].startswith("encode:"))
     meta = {"n_docs": n_docs, "avgdl": avgdl, "k1": k1, "b": b,
             "n_buckets": n_buckets, "shard_cap": shard_cap, "n_groups": n_groups,
             "positions": positions}

@@ -96,3 +96,25 @@ def test_resumable_positional_build_phrase(spark, tmp_path):
     assert [g.doc_id for g in got] == [d for d, _ in exp]
     for g, (_, s) in zip(got, exp):
         assert g.score == pytest.approx(s, rel=1e-9)
+
+
+def test_resumable_rejects_derived_frames(spark, tmp_path):
+    """Frames derived from another index carry no token entries, and
+    encoding their source's entries would silently undo the derivation:
+    the resumable writer raises ValueError naming the cause before it
+    writes a manifest. Tier-1 cost: one 10-conv build, ~2 s."""
+    import os
+
+    from connectors_spark.operators.build import static_prune_postings
+    from connectors_spark.operators.query import with_lossy_norms
+
+    idx = build_index_transcripts(synth_transcripts(spark, 10, seed=31),
+                                  with_positions=False)
+    for derived in (static_prune_postings(idx, keep_n=5),
+                    with_lossy_norms(idx)):
+        path = str(tmp_path / "derived")
+        with pytest.raises(ValueError, match="no token entries"):
+            resumable_write_encoded_index(derived, path, n_buckets=4,
+                                          n_groups=2)
+        assert not os.path.exists(path)
+    idx.unpersist()

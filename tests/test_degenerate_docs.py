@@ -102,6 +102,36 @@ def test_zero_token_docs_build_and_delta(spark, tmp_path):
     _check(spark, path, _oracle(spark, ONLY_EMPTY))
 
 
+def test_positional_zero_token_corpus_through_both_writers(spark, tmp_path):
+    """A positional build over only zero-token docs is a positional index
+    through write_encoded_index and the resumable writer: meta.json's
+    `positions` is read off the entries' type (the rule compaction
+    follows), not off whether any posting has positions. The index opens,
+    scores like the oracle (no rows) and phrase_topk returns no rows.
+    Tier-1 cost: two 3-doc writes, ~6 s."""
+    from connectors_spark.operators.index import write_encoded_index
+    from connectors_spark.plans.checkpoint import resumable_write_encoded_index
+
+    rows = [r for r in BASE if not any(c.isalnum() for c in r[3] or "")]
+    assert len(rows) == 3
+    idx = build_index(with_doc_id(spark.createDataFrame(rows, SCHEMA)),
+                      with_positions=True)
+    oracle = _oracle(spark, rows)
+    for name, write in (
+            ("frames", lambda p: write_encoded_index(idx, p, n_buckets=4)),
+            ("resumable", lambda p: resumable_write_encoded_index(
+                idx, p, n_buckets=4, n_groups=2))):
+        path = str(tmp_path / name)
+        write(path)
+        assert read_meta(path)["positions"] is True
+        _check(spark, path, oracle)
+        reader = IndexReader(spark, path, cache=False)
+        assert reader.phrase_topk(
+            [{"query_id": "p", "query_text": "alpha beta", "k": 5}]
+        ).collect() == []
+    idx.unpersist()
+
+
 def test_compaction_of_degenerate_generations(spark, tmp_path):
     """compact_index on (1) an index whose last generation changed only
     zero-token docs and (2) an index whose every doc was deleted: both

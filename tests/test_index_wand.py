@@ -128,6 +128,89 @@ def test_fast_builder_rank_identical(spark, tmp_path):
     _assert_rank_identical(got, exp)
 
 
+def _decoded(spark, path):
+    """{(term, doc_id, tf, dl, df, n_shards)} of an encoded index. The
+    shard is left out: it is doc_idx mod n_shards, and doc_idx differs
+    between any two builds."""
+    from connectors_spark.operators.index import read_postings
+
+    dm = {r.doc_idx: r.doc_id
+          for r in spark.read.parquet(f"{path}/docmap").collect()}
+    got = set()
+    for r in read_postings(spark, path).collect():
+        d, tf, dl = decode_shard(r.asDict())
+        got |= {(r.term, dm[int(i)], int(f), int(n), r.df, r.n_shards)
+                for i, f, n in zip(d, tf, dl)}
+    return got
+
+
+def test_fused_build_equals_write_encoded_index(spark, tmp_path):
+    """The two writers of a non-positional index agree on the same
+    input: build_and_write_index and write_encoded_index of
+    build_index_transcripts give equal meta.json, docmap (doc_id, dl)
+    and decoded postings, hot-term shards included. Tier-1 cost: two
+    40-conv writes, ~6 s."""
+    from connectors_spark.operators.index import (
+        build_and_write_index, read_meta,
+    )
+
+    t = synth_transcripts(spark, 40, seed=19).cache()
+    d1, d2 = str(tmp_path / "fused"), str(tmp_path / "frames")
+    build_and_write_index(t, d1, n_buckets=8, shard_cap=100)
+    write_encoded_index(build_index_transcripts(t, with_positions=False),
+                        d2, n_buckets=8, shard_cap=100)
+    assert read_meta(d1) == read_meta(d2)
+
+    def docmap(path):
+        return sorted((r.doc_id, r.dl) for r in spark.read.parquet(
+            f"{path}/docmap").collect())
+
+    assert docmap(d1) == docmap(d2)
+    got = _decoded(spark, d1)
+    assert any(p[5] > 1 for p in got)
+    assert got == _decoded(spark, d2)
+
+
+def test_write_encoded_index_leaves_caller_cache(spark, tmp_path):
+    """write_encoded_index neither persists nor releases anything of its
+    own: the index's cached entries and lexicon stay as they were (the
+    gates reuse one cached index across writes), and a second write of
+    the same index decodes equal to the first. Tier-1 cost: two 30-conv
+    writes, ~5 s."""
+    idx = build_index_transcripts(synth_transcripts(spark, 30, seed=23),
+                                  with_positions=False)
+    idx.lexicon.count()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    d1, d2 = str(tmp_path / "a"), str(tmp_path / "b")
+    write_encoded_index(idx, d1, n_buckets=8, shard_cap=100)
+    assert jsc.getPersistentRDDs().size() == before
+    write_encoded_index(idx, d2, n_buckets=8, shard_cap=100)
+    assert jsc.getPersistentRDDs().size() == before
+    got = _decoded(spark, d1)
+    assert got and got == _decoded(spark, d2)
+    idx.unpersist()
+
+
+def test_write_encoded_index_rejects_derived_frames(spark, tmp_path):
+    """Frames derived from another index carry no token entries, and
+    encoding their source's entries would silently undo the derivation:
+    write_encoded_index raises ValueError naming the cause and writes
+    nothing. Tier-1 cost: one 10-conv build, ~2 s."""
+    from connectors_spark.operators.build import static_prune_postings
+    from connectors_spark.operators.query import with_lossy_norms
+
+    idx = build_index_transcripts(synth_transcripts(spark, 10, seed=29),
+                                  with_positions=False)
+    for derived in (static_prune_postings(idx, keep_n=5),
+                    with_lossy_norms(idx)):
+        path = str(tmp_path / "derived")
+        with pytest.raises(ValueError, match="no token entries"):
+            write_encoded_index(derived, path, n_buckets=4)
+        assert not os.path.exists(path)
+    idx.unpersist()
+
+
 def test_phrase_topk_compressed_vs_oracle(spark, tmp_path):
     """Exact-phrase retrieval through the positional compressed index."""
     from connectors_spark.operators.build import build_index

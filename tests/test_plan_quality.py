@@ -164,6 +164,41 @@ def test_bucket_pruning_in_index_reader(spark, tmp_path):
     assert "bucket" in plan
 
 
+def test_encoded_index_input_has_no_null_positions_or_doc_id_exchange(
+        spark, tmp_path, monkeypatch):
+    """write_encoded_index's encoder input for a with_positions=False
+    build carries no `positions` column (a constant-NULL list column fed
+    to the encoder's mapInArrow cost that stage ~20x) and no Exchange on
+    doc_id: doc_idx attaches to the per-doc entries through an explicit
+    broadcast, even with size-based broadcasts switched off. Tier-1
+    cost: one 20-conv build and write, ~4 s."""
+    from connectors_spark.operators import index as I
+    from connectors_spark.operators.build import build_index_transcripts
+    from connectors_spark.synth import synth_transcripts
+
+    seen = []
+    real = I.write_index_postings
+
+    def spy(rows, *a, **kw):
+        seen.append(rows)
+        return real(rows, *a, **kw)
+
+    monkeypatch.setattr(I, "write_index_postings", spy)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        idx = build_index_transcripts(synth_transcripts(spark, 20, seed=5),
+                                      with_positions=False)
+        I.write_encoded_index(idx, str(tmp_path / "idx"), n_buckets=8)
+        (rows,) = seen
+        plan = _plan(rows)
+    finally:
+        spark.conf.set(key, old)
+    assert "positions" not in rows.columns
+    assert "Exchange hashpartitioning(doc_id" not in plan, plan
+
+
 def test_phrase_topk_is_distributed(spark, tmp_path):
     """Phrase retrieval must run as a grouped Arrow kernel INSIDE the
     plan — the round-1 driver-side toPandas-of-postings path is gone.
