@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import OrderedDict
 from contextlib import contextmanager
 
 import numpy as np
@@ -46,7 +47,7 @@ from connectors_spark.operators.build import (
     entries_have_positions,
 )
 from connectors_spark.operators.score import idf_np, tf_norm_np
-from connectors_spark.operators.wand import topk_auto, topk_exact, topk_wand
+from connectors_spark.operators.wand import KERNELS, run_kernel, tie_cut
 from connectors_spark.schema import (
     ENCODED_POSTINGS_SCHEMA,
     arrow_frame,
@@ -645,7 +646,7 @@ def read_postings(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(ENCODED_POSTINGS_SCHEMA).parquet(post_dir)
 
 
-_SHARD_ROW_COLS = ("doc_gaps", "tfs", "dls", "block_last_doc",
+_SHARD_ROW_COLS = ("n_docs", "doc_gaps", "tfs", "dls", "block_last_doc",
                    "block_offsets", "block_tf_offsets", "block_dl_offsets",
                    "block_max_w")
 
@@ -742,17 +743,20 @@ def _shard_dicts(grp: pd.DataFrame, avgdl: float,
     """Encoded shard rows of one term as plain dicts, extracted
     column-wise (one .to_numpy per column) — iterrows() built a pandas
     Series per row, which dominated kernel setup on multi-shard terms.
-    The dicts carry exactly the fields the scoring kernels touch."""
+    The dicts carry exactly the fields the kernels touch: the encoded
+    streams, `positions` when the frame has them, the row's generation
+    `_gen` and its block-max bound scale `_ub_scale`."""
     m = len(grp)
-    nd = grp["n_docs"].to_numpy()
     gen = (grp["_gen"].to_numpy() if "_gen" in grp.columns
            else np.zeros(m, dtype=np.int64))
-    cols = [grp[c].to_numpy(object) for c in _SHARD_ROW_COLS]
+    names = _SHARD_ROW_COLS + (
+        ("positions",) if "positions" in grp.columns else ())
+    cols = [grp[c].to_numpy(object) for c in names]
     rows = []
     for j in range(m):
-        d = {"n_docs": nd[j],
-             "_ub_scale": max(1.0, avgdl / gen_avgdl.get(int(gen[j]), avgdl))}
-        for name, arr in zip(_SHARD_ROW_COLS, cols):
+        g = int(gen[j])
+        d = {"_gen": g, "_ub_scale": max(1.0, avgdl / gen_avgdl.get(g, avgdl))}
+        for name, arr in zip(names, cols):
             d[name] = arr[j]
         rows.append(d)
     return rows
@@ -826,6 +830,18 @@ class IndexReader:
         self.dead_df = gens.dead_df
         self.postings = gens.postings
         self.docmap = gens.docmap.select("doc_idx", "doc_id")
+        # WAND may pre-seed its threshold (wand._theta_seed) only on a
+        # pristine single-generation index: tombstones could kill the
+        # achieving doc, and a changed avgdl makes stored block maxima
+        # bounds rather than achieved values
+        self._pristine = len(self.dead) == 0 and not deltas
+        self._terminfo_cache: dict[str, tuple[int, int, int]] = {}
+        # topk_local's serving budgets and term shard-row LRU cache
+        self.local_term_df_budget = 2_000_000
+        self.term_cache_bytes = 256 << 20
+        self._term_cache: OrderedDict[str, list] = OrderedDict()
+        self._term_nbytes: dict[str, int] = {}
+        self._term_cache_used = 0
         if cache:
             self.postings = self.postings.persist()
             self.docmap = self.docmap.persist()
@@ -842,8 +858,6 @@ class IndexReader:
         takes each generation's df once, sums it over generations and
         subtracts the term's cumulative dead count. Absent terms map to
         (0, 0, 0)."""
-        if not hasattr(self, "_terminfo_cache"):
-            self._terminfo_cache: dict[str, tuple[int, int, int]] = {}
         missing = sorted(t for t in terms if t not in self._terminfo_cache)
         if missing:
             acc = {t: [0, 0, 0] for t in missing}  # n_shards, df, dead
@@ -919,78 +933,63 @@ class IndexReader:
 
     def _merge_partials(self, partials: DataFrame) -> DataFrame:
         """(query_id, rank, doc_id, score) from the per-(query, group)
-        partial top-k rows: a window merge over <= G*k rows per query
-        (ties score DESC, doc ASC, as in the kernels), then a broadcast
-        join back to the docmap."""
+        partial rows: a broadcast join to the docmap, then a window rank
+        per query ordered (score DESC, doc_id ASC) — the tie order of the
+        oracle and of every DataFrame scorer. The kernels' doc_idx tie
+        order follows doc_id only within one generation, so each partial
+        holds its group's top k per generation (`wand.tie_cut`): at most
+        G * k * (generations) rows per query, holding its top k by
+        doc_id."""
         w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_idx"))
-        ranked = (
-            partials.withColumn("rank", F.row_number().over(w).cast("int"))
+            F.desc("score"), F.asc("doc_id"))
+        return (
+            self.docmap.join(F.broadcast(partials), "doc_idx")
+            .withColumn("rank", F.row_number().over(w).cast("int"))
             .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "doc_idx", "score")
+            .select("query_id", "rank", "doc_id", "score")
         )
-        return (self.docmap.join(F.broadcast(ranked), "doc_idx")
-                .select("query_id", "rank", "doc_id", "score"))
 
     def _topk_partials(self, qterms: DataFrame, buckets: list[int],
                        kernel: str, mode: str = "or",
                        seed_theta: bool = True,
                        n_parts: int | None = None) -> DataFrame:
         """Per-(query, doc-space group) partial top-k — the pre-merge
-        stage of `topk`, factored out so distribution tests can count
-        groups. `qterms`: (query_id, k, term, g_total, df_total[,
-        n_terms]), df_total the term's live df. Output: (query_id, k,
-        grp, doc_idx, score), <= k rows per (query, group)."""
+        stage of `topk` and `phrase_topk`, factored out so distribution
+        tests can count groups. `qterms`: (query_id, k, term, g_total,
+        df_total[, n_terms | phrase]), df_total the term's live df,
+        n_terms read by mode='and', the analyzed phrase by
+        mode='phrase'. Output: (query_id, k, grp, doc_idx, score), each
+        group's rows cut by `wand.tie_cut`."""
         meta = self.meta
         n_docs, avgdl = meta["n_docs"], meta["avgdl"]
         k1, b = meta["k1"], meta["b"]
         hits = self._scoring_rows(qterms, buckets, n_parts)
-
-        kern = {"auto": topk_auto, "exact": topk_exact, "wand": topk_wand}[kernel]
-        dead_bc = self._dead_bc
-        gen_avgdl = self.gen_avgdl
-        # WAND threshold pre-seed (wand._theta_seed): only valid on a
-        # pristine single-generation index — tombstones could kill the
-        # achieving doc, and a changed avgdl makes stored block maxima
-        # bounds rather than achieved values
-        seed_ok = (seed_theta and len(self.dead) == 0
-                   and not self.meta.get("deltas"))
+        kern = KERNELS[kernel]
+        dead_bc, gen_avgdl = self._dead_bc, self.gen_avgdl
+        pristine = seed_theta and self._pristine
 
         def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            dead_ids = dead_bc.value
-            qid = pdf["query_id"].iloc[0]
-            g = int(pdf["grp"].iloc[0])
-            gt = int(pdf["g_total"].iloc[0])
-            k = int(pdf["k"].iloc[0])
-            shards_by_term: list[tuple[float, list]] = []
+            first = pdf.iloc[0]
+            g, gt, k = int(first["grp"]), int(first["g_total"]), int(first["k"])
+            names, shards_by_term = [], []
             for term, grp in sorted(pdf.groupby("term"), key=lambda kv: kv[0]):
                 # GLOBAL live df from the pre-pass (this task may hold
                 # only a subset of the term's shards) — idf stays exact
-                idf = float(idf_np(n_docs, int(grp["df_total"].iloc[0])))
-                # column-wise extraction into plain dicts: one
-                # .to_numpy(object) per column instead of a pd.Series
-                # per shard row (iterrows) — the phrase_group :to_numpy
-                # pattern applied to the hottest query kernel
-                shards_by_term.append((idf, _shard_dicts(
-                    grp, avgdl, gen_avgdl)))
-            gf = (gt, g) if gt > 1 else None
+                names.append(term)
+                shards_by_term.append((
+                    float(idf_np(n_docs, int(grp["df_total"].iloc[0]))),
+                    _shard_dicts(grp, avgdl, gen_avgdl)))
+            kw = {}
             if mode == "and":
-                req = int(pdf["n_terms"].iloc[0])
-                doc_idx, scores = topk_exact(
-                    shards_by_term, k, avgdl, k1, b, dead_ids,
-                    group_filter=gf, require_all=req,
-                )
-            else:
-                from connectors_spark.operators.wand import _theta_seed
-                kw = {}
-                if kern is not topk_exact and seed_ok:
-                    kw["theta_seed"] = _theta_seed(shards_by_term, k)
-                doc_idx, scores = kern(
-                    shards_by_term, k, avgdl, k1, b, dead_ids,
-                    group_filter=gf, **kw,
-                )
+                kw["require_all"] = int(first["n_terms"])
+            elif mode == "phrase":
+                kw["phrase"] = [names.index(t) if t in names else -1
+                                for t in first["phrase"].split(" ")]
+            doc_idx, scores = run_kernel(
+                kern, shards_by_term, k, avgdl, k1, b, dead_bc.value,
+                (gt, g) if gt > 1 else None, pristine=pristine, **kw)
             return pd.DataFrame({
-                "query_id": qid,
+                "query_id": first["query_id"],
                 "k": np.full(len(doc_idx), k, dtype=np.int32),
                 "grp": np.full(len(doc_idx), g, dtype=np.int32),
                 "doc_idx": doc_idx,
@@ -1002,10 +1001,61 @@ class IndexReader:
             schema="query_id string, k int, grp int, doc_idx long, score double",
         )
 
+    def _plan(self, queries: list[dict], mode: str = "or",
+              max_groups: int = DEFAULT_MAX_GROUPS) -> tuple[list, dict]:
+        """The batch planner of every query path: ([(query_id, k, terms,
+        live, G)], term info). `terms` are the analyzed query terms (in
+        order for mode='phrase', else sorted distinct), `live` the sorted
+        distinct ones with a live doc (`_term_info`, one Spark job for
+        the batch's uncached terms). mode='and' and 'phrase' drop a query
+        with a term without one (nothing can match). G = min(max n_shards
+        of its terms, max_groups rounded down to a power of two), at
+        least 1."""
+        from connectors_spark.functions.analysis import tokenize_py
+
+        g_cap = max(1, 1 << (int(max_groups).bit_length() - 1))
+        per_q = []
+        for q in queries:
+            terms = tokenize_py(q["query_text"])
+            per_q.append((q["query_id"], int(q.get("k", 10)),
+                          terms if mode == "phrase" else sorted(set(terms))))
+        info = self._term_info(sorted({t for *_, ts in per_q for t in ts}))
+        plans = []
+        for qid, k, terms in per_q:
+            live = sorted({t for t in terms if info[t][2] > 0})
+            if mode != "or" and (not live or len(live) < len(set(terms))):
+                continue
+            g = min(max((info[t][0] for t in terms), default=1), g_cap)
+            plans.append((qid, k, terms, live, max(g, 1)))
+        return plans, info
+
+    def _ranked(self, plans: list, info: dict, kernel: str = "auto",
+                mode: str = "or", seed_theta: bool = True) -> DataFrame:
+        """(query_id, rank, doc_id, score) of planned queries: their live
+        terms as an Arrow-built local relation (broadcast) -> the grouped
+        kernels over Σ G partitions (`_topk_partials`) -> the merge."""
+        rows = [(qid, k, t, g, info[t][2],
+                 " ".join(terms) if mode == "phrase" else len(terms))
+                for qid, k, terms, live, g in plans for t in live]
+        if not rows:
+            return arrow_frame(
+                self.spark, [],
+                "query_id string, rank int, doc_id string, score double")
+        tag = "phrase string" if mode == "phrase" else "n_terms int"
+        qterms = arrow_frame(
+            self.spark, rows, "query_id string, k int, term string, "
+            f"g_total int, df_total long, {tag}")
+        n_buckets = self.meta["n_buckets"]
+        buckets = sorted({bucket_of(r[2], n_buckets) for r in rows})
+        return self._merge_partials(self._topk_partials(
+            qterms, buckets, kernel, mode=mode, seed_theta=seed_theta,
+            n_parts=sum(g for *_, live, g in plans if live)))
+
     def topk(self, queries: list[dict], kernel: str = "auto",
              max_groups: int = DEFAULT_MAX_GROUPS,
              mode: str = "or", seed_theta: bool = True) -> DataFrame:
-        """(query_id, rank, doc_id, score) for the query batch.
+        """(query_id, rank, doc_id, score) for the query batch, ranked
+        (score DESC, doc_id ASC) on any generation set.
 
         mode='and': conjunctive retrieval (ES bool-must) — only docs
         matching EVERY analyzed query term score; a query containing an
@@ -1015,61 +1065,25 @@ class IndexReader:
         iterator) — same group fan-out, still rank-identical to the
         DataFrame scorer's mode='and'.
 
-        Plan: a one-job pre-pass for per-term (n_shards, live df)
-        (`_term_info`) -> qterms, an Arrow-built local relation
-        (broadcast) holding only terms with live postings ->
-        bucket-pruned postings scan -> one (query_id, grp) exchange into
-        min(defaultParallelism, Σ_q G_q) partitions -> per-(query,
-        doc-space group) applyInPandas partial top-k -> window merge over
-        <= G*k rows per query -> broadcast join back to the docmap.
+        Plan (`_plan`, `_ranked`): a one-job pre-pass for per-term
+        (n_shards, live df) (`_term_info`) -> qterms, an Arrow-built
+        local relation (broadcast) holding only terms with live postings
+        -> bucket-pruned postings scan -> one (query_id, grp) exchange
+        into min(defaultParallelism, Σ_q G_q) partitions -> per-(query,
+        doc-space group) applyInPandas partial top-k -> broadcast join to
+        the docmap -> window rank per query (score DESC, doc_id ASC).
 
         Hot-term safety: a query fans out over G = min(max n_shards of
         its terms, max_groups) disjoint doc-space groups (doc_idx % G),
         so a "the"-class posting list is scored by up to G tasks instead
         of one. Nested power-of-two sharding guarantees each doc is fully
-        scored in exactly ONE group; the merge is rank-identical to a
-        single-task evaluation because per-doc scores are bit-identical
-        (same term-sorted accumulation) and the tie order (score DESC,
-        doc ASC) matches the kernels'.
+        scored in exactly ONE group, with bit-identical per-doc scores
+        (same term-sorted accumulation). Each group keeps its top k per
+        generation (`wand.tie_cut`), so the merge sees every doc that the
+        doc_id tie order can rank into the top k.
         """
-        from connectors_spark.functions.analysis import tokenize_py
-
-        n_buckets = self.meta["n_buckets"]
-        g_cap = max(1, 1 << (int(max_groups).bit_length() - 1))
-
-        per_q, all_terms = [], set()
-        for q in queries:
-            terms = sorted(set(tokenize_py(q["query_text"])))
-            per_q.append((q["query_id"], int(q.get("k", 10)), terms))
-            all_terms.update(terms)
-        empty = arrow_frame(
-            self.spark, [], "query_id string, rank int, doc_id string, score double")
-        if not all_terms:
-            return empty
-        info = self._term_info(sorted(all_terms))
-        qrows, buckets, n_keys = [], set(), 0
-        for qid, k, terms in per_q:
-            if mode == "and" and any(info[t][2] <= 0 for t in terms):
-                continue  # a must-term has no live doc: nothing matches
-            gq = min(max((info[t][0] for t in terms), default=1), g_cap)
-            gq = max(gq, 1)
-            live = [t for t in terms if info[t][2] > 0]
-            for t in live:  # absent or fully tombstoned terms score nothing
-                qrows.append((qid, k, t, gq, info[t][2], len(terms)))
-                buckets.add(bucket_of(t, n_buckets))
-            n_keys += gq if live else 0
-        if not qrows:
-            return empty
-        qterms = arrow_frame(
-            self.spark, qrows,
-            "query_id string, k int, term string, g_total int, "
-            "df_total long, n_terms int",
-        )
-        partials = self._topk_partials(qterms, sorted(buckets), kernel,
-                                       mode=mode, seed_theta=seed_theta,
-                                       n_parts=n_keys)
-        return self._merge_partials(partials)
-
+        plans, info = self._plan(queries, mode, max_groups)
+        return self._ranked(plans, info, kernel, mode, seed_theta)
 
     def topk_local(self, queries: list[dict], kernel: str = "auto") -> list[tuple]:
         """Low-latency serving path: ONE bucket-pruned collect pulls the
@@ -1078,80 +1092,56 @@ class IndexReader:
         counts are LRU-cached on the reader, so repeat-term queries skip
         the cluster entirely (the hot-query-set regime of a search tier).
         This is the ES-search-latency analog; `topk` is the
-        bulk-throughput path. Returns [(query_id, rank, doc_id, score)].
+        bulk-throughput path. Returns [(query_id, rank, doc_id, score)],
+        ranked (score DESC, doc_id ASC) after the doc_id lookup.
 
         Hot-term budget (VERDICT r4 #3): pulling a stop-word-class term
         driver-side is O(df) bytes — unbounded at 10^9+ docs.  A query
         containing any term whose total df exceeds
         ``self.local_term_df_budget`` (default 2,000,000 postings,
         ~tens of MB of shard blobs) is routed to the distributed `topk`
-        kernel instead; the (term, df) pre-pass is the same cheap
+        kernels instead; the (term, df) pre-pass is the same cheap
         column-pruned lexicon job `topk` itself starts with, so the
         budget check adds no extra scan for routed queries.  Results
-        are rank-identical either way (both paths share the scoring
-        kernels and tie order)."""
-        from connectors_spark.functions.analysis import tokenize_py
-
+        are rank-identical either way (both paths share the planner,
+        the kernel dispatch and the tie cut). The shard-row cache holds
+        at most ``self.term_cache_bytes`` (default 256 MiB) beyond the
+        current batch's terms."""
         meta = self.meta
         n_docs, avgdl = meta["n_docs"], meta["avgdl"]
         k1, b, n_buckets = meta["k1"], meta["b"], meta["n_buckets"]
-        kern = {"auto": topk_auto, "exact": topk_exact, "wand": topk_wand}[kernel]
-        if not hasattr(self, "_term_cache"):
-            from collections import OrderedDict
-            self._term_cache: "OrderedDict[str, list]" = OrderedDict()
-            self._term_nbytes: dict[str, int] = {}
-            self._term_cache_used = 0
+        kern = KERNELS[kernel]
+        plans, info = self._plan(queries)
+        hot, cold = [], []
+        for p in plans:
+            is_hot = any(info[t][1] > self.local_term_df_budget for t in p[2])
+            (hot if is_hot else cold).append(p)
+        routed = [(r["query_id"], int(r["rank"]), r["doc_id"], float(r["score"]))
+                  for r in self._ranked(hot, info, kernel).collect()] \
+            if hot else []
 
-        per_q = []
-        all_terms = set()
-        for q in queries:
-            terms = sorted(set(tokenize_py(q["query_text"])))
-            per_q.append((q["query_id"], int(q.get("k", 10)), terms))
-            all_terms.update(terms)
-        if not all_terms:
-            return []
-
-        df_budget = int(getattr(self, "local_term_df_budget", 2_000_000))
-        tinfo = self._term_info(sorted(all_terms))
-        hot_terms = {t for t in all_terms if tinfo[t][1] > df_budget}
-        if hot_terms:
-            hot_q = [q for q, (_, _, terms) in zip(queries, per_q)
-                     if any(t in hot_terms for t in terms)]
-            cold = [(q, pq) for q, pq in zip(queries, per_q)
-                    if not any(t in hot_terms for t in pq[2])]
-            queries = [q for q, _ in cold]
-            per_q = [pq for _, pq in cold]
-            routed = [
-                (r["query_id"], int(r["rank"]), r["doc_id"],
-                 float(r["score"]))
-                for r in self.topk(hot_q, kernel=kernel).collect()
-            ]
-            all_terms = set().union(*(pq[2] for pq in per_q)) \
-                if per_q else set()
-            if not all_terms:
-                return routed
-        else:
-            routed = []
-        missing = sorted(t for t in all_terms if t not in self._term_cache)
-        for t in all_terms:
-            if t in self._term_cache:   # LRU touch
-                self._term_cache.move_to_end(t)
+        cache = self._term_cache
+        need = {t for p in cold for t in p[2]}
+        missing = sorted(need - cache.keys())
+        for t in need & cache.keys():  # LRU touch
+            cache.move_to_end(t)
         if missing:
             buckets = sorted({bucket_of(t, n_buckets) for t in missing})
             rows = (
                 self.postings.filter(F.col("bucket").isin(buckets))
                 .filter(sql_in("term", missing))
+                .drop("positions")
                 .toPandas()
             )
             for t in missing:
-                self._term_cache[t] = []
+                cache[t] = []
                 self._term_nbytes[t] = 64
                 self._term_cache_used += 64
             terms_np = rows["term"].to_numpy(object)
             for j, row in enumerate(_shard_dicts(rows, avgdl,
                                                  self.gen_avgdl)):
                 t = terms_np[j]
-                self._term_cache[t].append(row)
+                cache[t].append(row)
                 nb = 256 + sum(
                     len(v) if isinstance(v, (bytes, bytearray, memoryview, str))
                     else 16
@@ -1162,203 +1152,58 @@ class IndexReader:
             # evict LRU terms past the byte budget — the cache must not
             # grow per distinct term forever (r2 VERDICT item 4); never
             # evict a term the current batch needs
-            budget = getattr(self, "term_cache_bytes", 256 << 20)
-            for t in list(self._term_cache):
-                if self._term_cache_used <= budget:
+            for t in list(cache):
+                if self._term_cache_used <= self.term_cache_bytes:
                     break
-                if t in all_terms:
+                if t in need:
                     continue
-                self._term_cache.pop(t)
+                cache.pop(t)
                 self._term_cache_used -= self._term_nbytes.pop(t, 0)
-        by_term = self._term_cache
-        # resolve doc_idx -> doc_id lazily, one lookup per result batch
-        out, need_idx = [], set()
         interim = []
-        for qid, k, terms in per_q:
-            shards = []
-            for t in terms:
-                trs = by_term.get(t)
-                df_live = tinfo[t][2]
-                if not trs or df_live <= 0:
-                    continue
-                shards.append((float(idf_np(n_docs, df_live)), trs))
-            kw = {}
-            if kern is not topk_exact and len(self.dead) == 0 \
-                    and not meta.get("deltas"):
-                from connectors_spark.operators.wand import _theta_seed
-                kw["theta_seed"] = _theta_seed(shards, k)
-            doc_idx, scores = kern(shards, k, avgdl, k1, b, self.dead, **kw)
-            interim.append((qid, doc_idx, scores))
-            need_idx.update(int(i) for i in doc_idx)
-        if need_idx:
-            id_rows = self.docmap.filter(
-                sql_in("doc_idx", sorted(need_idx))
-            ).collect()
-            idmap = {r.doc_idx: r.doc_id for r in id_rows}
-        else:
-            idmap = {}
-        for qid, doc_idx, scores in interim:
-            for r, (di, s) in enumerate(zip(doc_idx, scores), start=1):
-                out.append((qid, r, idmap[int(di)], float(s)))
+        for qid, k, _, live, _ in cold:
+            shards = [(float(idf_np(n_docs, info[t][2])), cache[t])
+                      for t in live]
+            interim.append((qid, k, *run_kernel(
+                kern, shards, k, avgdl, k1, b, self.dead,
+                pristine=self._pristine)))
+        # resolve doc_idx -> doc_id in one lookup per batch, then rank
+        # on doc_id
+        need_idx = sorted({int(i) for *_, doc_idx, _ in interim
+                           for i in doc_idx})
+        idmap = {r.doc_idx: r.doc_id for r in self.docmap.filter(
+            sql_in("doc_idx", need_idx)).collect()} if need_idx else {}
+        out = []
+        for qid, k, doc_idx, scores in interim:
+            ids = [idmap[int(d)] for d in doc_idx]
+            for r, i in enumerate(tie_cut(np.array(ids), scores, k), start=1):
+                out.append((qid, r, ids[i], float(scores[i])))
         return out + routed
-
 
     def phrase_topk(self, phrases: list[dict],
                     max_groups: int = DEFAULT_MAX_GROUPS) -> DataFrame:
         """Exact-phrase top-k over the compressed positional index as a
         DataFrame (query_id, rank, doc_id, score).
 
-        Fully distributed — same per-(query, doc-space group) fan-out as
-        `topk`; no posting row ever reaches the driver (the ES
-        match_phrase analog has to survive "the fast" on a 10^11-posting
-        "the"). Inside each group kernel, candidates are intersected
-        starting from the smallest-posting-set term, adjacency is
-        verified from the delta-encoded position streams, and matches are
-        ranked by the phrase terms' BM25 sum (ties score DESC, doc ASC).
+        Fully distributed — the planner, group fan-out, kernel dispatch
+        and merge of `topk` (mode='phrase'); no posting row ever reaches
+        the driver (the ES match_phrase analog has to survive "the fast"
+        on a 10^11-posting "the"). Inside each group kernel
+        (`wand.topk_phrase`), candidates are intersected starting from
+        the smallest-posting-set term, adjacency is verified from the
+        delta-encoded position streams, and matches are ranked by the
+        phrase terms' BM25 sum (ties score DESC, doc_id ASC).
         Requires a positional index: `write_encoded_index` of a
         build_index(with_positions=True) (the fused
         `build_and_write_index` writes none). Delta generations carry
         positions whenever the base does: their `_token_entries` pass
         keeps them (operators/delta.py)."""
-        from connectors_spark.functions.analysis import tokenize_py
-        from connectors_spark.functions.codec import (
-            decode_shard, decode_shard_positions,
-        )
-        from connectors_spark.operators.score import tf_norm_np
-
-        meta = self.meta
-        if meta.get("positions") is False:
+        if self.meta.get("positions") is False:
             raise ValueError(
                 "index was built without positions; rebuild with "
                 "with_positions=True for phrase queries"
             )
-        n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-        k1, b, n_buckets = meta["k1"], meta["b"], meta["n_buckets"]
-        g_cap = max(1, 1 << (int(max_groups).bit_length() - 1))
-
-        per_q, all_terms = [], set()
-        for q in phrases:
-            terms = tokenize_py(q["query_text"])
-            per_q.append((q["query_id"], int(q.get("k", 10)), terms))
-            all_terms.update(terms)
-        empty = arrow_frame(
-            self.spark, [], "query_id string, rank int, doc_id string, score double")
-        if not all_terms:
-            return empty
-        info = self._term_info(sorted(all_terms))
-        qrows, buckets, n_keys = [], set(), 0
-        for qid, k, terms in per_q:
-            if not terms or any(info[t][2] <= 0 for t in terms):
-                continue  # a term has no live doc: the phrase cannot match
-            gq = min(max(info[t][0] for t in terms), g_cap)
-            gq = max(gq, 1)
-            n_keys += gq
-            phrase = " ".join(terms)
-            for t in sorted(set(terms)):
-                qrows.append((qid, k, t, gq, info[t][2], phrase))
-                buckets.add(bucket_of(t, n_buckets))
-        if not qrows:
-            return empty
-        qterms = arrow_frame(
-            self.spark, qrows,
-            "query_id string, k int, term string, g_total int, "
-            "df_total long, phrase string",
-        )
-        hits = self._scoring_rows(qterms, sorted(buckets), n_keys)
-        dead_bc = self._dead_bc
-
-        def phrase_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            dead_ids = dead_bc.value
-            qid = pdf["query_id"].iloc[0]
-            g = int(pdf["grp"].iloc[0])
-            gt = int(pdf["g_total"].iloc[0])
-            k = int(pdf["k"].iloc[0])
-            terms = pdf["phrase"].iloc[0].split(" ")
-            # per term: doc_idx -> (tf, dl, positions), this group's slice
-            term_docs: dict[str, dict[int, tuple]] = {}
-            term_df: dict[str, int] = {}
-            for term, grp in pdf.groupby("term"):
-                m = term_docs.setdefault(term, {})
-                # live df (dead-corrected, same as topk) => exact idf on
-                # incrementally-updated indexes
-                term_df[term] = int(grp["df_total"].iloc[0])
-                # column-wise extraction: one .to_numpy(object) per
-                # column instead of a pd.Series per shard row
-                # (iterrows) — VERDICT r4 #8
-                _nd = grp["n_docs"].to_numpy()
-                _gap = grp["doc_gaps"].to_numpy(object)
-                _tfs = grp["tfs"].to_numpy(object)
-                _dls = grp["dls"].to_numpy(object)
-                _pos = (grp["positions"].to_numpy(object)
-                        if "positions" in grp.columns
-                        else np.full(len(grp), None, dtype=object))
-                for j in range(len(grp)):
-                    row = {"n_docs": _nd[j], "doc_gaps": _gap[j],
-                           "tfs": _tfs[j], "dls": _dls[j],
-                           "positions": _pos[j]}
-                    d, tf, dl = decode_shard(row)
-                    pos = decode_shard_positions(row, tf=tf)
-                    if pos is None:
-                        raise ValueError(
-                            "index was built without positions; rebuild "
-                            "with with_positions=True for phrase queries"
-                        )
-                    keep = (d % gt) == g
-                    if len(dead_ids):
-                        p_ = np.minimum(
-                            np.searchsorted(dead_ids, d), len(dead_ids) - 1
-                        )
-                        keep &= dead_ids[p_] != d
-                    for i in np.nonzero(keep)[0]:
-                        m[int(d[i])] = (int(tf[i]), int(dl[i]), pos[i])
-            out_docs: list[int] = []
-            out_scores: list[float] = []
-            if all(term_docs.get(t) for t in terms):
-                # intersect from the smallest posting set
-                order = sorted(set(terms), key=lambda t: len(term_docs[t]))
-                cand = set(term_docs[order[0]])
-                for t in order[1:]:
-                    cand &= term_docs[t].keys()
-                matched = []
-                t0 = terms[0]
-                for doc in cand:
-                    # vectorized adjacency check: positions are sorted
-                    # unique int arrays, so the candidate start set is a
-                    # C-side sorted intersection per phrase term (was
-                    # Python sets per doc — VERDICT r3 #8)
-                    starts = term_docs[t0][doc][2]
-                    for i, t in enumerate(terms[1:], start=1):
-                        starts = np.intersect1d(
-                            starts, term_docs[t][doc][2] - i,
-                            assume_unique=True,
-                        )
-                        if starts.size == 0:
-                            break
-                    else:
-                        matched.append(doc)
-                scored = []
-                for doc in matched:
-                    s = 0.0
-                    for t in sorted(set(terms)):
-                        tf_, dl_, _ = term_docs[t][doc]
-                        idf = float(idf_np(n_docs, term_df[t]))
-                        s += idf * float(tf_norm_np(tf_, dl_, avgdl, k1, b))
-                    scored.append((doc, s))
-                scored.sort(key=lambda it: (-it[1], it[0]))
-                out_docs = [int(d) for d, _ in scored[:k]]
-                out_scores = [float(s) for _, s in scored[:k]]
-            return pd.DataFrame({
-                "query_id": [qid] * len(out_docs),
-                "k": np.full(len(out_docs), k, dtype=np.int32),
-                "doc_idx": np.array(out_docs, dtype=np.int64),
-                "score": np.array(out_scores, dtype=np.float64),
-            })
-
-        partials = hits.groupBy("query_id", "grp").applyInPandas(
-            phrase_group,
-            schema="query_id string, k int, doc_idx long, score double",
-        )
-        return self._merge_partials(partials)
+        plans, info = self._plan(phrases, "phrase", max_groups)
+        return self._ranked(plans, info, mode="phrase")
 
     def phrase_prefix_topk(self, phrases: list[dict],
                            max_expansions: int = 50,

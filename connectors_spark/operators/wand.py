@@ -1,21 +1,36 @@
-"""Top-k kernels over the compressed index: exact vectorized + block-max WAND.
+"""Top-k kernels over the compressed index: exact vectorized, block-max
+WAND and exact phrase.
 
-Runs inside applyInPandas workers (one group per query). Two kernels:
+A kernel scores ONE query over its terms' encoded shard rows: inside an
+applyInPandas worker per (query, doc-space group) for `IndexReader.topk`
+and `phrase_topk`, or in-process on the driver for
+`IndexReader.topk_local`. `run_kernel` is the one dispatch they all call.
 
 - `topk_exact`: decode the query's posting shards, accumulate
   idf * tf_norm per doc with np.add.at (order = sorted-term order, same
-  accumulation order as the oracle), top-k via lexsort. No Python-level
-  per-doc loop; right choice when pruning can't win (few postings, or
-  every doc is a candidate).
+  accumulation order as the oracle). No Python-level per-doc loop; right
+  choice when pruning can't win (few postings, or every doc is a
+  candidate).
 
 - `topk_wand`: document-at-a-time block-max WAND (VLDB'11 style): lists
   sorted by current doc, pivot by cumulative upper bound vs the running
   threshold, block-max check before full evaluation, block-granular
-  skipping via block_last_doc + searchsorted. Exact top-k (ties
-  score DESC, doc_id ASC) — pruning only discards docs that provably
-  cannot enter.
+  skipping via block_last_doc + searchsorted. Pruning only discards docs
+  that provably score below the k-th best.
+
+- `topk_phrase`: intersect the phrase terms' docs, verify adjacency on
+  the decoded position streams, score the phrase terms' BM25 sum.
 
 `topk_auto` picks per query: small candidate volume -> exact; else WAND.
+
+Tie contract: every kernel ends in `tie_cut`. Inside a kernel docs are
+doc_idx, and doc_idx follows doc_id only within one index generation (a
+delta's docs get doc_idx past every earlier one). So a kernel returns
+each generation's top k by (score DESC, doc_idx ASC), cut to the docs
+scoring at least its k-th best score: at most k rows per generation,
+holding its share of the top k by (score DESC, doc_id ASC). The caller
+ranks by doc_id after its docmap lookup. On a single-generation index
+that is exactly the top k.
 """
 
 from __future__ import annotations
@@ -24,7 +39,9 @@ import heapq
 
 import numpy as np
 
-from connectors_spark.functions.codec import decode_block, decode_shard
+from connectors_spark.functions.codec import (
+    decode_block, decode_shard, decode_shard_positions,
+)
 from connectors_spark.operators.score import tf_norm_np
 
 EXACT_PATH_MAX_POSTINGS = 1 << 19  # 512k entries: below this, brute numpy wins
@@ -72,11 +89,12 @@ class ShardCursor:
 
     __slots__ = ("row", "idf", "k1", "b", "avgdl", "n", "n_blocks", "ub",
                  "block_i", "docs", "tfs", "dls", "pos", "exhausted", "scale",
-                 "bl", "bmw")
+                 "bl", "bmw", "gen")
 
     def __init__(self, row, idf: float, avgdl: float, k1: float, b: float,
                  ub_scale: float = 1.0):
         self.row = row
+        self.gen = int(row.get("_gen", 0))
         self.idf = float(idf)
         self.k1, self.b, self.avgdl = k1, b, avgdl
         self.scale = max(1.0, float(ub_scale))
@@ -152,9 +170,45 @@ def _in_sorted(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
     return sorted_arr[pos] == values
 
 
-def _topk_from_scores(doc_idx: np.ndarray, scores: np.ndarray, k: int):
-    order = np.lexsort((doc_idx, -scores))[:k]
-    return doc_idx[order], scores[order]
+def tie_cut(keys: np.ndarray, scores: np.ndarray, k: int,
+            gens: np.ndarray | None = None) -> np.ndarray:
+    """Indices of the rows a top-k keeps, ordered (score DESC, key ASC):
+    the top k rows, or with `gens` (each doc_idx key's generation) the
+    module docstring's tie contract — each generation's top k, cut to the
+    rows scoring at least the k-th best score. Every reader path cuts
+    here: the kernels on doc_idx, `IndexReader.topk_local` on doc_id."""
+    order = np.lexsort((keys, -scores))
+    if gens is None or len(order) <= k or gens.min() == gens.max():
+        return order[:k]
+    g = gens[order]
+    keep = np.zeros(len(order), dtype=bool)
+    for gen in np.unique(g):  # a generation's top k: its first k here
+        keep[np.flatnonzero(g == gen)[:k]] = True
+    order = order[keep]
+    return order[scores[order] >= scores[order[k - 1]]]
+
+
+def _decoded(rows, group_filter=None, dead=None, positions=False):
+    """(doc_idx, tf, dl, gen[, positions]) of each encoded row, keeping
+    only the docs of doc-space group `group_filter=(G, g)` (doc_idx % G
+    == g) that are not in the sorted tombstone array `dead`. gen is the
+    row's index generation (`_gen`, 0 when absent)."""
+    for row in rows:
+        d, tf, dl = decode_shard(row)
+        keep = np.ones(len(d), dtype=bool)
+        if group_filter is not None:
+            keep &= (d % group_filter[0]) == group_filter[1]
+        if dead is not None and len(dead):
+            keep &= ~_in_sorted(dead, d)
+        out = (d[keep], tf[keep], dl[keep], int(row.get("_gen", 0)))
+        if positions:
+            pos = decode_shard_positions(row, tf=tf)
+            if pos is None:
+                raise ValueError(
+                    "index was built without positions; rebuild with "
+                    "with_positions=True for phrase queries")
+            out += ([pos[i] for i in np.flatnonzero(keep)],)
+        yield out
 
 
 def topk_exact(shards_by_term: list[tuple[float, list]], k: int,
@@ -174,19 +228,12 @@ def topk_exact(shards_by_term: list[tuple[float, list]], k: int,
     term, so its posting count IS its matched-term count). Valid per
     group because every doc's postings for every term share its home
     group."""
-    all_docs, all_w = [], []
+    all_docs, all_w, all_gen = [], [], []
     for idf, rows in shards_by_term:
-        for row in rows:
-            d, tf, dl = decode_shard(row)
-            if group_filter is not None:
-                G, g = group_filter
-                ing = (d % G) == g
-                d, tf, dl = d[ing], tf[ing], dl[ing]
-            if dead is not None and len(dead):
-                live = ~_in_sorted(dead, d)
-                d, tf, dl = d[live], tf[live], dl[live]
+        for d, tf, dl, gen in _decoded(rows, group_filter, dead):
             all_docs.append(d)
             all_w.append(idf * tf_norm_np(tf, dl, avgdl, k1, b))
+            all_gen.append(np.full(len(d), gen, dtype=np.int64))
     if not all_docs:
         return np.zeros(0, dtype=np.int64), np.zeros(0)
     docs = np.concatenate(all_docs)
@@ -194,11 +241,62 @@ def topk_exact(shards_by_term: list[tuple[float, list]], k: int,
     uniq, inv = np.unique(docs, return_inverse=True)
     acc = np.zeros(len(uniq), dtype=np.float64)
     np.add.at(acc, inv, ws)
+    gens = np.zeros(len(uniq), dtype=np.int64)
+    gens[inv] = np.concatenate(all_gen)
     if require_all is not None:
-        nmatch = np.bincount(inv, minlength=len(uniq))
-        keep = nmatch == require_all
-        uniq, acc = uniq[keep], acc[keep]
-    return _topk_from_scores(uniq, acc, k)
+        keep = np.bincount(inv, minlength=len(uniq)) == require_all
+        uniq, acc, gens = uniq[keep], acc[keep], gens[keep]
+    order = tie_cut(uniq, acc, k, gens)
+    return uniq[order], acc[order]
+
+
+def topk_phrase(shards_by_term: list[tuple[float, list]], k: int,
+                avgdl: float, k1: float, b: float,
+                dead: np.ndarray | None = None,
+                group_filter: tuple[int, int] | None = None,
+                phrase: list[int] = ()):
+    """Exact-phrase top-k. shards_by_term as in `topk_exact`, holding the
+    phrase's distinct terms; `phrase` lists the phrase's terms in order
+    as indices into it (-1: the term has no rows here, so nothing
+    matches). Candidates are intersected starting from the smallest doc
+    set, adjacency is checked on the position arrays, and a match scores
+    the sum of its distinct terms' idf * tf_norm in sorted-term order."""
+    if not phrase or min(phrase) < 0:
+        return np.zeros(0, dtype=np.int64), np.zeros(0)
+    # per term: doc_idx -> (weight, generation, positions)
+    term_docs: list[dict[int, tuple]] = []
+    for idf, rows in shards_by_term:
+        m: dict[int, tuple] = {}
+        term_docs.append(m)
+        for d, tf, dl, gen, pos in _decoded(rows, group_filter, dead,
+                                             positions=True):
+            w = idf * tf_norm_np(tf, dl, avgdl, k1, b)
+            for i in range(len(d)):
+                m[int(d[i])] = (float(w[i]), gen, pos[i])
+    cand = set(min(term_docs, key=len))
+    for m in term_docs:
+        cand &= m.keys()
+    docs, scores, gens = [], [], []
+    for doc in cand:
+        # positions are sorted unique arrays: the phrase's start set is a
+        # C-side sorted intersection per phrase term
+        starts = term_docs[phrase[0]][doc][2]
+        for i, t in enumerate(phrase[1:], start=1):
+            starts = np.intersect1d(starts, term_docs[t][doc][2] - i,
+                                    assume_unique=True)
+            if starts.size == 0:
+                break
+        else:
+            s = 0.0
+            for m in term_docs:
+                s += m[doc][0]
+            docs.append(doc)
+            scores.append(s)
+            gens.append(term_docs[0][doc][1])
+    docs = np.array(docs, dtype=np.int64)
+    scores = np.array(scores, dtype=np.float64)
+    order = tie_cut(docs, scores, k, np.array(gens, dtype=np.int64))
+    return docs[order], scores[order]
 
 
 def topk_wand(shards_by_term: list[tuple[float, list]], k: int,
@@ -208,15 +306,17 @@ def topk_wand(shards_by_term: list[tuple[float, list]], k: int,
               theta_seed: float = -1.0):
     cursors = [
         ShardCursor(row, idf, avgdl, k1, b,
-                    ub_scale=float(row.get("_ub_scale", 1.0))
-                    if hasattr(row, "get") else 1.0)
+                    ub_scale=float(row.get("_ub_scale", 1.0)))
         for idf, rows in shards_by_term
         for row in rows
         if int(row["n_docs"]) > 0
     ]
     dead = dead if dead is not None and len(dead) else None
     cursors = [c for c in cursors if not c.exhausted]
-    heap: list[tuple[float, int]] = []  # (score, -doc): min-heap on score
+    heap: list[tuple[float, int, int]] = []  # (score, -doc, gen): min-heap
+    # docs tied with heap[0]'s score that the heap turned away or pushed
+    # out: gen -> -doc of its k smallest such docs (a min-heap on -doc)
+    ties: dict[int, list[int]] = {}
     # theta_seed: a caller-provided lower bound on the global k-th best
     # score (see _theta_seed) — the threshold never drops below it, and
     # because it is valid BEFORE the heap fills, seeded runs may skip
@@ -225,19 +325,29 @@ def topk_wand(shards_by_term: list[tuple[float, list]], k: int,
     theta = theta_seed
     seeded = theta_seed > -1.0
 
-    def offer(doc: int, score: float):
+    def keep_tie(entry: tuple[float, int, int]):
+        if entry[0] < heap[0][0]:  # the k-th score rose past it
+            ties.clear()
+            return
+        t = ties.setdefault(entry[2], [])
+        (heapq.heappush if len(t) < k else heapq.heappushpop)(t, entry[1])
+
+    def offer(doc: int, score: float, gen: int):
         nonlocal theta
         # theta is kept ONE FLOAT ULP BELOW the kth score: pruning uses
         # `<= theta` / `> theta`, so a candidate TYING the kth score is
-        # never skipped and can still win on the doc-ASC tie-break (the
-        # seed path already guarantees this via nextafter in _theta_seed)
+        # never skipped: it enters the heap or `ties`, as the tie contract
+        # needs (the seed path guarantees this via nextafter in _theta_seed)
+        entry = (score, -doc, gen)
         if len(heap) < k:
-            heapq.heappush(heap, (score, -doc))
+            heapq.heappush(heap, entry)
             if len(heap) == k:
                 theta = max(theta, float(np.nextafter(heap[0][0], -np.inf)))
-        elif score > heap[0][0] or (score == heap[0][0] and -doc > heap[0][1]):
-            heapq.heapreplace(heap, (score, -doc))
+        elif entry > heap[0]:
+            keep_tie(heapq.heapreplace(heap, entry))
             theta = max(theta, float(np.nextafter(heap[0][0], -np.inf)))
+        elif score == heap[0][0]:
+            keep_tie(entry)
 
     while True:
         live = [c for c in cursors if not c.exhausted]
@@ -316,7 +426,7 @@ def topk_wand(shards_by_term: list[tuple[float, list]], k: int,
                     if not c.exhausted and c.cur_doc() == pivot_doc:
                         c.advance()
                 continue
-            score = 0.0
+            score, gen = 0.0, live[0].gen
             for c in live[: pivot_i + 1]:
                 if not c.exhausted and c.cur_doc() == pivot_doc:
                     score += c.score_cur()
@@ -324,17 +434,18 @@ def topk_wand(shards_by_term: list[tuple[float, list]], k: int,
             if dead is None or not _in_sorted(
                 dead, np.array([pivot_doc], dtype=np.int64)
             )[0]:
-                offer(pivot_doc, score)
+                offer(pivot_doc, score, gen)
         else:
             # advance lists before the pivot up to it
             for c in live[:pivot_i]:
                 if c.cur_doc() < pivot_doc:
                     c.seek(pivot_doc)
-    out = sorted(heap, key=lambda t: (-t[0], -t[1]))
-    return (
-        np.array([-d for _, d in out], dtype=np.int64),
-        np.array([s for s, _ in out], dtype=np.float64),
-    )
+    cand = heap + [(heap[0][0], d, g) for g, t in ties.items() for d in t]
+    docs = np.array([-d for _, d, _ in cand], dtype=np.int64)
+    scores = np.array([s for s, _, _ in cand], dtype=np.float64)
+    order = tie_cut(docs, scores, k, np.array([g for *_, g in cand],
+                                              dtype=np.int64))
+    return docs[order], scores[order]
 
 
 def topk_auto(shards_by_term, k, avgdl, k1, b, dead=None, group_filter=None,
@@ -344,3 +455,23 @@ def topk_auto(shards_by_term, k, avgdl, k1, b, dead=None, group_filter=None,
         return topk_exact(shards_by_term, k, avgdl, k1, b, dead, group_filter)
     return topk_wand(shards_by_term, k, avgdl, k1, b, dead, group_filter,
                      theta_seed=theta_seed)
+
+
+KERNELS = {"auto": topk_auto, "exact": topk_exact, "wand": topk_wand}
+
+
+def run_kernel(kern, shards_by_term, k, avgdl, k1, b, dead=None,
+               group_filter=None, require_all: int | None = None,
+               phrase: list[int] | None = None, pristine: bool = False):
+    """The one kernel dispatch of every reader path: `topk_phrase` for a
+    phrase, `topk_exact` for a conjunctive query (`require_all`), else
+    `kern` (a KERNELS value). `pristine` (no tombstones, one generation)
+    lets a pruning kernel start from `_theta_seed`."""
+    args = (shards_by_term, k, avgdl, k1, b, dead, group_filter)
+    if phrase is not None:
+        return topk_phrase(*args, phrase=phrase)
+    if require_all is not None:
+        return topk_exact(*args, require_all=require_all)
+    if pristine and kern is not topk_exact:
+        return kern(*args, theta_seed=_theta_seed(shards_by_term, k))
+    return kern(*args)

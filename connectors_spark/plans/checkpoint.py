@@ -11,6 +11,11 @@ connectors/sync_job_runner.py:134-140,340-353; protocol/connectors.py:
   stage 3  encode:g      per bucket-group compressed shards, each group an
                          atomic directory overwrite (idempotent rerun)
 
+Once `meta` is recorded the `postings_raw/` checkpoint is deleted: only a
+resume reads it, and it would otherwise add about 70 % to the finished
+index's disk size. A rerun of a finished build returns its manifest
+without touching any stage.
+
 Every completed unit writes a manifest record (status, rows, bytes,
 wall_ms, cursor) via atomic tmp+rename — a killed build resumes by
 set-difference on the manifest (the anti-join-of-done-partitions pattern,
@@ -22,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import Observation
@@ -91,6 +97,12 @@ def resumable_write_encoded_index(
     spark = ent.sparkSession
     manifest = BuildManifest(path)
     done = manifest.done_units()
+    raw_dir = f"{path}/postings_raw"
+    if "meta" in done:
+        # finished: a kill between the meta record and the delete below
+        # may have left the checkpoint behind
+        shutil.rmtree(raw_dir, ignore_errors=True)
+        return manifest
     avgdl, n_docs = index.avgdl, index.n_docs
     positions = entries_have_positions(ent)
 
@@ -121,9 +133,9 @@ def resumable_write_encoded_index(
     ).withColumn("grp", (F.col("bucket") % n_groups).cast("int"))
     if "postings_raw" not in done:
         t0 = time.time()
-        n = _write(raw, f"{path}/postings_raw", "grp")
+        n = _write(raw, raw_dir, "grp")
         _finish("postings_raw", t0, rows=n, cursor="postings_raw")
-    raw = spark.read.schema(raw.schema).parquet(f"{path}/postings_raw")
+    raw = spark.read.schema(raw.schema).parquet(raw_dir)
 
     n_parts = spark.sparkContext.defaultParallelism
     for g in range(n_groups):
@@ -147,4 +159,5 @@ def resumable_write_encoded_index(
             "positions": positions}
     commitfs.put_json_atomic(os.path.join(path, "meta.json"), meta)
     manifest.mark("meta", DONE, cursor="meta")
+    shutil.rmtree(raw_dir, ignore_errors=True)
     return manifest

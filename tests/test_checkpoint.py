@@ -118,3 +118,35 @@ def test_resumable_rejects_derived_frames(spark, tmp_path):
                                           n_groups=2)
         assert not os.path.exists(path)
     idx.unpersist()
+
+
+def test_finished_build_drops_raw_checkpoint(spark, tmp_path):
+    """A committed resumable build leaves no `postings_raw/` checkpoint,
+    and a rerun of the finished build returns without reading it: the
+    manifest gains no record and the postings decode equal. Tier-1 cost:
+    one 20-conversation build, ~5 s."""
+    import os
+
+    from connectors_spark.functions.codec import decode_shard
+    from connectors_spark.operators.index import IndexReader
+
+    path = str(tmp_path / "idx")
+    idx = build_index_transcripts(synth_transcripts(spark, 20, seed=5),
+                                  with_positions=False)
+
+    def decoded():
+        rows = IndexReader(spark, path, cache=False).postings.toPandas()
+        return sorted((r["term"], *(tuple(a.tolist()) for a in decode_shard(r)))
+                      for r in rows.to_dict("records"))
+
+    def write():
+        return resumable_write_encoded_index(idx, path, n_buckets=4,
+                                             n_groups=2, shard_cap=300)
+
+    n_manifest = len(write().records())
+    assert not os.path.exists(os.path.join(path, "postings_raw"))
+    before = decoded()
+    assert before
+    assert len(write().records()) == n_manifest
+    assert decoded() == before
+    idx.unpersist()

@@ -343,6 +343,65 @@ def test_live_df_phrases_match_oracle(spark, live_df_index):
     _assert_same_ranking(_ranked(got), _ranked(exp))
 
 
+@pytest.fixture(scope="module")
+def tie_index(spark, tmp_path_factory):
+    """A positional base holding `conv-base:0` = "alpha beta" and
+    `conv-other:0`, plus one delta adding `conv-a000:0` ... `conv-a007:0`,
+    all "alpha beta": every alpha doc ties on score, and the delta's docs
+    sort before `conv-base:0` by doc_id but get larger doc_idx. Returns
+    (path, oracle on the new snapshot)."""
+    from datetime import datetime
+
+    from connectors_spark.schema import TRANSCRIPTS_SCHEMA
+
+    ts = datetime(2024, 1, 1)
+
+    def convs(texts):
+        return spark.createDataFrame(
+            [(c, 0, "user", text, None, ts) for c, text in texts],
+            TRANSCRIPTS_SCHEMA)
+
+    base = [("conv-base", "alpha beta"), ("conv-other", "gamma delta")]
+    s1 = convs(base + [(f"conv-a{i:03d}", "alpha beta") for i in range(8)])
+    path = str(tmp_path_factory.mktemp("tie_idx"))
+    write_encoded_index(build_index_transcripts(convs(base),
+                                                with_positions=True),
+                        path, n_buckets=4, shard_cap=300)
+    assert incremental_update(spark, path, s1)["created"] == 8
+    rows = with_doc_id(s1).select("doc_id", "text").collect()
+    return path, OracleIndex([(r.doc_id, r.text) for r in rows])
+
+
+_TIE_PATHS = {
+    "topk-exact": lambda r, q: r.topk(q, kernel="exact").collect(),
+    "topk-wand": lambda r, q: r.topk(q, kernel="wand").collect(),
+    "topk_local-exact": lambda r, q: r.topk_local(q, kernel="exact"),
+    "topk_local-wand": lambda r, q: r.topk_local(q, kernel="wand"),
+    "phrase_topk": lambda r, q: r.phrase_topk(q).collect(),
+}
+
+
+@pytest.mark.parametrize("k", [1, 3])
+@pytest.mark.parametrize("reader_path", sorted(_TIE_PATHS))
+def test_cross_generation_ties_rank_by_doc_id(spark, tie_index,
+                                               reader_path, k):
+    """Docs tied on score rank doc_id ASC even when they sit in different
+    generations, on every reader path: at k=1 the answer is the delta's
+    `conv-a000:0`, not the base's `conv-base:0` (whose doc_idx is
+    smaller). Tier-1 cost: one tiny base build and update, then one
+    query per case, ~1-2 s each."""
+    path, oracle = tie_index
+    text = "alpha beta" if reader_path == "phrase_topk" else "alpha"
+    got = _ranked(_TIE_PATHS[reader_path](
+        IndexReader(spark, path, cache=False),
+        [{"query_id": "q", "query_text": text, "k": k}]))
+    hits = (oracle.phrase_query(text, k) if reader_path == "phrase_topk"
+            else oracle.score_query(text, k))
+    exp = [("q", r, d, s) for r, (d, s) in enumerate(hits, start=1)]
+    assert [e[2] for e in exp] == [f"conv-a{i:03d}:0" for i in range(k)]
+    _assert_same_ranking(got, exp)
+
+
 # incremental_update on the positional `live_df_index` fixture: 24 jobs
 # with the one delta writer (positions from `_token_entries`), 30 with the
 # separate build_index-based positional writer it replaced

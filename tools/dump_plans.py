@@ -75,7 +75,8 @@ def main():
     sections.append((
         "Distributed top-k through the compressed index: bucket-pruned "
         "scan -> per-(query, doc-space group) Arrow kernel "
-        "(FlatMapGroupsInPandas) -> window merge -> broadcast docmap join",
+        "(FlatMapGroupsInPandas) -> broadcast docmap join -> window rank "
+        "(score DESC, doc_id ASC)",
         fmt(reader.topk([{"query_id": "q", "query_text": "t00001 t00002",
                           "k": 5}], kernel="wand")),
     ))
