@@ -228,12 +228,12 @@ def topk_exact(shards_by_term: list[tuple[float, list]], k: int,
     term, so its posting count IS its matched-term count). Valid per
     group because every doc's postings for every term share its home
     group."""
-    all_docs, all_w, all_gen = [], [], []
+    all_docs, all_w, row_gens = [], [], []
     for idf, rows in shards_by_term:
         for d, tf, dl, gen in _decoded(rows, group_filter, dead):
             all_docs.append(d)
             all_w.append(idf * tf_norm_np(tf, dl, avgdl, k1, b))
-            all_gen.append(np.full(len(d), gen, dtype=np.int64))
+            row_gens.append(gen)
     if not all_docs:
         return np.zeros(0, dtype=np.int64), np.zeros(0)
     docs = np.concatenate(all_docs)
@@ -241,11 +241,14 @@ def topk_exact(shards_by_term: list[tuple[float, list]], k: int,
     uniq, inv = np.unique(docs, return_inverse=True)
     acc = np.zeros(len(uniq), dtype=np.float64)
     np.add.at(acc, inv, ws)
-    gens = np.zeros(len(uniq), dtype=np.int64)
-    gens[inv] = np.concatenate(all_gen)
+    gens = None  # per-doc generations: only when the rows span several
+    if len(set(row_gens)) > 1:
+        gens = np.zeros(len(uniq), dtype=np.int64)
+        gens[inv] = np.repeat(row_gens, [len(d) for d in all_docs])
     if require_all is not None:
         keep = np.bincount(inv, minlength=len(uniq)) == require_all
-        uniq, acc, gens = uniq[keep], acc[keep], gens[keep]
+        uniq, acc = uniq[keep], acc[keep]
+        gens = gens[keep] if gens is not None else None
     order = tie_cut(uniq, acc, k, gens)
     return uniq[order], acc[order]
 
@@ -313,6 +316,7 @@ def topk_wand(shards_by_term: list[tuple[float, list]], k: int,
     ]
     dead = dead if dead is not None and len(dead) else None
     cursors = [c for c in cursors if not c.exhausted]
+    multi_gen = len({c.gen for c in cursors}) > 1
     heap: list[tuple[float, int, int]] = []  # (score, -doc, gen): min-heap
     # docs tied with heap[0]'s score that the heap turned away or pushed
     # out: gen -> -doc of its k smallest such docs (a min-heap on -doc)
@@ -326,6 +330,8 @@ def topk_wand(shards_by_term: list[tuple[float, list]], k: int,
     seeded = theta_seed > -1.0
 
     def keep_tie(entry: tuple[float, int, int]):
+        if not multi_gen:  # one generation: the heap's doc_idx order is final
+            return
         if entry[0] < heap[0][0]:  # the k-th score rose past it
             ties.clear()
             return

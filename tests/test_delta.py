@@ -346,10 +346,15 @@ def test_live_df_phrases_match_oracle(spark, live_df_index):
 @pytest.fixture(scope="module")
 def tie_index(spark, tmp_path_factory):
     """A positional base holding `conv-base:0` = "alpha beta" and
-    `conv-other:0`, plus one delta adding `conv-a000:0` ... `conv-a007:0`,
-    all "alpha beta": every alpha doc ties on score, and the delta's docs
-    sort before `conv-base:0` by doc_id but get larger doc_idx. Returns
-    (path, oracle on the new snapshot)."""
+    `conv-other:0`, plus one delta adding `conv-a000:0` ... `conv-a015:0`,
+    all "alpha beta", and `conv-z:0` = "beta". Every alpha doc ties on
+    score, and the delta's docs sort before `conv-base:0` by doc_id but
+    get larger doc_idx. For "beta", `conv-z:0` (the shortest doc, so the
+    best score) gets the delta's last doc_idx: a WAND heap already full
+    of tied docs pushes one out for it. shard_cap=8 gives the delta's
+    "alpha" 2 shards and its "beta" 4, so the ties split over G = 2 and
+    G = 4 doc-space groups in `topk`. Returns (path, oracle on the new
+    snapshot)."""
     from datetime import datetime
 
     from connectors_spark.schema import TRANSCRIPTS_SCHEMA
@@ -362,12 +367,13 @@ def tie_index(spark, tmp_path_factory):
             TRANSCRIPTS_SCHEMA)
 
     base = [("conv-base", "alpha beta"), ("conv-other", "gamma delta")]
-    s1 = convs(base + [(f"conv-a{i:03d}", "alpha beta") for i in range(8)])
+    s1 = convs(base + [(f"conv-a{i:03d}", "alpha beta") for i in range(16)]
+               + [("conv-z", "beta")])
     path = str(tmp_path_factory.mktemp("tie_idx"))
     write_encoded_index(build_index_transcripts(convs(base),
                                                 with_positions=True),
-                        path, n_buckets=4, shard_cap=300)
-    assert incremental_update(spark, path, s1)["created"] == 8
+                        path, n_buckets=4, shard_cap=8)
+    assert incremental_update(spark, path, s1)["created"] == 17
     rows = with_doc_id(s1).select("doc_id", "text").collect()
     return path, OracleIndex([(r.doc_id, r.text) for r in rows])
 
@@ -386,19 +392,27 @@ _TIE_PATHS = {
 def test_cross_generation_ties_rank_by_doc_id(spark, tie_index,
                                                reader_path, k):
     """Docs tied on score rank doc_id ASC even when they sit in different
-    generations, on every reader path: at k=1 the answer is the delta's
+    generations, on every reader path: at k=1 "alpha" answers the delta's
     `conv-a000:0`, not the base's `conv-base:0` (whose doc_idx is
-    smaller). Tier-1 cost: one tiny base build and update, then one
-    query per case, ~1-2 s each."""
+    smaller). "beta" puts `conv-z:0` above the tie: at k=1 it raises the
+    k-th score past every tied doc, at k=3 it pushes a tied doc out of a
+    full heap, which must still reach the merge. Tier-1 cost: one tiny
+    base build and update, then one query batch per case, ~1-2 s each."""
     path, oracle = tie_index
-    text = "alpha beta" if reader_path == "phrase_topk" else "alpha"
+    phrase = reader_path == "phrase_topk"
+    texts = {"qa": "alpha beta"} if phrase else {"qa": "alpha", "qb": "beta"}
     got = _ranked(_TIE_PATHS[reader_path](
         IndexReader(spark, path, cache=False),
-        [{"query_id": "q", "query_text": text, "k": k}]))
-    hits = (oracle.phrase_query(text, k) if reader_path == "phrase_topk"
-            else oracle.score_query(text, k))
-    exp = [("q", r, d, s) for r, (d, s) in enumerate(hits, start=1)]
-    assert [e[2] for e in exp] == [f"conv-a{i:03d}:0" for i in range(k)]
+        [{"query_id": q, "query_text": t, "k": k} for q, t in texts.items()]))
+    exp = []
+    for q, text in texts.items():
+        hits = (oracle.phrase_query(text, k) if phrase
+                else oracle.score_query(text, k))
+        exp += [(q, r, d, s) for r, (d, s) in enumerate(hits, start=1)]
+    ties = [f"conv-a{i:03d}:0" for i in range(k)]
+    assert [e[2] for e in exp if e[0] == "qa"] == ties
+    if not phrase:
+        assert [e[2] for e in exp if e[0] == "qb"] == ["conv-z:0"] + ties[:-1]
     _assert_same_ranking(got, exp)
 
 
